@@ -173,36 +173,12 @@ object Mnemo {
     * Tokenization is Spark's own `lower`/`split`; the hash-accumulate-
     * normalize tail runs in the fused codegen native expression
     * [[graft.plans.HashEmbeddingExpr]] — one md5 per token, primitive
-    * accumulator, bit-identical to [[hashEmbeddingComposed]]
+    * accumulator, bit-identical to the composed reference
     * (FunctionsSpec pins the identity). */
   def hashEmbedding(text: Column, dim: Int = EmbeddingDim): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(graft.plans.HashEmbeddingExpr(
       ColumnBridge.expression(TextOps.tokens(text)), dim))
-  }
-
-  /** Same semantics as [[hashEmbedding]], composed from column
-    * expressions only — the readable reference formulation, kept as the
-    * oracle for the native expression's identity spec. */
-  def hashEmbeddingComposed(text: Column, dim: Int = EmbeddingDim): Column = {
-    val toks = TextOps.tokens(text)
-    // per-token: dim index from first 4 md5 hex chars, sign from the 5th
-    val hx = transform(toks, t => substring(md5(t), 1, 5))
-    // ONE fold over the token array updating a dim-length accumulator:
-    // md5 is computed once per token, where a per-dimension aggregate
-    // would re-evaluate the hashed array dim times (O(dim·T) md5 calls —
-    // the lambda-argument re-evaluation trap). Per dimension the
-    // additions still occur in token order, and ±1.0 sums are exact in
-    // double, so the output is bit-identical to the per-dim fold.
-    val raw = aggregate(hx, array_repeat(lit(0.0), dim), (acc, h) => {
-      val idx = conv(substring(h, 1, 4), 16, 10).cast("long") % dim
-      val sign = when(conv(substring(h, 5, 1), 16, 10).cast("long") % 2 === 0, 1.0)
-        .otherwise(-1.0)
-      transform(acc, (a, d) => a + when(idx === d.cast("long"), sign).otherwise(0.0))
-    })
-    val norm = sqrt(aggregate(raw, lit(0.0), (acc, x) => acc + x * x))
-    when(norm > 0, transform(raw, x => (x / norm).cast("float")))
-      .otherwise(transform(raw, x => x.cast("float")))
   }
 
   /** [[MnemoStore.describe]]'s report — the operator-facing health

@@ -106,13 +106,6 @@ object DedupEnrich {
       ColumnBridge.expression(toks), ShingleK))
   }
 
-  /** The pre-round-19 higher-order-function composition of
-    * [[shingleSetFromToks]] — retained as the equality REFERENCE the
-    * NativeKernelsSpec pins the native kernel against (the oracle SQL
-    * mirrors THIS construction). */
-  private[graft] def shingleSetFromToksComposed(toks: Column): Column =
-    array_distinct(TextOps.shingles(toks, ShingleK))
-
   /** Append the shingle-set column `out` from raw text, binding the
     * token array to an attribute in between. */
   def withShingleSet(df: DataFrame, textCol: String,
@@ -160,19 +153,6 @@ object DedupEnrich {
       ColumnBridge.expression(toks), WindowW))
   }
 
-  /** The pre-round-19 higher-order-function composition of
-    * [[windowOccurrencesFromToks]] — retained as the equality
-    * REFERENCE the NativeKernelsSpec pins the native kernel against
-    * (the d9/d14 oracle SQL mirrors THIS construction). */
-  private[graft] def windowOccurrencesFromToksComposed(toks: Column): Column =
-    when(size(toks) >= WindowW,
-      transform(sequence(lit(0), size(toks) - WindowW), i =>
-        struct((i + 1).as("pos"),
-          md5(concat_ws(" ",
-            (0 until WindowW).map(j => element_at(toks, i + j + 1)): _*))
-            .as("h"))))
-      .otherwise(array().cast("array<struct<pos:int,h:string>>"))
-
   /** DISTINCT md5 hashes of every [[WindowW]]-token window over an
     * already-bound token-array column — the d9 / Lee et al. exact
     * substring-dedup granularity (a window repeated INSIDE one doc
@@ -188,12 +168,6 @@ object DedupEnrich {
     ColumnBridge.column(graft.plans.WindowHashesExpr(
       ColumnBridge.expression(toks), WindowW))
   }
-
-  /** The pre-round-19 composition of [[windowHashesFromToks]] — the
-    * NativeKernelsSpec equality reference. */
-  private[graft] def windowHashesFromToksComposed(toks: Column): Column =
-    array_distinct(transform(windowOccurrencesFromToksComposed(toks),
-      x => x.getField("h")))
 
   /** Append the window-hash column `out` from raw text, binding the
     * token array to an attribute in between. */
@@ -628,18 +602,4 @@ object DedupEnrich {
       as.toIndexedSeq, bs.toIndexedSeq, RowsPerBand, MinHash.Prime,
       MinHash.Sep)))
   }
-
-  /** The pre-round-19 higher-order-function composition of
-    * [[withBandKeys]] — retained as the equality REFERENCE the
-    * NativeKernelsSpec pins the native kernel against (the oracle SQL
-    * mirrors THIS fingerprints → signature → band-keys chain). */
-  private[graft] def withBandKeysComposed(df: DataFrame, shCol: String,
-      out: String = "bands"): DataFrame =
-    df.withColumn("_de_fpr", MinHash.shingleFingerprints(col(shCol)))
-      .withColumn("_de_sig", MinHash.signature(col("_de_fpr"), NHashes))
-      .withColumn(out,
-        when(element_at(col("_de_sig"), 1).isNotNull,
-          MinHash.bandKeys(col("_de_sig"), NHashes, RowsPerBand))
-          .otherwise(array().cast("array<string>")))
-      .drop("_de_fpr", "_de_sig")
 }

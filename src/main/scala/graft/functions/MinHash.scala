@@ -125,19 +125,4 @@ object MinHash {
     ColumnBridge.column(graft.plans.SimHash16Expr(
       ColumnBridge.expression(toks)))
   }
-
-  /** The pre-round-19 higher-order-function composition of
-    * [[simhash16]] — retained as the equality REFERENCE the
-    * NativeKernelsSpec pins the native kernel against (the oracle SQL
-    * mirrors THIS construction; the kernel must track it bit-for-bit). */
-  private[graft] def simhash16Composed(toks: Column): Column = {
-    val xs = transform(toks, t => conv(substring(md5(t), 1, 4), 16, 10).cast("long"))
-    val positions = sequence(lit(0), lit(15))
-    val sums = aggregate(xs, array_repeat(lit(0L), 16), (acc, x) =>
-      zip_with(acc, transform(positions, p =>
-        floor(x / pow(lit(2.0), p)).cast("long") % 2 * 2 - 1), (a, b) => a + b))
-    val bitVals = zip_with(sums, positions, (s, p) =>
-      when(s > 0, pow(lit(2.0), p).cast("long")).otherwise(lit(0L)))
-    aggregate(bitVals, lit(0L), (acc, v) => acc + v)
-  }
 }

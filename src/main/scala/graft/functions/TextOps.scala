@@ -86,14 +86,6 @@ object TextOps {
       ColumnBridge.expression(toks), k))
   }
 
-  /** The pre-round-19 higher-order-function composition of
-    * [[hashedNgrams]] — retained as the equality REFERENCE the
-    * NativeKernelsSpec pins the native kernel against (the oracle SQL
-    * mirrors THIS construction). */
-  private[graft] def hashedNgramsComposed(toks: Column, k: Int): Column =
-    array_distinct(transform(ngrams(toks, k),
-      g => conv(substring(md5(g), 1, 15), 16, 10).cast("long")))
-
   /** The reference's token estimator: ceil(chars / 4). */
   def estTokens(text: Column): Column = ceil(length(text) / lit(4.0)).cast("long")
 

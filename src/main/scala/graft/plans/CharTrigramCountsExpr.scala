@@ -1,8 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,11 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * are identical to the previous window formulation and to the DuckDB
   * oracle's `substr(lower(text), i, 3)`.
   */
-case class CharTrigramCountsExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType =
-    MapType(StringType, LongType, valueContainsNull = false)
-  override def nullable: Boolean = child.nullable
+case class CharTrigramCountsExpr(child: Expression)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -37,13 +34,9 @@ case class CharTrigramCountsExpr(child: Expression) extends UnaryExpression {
       s"char_trigram_counts expects a string, got ${dt.catalogString}")
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    CharTrigramCountsExpr.counts(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = CharTrigramCountsExpr.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $cls.counts($a);")
-  }
+  override lazy val replacement: Expression =
+    Kernel.invoke(CharTrigramCountsExpr, "counts",
+      MapType(StringType, LongType, valueContainsNull = false), Seq(child))
 
   override protected def withNewChildInternal(newChild: Expression): CharTrigramCountsExpr =
     copy(child = newChild)

@@ -14,78 +14,67 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.Functions.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name), f.build _))
+    }
+}
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
+object GraftExtensions {
+
+  /** One SQL function: its name, the expression class it builds, the
+    * accepted argument count `lo..hi`, and the builder. */
+  private final class SqlFunction(val name: String, val cls: Class[_],
+      lo: Int, hi: Int, make: Args => Expression) {
     // arity gate: a wrong argument count should read as a usage error,
     // not an IndexOutOfBounds from children(i) — and extra args must
     // not be silently dropped
-    def arity(fn: String, children: Seq[Expression], lo: Int, hi: Int): Unit =
+    def build(children: Seq[Expression]): Expression = {
       if (children.length < lo || children.length > hi)
         throw new IllegalArgumentException(
-          s"$fn expects ${if (lo == hi) s"$lo" else s"$lo to $hi"} argument(s), " +
+          s"$name expects ${if (lo == hi) s"$lo" else s"$lo to $hi"} argument(s), " +
             s"got ${children.length}")
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarityExpr].getName, "cosine_sim"),
-      (children: Seq[Expression]) => {
-        arity("cosine_sim", children, 2, 2)
-        CosineSimilarityExpr(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("squared_l2"),
-      new ExpressionInfo(classOf[SquaredL2DistanceExpr].getName, "squared_l2"),
-      (children: Seq[Expression]) => {
-        arity("squared_l2", children, 2, 2)
-        SquaredL2DistanceExpr(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("char_trigram_counts"),
-      new ExpressionInfo(classOf[CharTrigramCountsExpr].getName, "char_trigram_counts"),
-      (children: Seq[Expression]) => {
-        arity("char_trigram_counts", children, 1, 1)
-        CharTrigramCountsExpr(children.head)
-      }))
-    // foldability gate BEFORE eval: an attribute reference would
-    // otherwise throw an unbound-reference internal error instead of
-    // the usage message (and a NULL literal folds to null, which is
-    // equally unusable as a dimension)
-    def litArg(fn: String)(e: Expression): Long = {
-      if (!e.foldable) throw new IllegalArgumentException(
-        s"$fn expects literal int args, got non-literal $e")
-      e.eval(null) match {
-        case n: Number => n.longValue()
-        case other => throw new IllegalArgumentException(
-          s"$fn expects literal int args, got $other")
-      }
+      make(new Args(name, children))
     }
-    ext.injectFunction((
-      FunctionIdentifier("random_project"),
-      new ExpressionInfo(classOf[RandomProjectionExpr].getName, "random_project"),
-      (children: Seq[Expression]) => {
-        arity("random_project", children, 3, 4)
-        val lit = litArg("random_project") _
-        RandomProjectionExpr(children.head,
-          lit(children(1)).toInt, lit(children(2)).toInt,
-          if (children.length > 3) lit(children(3)) else 42L)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("hash_embedding"),
-      new ExpressionInfo(classOf[HashEmbeddingExpr].getName, "hash_embedding"),
-      (children: Seq[Expression]) => {
-        arity("hash_embedding", children, 1, 2)
-        val lit = litArg("hash_embedding") _
-        HashEmbeddingExpr(children.head,
-          if (children.length > 1) lit(children(1)).toInt else 64)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("hyperplane_bucket"),
-      new ExpressionInfo(classOf[HyperplaneBucketExpr].getName, "hyperplane_bucket"),
-      (children: Seq[Expression]) => {
-        arity("hyperplane_bucket", children, 3, 4)
-        val lit = litArg("hyperplane_bucket") _
-        HyperplaneBucketExpr(children.head,
-          lit(children(1)).toInt, lit(children(2)).toInt,
-          if (children.length > 3) lit(children(3)) else 42L)
-      }))
   }
+
+  /** The arguments of one call to SQL function `fn`. */
+  private final class Args(fn: String, children: Seq[Expression]) {
+    def apply(i: Int): Expression = children(i)
+
+    /** Literal int argument `i`, or `default` when it is absent.
+      * Foldability gate BEFORE eval: an attribute reference would
+      * otherwise throw an unbound-reference internal error instead of
+      * the usage message (and a NULL literal folds to null, which is
+      * equally unusable as a dimension). */
+    def long(i: Int, default: Long = 0L): Long =
+      if (i >= children.length) default
+      else {
+        val e = children(i)
+        if (!e.foldable) throw new IllegalArgumentException(
+          s"$fn expects literal int args, got non-literal $e")
+        e.eval(null) match {
+          case n: Number => n.longValue()
+          case other => throw new IllegalArgumentException(
+            s"$fn expects literal int args, got $other")
+        }
+      }
+
+    def int(i: Int, default: Int = 0): Int = long(i, default).toInt
+  }
+
+  private val Functions = Seq(
+    new SqlFunction("cosine_sim", classOf[CosineSimilarityExpr], 2, 2,
+      a => CosineSimilarityExpr(a(0), a(1))),
+    new SqlFunction("squared_l2", classOf[SquaredL2DistanceExpr], 2, 2,
+      a => SquaredL2DistanceExpr(a(0), a(1))),
+    new SqlFunction("char_trigram_counts", classOf[CharTrigramCountsExpr], 1, 1,
+      a => CharTrigramCountsExpr(a(0))),
+    new SqlFunction("random_project", classOf[RandomProjectionExpr], 3, 4,
+      a => RandomProjectionExpr(a(0), a.int(1), a.int(2), a.long(3, 42L))),
+    new SqlFunction("hash_embedding", classOf[HashEmbeddingExpr], 1, 2,
+      a => HashEmbeddingExpr(a(0), a.int(1, 64))),
+    new SqlFunction("hyperplane_bucket", classOf[HyperplaneBucketExpr], 3, 4,
+      a => HyperplaneBucketExpr(a(0), a.int(1), a.int(2), a.long(3, 42L))))
 }

@@ -3,12 +3,12 @@ package graft.plans
 import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Native codegen'd deterministic hash embedding over a TOKEN ARRAY —
+/** Native deterministic hash embedding over a TOKEN ARRAY —
   * the ingest-path primitive behind every remember() (the reference's
   * offline embedder, embedding/mod.rs:68-110): each token hashes to a
   * dimension (first 4 md5 hex chars mod dim) and a sign (parity of the
@@ -18,8 +18,8 @@ import org.apache.spark.sql.types._
   * Spark's own `lower`/`split`/`filter` expressions — this expression
   * can never diverge from the composed version on tokenizer semantics.
   *
-  * Versus the `aggregate`-over-`transform` composition in
-  * [[graft.api.Mnemo.hashEmbeddingComposed]], this is one fused loop
+  * Versus the `aggregate`-over-`transform` composition it replaced
+  * (kept as the test-side equality reference), this is one fused loop
   * with a primitive accumulator: one MessageDigest call per token and
   * ZERO intermediate arrays, where the Column version materializes a
   * new dim-length array per token fold step. Bit-identical output: the
@@ -27,10 +27,7 @@ import org.apache.spark.sql.types._
   * exact squares, and the divide-then-float-cast order matches.
   */
 case class HashEmbeddingExpr(child: Expression, dim: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def nullable: Boolean = child.nullable
+    extends RuntimeReplaceable with UnaryLike[Expression] {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -38,23 +35,9 @@ case class HashEmbeddingExpr(child: Expression, dim: Int)
       s"hash_embedding expects array<string> tokens, got ${dt.catalogString}")
   }
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[ArrayData]
-    val acc = HashEmbeddingExpr.accumulate(toks, dim)
-    new GenericArrayData(HashEmbeddingExpr.normalize(acc))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = HashEmbeddingExpr.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, a => {
-      val acc = ctx.freshName("acc")
-      s"""
-         |double[] $acc = $cls.accumulate($a, $dim);
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  $cls.normalize($acc));
-       """.stripMargin
-    })
-  }
+  override lazy val replacement: Expression =
+    Kernel.invoke(HashEmbeddingExpr, "embed",
+      ArrayType(FloatType, containsNull = false), Seq(child, Literal(dim)))
 
   override protected def withNewChildInternal(newChild: Expression): HashEmbeddingExpr =
     copy(child = newChild)
@@ -67,43 +50,37 @@ object HashEmbeddingExpr {
   private val digestTL: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
-  /** Signed token-count profile: one md5 per token, in-place adds. */
-  def accumulate(toks: ArrayData, dim: Int): Array[Double] = {
+  /** The signed token-count profile (one md5 per token, in-place adds),
+    * L2-normalized into float32; the zero vector passes through. A null
+    * token is a no-op, matching the composed version (md5(null) is null
+    * there, contributing nothing). */
+  def embed(toks: ArrayData, dim: Int): ArrayData = {
     val md = digestTL.get()
     val acc = new Array[Double](dim)
     val n = toks.numElements()
     var i = 0
     while (i < n) {
-      // null token = no-op, matching the composed version (md5(null)
-      // is null there, contributing nothing) — not an executor NPE
       val t = toks.getUTF8String(i)
-      if (t == null) { i += 1 }
-      else {
-      md.reset()
-      val d = md.digest(t.getBytes)
-      // first 4 hex chars = first 2 digest bytes; 5th hex char = high
-      // nibble of byte 2 — matches conv(substring(md5hex, ...), 16, 10)
-      val idx = (((d(0) & 0xff) << 8) | (d(1) & 0xff)) % dim
-      val sign = if (((d(2) >>> 4) & 1) == 0) 1.0 else -1.0
-      acc(idx) += sign
-      i += 1
+      if (t != null) {
+        md.reset()
+        val d = md.digest(t.getBytes)
+        // first 4 hex chars = first 2 digest bytes; 5th hex char = high
+        // nibble of byte 2 — matches conv(substring(md5hex, ...), 16, 10)
+        val idx = (((d(0) & 0xff) << 8) | (d(1) & 0xff)) % dim
+        acc(idx) += (if (((d(2) >>> 4) & 1) == 0) 1.0 else -1.0)
       }
+      i += 1
     }
-    acc
-  }
-
-  /** L2-normalize into float32 (zero vector passes through). */
-  def normalize(acc: Array[Double]): Array[Float] = {
     var norm2 = 0.0
-    var i = 0
-    while (i < acc.length) { norm2 += acc(i) * acc(i); i += 1 }
-    val norm = math.sqrt(norm2)
-    val out = new Array[Float](acc.length)
     i = 0
-    while (i < acc.length) {
+    while (i < dim) { norm2 += acc(i) * acc(i); i += 1 }
+    val norm = math.sqrt(norm2)
+    val out = new Array[Float](dim)
+    i = 0
+    while (i < dim) {
       out(i) = if (norm > 0) (acc(i) / norm).toFloat else acc(i).toFloat
       i += 1
     }
-    out
+    new GenericArrayData(out)
   }
 }

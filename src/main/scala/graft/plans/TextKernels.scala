@@ -3,9 +3,10 @@ package graft.plans
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.types._
@@ -19,7 +20,8 @@ import org.apache.spark.sql.types._
   * InternalRow, walks an expression tree, and boxes intermediates — so
   * on a corpus pass these compositions dominated executor compute
   * (guide §1.2 step 2 / §"expressions and codegen"). Each kernel here
-  * is one virtual call per row running a tight JVM loop, and each is
+  * is one static call per row running a tight JVM loop, reached from
+  * its case class below through the [[Kernel]] pattern, and each is
   * EXACTLY value-equal to the composition it replaces
   * (NativeKernelsSpec pins equality against the retained composed
   * builders on the full corpus plus edge cases; the DuckDB oracle SQL
@@ -121,9 +123,12 @@ object TextKernels {
     * [[graft.functions.DedupEnrich.withBandKeys]] chain): returns the
     * band-key array, or an EMPTY array when no non-null shingle exists
     * (the composed chain's `when(sig(1).isNotNull, …)` wrapper). */
-  def minHashBandKeys(sh: ArrayData, coeffA: Array[Long],
-      coeffB: Array[Long], rowsPerBand: Int, prime: Long,
-      sep: String): ArrayData = {
+  def minHashBandKeys(sh: ArrayData, coeffTableA: KernelTable[Array[Long]],
+      coeffTableB: KernelTable[Array[Long]], rowsPerBand: Int, prime: Long,
+      sepUtf8: UTF8String): ArrayData = {
+    val coeffA = coeffTableA.values
+    val coeffB = coeffTableB.values
+    val sep = sepUtf8.toString
     val k = coeffA.length
     val mins = new Array[Long](k)
     java.util.Arrays.fill(mins, Long.MaxValue)
@@ -231,15 +236,21 @@ object TextKernels {
     * class — byte-scan exact, since no UTF-8 multi-byte unit overlaps
     * 0x61..0x7a), and the count WITH multiplicity of stop-list tokens.
     * Replaces three interpreted per-token lambda passes with one
-    * loop. */
-  def tokenStats(toks: ArrayData, stop: Array[UTF8String]): Any = {
+    * loop. A null token counts in neither count (the filter lambdas
+    * drop it) and makes the length sum NULL (the composed length-sum
+    * aggregate null-poisons). */
+  def tokenStats(toks: ArrayData,
+      stopTable: KernelTable[Array[UTF8String]]): InternalRow = {
+    val stop = stopTable.values
     val n = toks.numElements()
     var sumLen = 0L
     var nAlpha = 0L
     var nStop = 0L
+    var anyNull = false
     var i = 0
     while (i < n) {
-      if (!toks.isNullAt(i)) {
+      if (toks.isNullAt(i)) anyNull = true
+      else {
         val t = toks.getUTF8String(i)
         sumLen += t.numChars()
         val bytes = t.getBytes
@@ -261,9 +272,8 @@ object TextKernels {
       }
       i += 1
     }
-    val row = new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(3)
-    row.setLong(0, sumLen)
+    val row = new GenericInternalRow(3)
+    if (anyNull) row.setNullAt(0) else row.setLong(0, sumLen)
     row.setLong(1, nAlpha)
     row.setLong(2, nStop)
     row
@@ -275,7 +285,7 @@ object TextKernels {
     * order). Matches the posexplode → anti-join → groupBy/array_sort
     * rebuild exactly: a position survives iff NO span covers it; zero
     * survivors (or zero tokens) yield md5(""). */
-  def removeSpans(toks: ArrayData, starts: ArrayData, w: Int): Any = {
+  def removeSpans(toks: ArrayData, starts: ArrayData, w: Int): InternalRow = {
     val n = toks.numElements()
     val covered = new Array[Boolean](n)
     val m = starts.numElements()
@@ -304,8 +314,7 @@ object TextKernels {
       }
       t += 1
     }
-    val row = new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(2)
+    val row = new GenericInternalRow(2)
     row.setLong(0, kept)
     row.update(1, UTF8String.fromString(md5Hex(sb.toString)))
     row
@@ -316,15 +325,14 @@ object TextKernels {
     * bigram string (UTF8String order — the struct-min convention of
     * the aggregate form it replaces). Null for docs with < 2 tokens
     * (the aggregate form's n_tokens >= 2 gate). */
-  def topBigram(toks: ArrayData): Any = {
+  def topBigram(toks: ArrayData): InternalRow = {
     val n = toks.numElements()
     if (n < 2) return null
     val counts = new java.util.HashMap[UTF8String, Long]
     var i = 0
     while (i < n - 1) {
       val bg = UTF8String.fromString(joinSlice(toks, i, 2))
-      val c = counts.get(bg)
-      counts.put(bg, if (c == null) 1L else c + 1L)
+      counts.put(bg, counts.getOrDefault(bg, 0L) + 1L)
       i += 1
     }
     var bestC = -1L
@@ -338,8 +346,7 @@ object TextKernels {
         bestBg = e.getKey
       }
     }
-    val row = new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(2)
+    val row = new GenericInternalRow(2)
     row.setLong(0, bestC)
     row.update(1, bestBg)
     row
@@ -355,8 +362,7 @@ object TextKernels {
     val out = new Array[Any](n - w + 1)
     var i = 0
     while (i <= n - w) {
-      val row = new org.apache.spark.sql.catalyst.expressions
-        .GenericInternalRow(2)
+      val row = new GenericInternalRow(2)
       row.setInt(0, i + 1)
       row.update(1, UTF8String.fromString(md5Hex(joinSlice(toks, i, w))))
       out(i) = row
@@ -383,21 +389,20 @@ object TextKernels {
 
   /** 16-bit SimHash fused (the [[graft.functions.MinHash.simhash16]]
     * aggregate/zip_with chain): per-token 16-bit md5 prefix, ±1 per
-    * bit position, sketch bit = sign of the per-position sum. Null
-    * tokens are skipped (the composed chain null-poisons only on
-    * inputs `tokens()` cannot produce). */
+    * bit position, sketch bit = sign of the per-position sum. A null
+    * token yields 0: in the composed chain it null-poisons every
+    * per-position sum, and a null sum sets no bit. */
   def simhash16(toks: ArrayData): Long = {
     val sums = new Array[Long](16)
     val n = toks.numElements()
     var i = 0
     while (i < n) {
-      if (!toks.isNullAt(i)) {
-        val x = md5Prefix16(toks.getUTF8String(i).toString)
-        var p = 0
-        while (p < 16) {
-          sums(p) += (((x >> p) & 1L) * 2L - 1L)
-          p += 1
-        }
+      if (toks.isNullAt(i)) return 0L
+      val x = md5Prefix16(toks.getUTF8String(i).toString)
+      var p = 0
+      while (p < 16) {
+        sums(p) += (((x >> p) & 1L) * 2L - 1L)
+        p += 1
       }
       i += 1
     }
@@ -411,116 +416,46 @@ object TextKernels {
   }
 }
 
-private[plans] trait StringArrayInput { self: UnaryExpression =>
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string> input, got ${other.catalogString}")
-  }
-}
-
-/** Base for kernels whose composed reference chain maps a NULL input
-  * array to a NON-NULL default (the `when(size(toks) >= k, …)
-  * .otherwise(…)` wrappers evaluate their otherwise-branch on null:
-  * `size(null) >= k` is null, so the composed forms yield an empty
-  * array — or `[""]` for the shingle fallback — never null). These
-  * kernels must reproduce that, so they are non-nullable and
-  * substitute `onNullValue` themselves instead of the
-  * UnaryExpression null-propagation. */
-private[plans] abstract class NullDefaultKernelExpr extends UnaryExpression {
-  protected def onNullValue: Any
-  protected def kernelCall(arr: String): String
-  override def nullable: Boolean = false
-  override def eval(
-      input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) onNullValue else nullSafeEval(v)
-  }
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, FalseLiteral}
-    val childGen = child.genCode(ctx)
-    val javaType = CodeGenerator.javaType(dataType)
-    val defRef = ctx.addReferenceObj("kernelNullDefault", onNullValue,
-      javaType)
-    val resultCode = childGen.code.code +
-      s"""
-         |$javaType ${ev.value} = ${childGen.isNull} ? $defRef
-         |  : ${kernelCall(childGen.value.toString)};
-       """.stripMargin
-    ev.copy(
-      code = code"$resultCode",
-      isNull = FalseLiteral)
-  }
-}
-
-/** See [[TextKernels.shingleSet]]. */
+/** See [[TextKernels.shingleSet]]. A NULL token array yields `[""]`:
+  * the composed chain's otherwise-branch concat_ws skips the null. */
 case class ShingleSetExpr(child: Expression, k: Int)
-    extends NullDefaultKernelExpr with StringArrayInput {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  // composed chain on a NULL token array: the otherwise-branch
-  // concat_ws skips the null arg and yields [""]
-  override protected def onNullValue: Any =
-    new GenericArrayData(Array[Any](UTF8String.fromString("")))
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.shingleSet(input.asInstanceOf[ArrayData], k)
-  override protected def kernelCall(arr: String): String =
-    s"graft.plans.TextKernels.shingleSet($arr, $k)"
+    extends RuntimeReplaceable with StringArrayInput {
+  override lazy val replacement: Expression = Kernel.orElse(
+    Kernel.invoke(TextKernels, "shingleSet",
+      ArrayType(StringType, containsNull = false), Seq(child, Literal(k))),
+    new GenericArrayData(Array[Any](UTF8String.fromString(""))))
   override protected def withNewChildInternal(
       newChild: Expression): ShingleSetExpr = copy(child = newChild)
   override def prettyName: String = "shingle_set"
 }
 
 /** See [[TextKernels.minHashBandKeys]]. Coefficients embed at
-  * construction (the MinHash.coeffs Carter-Wegman family). */
+  * construction (the MinHash.coeffs Carter-Wegman family). A NULL
+  * shingle set yields the empty array: the composed chain's signature
+  * elements are all null there, and its isNotNull wrapper routes to
+  * the empty-array branch. */
 case class MinHashBandKeysExpr(child: Expression, coeffA: IndexedSeq[Long],
     coeffB: IndexedSeq[Long], rowsPerBand: Int, prime: Long, sep: String)
-    extends NullDefaultKernelExpr with StringArrayInput {
+    extends RuntimeReplaceable with StringArrayInput {
   require(coeffA.length == coeffB.length &&
     coeffA.length % rowsPerBand == 0, "bands must tile the signature")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  // composed chain on a NULL shingle set: the signature elements are
-  // all null, the isNotNull wrapper routes to the empty-array branch
-  override protected def onNullValue: Any =
-    new GenericArrayData(Array.empty[Any])
-  @transient private lazy val aArr = coeffA.toArray
-  @transient private lazy val bArr = coeffB.toArray
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.minHashBandKeys(input.asInstanceOf[ArrayData],
-      aArr, bArr, rowsPerBand, prime, sep)
-  // references resolved at doGenCode time via the shared base: stash
-  // them once per codegen context
-  @transient private var refs: Option[(String, String, String)] = None
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    refs = Some((ctx.addReferenceObj("mhCoeffA", aArr, "long[]"),
-      ctx.addReferenceObj("mhCoeffB", bArr, "long[]"),
-      ctx.addReferenceObj("mhSep", sep, "java.lang.String")))
-    super.doGenCode(ctx, ev)
-  }
-  override protected def kernelCall(arr: String): String = {
-    val (aRef, bRef, sepRef) = refs.get
-    s"graft.plans.TextKernels.minHashBandKeys($arr, $aRef, $bRef, " +
-      s"$rowsPerBand, ${prime}L, $sepRef)"
-  }
+  override lazy val replacement: Expression = Kernel.orEmpty(
+    Kernel.invoke(TextKernels, "minHashBandKeys",
+      ArrayType(StringType, containsNull = false),
+      Seq(child, Kernel.table(coeffA.toArray), Kernel.table(coeffB.toArray),
+        Literal(rowsPerBand), Literal(prime), Literal(sep))))
   override protected def withNewChildInternal(
       newChild: Expression): MinHashBandKeysExpr = copy(child = newChild)
   override def prettyName: String = "minhash_band_keys"
 }
 
-/** See [[TextKernels.hashedNgrams]]. */
+/** See [[TextKernels.hashedNgrams]]. A NULL token array yields the
+  * empty array (the strict-ngram chain's otherwise-branch). */
 case class HashedNgramsExpr(child: Expression, k: Int)
-    extends NullDefaultKernelExpr with StringArrayInput {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  // composed chain on NULL tokens: strict ngrams' otherwise-branch is
-  // the empty array
-  override protected def onNullValue: Any =
-    new GenericArrayData(Array.empty[Any])
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.hashedNgrams(input.asInstanceOf[ArrayData], k)
-  override protected def kernelCall(arr: String): String =
-    s"graft.plans.TextKernels.hashedNgrams($arr, $k)"
+    extends RuntimeReplaceable with StringArrayInput {
+  override lazy val replacement: Expression = Kernel.orEmpty(
+    Kernel.invoke(TextKernels, "hashedNgrams",
+      ArrayType(LongType, containsNull = false), Seq(child, Literal(k))))
   override protected def withNewChildInternal(
       newChild: Expression): HashedNgramsExpr = copy(child = newChild)
   override def prettyName: String = "hashed_ngrams"
@@ -528,14 +463,11 @@ case class HashedNgramsExpr(child: Expression, k: Int)
 
 /** See [[TextKernels.clsBuckets]]. */
 case class ClsBucketsExpr(child: Expression, d: Int, bias: Long,
-    lenBase: Long) extends UnaryExpression with StringArrayInput {
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.clsBuckets(input.asInstanceOf[ArrayData], d, bias, lenBase)
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, arr =>
-      s"graft.plans.TextKernels.clsBuckets($arr, $d, ${bias}L, ${lenBase}L)")
+    lenBase: Long) extends RuntimeReplaceable with StringArrayInput {
+  override lazy val replacement: Expression =
+    Kernel.invoke(TextKernels, "clsBuckets",
+      ArrayType(LongType, containsNull = true),
+      Seq(child, Literal(d), Literal(bias), Literal(lenBase)))
   override protected def withNewChildInternal(
       newChild: Expression): ClsBucketsExpr = copy(child = newChild)
   override def prettyName: String = "cls_buckets"
@@ -543,30 +475,21 @@ case class ClsBucketsExpr(child: Expression, d: Int, bias: Long,
 
 /** See [[TextKernels.simhash16]]. */
 case class SimHash16Expr(child: Expression)
-    extends UnaryExpression with StringArrayInput {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.simhash16(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, arr =>
-      s"graft.plans.TextKernels.simhash16($arr)")
+    extends RuntimeReplaceable with StringArrayInput {
+  override lazy val replacement: Expression =
+    Kernel.invoke(TextKernels, "simhash16", LongType, Seq(child))
   override protected def withNewChildInternal(
       newChild: Expression): SimHash16Expr = copy(child = newChild)
   override def prettyName: String = "simhash16"
 }
 
-/** See [[TextKernels.ngramSet]]: distinct strict string n-grams. */
+/** See [[TextKernels.ngramSet]]: distinct strict string n-grams; a
+  * NULL token array yields the empty array. */
 case class NgramSetExpr(child: Expression, k: Int)
-    extends NullDefaultKernelExpr with StringArrayInput {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  // strict-ngram composed chain on NULL tokens: empty array
-  override protected def onNullValue: Any =
-    new GenericArrayData(Array.empty[Any])
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.ngramSet(input.asInstanceOf[ArrayData], k)
-  override protected def kernelCall(arr: String): String =
-    s"graft.plans.TextKernels.ngramSet($arr, $k)"
+    extends RuntimeReplaceable with StringArrayInput {
+  override lazy val replacement: Expression = Kernel.orEmpty(
+    Kernel.invoke(TextKernels, "ngramSet",
+      ArrayType(StringType, containsNull = false), Seq(child, Literal(k))))
   override protected def withNewChildInternal(
       newChild: Expression): NgramSetExpr = copy(child = newChild)
   override def prettyName: String = "ngram_set"
@@ -575,37 +498,26 @@ case class NgramSetExpr(child: Expression, k: Int)
 /** See [[TextKernels.tokenStats]]: struct<sum_len:bigint,
   * n_alpha:bigint, n_stop:bigint>. */
 case class TokenStatsExpr(child: Expression, stop: IndexedSeq[String])
-    extends UnaryExpression with StringArrayInput {
-  override def dataType: DataType =
-    StructType(Seq(StructField("sum_len", LongType, nullable = false),
-      StructField("n_alpha", LongType, nullable = false),
-      StructField("n_stop", LongType, nullable = false)))
-  @transient private lazy val stopArr: Array[UTF8String] =
-    stop.map(UTF8String.fromString).toArray
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.tokenStats(input.asInstanceOf[ArrayData], stopArr)
-  @transient private var stopRef: Option[String] = None
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("tokenStatsStop", stopArr,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    nullSafeCodeGen(ctx, ev, arr => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow)
-        graft.plans.TextKernels.tokenStats($arr, $ref);
-    """)
-  }
+    extends RuntimeReplaceable with StringArrayInput {
+  override lazy val replacement: Expression =
+    Kernel.invoke(TextKernels, "tokenStats",
+      StructType(Seq(StructField("sum_len", LongType, nullable = true),
+        StructField("n_alpha", LongType, nullable = false),
+        StructField("n_stop", LongType, nullable = false))),
+      Seq(child, Kernel.table(stop.map(UTF8String.fromString).toArray)))
   override protected def withNewChildInternal(
       newChild: Expression): TokenStatsExpr = copy(child = newChild)
   override def prettyName: String = "token_stats"
 }
 
 /** See [[TextKernels.removeSpans]]: struct<n_kept:bigint,
-  * kept_md5:string>. */
+  * kept_md5:string>. NULL routing mirrors the posexplode/anti-join/
+  * groupBy chain this kernel replaces: a NULL token array produced no
+  * rows there, so the left-join coalesces yielded (0, md5("")); NULL
+  * spans behave as no spans. Both inputs therefore read as empty
+  * arrays when NULL. */
 case class RemoveSpansExpr(left: Expression, right: Expression, w: Int)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType =
-    StructType(Seq(StructField("n_kept", LongType, nullable = false),
-      StructField("kept_md5", StringType, nullable = false)))
+    extends RuntimeReplaceable with BinaryLike[Expression] {
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (ArrayType(StringType, _), ArrayType(IntegerType, _)) =>
@@ -614,43 +526,11 @@ case class RemoveSpansExpr(left: Expression, right: Expression, w: Int)
         s"remove_spans expects (array<string>, array<int>), got " +
           s"${l.catalogString}, ${r.catalogString}")
     }
-  override def nullable: Boolean = false
-  // NULL routing mirrors the posexplode/anti-join/groupBy chain this
-  // kernel replaces: a NULL token array produced no rows there, so
-  // the left-join coalesces yielded (0, md5("")); NULL spans behave
-  // as no spans
-  override def eval(
-      input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val toks = left.eval(input)
-    val starts = right.eval(input)
-    TextKernels.removeSpans(
-      if (toks == null) new GenericArrayData(Array.empty[Any])
-      else toks.asInstanceOf[ArrayData],
-      if (starts == null) new GenericArrayData(Array.empty[Any])
-      else starts.asInstanceOf[ArrayData], w)
-  }
-  override protected def nullSafeEval(toks: Any, starts: Any): Any =
-    TextKernels.removeSpans(toks.asInstanceOf[ArrayData],
-      starts.asInstanceOf[ArrayData], w)
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val lGen = left.genCode(ctx)
-    val rGen = right.genCode(ctx)
-    val empty = ctx.addReferenceObj("rsEmpty",
-      new GenericArrayData(Array.empty[Any]),
-      "org.apache.spark.sql.catalyst.util.ArrayData")
-    val resultCode = lGen.code.toString + "\n" + rGen.code.toString +
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value} =
-         |  (org.apache.spark.sql.catalyst.InternalRow)
-         |  graft.plans.TextKernels.removeSpans(
-         |    ${lGen.isNull} ? $empty : ${lGen.value},
-         |    ${rGen.isNull} ? $empty : ${rGen.value}, $w);
-       """.stripMargin
-    ev.copy(code = code"$resultCode", isNull = FalseLiteral)
-  }
+  override lazy val replacement: Expression =
+    Kernel.invoke(TextKernels, "removeSpans",
+      StructType(Seq(StructField("n_kept", LongType, nullable = false),
+        StructField("kept_md5", StringType, nullable = false))),
+      Seq(Kernel.orEmpty(left), Kernel.orEmpty(right), Literal(w)))
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): RemoveSpansExpr =
     copy(left = newLeft, right = newRight)
@@ -660,20 +540,12 @@ case class RemoveSpansExpr(left: Expression, right: Expression, w: Int)
 /** See [[TextKernels.topBigram]]: struct<top_c:bigint, bg:string>,
   * null for docs with fewer than two tokens. */
 case class TopBigramExpr(child: Expression)
-    extends UnaryExpression with StringArrayInput {
-  override def dataType: DataType =
-    StructType(Seq(StructField("top_c", LongType, nullable = false),
-      StructField("bg", StringType, nullable = false)))
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.topBigram(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => s"""
-      Object r = graft.plans.TextKernels.topBigram($arr);
-      if (r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) r; }
-    """)
+    extends RuntimeReplaceable with StringArrayInput {
+  override lazy val replacement: Expression =
+    Kernel.invoke(TextKernels, "topBigram",
+      StructType(Seq(StructField("top_c", LongType, nullable = false),
+        StructField("bg", StringType, nullable = false))),
+      Seq(child), returnsNull = true)
   override protected def withNewChildInternal(
       newChild: Expression): TopBigramExpr = copy(child = newChild)
   override def prettyName: String = "top_bigram"
@@ -682,37 +554,28 @@ case class TopBigramExpr(child: Expression)
 /** See [[TextKernels.windowOccurrences]]: every W-token window with
   * its 1-based start position — the d9/d14/DedupIndex window-hash
   * construction fused into one loop (md5 of the space-joined W-token
-  * slice, concat_ws null-skip semantics). */
+  * slice, concat_ws null-skip semantics). A NULL token array yields
+  * the empty array (the composed chain's otherwise-branch). */
 case class WindowOccurrencesExpr(child: Expression, w: Int)
-    extends NullDefaultKernelExpr with StringArrayInput {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("pos", IntegerType, nullable = false),
-      StructField("h", StringType, nullable = false))),
-    containsNull = false)
-  // composed chain on NULL tokens: the otherwise-branch empty array
-  override protected def onNullValue: Any =
-    new GenericArrayData(Array.empty[Any])
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.windowOccurrences(input.asInstanceOf[ArrayData], w)
-  override protected def kernelCall(arr: String): String =
-    s"graft.plans.TextKernels.windowOccurrences($arr, $w)"
+    extends RuntimeReplaceable with StringArrayInput {
+  override lazy val replacement: Expression = Kernel.orEmpty(
+    Kernel.invoke(TextKernels, "windowOccurrences", ArrayType(
+      StructType(Seq(StructField("pos", IntegerType, nullable = false),
+        StructField("h", StringType, nullable = false))),
+      containsNull = false), Seq(child, Literal(w))))
   override protected def withNewChildInternal(
       newChild: Expression): WindowOccurrencesExpr = copy(child = newChild)
   override def prettyName: String = "window_occurrences"
 }
 
 /** See [[TextKernels.windowHashes]]: the DISTINCT window hashes only
-  * (the d9 / maintained-index granularity). */
+  * (the d9 / maintained-index granularity); a NULL token array yields
+  * the empty array. */
 case class WindowHashesExpr(child: Expression, w: Int)
-    extends NullDefaultKernelExpr with StringArrayInput {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  // composed chain on NULL tokens: empty occurrences, empty hashes
-  override protected def onNullValue: Any =
-    new GenericArrayData(Array.empty[Any])
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.windowHashes(input.asInstanceOf[ArrayData], w)
-  override protected def kernelCall(arr: String): String =
-    s"graft.plans.TextKernels.windowHashes($arr, $w)"
+    extends RuntimeReplaceable with StringArrayInput {
+  override lazy val replacement: Expression = Kernel.orEmpty(
+    Kernel.invoke(TextKernels, "windowHashes",
+      ArrayType(StringType, containsNull = false), Seq(child, Literal(w))))
   override protected def withNewChildInternal(
       newChild: Expression): WindowHashesExpr = copy(child = newChild)
   override def prettyName: String = "window_hashes"

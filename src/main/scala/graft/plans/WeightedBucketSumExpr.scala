@@ -1,8 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -17,9 +17,8 @@ import org.apache.spark.sql.types._
   * plan as a broadcast join (which re-exchanged every scored document
   * at scale) or as a higher-order `aggregate` fold (which Spark
   * evaluates as an interpreted CodegenFallback lambda per element —
-  * measured 20-40% SLOWER than the join it replaced). One virtual
-  * call per row, one primitive loop per call, inside whole-stage
-  * codegen.
+  * measured 20-40% SLOWER than the join it replaced). One static
+  * call per row, one primitive loop per call (see [[Kernel]]).
   *
   * EXACTNESS CONTRACT (must stay bit-equal to both the former
   * broadcast-join Σ(w_b·x) margins and the DuckDB oracle): every
@@ -28,20 +27,19 @@ import org.apache.spark.sql.types._
   * scale-9 longs (taken only when every |unscaled| < 2^53, so ~2^10
   * additions cannot overflow; `Math.addExact` guards the theoretical
   * remainder and falls back to the BigDecimal recompute of the same
-  * row — same exact value either way). Out-of-range bucket ids
-  * contribute 0, mirroring the join form dropping the term and the
-  * fold form's null→0 coalesce; missing table rows are the caller's
-  * explicit 0 slots. NULL input array → NULL (the fold's semantics).
+  * row — same exact value either way). Out-of-range bucket ids and
+  * NULL elements contribute 0, mirroring the join form dropping the
+  * term and the fold form's null→0 coalesce; missing table rows are
+  * the caller's explicit 0 slots. NULL input array → NULL (the fold's
+  * semantics).
   *
   * NOT registered in [[GraftExtensions]]: the weight table is a
   * driver-side artifact of the training run, not a SQL-expressible
   * argument, so there is no sensible SQL surface for this expression.
   */
 case class WeightedBucketSumExpr(child: Expression,
-    weights: IndexedSeq[java.math.BigDecimal]) extends UnaryExpression {
-
-  override def dataType: DataType = DecimalType(23, 9)
-  override def nullable: Boolean = child.nullable
+    weights: IndexedSeq[java.math.BigDecimal])
+    extends RuntimeReplaceable with UnaryLike[Expression] {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
@@ -52,34 +50,17 @@ case class WeightedBucketSumExpr(child: Expression,
 
   // setScale(9) with no rounding mode: a weight that is not exactly
   // representable at scale 9 must FAIL LOUDLY, not silently round —
-  // the table's type contract is decimal(20,9)
-  @transient private lazy val scaled: Array[java.math.BigDecimal] =
-    weights.map(_.setScale(9)).toArray
-
-  @transient private lazy val fitsLong: Boolean =
-    scaled.forall(_.unscaledValue().bitLength() <= 53)
-
-  @transient private lazy val unscaled: Array[Long] =
-    scaled.map(_.unscaledValue().longValueExact())
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    if (fitsLong) WeightedBucketSumExpr.sumUnscaled(arr, unscaled)
-    else WeightedBucketSumExpr.sumBig(arr, scaled)
+  // the table's type contract is decimal(20,9). The fast or exact path
+  // is chosen here, once per expression.
+  override lazy val replacement: Expression = {
+    val scaled = weights.map(_.setScale(9)).toArray
+    val (fn, table) =
+      if (scaled.forall(_.unscaledValue().bitLength() <= 53))
+        ("sumUnscaled", scaled.map(_.unscaledValue().longValueExact()))
+      else ("sumBig", scaled)
+    Kernel.invoke(WeightedBucketSumExpr, fn, DecimalType(23, 9),
+      Seq(child, Kernel.table(table)))
   }
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    if (fitsLong) {
-      val ref = ctx.addReferenceObj("wbsWeights", unscaled, "long[]")
-      defineCodeGen(ctx, ev, arr =>
-        s"graft.plans.WeightedBucketSumExpr.sumUnscaled($arr, $ref)")
-    } else {
-      val ref = ctx.addReferenceObj("wbsWeightsBig", scaled,
-        "java.math.BigDecimal[]")
-      defineCodeGen(ctx, ev, arr =>
-        s"graft.plans.WeightedBucketSumExpr.sumBig($arr, $ref)")
-    }
 
   override protected def withNewChildInternal(
       newChild: Expression): WeightedBucketSumExpr = copy(child = newChild)
@@ -88,16 +69,18 @@ case class WeightedBucketSumExpr(child: Expression,
 }
 
 object WeightedBucketSumExpr {
-  /** Fast path: unscaled scale-9 long accumulation. Callable from
-    * generated code. */
-  def sumUnscaled(arr: ArrayData, w: Array[Long]): Decimal = {
+  /** Fast path: unscaled scale-9 long accumulation. */
+  def sumUnscaled(arr: ArrayData, table: KernelTable[Array[Long]]): Decimal = {
+    val w = table.values
     val n = arr.numElements()
     var acc = 0L
     var i = 0
     try {
       while (i < n) {
-        val b = arr.getLong(i)
-        if (b >= 0L && b < w.length) acc = Math.addExact(acc, w(b.toInt))
+        if (!arr.isNullAt(i)) {
+          val b = arr.getLong(i)
+          if (b >= 0L && b < w.length) acc = Math.addExact(acc, w(b.toInt))
+        }
         i += 1
       }
       Decimal(acc, 23, 9)
@@ -105,28 +88,23 @@ object WeightedBucketSumExpr {
       // theoretical overflow tail (needs ~2^10 near-2^53 weights in one
       // row): recompute the row exactly — identical value, wider type
       case _: ArithmeticException =>
-        var bd = java.math.BigDecimal.ZERO
-        var j = 0
-        while (j < n) {
-          val b = arr.getLong(j)
-          if (b >= 0L && b < w.length)
-            bd = bd.add(java.math.BigDecimal.valueOf(w(b.toInt), 9))
-          j += 1
-        }
-        Decimal(BigDecimal(bd), 23, 9)
+        sumBig(arr, new KernelTable(w.map(java.math.BigDecimal.valueOf(_, 9))))
     }
   }
 
   /** Exact path for weight tables whose unscaled values exceed 2^53
     * (the decimal(20,9) type admits them even though trained weights
-    * never reach it). Callable from generated code. */
-  def sumBig(arr: ArrayData, w: Array[java.math.BigDecimal]): Decimal = {
+    * never reach it). */
+  def sumBig(arr: ArrayData, table: KernelTable[Array[java.math.BigDecimal]]): Decimal = {
+    val w = table.values
     val n = arr.numElements()
     var bd = java.math.BigDecimal.ZERO
     var i = 0
     while (i < n) {
-      val b = arr.getLong(i)
-      if (b >= 0L && b < w.length) bd = bd.add(w(b.toInt))
+      if (!arr.isNullAt(i)) {
+        val b = arr.getLong(i)
+        if (b >= 0L && b < w.length) bd = bd.add(w(b.toInt))
+      }
       i += 1
     }
     Decimal(BigDecimal(bd), 23, 9)

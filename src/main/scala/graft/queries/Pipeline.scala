@@ -1873,9 +1873,9 @@ object Pipeline extends QueryGroup {
     * bucket table) that keeps the weight vector FIXED-DIM and
     * driver-holdable no matter how large the corpus vocabulary
     * grows. */
-  private val ClsD = 256
-  private val ClsBias = 256
-  private val ClsLenBase = 257
+  private[graft] val ClsD = 256
+  private[graft] val ClsBias = 256
+  private[graft] val ClsLenBase = 257
   private[graft] val ClsDim = 273
   /** Training epochs / learning rate / eps of the pl20 batch ADAGRAD
     * descent (Duchi et al. 2011 — the per-coordinate adaptive step
@@ -1908,18 +1908,6 @@ object Pipeline extends QueryGroup {
     ColumnBridge.column(graft.plans.ClsBucketsExpr(
       ColumnBridge.expression(toks), ClsD, ClsBias.toLong, ClsLenBase.toLong))
   }
-
-  /** The pre-round-19 higher-order-function composition of
-    * [[clsBuckets]] — retained as the equality REFERENCE the
-    * NativeKernelsSpec pins the native kernel against
-    * ([[clsBucketsSql]] mirrors THIS construction). */
-  private[graft] def clsBucketsComposed(toks: Column): Column =
-    concat(
-      array_distinct(transform(toks, t =>
-        conv(substring(md5(t), 1, 15), 16, 10).cast("long") % ClsD)),
-      array(lit(ClsBias.toLong),
-        lit(ClsLenBase.toLong) +
-          least(lit(15L), floor(size(toks) / lit(16)).cast("long"))))
 
   /** DuckDB mirror of [[clsBuckets]] over a token-list expression. */
   private def clsBucketsSql(toks: String): String =

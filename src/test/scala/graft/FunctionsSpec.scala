@@ -51,28 +51,95 @@ class FunctionsSpec extends SparkSpec {
     assert(one(VectorOps.cosineSimilarity(a, array(lit(0.0f), lit(0.0f)))) == null)
   }
 
-  test("cosineFast (codegen expr) is bit-identical to the composed version") {
+  /** Embedding pairs, plus pairs whose left or right vector carries a
+    * null element (dense embeddings never do; the composed forms
+    * null-poison on it, and the kernels must too). */
+  private def vectorPairs = {
     val e = Tables.embeddings(spark, Sf).limit(50)
     val paired = e.select(col("vec_id"), col("embedding"))
       .crossJoin(e.select(col("embedding").as("other")).limit(7))
-    val diff = paired.select(
+    val nullAt3 = (v: org.apache.spark.sql.Column) =>
+      transform(v, (x, i) => when(i =!= 3, x))
+    paired
+      .unionByName(paired.limit(2).withColumn("embedding", nullAt3(col("embedding"))))
+      .unionByName(paired.limit(2).withColumn("other", nullAt3(col("other"))))
+  }
+
+  test("cosineFast (codegen expr) is bit-identical to the composed version") {
+    val diff = vectorPairs.select(
       VectorOps.cosineSimilarity(col("embedding"), col("other")).as("slow"),
       VectorOps.cosineFast(col("embedding"), col("other")).as("fast"))
       .filter(!(col("slow") <=> col("fast")))
       .count()
     assert(diff == 0)
+    assertInterpretedMatchesCodegen(vectorPairs.select(col("vec_id"),
+      VectorOps.cosineFast(col("embedding"), col("other")).as("fast")))
   }
 
   test("squaredL2Fast (codegen expr) is bit-identical to the composed version") {
-    val e = Tables.embeddings(spark, Sf).limit(50)
-    val paired = e.select(col("vec_id"), col("embedding"))
-      .crossJoin(e.select(col("embedding").as("other")).limit(7))
-    val diff = paired.select(
+    val diff = vectorPairs.select(
       VectorOps.squaredL2Distance(col("embedding"), col("other")).as("slow"),
       VectorOps.squaredL2Fast(col("embedding"), col("other")).as("fast"))
       .filter(!(col("slow") <=> col("fast")))
       .count()
     assert(diff == 0)
+    assertInterpretedMatchesCodegen(vectorPairs.select(col("vec_id"),
+      VectorOps.squaredL2Fast(col("embedding"), col("other")).as("fast")))
+  }
+
+  test("weighted_bucket_sum equals the exact-decimal fold; null and out-of-range buckets add 0") {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import spark.implicits._
+    val rows = Seq[(Int, Seq[java.lang.Long])](
+      (1, Seq(0L, 1L, 2L)), (2, Seq(1L, -1L, 300L, 2L)),
+      (3, Seq(2L, null, 2L)), (4, Seq(null)), (5, Seq()), (6, null))
+    val df = rows.toDF("id", "b")
+    // small weights take the unscaled-long path; a weight past 2^53
+    // unscaled takes the BigDecimal path
+    for (big <- Seq(false, true)) {
+      val w = (0 until 273).map(i => new java.math.BigDecimal(
+        if (big && i == 2) "9000000000.000000001" else s"${(i * 37) % 101 - 50}.${i % 7}05"))
+      val native = ColumnBridge.column(graft.plans.WeightedBucketSumExpr(
+        ColumnBridge.expression(col("b")), w))
+      val wmap = typedLit(w.indices.map(i => i.toLong -> BigDecimal(w(i))).toMap)
+      val fold = aggregate(col("b"), lit(0).cast("decimal(23,9)"), (acc, b) =>
+        (acc + coalesce(try_element_at(wmap, b), lit(0).cast("decimal(20,9)")))
+          .cast("decimal(23,9)"))
+      val got = df.select(col("id"), native.as("n"), fold.as("f"))
+      val bad = got.filter(!(col("n") <=> col("f"))).collect()
+      assert(bad.isEmpty, s"weighted sum != fold on: ${bad.mkString("; ")}")
+      assert(got.filter(col("id") === 6).select("n").head().isNullAt(0))
+      assertInterpretedMatchesCodegen(got.select("id", "n"))
+    }
+  }
+
+  test("SQL functions: a wrong argument count or a column dimension is a usage error") {
+    Tables.embeddings(spark, Sf).limit(1).createOrReplaceTempView("emb_gate")
+    // the message anywhere on the cause chain: Spark may wrap it
+    def failure(call: String): String = {
+      val e = intercept[Exception](spark.sql(s"SELECT $call FROM emb_gate").collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    }
+    val arity = Seq(
+      ("cosine_sim", "2", "cosine_sim(embedding)"),
+      ("squared_l2", "2", "squared_l2(embedding, embedding, embedding)"),
+      ("char_trigram_counts", "1", "char_trigram_counts()"),
+      ("random_project", "3 to 4", "random_project(embedding, 64)"),
+      ("hash_embedding", "1 to 2", "hash_embedding(array('a'), 64, 1)"),
+      ("hyperplane_bucket", "3 to 4", "hyperplane_bucket(embedding, 64, 8, 42, 1)"))
+    for ((fn, n, call) <- arity) {
+      val msg = failure(call)
+      assert(msg.contains(s"$fn expects $n argument(s)"), s"$call: $msg")
+    }
+    val literal = Seq(
+      ("random_project", "random_project(embedding, vec_id, 16)"),
+      ("hash_embedding", "hash_embedding(array('a'), vec_id)"),
+      ("hyperplane_bucket", "hyperplane_bucket(embedding, 64, vec_id)"))
+    for ((fn, call) <- literal) {
+      val msg = failure(call)
+      assert(msg.contains(s"$fn expects literal int args"), s"$call: $msg")
+    }
   }
 
   test("hashEmbedding (codegen expr) is bit-identical to the composed version") {
@@ -82,13 +149,13 @@ class FunctionsSpec extends SparkSpec {
         Tuple1(""), Tuple1("   "), Tuple1("ONE one oNe"), Tuple1("a b c 123 !!"))
       ).toDF("text"))
     val diff = texts.select(
-      Mnemo.hashEmbeddingComposed(col("text")).as("slow"),
+      ComposedRefs.hashEmbeddingComposed(col("text")).as("slow"),
       Mnemo.hashEmbedding(col("text")).as("fast"))
       .filter(!(col("slow") <=> col("fast")))
       .count()
     assert(diff == 0)
     val diff16 = texts.select(
-      Mnemo.hashEmbeddingComposed(col("text"), 16).as("slow"),
+      ComposedRefs.hashEmbeddingComposed(col("text"), 16).as("slow"),
       Mnemo.hashEmbedding(col("text"), 16).as("fast"))
       .filter(!(col("slow") <=> col("fast")))
       .count()

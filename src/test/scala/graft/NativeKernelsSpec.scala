@@ -12,7 +12,8 @@ import graft.functions.{DedupEnrich, MinHash, TextOps}
   * drifts by one bit desynchronizes band keys / gram hashes / feature
   * buckets across every consuming query. Pinned on the full sf0.001
   * corpus plus crafted edge cases (empty text, sub-k docs, repeated
-  * tokens). */
+  * tokens, a NULL token array, null tokens), on both the codegen and
+  * the interpreted path. */
 class NativeKernelsSpec extends SparkSpec {
 
   private def docToks: DataFrame =
@@ -20,9 +21,15 @@ class NativeKernelsSpec extends SparkSpec {
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
 
   /** Edge corpus: empty, whitespace-only, shorter-than-k, exactly-k,
-    * repeated tokens (shingle/gram dup collapse), long repetitive. */
+    * repeated tokens (shingle/gram dup collapse), long repetitive, a
+    * NULL token array, and an array with null tokens. */
   private def edgeToks: DataFrame = {
     import spark.implicits._
+    // doc 10: tokens() never emits a null element, so the array is
+    // built literally — long enough for every window and n-gram size
+    val withNulls = (0 until 40).map(i =>
+      if (i % 7 == 3) null else s"w${i % 5}")
+    val nullToks = Seq((10L, withNulls)).toDF("doc_id", "toks")
     Seq(
       (1L, ""),
       (2L, "   \n\t  "),
@@ -39,6 +46,7 @@ class NativeKernelsSpec extends SparkSpec {
       .withColumn("text",
         when(col("doc_id") === 9, lit(null)).otherwise(col("text")))
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
+      .unionByName(nullToks)
   }
 
   private def assertColsEqual(df: DataFrame, native: org.apache.spark.sql.Column,
@@ -47,13 +55,14 @@ class NativeKernelsSpec extends SparkSpec {
       .filter(!(col("n") <=> col("c")))
       .limit(5).collect()
     assert(bad.isEmpty, s"native != composed on: ${bad.mkString("; ")}")
+    assertInterpretedMatchesCodegen(df.select(col("doc_id"), native.as("n")))
   }
 
   test("shingle_set kernel == array_distinct(shingles(k)) composition") {
     for (df <- Seq(docToks, edgeToks))
       assertColsEqual(df,
         DedupEnrich.shingleSetFromToks(col("toks")),
-        DedupEnrich.shingleSetFromToksComposed(col("toks")))
+        ComposedRefs.shingleSetFromToksComposed(col("toks")))
   }
 
   test("minhash_band_keys kernel == fingerprints→signature→bandKeys composition") {
@@ -61,38 +70,57 @@ class NativeKernelsSpec extends SparkSpec {
       val sh = base.select(col("doc_id"),
         DedupEnrich.shingleSetFromToks(col("toks")).as("sh"))
       val n = DedupEnrich.withBandKeys(sh, "sh", "nb")
-      val c = DedupEnrich.withBandKeysComposed(n, "sh", "cb")
+      val c = ComposedRefs.withBandKeysComposed(n, "sh", "cb")
       val bad = c.filter(!(col("nb") <=> col("cb"))).limit(5).collect()
       assert(bad.isEmpty, s"band keys diverge: ${bad.mkString("; ")}")
+      assertInterpretedMatchesCodegen(n.select("doc_id", "nb"))
     }
+  }
+
+  test("independently built band-key kernels are semanticEquals after optimization") {
+    // the coefficient tables are constants of the kernel call: two
+    // copies must canonicalize equal, or exchange reuse and common
+    // subexpression elimination silently stop applying
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    val sh = docToks.select(col("doc_id"),
+      DedupEnrich.shingleSetFromToks(col("toks")).as("sh"))
+    val twice = DedupEnrich.withBandKeys(
+      DedupEnrich.withBandKeys(sh, "sh", "b1"), "sh", "b2")
+    val calls = twice.queryExecution.optimizedPlan.flatMap(_.expressions)
+      .flatMap(_.collect {
+        case s: StaticInvoke if s.functionName == "minHashBandKeys" => s
+      })
+    assert(calls.length == 2, s"expected two band-key calls: $calls")
+    assert(calls.head ne calls(1))
+    assert(calls.head.semanticEquals(calls(1)))
   }
 
   test("hashed_ngrams kernel == ngrams→md5-prefix→distinct composition") {
     for (df <- Seq(docToks, edgeToks); k <- Seq(3, 13, 16))
       assertColsEqual(df,
         TextOps.hashedNgrams(col("toks"), k),
-        TextOps.hashedNgramsComposed(col("toks"), k))
+        ComposedRefs.hashedNgramsComposed(col("toks"), k))
   }
 
   test("cls_buckets kernel == distinct-bucket + bias + length-bin composition") {
     for (df <- Seq(docToks, edgeToks))
       assertColsEqual(df,
         graft.queries.Pipeline.clsBuckets(col("toks")),
-        graft.queries.Pipeline.clsBucketsComposed(col("toks")))
+        ComposedRefs.clsBucketsComposed(col("toks")))
   }
 
   test("window_occurrences kernel == transform/struct composition") {
     for (df <- Seq(docToks, edgeToks))
       assertColsEqual(df,
         DedupEnrich.windowOccurrencesFromToks(col("toks")),
-        DedupEnrich.windowOccurrencesFromToksComposed(col("toks")))
+        ComposedRefs.windowOccurrencesFromToksComposed(col("toks")))
   }
 
   test("window_hashes kernel == occurrences→h→distinct composition") {
     for (df <- Seq(docToks, edgeToks))
       assertColsEqual(df,
         DedupEnrich.windowHashesFromToks(col("toks")),
-        DedupEnrich.windowHashesFromToksComposed(col("toks")))
+        ComposedRefs.windowHashesFromToksComposed(col("toks")))
   }
 
   test("ngram_set kernel == strict ngrams + distinct composition") {
@@ -122,6 +150,7 @@ class NativeKernelsSpec extends SparkSpec {
         .filter(!(col("n.c") <=> col("a.c")) || !(col("n.bg") <=> col("a.bg")))
         .limit(5).collect()
       assert(bad.isEmpty, s"top bigram diverges: ${bad.mkString("; ")}")
+      assertInterpretedMatchesCodegen(native)
     }
   }
 
@@ -160,6 +189,7 @@ class NativeKernelsSpec extends SparkSpec {
         !(col("n.kept_md5") <=> col("c.kept_md5")))
       .limit(5).collect()
     assert(bad.isEmpty, s"span rebuild diverges: ${bad.mkString("; ")}")
+    assertInterpretedMatchesCodegen(native)
   }
 
   test("token_stats kernel == length-sum / rlike / isin lambda compositions") {
@@ -181,6 +211,6 @@ class NativeKernelsSpec extends SparkSpec {
     for (df <- Seq(docToks, edgeToks))
       assertColsEqual(df,
         MinHash.simhash16(col("toks")),
-        MinHash.simhash16Composed(col("toks")))
+        ComposedRefs.simhash16Composed(col("toks")))
   }
 }

@@ -155,7 +155,7 @@ class PropertiesSpec extends SparkSpec {
         import org.apache.spark.sql.types.{ArrayType, FloatType}
         graft.plans.HyperplaneBucketExpr(
           Literal.create(arr.toSeq, ArrayType(FloatType, containsNull = true)),
-          64, 8, 42L).eval(null).asInstanceOf[Long]
+          64, 8, 42L).replacement.eval(null).asInstanceOf[Long]
       }
     assert(codegen == interp)
     assert(codegen(0) != 0L)  // well-formed vector lands in a real bucket

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs. */
@@ -19,6 +20,22 @@ trait SparkSpec extends AnyFunSuite {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** Requires `df` to give the same rows on the interpreted path — no
+    * whole-stage codegen, no generated expression code — as under the
+    * session's codegen defaults. Each run plans a fresh projection, so
+    * neither reuses the other's physical plan. */
+  protected def assertInterpretedMatchesCodegen(df: DataFrame): Unit = {
+    def rows() = df.select(df.columns.toIndexedSeq.map(c => col(s"`$c`")): _*)
+      .collect().sortBy(_.toString).toSeq
+    val codegen = rows()
+    var interpreted = Seq.empty[org.apache.spark.sql.Row]
+    withConf("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false") { interpreted = rows() }
+    val diff = codegen.zip(interpreted).filter { case (a, b) => a != b }
+    assert(codegen.length == interpreted.length && diff.isEmpty,
+      s"interpreted != codegen on: ${diff.take(5).mkString("; ")}")
   }
 }
 
