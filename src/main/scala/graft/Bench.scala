@@ -29,6 +29,20 @@ object Bench {
     * the tracked artifact from updating. */
   val DefaultReps = 5
 
+  /** The timed action of Bench and TimeOne: a checksum aggregate over
+    * every output column, so column-pruning cannot skip projected
+    * expression work the way a bare count() can (an envelope-string
+    * query would otherwise be timed without building its envelopes).
+    * bit_xor, NOT sum: under ANSI mode (Spark 4 default) summing 64-bit
+    * hashes overflows on most frames >2 rows, which silently demoted
+    * those queries to the count() fallback — timing a column-pruned
+    * scan while the artifact claimed checksum_agg. xor never
+    * overflows, so the fallback is reserved for output types the hash
+    * expression genuinely rejects. */
+  def force(df: DataFrame): Unit =
+    try df.agg(bit_xor(xxhash64(df.columns.toIndexedSeq.map(col): _*))).collect()
+    catch { case _: Throwable => df.count() }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -39,19 +53,6 @@ object Bench {
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // timed action: a checksum aggregate over every output column, so
-    // column-pruning cannot skip projected expression work the way a
-    // bare count() can (an envelope-string query would otherwise be
-    // timed without building its envelopes). bit_xor, NOT sum: under
-    // ANSI mode (Spark 4 default) summing 64-bit hashes overflows on
-    // most frames >2 rows, which silently demoted those queries to the
-    // count() fallback — timing a column-pruned scan while the artifact
-    // claimed checksum_agg. xor never overflows, so the fallback is
-    // reserved for output types the hash expression genuinely rejects.
-    def force(df: DataFrame): Unit = {
-      try df.agg(bit_xor(xxhash64(df.columns.toIndexedSeq.map(col): _*))).collect()
-      catch { case _: Throwable => df.count() }
-    }
     // criterion samples each bench many times and reports a statistic;
     // min-of-N is the cheap robust analogue (drops GC/straggler
     // noise). 3 reps (round 3) stopped min-of-2's single-straggler

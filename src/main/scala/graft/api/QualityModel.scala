@@ -26,7 +26,7 @@ import graft.queries.Pipeline
   * readers see old or new weights, never a mix.
   *
   * Training, featurization, and scoring are the SHARED pl20/pl21
-  * builders ([[graft.queries.Pipeline.clsFeatures]] /
+  * builders ([[graft.queries.Pipeline.corpusPass]] /
   * [[graft.queries.Pipeline.clsTrained]] /
   * [[graft.queries.Pipeline.clsScoreAll]]) — the persisted model is
   * bit-identical to what the registered queries train on the same
@@ -43,11 +43,11 @@ object QualityModel {
     val man = ManifestIO.read(storePath)
     val gen = man.flatMap(_.get("gen")).map(_.toLong).getOrElse(0L) + 1
     val seg = s"g$gen"
-    // no cache on feats here: unlike the registered queries (which
-    // score with it AFTER training), fit consumes the feature pass
+    // no cache on the corpus pass here: unlike the registered queries
+    // (which score with it AFTER training), fit consumes its features
     // exactly once — in the training pair frame (review finding)
     val w = Pipeline.clsTrained(spark,
-      Pipeline.clsFeatures(spark, sfDir),
+      Pipeline.corpusPass(spark, sfDir),
       Pipeline.funnelStaged4(spark, sfDir))
     w.write.mode(SaveMode.Overwrite).parquet(s"$storePath/$seg/weights")
     ManifestIO.write(storePath, Map(
@@ -79,7 +79,7 @@ object QualityModel {
     * scoring pass). Output: (doc_id, lang, kept, is_eval, p) — the
     * [[graft.queries.Pipeline.clsScoreAll]] shape. */
   def score(spark: SparkSession, sfDir: String, storePath: String): DataFrame =
-    Pipeline.clsScoreAll(Pipeline.clsFeatures(spark, sfDir),
+    Pipeline.clsScoreAll(Pipeline.corpusPass(spark, sfDir),
       weights(spark, storePath))
 
   /** [[score]] + the pl21 quantile gate against the corpus's funnel
@@ -93,8 +93,7 @@ object QualityModel {
     * (no training leg) and deliberately uncached (review finding). */
   def gateReport(spark: SparkSession, sfDir: String,
       storePath: String): DataFrame = {
-    val scored = Pipeline.clsScoreAll(Pipeline.clsFeatures(spark, sfDir),
-      weights(spark, storePath)).cache()
+    val scored = score(spark, sfDir, storePath).cache()
     Pipeline.clsGateBuckets(scored, Pipeline.funnelStaged4(spark, sfDir))
       .orderBy("lang", "bucket")
   }
@@ -112,18 +111,14 @@ object QualityModel {
       storePath: String): DataFrame =
     Pipeline.clsCutoffs(score(spark, sfDir, storePath))
 
-  /** The tail-gate frame off the persisted model: doc_ids the stored
-    * classifier puts in the per-language tail tertile (the SHARED
-    * [[graft.queries.Pipeline.clsBucketAssign]] cutoffs — exactly the
-    * buckets pl21 reports and pl23 selects on). CACHED: the gated
-    * staging consumes it three times (quality anti-join, stage-0 arm,
-    * rescued count). */
-  private def tailGate(spark: SparkSession, sfDir: String,
-      storePath: String): DataFrame = {
-    val scored = score(spark, sfDir, storePath).cache()
-    Pipeline.clsBucketAssign(scored).filter(col("bucket") === 3)
-      .select("doc_id").cache()
-  }
+  /** The cached corpus pass gated by the PERSISTED model — the SHARED
+    * [[graft.queries.Pipeline.clsGated]] column ("not in the tail
+    * tertile" of the stored model's scores, the same cutoffs pl21
+    * reports and pl23 selects on). */
+  private def gated(spark: SparkSession, sfDir: String,
+      storePath: String): DataFrame =
+    Pipeline.clsGated(Pipeline.corpusPass(spark, sfDir).cache(),
+      weights(spark, storePath))
 
   /** The classifier-GATED funnel staging with the PERSISTED model —
     * deployed pl23 (tail ⇒ quality-fail at stage 0, head/middle pass
@@ -131,13 +126,11 @@ object QualityModel {
     * per-document (doc_id, lang, stage) frame a training pipeline
     * consumes (stage 4 = clean survivor feeds shard assembly; stage 3
     * is the eval-CONTAMINATED bucket and must never ship). No training
-    * jobs — scoring is one broadcast of the stored 273-row weight
-    * table. */
+    * jobs — scoring is one projection against the stored 273-row
+    * weight table. */
   def gatedStaging(spark: SparkSession, sfDir: String,
       storePath: String): DataFrame =
-    Pipeline.funnelStage4Core(spark,
-      Pipeline.funnelEnriched(spark, sfDir).cache(),
-      Some(tailGate(spark, sfDir, storePath)))
+    Pipeline.funnelStages(spark, gated(spark, sfDir, storePath), col("gate"))
 
   /** pl23's per-language attrition report off the PERSISTED model —
     * the SAME [[graft.queries.Pipeline.gatedFunnelReport]] builder the
@@ -146,9 +139,7 @@ object QualityModel {
     * corpus fit). */
   def gatedReport(spark: SparkSession, sfDir: String,
       storePath: String): DataFrame =
-    Pipeline.gatedFunnelReport(spark,
-      Pipeline.funnelEnriched(spark, sfDir).cache(),
-      tailGate(spark, sfDir, storePath))
+    Pipeline.gatedFunnelReport(spark, gated(spark, sfDir, storePath))
 
   /** Operator-facing manifest facts. */
   case class Health(generation: Long, dim: Int, trainedOn: Option[String])

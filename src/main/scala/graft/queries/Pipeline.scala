@@ -734,15 +734,9 @@ object Pipeline extends QueryGroup {
     *
     * Cross-engine exactness: per-token log-probs are 6dp-rounded then
     * DECIMAL-summed (partition-order-independent, the t8 rule). The
-    * per-doc mean is NOT a double division + engine ROUND: at sf0.1
-    * two docs land EXACTLY on a .5 tie in the 7th digit (the decimal
-    * sum divides evenly, e.g. -149.187850/100), and Spark's exact
-    * BigDecimal HALF_UP of the nearest double disagrees with DuckDB's
-    * float-multiply round on true ties. Instead the mean is rounded
-    * half-away-from-zero on the EXACT rational in integer micro-units
-    * ((2|S| + n) div 2n with S = decimal sum scaled to 10^-6), then
-    * converted to double by ONE shared IEEE division by 1e6 —
-    * bitwise-identical in both engines by construction. Cutoffs are
+    * per-doc mean is the shared [[ExactMean]] (at sf0.1 two docs land
+    * EXACTLY on a .5 tie in the 7th digit, e.g. -149.187850/100, where
+    * a double division + engine ROUND splits the engines). Cutoffs are
     * picked from that identical value set by integer rank thresholds,
     * and the final bucket comparison is >= between identical doubles.
     *
@@ -773,16 +767,7 @@ object Pipeline extends QueryGroup {
       val scored = docTok.join(broadcast(logp), Seq("lang", "tok"))
         .groupBy("doc_id", "lang")
         .agg(sum(col("n")).as("n_tokens"),
-          // exact decimal sum in integer micro-units (scale-6 decimal
-          // times 10^6 is integral by construction)
-          (sum(col("logp") * col("n")) * 1000000).cast("long").as("sm"))
-        // round-half-away-from-zero on the exact rational sm/n_tokens,
-        // then ONE shared IEEE division — no engine-native double ROUND
-        .withColumn("m", expr("(2 * abs(sm) + n_tokens) DIV (2 * n_tokens)"))
-        .withColumn("avg_logp",
-          when(col("sm") < 0, -col("m")).otherwise(col("m"))
-            .cast("double") / lit(1000000.0))
-        .select("doc_id", "lang", "n_tokens", "avg_logp")
+          ExactMean(sum(col("logp") * col("n")), sum(col("n"))).as("avg_logp"))
         .cache()
       // histogram of distinct scores per language: map-side combinable,
       // row count bounded by the 6dp value space, not the corpus
@@ -822,18 +807,11 @@ object Pipeline extends QueryGroup {
         SELECT model.lang, tok,
                CAST(ROUND(log10(CAST(cnt AS DOUBLE) / tot), 6) AS DECIMAL(12,6)) AS logp
         FROM model JOIN totals ON model.lang = totals.lang),
-      scoredsum AS (
+      scored AS (
         SELECT doc_id, doctok.lang, CAST(SUM(n) AS BIGINT) AS n_tokens,
-               CAST(SUM(logp * n) * 1000000 AS BIGINT) AS sm
+               ${ExactMean.sql("SUM(logp * n)", "SUM(n)")} AS avg_logp
         FROM doctok JOIN logp ON doctok.lang = logp.lang AND doctok.tok = logp.tok
         GROUP BY doc_id, doctok.lang),
-      scored AS (
-        SELECT doc_id, lang, n_tokens,
-               CAST(CASE WHEN sm < 0
-                         THEN -((2 * (-sm) + n_tokens) // (2 * n_tokens))
-                         ELSE (2 * sm + n_tokens) // (2 * n_tokens) END
-                    AS DOUBLE) / 1000000.0 AS avg_logp
-        FROM scoredsum),
       byval AS (SELECT lang, avg_logp, COUNT(*) AS cnt FROM scored GROUP BY ALL),
       ranked AS (
         SELECT lang, avg_logp,
@@ -1105,60 +1083,8 @@ object Pipeline extends QueryGroup {
       WHERE ${mixUniformSql("doc_id")} < r.rate
       ORDER BY doc_id"""))
 
-  /** End-to-end curation funnel — the per-language attrition report a
-    * production run publishes after composing its stages in order:
-    * Gopher quality rules (pl11's exact conjunction) → exact dedup
-    * among the survivors (d1's fingerprint, min-doc_id canonical) →
-    * GUARDED fuzzy dedup of the canonicals (d12's hot-band-guarded
-    * pair generation + d6's min-label connected components; survivor =
-    * component min) → eval-set decontamination of the fuzzy survivors
-    * (pl14's 13-gram overlap against the held-out doc_id % 7 slice,
-    * which is excluded from the training corpus at stage zero). This
-    * is the published curation-funnel shape (Gopher §A1.2, RefinedWeb,
-    * FineWeb: quality → exact dedup → FUZZY dedup → decontaminate),
-    * and the fuzzy stage the end-to-end story exercises is the GUARDED
-    * generator — the unguarded d2/d3 self-joins stay registered only
-    * as recall models. Each stage's logic is the registered operator's
-    * own shared builders, so the funnel can never disagree with the
-    * stages it composes; every stage drops documents on this corpus at
-    * all three scales (DuckDB-probed before registration,
-    * scripts/probe_fuzzy_stage.py: raw→quality −2348, →unique −814,
-    * →fuzzy −69, →clean −13 docs at sf0.1; fuzzy drops 5/4/69 at
-    * sf0.001/0.01/0.1 — 3 sf0.1 docs sit in BOTH guard legs, so the
-    * leg sums 24+48 exceed the 69 distinct drops).
-    *
-    * Fuzzy-stage semantics: candidate pairs come from
-    * [[graft.functions.DedupEnrich.guardedCandidatePairs]] over the
-    * exact-canonicals' MinHash band keys with H resolved through the
-    * SHARED [[graft.functions.DedupEnrich.hotThresholdFor]] (fixture
-    * default = [[FunnelHotBands]], which the oracle embeds),
-    * verified at Jaccard >= [[FunnelMinJaccard]]; components from the
-    * SHARED [[graft.functions.DedupEnrich.minLabelComponents]]; the
-    * deterministic canonical-survivor rule is "component minimum
-    * survives". A BAND-SATURATED doc is NOT a survivor: the guard
-    * suppresses a hot band's pairs, so a saturated doc's true
-    * component is unknown — dropping it is the over-approximation-safe
-    * routing (may drop a would-be survivor of a templated cluster,
-    * never lets a hidden near-dup through; both endpoints of every
-    * suppressed pair are flagged, per the d12 contract). H = 3 is the
-    * fixture threshold (smallest non-vacuous: any pair-producing band
-    * holds >= 2 docs); the saturated leg is non-vacuous at sf0.1 only
-    * (0/0/24 docs) — the pair leg at all scales (5/4/48 verified
-    * pairs).
-    *
-    * Scale shape: one enriched doc-level pass (cached — the shingle
-    * set rides it so the fuzzy stage re-reads NO corpus data), the
-    * d1-style groupBy+join-back for canonicals (no fp window), band
-    * keys computed on the (much smaller) canonical-survivor set only,
-    * the guard's counts-aggregate-then-semi/anti discipline (O(h²) on
-    * a hot band structurally unproducible), a CC loop over the
-    * verified-pair graph only (orders of magnitude smaller than the
-    * corpus), the pl14 broadcast gram probe (no corpus shuffle), then
-    * ONE per-language aggregate over a per-doc stage number — joins
-    * are equi or broadcast throughout. Retention uses the integer
-    * micro-unit rounding (the pl12/pl14 discipline). */
   /** Hot-band threshold of the funnel's fuzzy stage (the d12
-    * discipline at the funnel's scope — see [[funnelStaged]]'s
+    * discipline at the funnel's scope — see [[funnelStages]]'s
     * scaladoc for the probe numbers and the production-threshold
     * note on `Dedup.BatchHotBands`). This is the FIXTURE value the
     * oracle SQL embeds; the funnel resolves the effective threshold
@@ -1174,13 +1100,17 @@ object Pipeline extends QueryGroup {
     * family threshold). */
   private val FunnelMinJaccard = 0.3
 
-  /** DuckDB mirror of [[funnelStaged]]: the CTE chain `enriched` →
-    * `staged(doc_id, lang, stage)`, requiring `$toksSql` in scope and
-    * `WITH RECURSIVE` on the enclosing chain (the fuzzy stage's
-    * `freach` reachability CTE). Shared verbatim by the pl16, pl18 and
-    * pl19 oracles — one source of funnel truth per engine; the shingle
-    * /minhash/band/jaccard SQL comes from the same generators the
-    * Dedup oracles use.
+  /** DuckDB mirror of [[funnelStages]]: the gate→stage-4 segment of
+    * the funnel CTE chain, from `train` to `${p}staged4(doc_id, lang,
+    * stage)`. `gate` is ONE boolean predicate over `train`'s columns
+    * (`kept = 1` for the rule funnel, "not in the tail tertile" for
+    * pl23); `${p}gated` binds it as a column, from which both the
+    * survivor set (`${p}q`) and the stage-0 arm derive. `p` prefixes
+    * every internal CTE name, so the gated chain can coexist with the
+    * rule chain in one WITH. `toks`, `train` and `ev` must be in
+    * scope, and `WITH RECURSIVE` on the enclosing chain (the fuzzy
+    * stage's `freach` reachability CTE); the shingle/minhash/band/
+    * jaccard SQL comes from the same generators the Dedup oracles use.
     *
     * GOTCHA (caught by the sf0.1 gate): under `WITH RECURSIVE`,
     * DuckDB 1.0 does NOT deduplicate a plain `UNION` inside a
@@ -1189,18 +1119,9 @@ object Pipeline extends QueryGroup {
     * out of `fdrop` twice and duplicated its `staged` row through the
     * join. Any set-op that must dedupe in this chain is therefore
     * written `SELECT DISTINCT ... FROM (... UNION ALL ...)`. */
-  /** Generator for the quality→stage-4 segment of the funnel CTE
-    * chain, parameterized for pl23's classifier-GATED twin: `p`
-    * prefixes every internal CTE name (so the gated chain can coexist
-    * with the label chain in one WITH), `qDef` is the quality-survivor
-    * definition, `stage0Arm` the matching stage-0 CASE arm (Gopher for
-    * the label funnel, the classifier gate for pl23 — the two must
-    * agree with `qDef` or staging and survivorship would diverge).
-    * `toks`, `train`, `ev` must be in scope. The original
-    * [[funnelStagedSql]] is this generator at prefix ""
-    * with the plain Gopher gate — ONE source of funnel-SQL truth. */
-  private def funnelChainSql(p: String, qDef: String,
-      stage0Arm: String): String = s"""${p}q AS ($qDef),
+  private def funnelChainSql(p: String, gate: String): String =
+    s"""${p}gated AS (SELECT *, $gate AS gate FROM train),
+      ${p}q AS (SELECT * FROM ${p}gated WHERE gate),
       ${p}canon AS (SELECT fp, MIN(doc_id) AS canonical_id
                     FROM ${p}q GROUP BY fp),
       ${p}uniq AS (SELECT ${p}q.doc_id,
@@ -1258,15 +1179,21 @@ object Pipeline extends QueryGroup {
         JOIN ev ON tg.gram = ev.gram),
       ${p}staged4 AS MATERIALIZED (
         SELECT t.doc_id, t.lang,
-               CASE $stage0Arm
+               CASE WHEN NOT t.gate THEN 0
                     WHEN u.canonical IS NULL OR u.canonical != 1 THEN 1
                     WHEN fd.doc_id IS NOT NULL THEN 2
                     WHEN f.doc_id IS NOT NULL THEN 3
                     ELSE 4 END AS stage
-        FROM train t LEFT JOIN ${p}uniq u ON t.doc_id = u.doc_id
+        FROM ${p}gated t LEFT JOIN ${p}uniq u ON t.doc_id = u.doc_id
              LEFT JOIN ${p}fdrop fd ON t.doc_id = fd.doc_id
              LEFT JOIN ${p}flagged f ON t.doc_id = f.doc_id)"""
 
+  /** DuckDB mirror of [[funnelStaged]] and [[corpusPass]]: the CTE
+    * chain `enriched` → `k` (Gopher verdict) → `train`/`ev` → the rule
+    * funnel's `staged4` → `staged(doc_id, lang, stage)` with the
+    * stage-5 mix, requiring `$toksSql` in scope. Shared verbatim by the
+    * pl16, pl18, pl19, pl20, pl21 and pl23 oracles — one source of
+    * funnel truth per engine. */
   private val funnelStagedSql: String = s"""enriched AS (
         SELECT t.doc_id, t.lang,
                CAST(len(toks) AS BIGINT) AS n_words,
@@ -1296,8 +1223,7 @@ object Pipeline extends QueryGroup {
         FROM enriched),
       train AS (SELECT * FROM k WHERE NOT is_eval),
       ev AS (SELECT DISTINCT unnest(grams) AS gram FROM k WHERE is_eval),
-      ${funnelChainSql("", "SELECT * FROM train WHERE kept = 1",
-        "WHEN t.kept != 1 THEN 0")},
+      ${funnelChainSql("", "kept = 1")},
       scnt AS (SELECT lang, COUNT(*) AS n FROM staged4
                WHERE stage = 4 GROUP BY lang),
       snmin AS (SELECT MIN(n) AS n_min FROM scnt),
@@ -1310,68 +1236,125 @@ object Pipeline extends QueryGroup {
                     THEN 5 ELSE s.stage END AS stage
         FROM staged4 s LEFT JOIN srates r ON s.lang = r.lang)"""
 
-  /** The ONE enriched corpus pass of the funnel family — tokens,
-    * Gopher stats, exact fingerprint, shingle set, hashed grams, eval
-    * flag; `withBuckets` additionally derives the classifier's hashed
-    * feature buckets off the SAME token binding (the pl20/pl21/pl23
-    * shape — those queries consume BOTH the funnel staging and the
-    * feature frame, and building them as two separate passes tokenized
-    * and Gopher-scanned the corpus TWICE per invocation; guide §1.2:
-    * remove redundant passes before tuning anything inside them).
-    * UNCACHED: each caller caches it (every funnel build consumes it
-    * at least twice: staging + eval grams). */
-  private def enrichedPass(s: SparkSession, dir: String,
-      withBuckets: Boolean): DataFrame = {
+  /** The per-stage survivor counts of the attrition report: column
+    * `AttritionCols(i)` counts the documents whose stage is > i. */
+  private val AttritionCols = Seq("n_quality", "n_unique", "n_fuzzy", "n_clean")
+
+  /** DuckDB mirror of [[attrition]] over the `(lang, stage)` CTE
+    * `staged`: defines `report`, the counts plus `extra` aggregate
+    * columns plus `retention`. */
+  private def attritionSql(staged: String, extra: String*): String = {
+    val counts = AttritionCols.zipWithIndex.map { case (c, i) =>
+      s"CAST(SUM(CASE WHEN stage >= ${i + 1} THEN 1 ELSE 0 END) AS BIGINT) AS $c"
+    } ++ extra
+    s"""agg AS (
+        SELECT lang, COUNT(*) AS n_raw,
+               ${counts.mkString(",\n               ")}
+        FROM $staged GROUP BY lang),
+      report AS (
+        SELECT *, ${ExactMean.sql("n_clean", "n_raw")} AS retention
+        FROM agg)"""
+  }
+
+  /** The ONE corpus pass of the funnel and classifier families, every
+    * column any consumer reads off one token binding: Gopher verdict
+    * `kept` (pl11), exact fingerprint `fp` (d1), shingle set `sh`
+    * (d12), hashed eval grams `grams` (pl14), the eval flag, and the
+    * classifier's hashed feature `buckets`. Callers project what they
+    * need BEFORE any `.cache()` — the pl16/pl18/pl19 rule funnel drops
+    * `buckets`, so column pruning never computes it there; the
+    * classifier queries keep it, so features and funnel labels share
+    * one corpus read and one tokenization (guide §1.2: remove
+    * redundant passes before tuning anything inside them). UNCACHED. */
+  private[graft] def corpusPass(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.{DedupEnrich, GopherRules}
-    val K = ContamGramK
-    val base = GopherRules.withStats(Tables.documents(s, dir)
+    GopherRules.withStats(Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("text"),
         TextOps.tokens(col("text")).as("toks")))
       .withColumn("fp", DedupEnrich.exactFpFromToks(col("toks")))
       .withColumn("sh", DedupEnrich.shingleSetFromToks(col("toks")))
-      .withColumn("grams", TextOps.hashedNgrams(col("toks"), K))
+      .withColumn("grams", TextOps.hashedNgrams(col("toks"), ContamGramK))
       .withColumn("is_eval", col("doc_id") % 7 === 0)
-    if (withBuckets)
-      base.withColumn("buckets", clsBuckets(col("toks")))
-        .select("doc_id", "lang", "kept", "fp", "sh", "grams", "is_eval",
-          "buckets")
-    else
-      base.select("doc_id", "lang", "kept", "fp", "sh", "grams", "is_eval")
+      .withColumn("buckets", clsBuckets(col("toks")))
+      .select("doc_id", "lang", "kept", "fp", "sh", "grams", "is_eval",
+        "buckets")
   }
 
-  /** The funnel-family enriched pass (no classifier columns) — see
-    * [[enrichedPass]]. */
-  private[graft] def funnelEnriched(s: SparkSession, dir: String): DataFrame =
-    enrichedPass(s, dir, withBuckets = false)
+  /** The rule funnel's quality gate: pl11's Gopher conjunction. */
+  private[graft] val RuleGate: Column = col("kept") === 1
 
-  /** The classifier-family enriched pass: [[funnelEnriched]]'s column
-    * set PLUS the hashed feature `buckets`, one corpus read and one
-    * token binding for both consumers. [[funnelStage4Core]] projects
-    * the funnel columns it needs, so the staging built over this frame
-    * is identical to one built over [[funnelEnriched]]; the feature
-    * frame is the `(doc_id, lang, kept, is_eval, buckets)` projection
-    * ([[clsFeatures]]' exact column set). */
-  private[graft] def clsEnriched(s: SparkSession, dir: String): DataFrame =
-    enrichedPass(s, dir, withBuckets = true)
-
-  /** The quality→stage-4 core over a (caller-cached) enriched frame,
-    * parameterized for pl23's classifier-GATED twin: `gateDrop`, when
-    * present, REPLACES the Gopher rule gate as the quality stage (the
-    * deployed-CCNet shape — the trained classifier IS the quality
-    * filter in production; the rules remain the training teacher
-    * only): a document leaves at stage 0 iff its doc_id is in the
-    * gate frame, and every downstream stage (exact dedup, guarded
-    * fuzzy dedup, decontamination) runs on the gate's survivor set —
-    * including rule-fails the classifier rescued. `None` is
-    * byte-identical to the pre-pl23 funnel (the stage-5 lesson: the
-    * pl16/pl18/pl19/pl20/pl21 plans and hashes must not move).
-    * [[funnelChainSql]] at the same parameters is the DuckDB mirror. */
-  private[graft] def funnelStage4Core(s: SparkSession, enriched: DataFrame,
-      gateDrop: Option[DataFrame]): DataFrame = {
+  /** End-to-end curation funnel — every TRAIN document (the doc_id % 7
+    * eval slice excluded up front) of a (caller-cached) [[corpusPass]]
+    * frame with its furthest-surviving stage, composed in order:
+    * quality `gate` → exact dedup among the survivors (d1's
+    * fingerprint, min-doc_id canonical) → GUARDED fuzzy dedup of the
+    * canonicals (d12's hot-band-guarded pair generation + d6's
+    * min-label connected components; survivor = component min) →
+    * eval-set decontamination of the fuzzy survivors (pl14's 13-gram
+    * overlap against the held-out slice). Stages: 0 = failed the gate,
+    * 1 = non-canonical exact dup, 2 = fuzzy near-dup non-survivor
+    * (band-saturated OR a non-minimum member of a verified-pair
+    * component), 3 = eval-contaminated, 4 = clean survivor. This is the
+    * published curation-funnel shape (Gopher §A1.2, RefinedWeb,
+    * FineWeb: quality → exact dedup → FUZZY dedup → decontaminate),
+    * and the fuzzy stage the end-to-end story exercises is the GUARDED
+    * generator — the unguarded d2/d3 self-joins stay registered only
+    * as recall models. Each stage's logic is the registered operator's
+    * own shared builders, so the funnel can never disagree with the
+    * stages it composes; every stage drops documents on this corpus at
+    * all three scales (DuckDB-probed before registration,
+    * scripts/probe_fuzzy_stage.py: raw→quality −2348, →unique −814,
+    * →fuzzy −69, →clean −13 docs at sf0.1; fuzzy drops 5/4/69 at
+    * sf0.001/0.01/0.1 — 3 sf0.1 docs sit in BOTH guard legs, so the
+    * leg sums 24+48 exceed the 69 distinct drops).
+    *
+    * The gate is a boolean column of `enriched`: [[RuleGate]] for the
+    * rule funnel, "not in the tail tertile" ([[clsGated]]) for the
+    * deployed classifier funnel — the trained model IS the quality
+    * filter in production (CCNet), the rules only its teacher. A
+    * document leaves at stage 0 iff its gate is false, and stages 1–3
+    * run on the gate's survivor set, so two gates give genuinely
+    * different stagings (rescued rule-fails reach dedup under the
+    * classifier gate). [[funnelChainSql]] is the DuckDB mirror.
+    *
+    * Fuzzy-stage semantics: candidate pairs come from
+    * [[graft.functions.DedupEnrich.guardedCandidatePairs]] over the
+    * exact-canonicals' MinHash band keys with H resolved through the
+    * SHARED [[graft.functions.DedupEnrich.hotThresholdFor]] (fixture
+    * default = [[FunnelHotBands]], which the oracle embeds),
+    * verified at Jaccard >= [[FunnelMinJaccard]]; components from the
+    * SHARED [[graft.functions.DedupEnrich.minLabelComponents]]; the
+    * deterministic canonical-survivor rule is "component minimum
+    * survives". A BAND-SATURATED doc is NOT a survivor: the guard
+    * suppresses a hot band's pairs, so a saturated doc's true
+    * component is unknown — dropping it is the over-approximation-safe
+    * routing (may drop a would-be survivor of a templated cluster,
+    * never lets a hidden near-dup through; both endpoints of every
+    * suppressed pair are flagged, per the d12 contract). H = 3 is the
+    * fixture threshold (smallest non-vacuous: any pair-producing band
+    * holds >= 2 docs); the saturated leg is non-vacuous at sf0.1 only
+    * (0/0/24 docs) — the pair leg at all scales (5/4/48 verified
+    * pairs).
+    *
+    * Scale shape: the cached corpus pass (the shingle set rides it so
+    * the fuzzy stage re-reads NO corpus data), the d1-style
+    * groupBy+join-back for canonicals (no fp window), band keys
+    * computed on the (much smaller) canonical-survivor set only, the
+    * guard's counts-aggregate-then-semi/anti discipline (O(h²) on a
+    * hot band structurally unproducible), a CC loop over the
+    * verified-pair graph only (orders of magnitude smaller than the
+    * corpus), the pl14 broadcast gram probe (no corpus shuffle) — joins
+    * are equi or broadcast throughout.
+    *
+    * EAGER: the fuzzy stage's CC loop runs driver-controlled Spark
+    * jobs at build time (the pl18/pl19 build discipline — plan pins
+    * for these queries live in their executing PipelineSpec tests, not
+    * PlanSpec). */
+  private[graft] def funnelStages(s: SparkSession, enriched: DataFrame,
+      gate: Column): DataFrame = {
     import graft.functions.DedupEnrich
     val train = enriched.filter(!col("is_eval"))
-    val q = gateDrop.fold(train.filter(col("kept") === 1))(g =>
-      train.join(g, Seq("doc_id"), "left_anti"))
+    val q = train.filter(gate)
     val canon = q.groupBy("fp").agg(min(col("doc_id")).as("canonical_id"))
     val uniq = q.join(DedupEnrich.joinBackBuild(canon), "fp")
       .withColumn("canonical",
@@ -1380,7 +1363,7 @@ object Pipeline extends QueryGroup {
     // (the shingle set rides the cached enriched pass — no corpus
     // re-read); guard + pairs via the SHARED d12 core, components via
     // the SHARED d6 loop; survivor = component min, saturated docs
-    // drop (over-approximation-safe — see the funnel scaladoc)
+    // drop (over-approximation-safe — see the scaladoc)
     val banded = DedupEnrich.withBandKeys(
       uniq.filter(col("canonical") === 1).select(col("doc_id"), col("sh")),
       "sh").cache()
@@ -1409,18 +1392,12 @@ object Pipeline extends QueryGroup {
       .select(col("doc_id"), explode(col("grams")).as("gram"))
       .join(broadcast(evalGrams), Seq("gram"))
       .select("doc_id").distinct().withColumn("flag", lit(1))
-    val joined0 = train
+    train
       .join(uniq.select(col("doc_id"), col("canonical")), Seq("doc_id"), "left")
       .join(fdrop, Seq("doc_id"), "left")
       .join(flagged, Seq("doc_id"), "left")
-    val joined = gateDrop.fold(joined0)(g => joined0.join(
-      g.select(col("doc_id")).withColumn("gate_drop", lit(1)),
-      Seq("doc_id"), "left"))
-    val stage0 = gateDrop.fold(when(col("kept") =!= 1, 0))(_ =>
-      when(col("gate_drop") === 1, 0))
-    joined
       .withColumn("stage",
-        stage0
+        when(!gate, 0)
           .when(col("canonical").isNull || col("canonical") =!= 1, 1)
           .when(col("fuzzy_drop") === 1, 2)
           .when(col("flag") === 1, 3)
@@ -1428,42 +1405,26 @@ object Pipeline extends QueryGroup {
       .select("doc_id", "lang", "stage")
   }
 
-  /** SHARED curation-funnel staging (pl16 reports it, pl18/pl19/pl20
-    * train on it): every TRAIN document (the doc_id % 7 eval slice
-    * excluded up front) with its furthest-surviving stage — 0 = failed
-    * Gopher quality, 1 = non-canonical exact dup, 2 = fuzzy near-dup
-    * non-survivor (band-saturated OR a non-minimum member of a
-    * verified-pair component), 3 = eval-contaminated, 4 = clean
-    * survivor, 5 = clean survivor SELECTED by the composition sampler
-    * (pl15's deterministic Bernoulli at survivor-derived per-language
-    * rates — the published pipelines' final MIX step; stages {4, 5}
-    * partition the clean survivors, so consumers of the full curated
-    * corpus filter stage >= 4 and consumers of the MIXED corpus filter
-    * stage >= 5). Every stage decision comes from the SHARED builders the
-    * stage operators themselves use (GopherRules == pl11, exactFp ==
-    * d1, withBandKeys/guardedCandidatePairs == d12,
-    * minLabelComponents == d6, hashedNgrams == pl14) — composition,
-    * not reimplementation; [[funnelStagedSql]] is the DuckDB mirror.
-    *
-    * EAGER: the fuzzy stage's CC loop runs driver-controlled Spark
-    * jobs at build time (the pl18/pl19 build discipline — plan pins
-    * for these queries live in their executing PipelineSpec tests, not
-    * PlanSpec).
-    *
-    * THIS builder stops at stage 4 (no composition-mix columns) — the
-    * frame pl18/pl19/pl20 consume: they filter the clean-survivor set
-    * (staged stage >= 4 == staged4 stage == 4, since stages {4, 5}
-    * partition it), so computing the mix rates for them would be pure
-    * plan overhead (measured +1.3-1.7 s each at sf0.1 when stage 5
-    * first landed in their path). UNCACHED: each of those callers
-    * consumes it exactly once; [[funnelStaged]] — the 6-stage form
-    * pl16 reports — adds the cache itself because its mix stage reads
-    * the frame twice. */
+  /** SHARED rule-funnel staging ([[funnelStages]] under [[RuleGate]]
+    * over the pass without `buckets`) — the frame pl18/pl19 and the
+    * persisted classifier fit consume. It stops at stage 4: they filter
+    * the clean-survivor set (stages {4, 5} partition it), so computing
+    * the mix rates for them would be pure plan overhead (measured
+    * +1.3-1.7 s each at sf0.1 when stage 5 first landed in their
+    * path). UNCACHED: each of those callers consumes it exactly once;
+    * [[funnelStaged]] adds the cache itself because its mix stage
+    * reads the frame twice. */
   private[graft] def funnelStaged4(s: SparkSession, dir: String): DataFrame =
-    funnelStage4Core(s, funnelEnriched(s, dir).cache(), None)
+    funnelStages(s, corpusPass(s, dir).drop("buckets").cache(), RuleGate)
 
-  /** SHARED curation-funnel staging WITH the stage-5 composition mix —
-    * see the stage catalogue above; pl16 reports this frame. */
+  /** SHARED curation-funnel staging WITH stage 5 = clean survivor
+    * SELECTED by the composition sampler (pl15's deterministic
+    * Bernoulli at survivor-derived per-language rates — the published
+    * pipelines' final MIX step; stages {4, 5} partition the clean
+    * survivors, so consumers of the full curated corpus filter
+    * stage >= 4 and consumers of the MIXED corpus filter stage >= 5).
+    * pl16 reports this frame; [[funnelStagedSql]]'s `staged` is the
+    * DuckDB mirror. */
   private def funnelStaged(s: SparkSession, dir: String): DataFrame = {
     val staged4 = funnelStaged4(s, dir)
       .cache() // two consumers: the survivor-rate aggregate + the final mix
@@ -1489,36 +1450,30 @@ object Pipeline extends QueryGroup {
       .select("doc_id", "lang", "stage")
   }
 
+  /** The ONE per-language attrition report over a `(lang, stage)`
+    * staging: n_raw, then [[AttritionCols]] (the documents past the
+    * gate, exact dedup, fuzzy dedup and decontamination), then the
+    * `extra` aggregates, then [[ExactMean]] retention = n_clean/n_raw.
+    * One map-side-combinable aggregate over the per-doc stage number.
+    * pl16 adds `n_mixed`; pl23 joins `n_rescued`. */
+  private[graft] def attrition(staged: DataFrame, extra: Column*): DataFrame = {
+    val passed = AttritionCols.zipWithIndex.map { case (c, i) =>
+      sum((col("stage") >= i + 1).cast("long")).as(c)
+    }
+    staged.groupBy("lang").agg(count(lit(1)).as("n_raw"), passed ++ extra: _*)
+      .withColumn("retention", ExactMean(col("n_clean"), col("n_raw")))
+  }
+
   private val q16 = QueryDef(
     "pl16_curation_funnel",
-    (s, dir) => {
-      funnelStaged(s, dir).groupBy("lang").agg(
-        count(lit(1)).as("n_raw"),
-        sum((col("stage") >= 1).cast("long")).as("n_quality"),
-        sum((col("stage") >= 2).cast("long")).as("n_unique"),
-        sum((col("stage") >= 3).cast("long")).as("n_fuzzy"),
-        sum((col("stage") >= 4).cast("long")).as("n_clean"),
-        sum((col("stage") >= 5).cast("long")).as("n_mixed"))
-        .withColumn("retention",
-          expr("(2 * n_clean * 1000000 + n_raw) DIV (2 * n_raw)")
-            .cast("double") / lit(1000000.0))
-        .orderBy("lang")
-    },
+    (s, dir) => attrition(funnelStaged(s, dir),
+      sum((col("stage") >= 5).cast("long")).as("n_mixed")).orderBy("lang"),
     Some(s"""
       WITH RECURSIVE $toksSql,
       $funnelStagedSql,
-      agg AS (
-        SELECT lang, COUNT(*) AS n_raw,
-               CAST(SUM(CASE WHEN stage >= 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_quality,
-               CAST(SUM(CASE WHEN stage >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique,
-               CAST(SUM(CASE WHEN stage >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_fuzzy,
-               CAST(SUM(CASE WHEN stage >= 4 THEN 1 ELSE 0 END) AS BIGINT) AS n_clean,
-               CAST(SUM(CASE WHEN stage >= 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_mixed
-        FROM staged GROUP BY lang)
-      SELECT lang, n_raw, n_quality, n_unique, n_fuzzy, n_clean, n_mixed,
-             CAST((2 * n_clean * 1000000 + n_raw) // (2 * n_raw) AS DOUBLE)
-               / 1000000.0 AS retention
-      FROM agg
+      ${attritionSql("staged",
+        "CAST(SUM(CASE WHEN stage >= 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_mixed")}
+      SELECT * FROM report
       ORDER BY lang"""))
 
   /** Reproducible corpus shuffle into training shards — the
@@ -1564,30 +1519,6 @@ object Pipeline extends QueryGroup {
       FROM documents
       ORDER BY doc_id"""))
 
-  /** Tokenizer fit on the curated corpus — BPE merge learning
-    * (Sennrich et al. 2016; see [[graft.functions.BpeOps]] for the
-    * algorithm/determinism contract), the step that closes the
-    * training-data story: curate (pl16) → mix (pl15) → shard (pl17) →
-    * TRAIN TOKENIZER. Input is pl16's stage-4 (clean) survivors via the SHARED
-    * [[funnelStaged]] builder (compose, never copy), so the tokenizer
-    * is fit on exactly the corpus that survives curation — fitting on
-    * raw data would spend merge budget on boilerplate the funnel
-    * removed.
-    *
-    * Output: the first [[graft.functions.BpeOps.NMerges]] learned
-    * merges (rank, left, right, pair count at merge time) — the
-    * prefix of the merge table a production tokenizer persists.
-    *
-    * Scale shape: the corpus is read ONCE into a (word, freq)
-    * aggregate; all iterations run over the VOCABULARY (distinct
-    * words — bounded by the language, ~10^5-10^7 rows at any corpus
-    * size, coalesced to [[IterSizing.iterParts]] partitions like the
-    * d6 loop). Each iteration is one map-side-combinable pair-count
-    * aggregate (PlanSpec pins the shape) + a ONE-ROW argmax collect
-    * (loop control, the d6 convergence-count discipline) + one
-    * localCheckpoint'd merge application (truncates the 10-deep
-    * lambda lineage). Nothing corpus-sized moves after the first
-    * aggregate. */
   /** DuckDB mirror of the BPE merge-learning levels (requires a
     * `words(word, freq)` CTE in scope — pl18 builds it from the
     * survivor tokens directly, pl19 derives it from its per-language
@@ -1723,6 +1654,30 @@ object Pipeline extends QueryGroup {
       .groupBy("word").agg(count(lit(1)).as("freq"))
   }
 
+  /** Tokenizer fit on the curated corpus — BPE merge learning
+    * (Sennrich et al. 2016; see [[graft.functions.BpeOps]] for the
+    * algorithm/determinism contract), the step that closes the
+    * training-data story: curate (pl16) → mix (pl15) → shard (pl17) →
+    * TRAIN TOKENIZER. Input is pl16's stage-4 (clean) survivors via the SHARED
+    * [[funnelStaged4]] builder (compose, never copy), so the tokenizer
+    * is fit on exactly the corpus that survives curation — fitting on
+    * raw data would spend merge budget on boilerplate the funnel
+    * removed.
+    *
+    * Output: the first [[graft.functions.BpeOps.NMerges]] learned
+    * merges (rank, left, right, pair count at merge time) — the
+    * prefix of the merge table a production tokenizer persists.
+    *
+    * Scale shape: the corpus is read ONCE into a (word, freq)
+    * aggregate; all iterations run over the VOCABULARY (distinct
+    * words — bounded by the language, ~10^5-10^7 rows at any corpus
+    * size, coalesced to [[IterSizing.iterParts]] partitions like the
+    * d6 loop). Each iteration is one map-side-combinable pair-count
+    * aggregate (PlanSpec pins the shape) + a ONE-ROW argmax collect
+    * (loop control, the d6 convergence-count discipline) + one
+    * localCheckpoint'd merge application (truncates the 10-deep
+    * lambda lineage). Nothing corpus-sized moves after the first
+    * aggregate. */
   private val q18 = QueryDef(
     "pl18_bpe_merges",
     (s, dir) => {
@@ -2015,80 +1970,6 @@ object Pipeline extends QueryGroup {
       .cast("decimal(24,9)") * x
   }
 
-  /** The pl20/pl21 TRAINED corpus-quality classifier family (the
-    * builders below: [[clsFeatures]] → [[clsTrained]] →
-    * [[clsScoreAll]]), the CCNet/fastText
-    * stage every published LLM pipeline puts FIRST (CCNet §4.2 trains
-    * a fastText linear model over hashed n-grams; GPT-3 appendix A and
-    * Llama train logistic-regression quality filters): hashing-trick
-    * features ([[clsBuckets]] — fixed [[ClsDim]]-dim, so the weight
-    * vector is driver-holdable at ANY corpus size), labels derived
-    * from the repo's own curation funnel (stage-4 survivors = 1,
-    * Gopher quality-fails = 0 — the funnel is the noisy teacher, the
-    * classifier the cheap student, exactly CCNet's
-    * Wikipedia-vs-CommonCrawl construction), and [[ClsEpochs]] epochs
-    * of full-batch logistic regression under ADAGRAD (see [[ClsLr]])
-    * run as MAP-SIDE GRADIENT AGGREGATES with a driver-held
-    * ~[[ClsDim]]-row weight+accumulator table re-broadcast per epoch
-    * (the learnBpeLocal driver-state discipline: state is
-    * DIMENSION-bounded, never corpus-bounded). The reference's own
-    * quality scoring is a
-    * rule-based heuristic (`check_for_anomaly`'s additive indicator
-    * scoring, reference `query/poisoning.rs:156-262`); the trained
-    * stage goes beyond it per the round brief.
-    *
-    * Reported: per-language HELD-OUT generalization — the doc_id % 7
-    * eval slice is excluded from the funnel (and therefore from
-    * training) at stage zero, and the classifier's keep/drop verdict
-    * is scored against the Gopher rule gate on exactly those unseen
-    * docs (n_eval, n_pred_keep, n_agree, accuracy, mean_p).
-    *
-    * Determinism contract (the cross-engine trap a trained stage
-    * adds): every sum that ORDER could perturb is an EXACT DECIMAL
-    * sum (9-dp weights, 6-dp probabilities, 9-dp L2 norms, 18-dp
-    * Adagrad accumulators — order-independent in both engines); the
-    * transcendentals (sigmoid's exp, sqrt) and the double→decimal
-    * re-exactification at each materialization boundary are
-    * boundary-safe in practice rather than provably tie-free —
-    * `exp()` is not required to be correctly rounded, and the
-    * `gn*gn → DECIMAL(20,18)` cast rounds Spark's shortest-decimal
-    * rendering where DuckDB rounds the exact binary value, so a value
-    * landing EXACTLY on a rounding boundary could in principle split
-    * the engines — and the correctness gate verifies no boundary is
-    * hit at any epoch on any tested scale; the weight update runs the
-    * SAME double expression `w - lr * gn / sqrt(acc + eps)` in both
-    * engines. Under that verified contract the learned weights — not
-    * just the final report — are bit-identical across engines at
-    * every epoch.
-    *
-    * Scale shape (round-19 rewrite): ONE corpus pass builds the cached
-    * per-doc (y, x, buckets) frame; each epoch is ONE map-side
-    * aggregate over it — the margin/probability is a pure projection
-    * against the weight-map LITERAL ([[clsMarginFold]]), the gradient
-    * explode partial-sums before its exchange, so the only shuffle of
-    * an epoch moves ≤ [[ClsDim]] partial rows per task — plus one
-    * [[ClsDim]]-row collect. Nothing corpus-sized ever moves, and
-    * nothing keyed on doc_id ever shuffles: at 100 TB the per-doc
-    * frame streams from the scan into partial aggregates and the
-    * driver holds 273 decimals. */
-  /** The ONE feature pass of the classifier family: Gopher stats (the
-    * held-out reference label), the eval-slice flag, and the hashed
-    * feature buckets — (doc_id, lang, kept, is_eval, buckets). The
-    * registered queries now derive this projection from the fused
-    * [[clsEnriched]] pass (one corpus read for features AND funnel
-    * labels); this standalone builder remains the
-    * [[graft.api.QualityModel]] scoring-path input, where no funnel
-    * runs. UNCACHED: each caller caches it as needed. */
-  private[graft] def clsFeatures(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.GopherRules
-    GopherRules.withStats(Tables.documents(s, dir)
-      .select(col("doc_id"), col("lang"), col("text"),
-        TextOps.tokens(col("text")).as("toks")))
-      .withColumn("buckets", clsBuckets(col("toks")))
-      .withColumn("is_eval", col("doc_id") % 7 === 0)
-      .select("doc_id", "lang", "kept", "is_eval", "buckets")
-  }
-
   /** The ONE training run of the pl20/pl21 classifier family (shared
     * so the two registered consumers and the persisted
     * [[graft.api.QualityModel]] store can never train differently):
@@ -2202,13 +2083,14 @@ object Pipeline extends QueryGroup {
     * contract, StreamingSpec-pinned). Output: (doc_id, lang, kept,
     * is_eval, p). Shared by q20's eval report, q21's full-corpus
     * bucketing, and [[graft.api.QualityModel]]. */
-  private[graft] def clsScoreAll(feats: DataFrame, w: DataFrame): DataFrame = {
-    val wArr = clsWeightArray(w)
+  private[graft] def clsScoreAll(feats: DataFrame, w: DataFrame): DataFrame =
     feats.select(col("doc_id"), col("lang"), col("kept"), col("is_eval"),
-      clsSigmoid(
-        clsMarginFold(col("buckets"), clsXNorm(col("buckets")), wArr))
-        .as("p"))
-  }
+      clsScore(w).as("p"))
+
+  /** The score column p over a frame's `buckets` (see [[clsScoreAll]]). */
+  private def clsScore(w: DataFrame): Column =
+    clsSigmoid(clsMarginFold(col("buckets"), clsXNorm(col("buckets")),
+      clsWeightArray(w)))
 
   /** The ONE DuckDB mirror of the training run ([[clsTrained]]) — the
     * shared CTE block (features → labels → pair frame → epoch chain)
@@ -2276,17 +2158,70 @@ object Pipeline extends QueryGroup {
       $epochs"""
   }
 
+  /** pl20 — the TRAINED corpus-quality classifier family (builders
+    * [[corpusPass]] → [[clsTrained]] → [[clsScoreAll]]), the CCNet/fastText
+    * stage every published LLM pipeline puts FIRST (CCNet §4.2 trains
+    * a fastText linear model over hashed n-grams; GPT-3 appendix A and
+    * Llama train logistic-regression quality filters): hashing-trick
+    * features ([[clsBuckets]] — fixed [[ClsDim]]-dim, so the weight
+    * vector is driver-holdable at ANY corpus size), labels derived
+    * from the repo's own curation funnel (stage-4 survivors = 1,
+    * Gopher quality-fails = 0 — the funnel is the noisy teacher, the
+    * classifier the cheap student, exactly CCNet's
+    * Wikipedia-vs-CommonCrawl construction), and [[ClsEpochs]] epochs
+    * of full-batch logistic regression under ADAGRAD (see [[ClsLr]])
+    * run as MAP-SIDE GRADIENT AGGREGATES with a driver-held
+    * ~[[ClsDim]]-row weight+accumulator table re-broadcast per epoch
+    * (the learnBpeLocal driver-state discipline: state is
+    * DIMENSION-bounded, never corpus-bounded). The reference's own
+    * quality scoring is a
+    * rule-based heuristic (`check_for_anomaly`'s additive indicator
+    * scoring, reference `query/poisoning.rs:156-262`); the trained
+    * stage goes beyond it per the round brief.
+    *
+    * Reported: per-language HELD-OUT generalization — the doc_id % 7
+    * eval slice is excluded from the funnel (and therefore from
+    * training) at stage zero, and the classifier's keep/drop verdict
+    * is scored against the Gopher rule gate on exactly those unseen
+    * docs (n_eval, n_pred_keep, n_agree, accuracy, mean_p).
+    *
+    * Determinism contract (the cross-engine trap a trained stage
+    * adds): every sum that ORDER could perturb is an EXACT DECIMAL
+    * sum (9-dp weights, 6-dp probabilities, 9-dp L2 norms, 18-dp
+    * Adagrad accumulators — order-independent in both engines); the
+    * transcendentals (sigmoid's exp, sqrt) and the double→decimal
+    * re-exactification at each materialization boundary are
+    * boundary-safe in practice rather than provably tie-free —
+    * `exp()` is not required to be correctly rounded, and the
+    * `gn*gn → DECIMAL(20,18)` cast rounds Spark's shortest-decimal
+    * rendering where DuckDB rounds the exact binary value, so a value
+    * landing EXACTLY on a rounding boundary could in principle split
+    * the engines — and the correctness gate verifies no boundary is
+    * hit at any epoch on any tested scale; the weight update runs the
+    * SAME double expression `w - lr * gn / sqrt(acc + eps)` in both
+    * engines. Under that verified contract the learned weights — not
+    * just the final report — are bit-identical across engines at
+    * every epoch.
+    *
+    * Scale shape (round-19 rewrite): ONE corpus pass builds the cached
+    * per-doc (y, x, buckets) frame; each epoch is ONE map-side
+    * aggregate over it — the margin/probability is a pure projection
+    * against the weight-map LITERAL ([[clsMarginFold]]), the gradient
+    * explode partial-sums before its exchange, so the only shuffle of
+    * an epoch moves ≤ [[ClsDim]] partial rows per task — plus one
+    * [[ClsDim]]-row collect. Nothing corpus-sized ever moves, and
+    * nothing keyed on doc_id ever shuffles: at 100 TB the per-doc
+    * frame streams from the scan into partial aggregates and the
+    * driver holds 273 decimals. */
   private val q20 = QueryDef(
     "pl20_quality_classifier",
     (s, dir) => {
       // ONE cached corpus pass feeds BOTH the label funnel and the
-      // feature frame (clsEnriched — the former clsFeatures +
-      // funnelEnriched pair tokenized the corpus twice per invocation)
-      val enriched = clsEnriched(s, dir).cache()
-      val feats = enriched
-        .select("doc_id", "lang", "kept", "is_eval", "buckets")
-      val wFinal = clsTrained(s, feats, funnelStage4Core(s, enriched, None))
-      val scoredEval = clsScoreAll(feats.filter(col("is_eval")), wFinal)
+      // classifier features
+      val enriched = corpusPass(s, dir).cache()
+      val wFinal = clsTrained(s, enriched,
+        funnelStages(s, enriched, RuleGate))
+      val scoredEval = clsScoreAll(enriched.filter(col("is_eval")), wFinal)
         .withColumn("pred", (col("p") >= lit(0.5)).cast("int"))
       scoredEval.groupBy("lang").agg(
         count(lit(1)).as("n_eval"),
@@ -2336,12 +2271,6 @@ object Pipeline extends QueryGroup {
       ORDER BY lang"""
     })
 
-  /** Per-document tertile bucket assignment over a scored frame — the
-    * cutoff half of [[clsGateBuckets]], factored so pl23's gated
-    * funnel SELECTS on exactly the buckets pl21 reports (and the
-    * persisted [[graft.api.QualityModel]] path buckets identically):
-    * appends `bucket` (1=head, 2=middle, 3=tail; ties share a bucket,
-    * the pl12 cutoff semantics) plus the `c1`/`c2` cutoff columns. */
   /** The per-language (lang, c1, c2) tertile cutoff table over a
     * scored frame — the cutoff half of [[clsBucketAssign]], factored
     * so [[graft.api.QualityModel.cutoffs]] ships the deployed-gate
@@ -2371,6 +2300,11 @@ object Pipeline extends QueryGroup {
         min(when(col("vbucket") <= 2, col("p"))).as("c2"))
   }
 
+  /** Per-document tertile bucket assignment over a scored frame — the
+    * bucketing half of [[clsGateBuckets]], factored so the persisted
+    * [[graft.api.QualityModel]] path buckets identically: appends
+    * `bucket` (1=head, 2=middle, 3=tail; ties share a bucket, the pl12
+    * cutoff semantics) plus the `c1`/`c2` cutoff columns. */
   private[graft] def clsBucketAssign(scored: DataFrame): DataFrame =
     scored.join(broadcast(clsCutoffs(scored)), "lang")
       .withColumn("bucket",
@@ -2408,40 +2342,6 @@ object Pipeline extends QueryGroup {
         "n_eval", "mean_p")
   }
 
-  /** pl21 — classifier-GATED composition, the DEPLOYED shape of the
-    * pl20 classifier (the r17 verdict's top item): CCNet does not
-    * train-and-report — the trained model scores EVERY document and
-    * the pipeline keeps/buckets by per-language score QUANTILE
-    * (head/middle/tail, §4.3's perplexity-bucket construction applied
-    * to the quality score). This query trains once via the SHARED
-    * [[clsTrained]] builder (bit-identical weights to pl20 — the
-    * determinism contract carries, and PipelineSpec pins score
-    * equality on the eval slice), scores the FULL corpus with one
-    * broadcast join ([[clsScoreAll]]), derives per-language tertile
-    * cutoffs with pl12's exact histogram-cutoff machinery (a histogram
-    * groupBy on (lang, p) — row count bounded by the 6-dp score value
-    * space, never the corpus — an integer-rank window over it, and a
-    * broadcast cutoff table), and reports per-bucket COMPOSITION:
-    * document counts, funnel stage-4 survivors (the signal a deployed
-    * gate acts on — head should be survivor-rich), Gopher quality
-    * fails (tail-rich), held-out docs, and the exact-integer mean
-    * score. Ties share a bucket (the pl12 cutoff semantics — no
-    * doc_id-ordered ntile any cutoff pipeline would fail to
-    * reproduce).
-    *
-    * Production consumers that score repeatedly persist the weight
-    * table ONCE through [[graft.api.QualityModel]] (the ManifestIO
-    * store discipline — train once, broadcast thereafter) instead of
-    * retraining; the REGISTERED query stays a pure function of
-    * (session, dir) — the oracle contract — so it trains in-query
-    * like pl20, one [[clsTrained]] run per invocation.
-    *
-    * Scale shape: everything corpus-sized is one cached feature pass
-    * + the training pair frame (the pl20 contract); scoring is a
-    * broadcast join + map-side margin aggregate; the cutoff table is
-    * <= 2 rows per language and broadcasts; the composition report is
-    * one map-side-combinable aggregate over the scored frame joined to
-    * the (already-computed, cached) funnel staging. */
   /** The ONE DuckDB mirror of full-corpus scoring + per-language
     * tertile cutoffs ([[clsScoreAll]] + [[clsBucketAssign]]'s cutoff
     * half) — shared verbatim by the q21 and q23 oracles so the gate
@@ -2479,19 +2379,50 @@ object Pipeline extends QueryGroup {
                MIN(CASE WHEN vbucket <= 2 THEN p END) AS c2
         FROM vb GROUP BY lang)"""
 
+  /** pl21 — classifier-GATED composition, the DEPLOYED shape of the
+    * pl20 classifier (the r17 verdict's top item): CCNet does not
+    * train-and-report — the trained model scores EVERY document and
+    * the pipeline keeps/buckets by per-language score QUANTILE
+    * (head/middle/tail, §4.3's perplexity-bucket construction applied
+    * to the quality score). This query trains once via the SHARED
+    * [[clsTrained]] builder (bit-identical weights to pl20 — the
+    * determinism contract carries, and PipelineSpec pins score
+    * equality on the eval slice), scores the FULL corpus with one
+    * broadcast join ([[clsScoreAll]]), derives per-language tertile
+    * cutoffs with pl12's exact histogram-cutoff machinery (a histogram
+    * groupBy on (lang, p) — row count bounded by the 6-dp score value
+    * space, never the corpus — an integer-rank window over it, and a
+    * broadcast cutoff table), and reports per-bucket COMPOSITION:
+    * document counts, funnel stage-4 survivors (the signal a deployed
+    * gate acts on — head should be survivor-rich), Gopher quality
+    * fails (tail-rich), held-out docs, and the exact-integer mean
+    * score. Ties share a bucket (the pl12 cutoff semantics — no
+    * doc_id-ordered ntile any cutoff pipeline would fail to
+    * reproduce).
+    *
+    * Production consumers that score repeatedly persist the weight
+    * table ONCE through [[graft.api.QualityModel]] (the ManifestIO
+    * store discipline — train once, broadcast thereafter) instead of
+    * retraining; the REGISTERED query stays a pure function of
+    * (session, dir) — the oracle contract — so it trains in-query
+    * like pl20, one [[clsTrained]] run per invocation.
+    *
+    * Scale shape: everything corpus-sized is one cached feature pass
+    * + the training pair frame (the pl20 contract); scoring is a
+    * broadcast join + map-side margin aggregate; the cutoff table is
+    * <= 2 rows per language and broadcasts; the composition report is
+    * one map-side-combinable aggregate over the scored frame joined to
+    * the (already-computed, cached) funnel staging. */
   private val q21 = QueryDef(
     "pl21_classifier_gate",
     (s, dir) => {
-      // ONE cached corpus pass feeds the label funnel AND the feature
-      // frame (the pl20 clsEnriched note)
-      val enriched = clsEnriched(s, dir).cache()
-      val feats = enriched
-        .select("doc_id", "lang", "kept", "is_eval", "buckets")
+      // ONE cached corpus pass feeds the label funnel AND the features
+      val enriched = corpusPass(s, dir).cache()
       // cached: labels (training) + composition (report) both read it
-      val staged4 = funnelStage4Core(s, enriched, None).cache()
-      val w = clsTrained(s, feats, staged4)
+      val staged4 = funnelStages(s, enriched, RuleGate).cache()
+      val w = clsTrained(s, enriched, staged4)
       // cutoff pass + bucketing pass both read the scored frame
-      val scored = clsScoreAll(feats, w).cache()
+      val scored = clsScoreAll(enriched, w).cache()
       clsGateBuckets(scored, staged4).orderBy("lang", "bucket")
     },
     Some {
@@ -2634,33 +2565,39 @@ object Pipeline extends QueryGroup {
       FROM staged2
       ORDER BY doc_id"""))
 
-  /** The pl23 report over a (caller-cached) enriched frame and a tail
-    * gate frame — factored so [[graft.api.QualityModel]]'s
-    * persisted-weights path produces the IDENTICAL report minus the
-    * in-query training (QualityModelSpec pins the bit-equality, the
-    * pl20/pl21 convention): the gated staging, the per-language
-    * attrition aggregate, and the rescued count (rule-gate fails the
-    * trained gate keeps). `tail` is consumed twice here plus once in
-    * the gated core — callers cache it. */
-  private[graft] def gatedFunnelReport(s: SparkSession, enriched: DataFrame,
-      tail: DataFrame): DataFrame = {
-    val gated = funnelStage4Core(s, enriched, Some(tail))
-    // the deployment delta: rule-gate fails the trained gate keeps
-    val rescued = enriched
-      .filter(!col("is_eval") && col("kept") =!= 1)
-      .join(tail, Seq("doc_id"), "left_anti")
+  /** The deployed classifier gate as a COLUMN of the corpus pass:
+    * appends the score `p` and `gate` = "not in the tail tertile" — p
+    * at or above the language's `c2` cutoff from the SHARED
+    * [[clsCutoffs]] (exactly the tail bucket pl21 reports, since
+    * c2 <= c1). The cutoff table (<= 2 values per language) collects
+    * driver-side into a literal map, the shipped-threshold shape of
+    * [[graft.api.QualityModel.cutoffs]], so gating is a pure projection
+    * of the (caller-cached) pass — no join, no cached gate frame. A
+    * document with no cutoff or no score is not in the tail, matching
+    * the oracle's `NOT IN gtail`. */
+  private[graft] def clsGated(pass: DataFrame, w: DataFrame): DataFrame = {
+    val scored = pass.withColumn("p", clsScore(w))
+    val c2 = clsCutoffs(scored).filter(col("lang").isNotNull).collect()
+      .map(r => r.getString(0) -> BigDecimal(r.getDecimal(2))).toMap
+    scored.withColumn("gate", !coalesce(
+      col("p") < try_element_at(typedlit(c2), col("lang")), lit(false)))
+  }
+
+  /** The pl23 report over a [[clsGated]] frame — factored so
+    * [[graft.api.QualityModel]]'s persisted-weights path produces the
+    * IDENTICAL report minus the in-query training (QualityModelSpec
+    * pins the bit-equality, the pl20/pl21 convention): the
+    * [[attrition]] of the gated staging plus `n_rescued`, the rule-gate
+    * fails the trained gate keeps — a filter on the same gate
+    * column. */
+  private[graft] def gatedFunnelReport(s: SparkSession,
+      gated: DataFrame): DataFrame = {
+    val rescued = gated
+      .filter(!col("is_eval") && col("kept") =!= 1 && col("gate"))
       .groupBy("lang").agg(count(lit(1)).as("n_rescued"))
-    gated.groupBy("lang").agg(
-      count(lit(1)).as("n_raw"),
-      sum((col("stage") >= 1).cast("long")).as("n_quality"),
-      sum((col("stage") >= 2).cast("long")).as("n_unique"),
-      sum((col("stage") >= 3).cast("long")).as("n_fuzzy"),
-      sum((col("stage") >= 4).cast("long")).as("n_clean"))
+    attrition(funnelStages(s, gated, col("gate")))
       .join(rescued, Seq("lang"), "left")
       .withColumn("n_rescued", coalesce(col("n_rescued"), lit(0L)))
-      .withColumn("retention",
-        expr("(2 * n_clean * 1000000 + n_raw) DIV (2 * n_raw)")
-          .cast("double") / lit(1000000.0))
       .select("lang", "n_raw", "n_quality", "n_rescued", "n_unique",
         "n_fuzzy", "n_clean", "retention")
       .orderBy("lang")
@@ -2675,15 +2612,12 @@ object Pipeline extends QueryGroup {
     * training teacher. This query runs that deployment end to end:
     * train the classifier via the SHARED [[clsTrained]]
     * (funnel-distilled labels — bit-identical weights to pl20/pl21,
-    * the purity contract), score the full corpus ([[clsScoreAll]]),
-    * assign per-language tertile buckets via the SHARED
-    * [[clsBucketAssign]] cutoffs (exactly the buckets pl21 reports),
-    * then re-run the funnel with the gate REPLACING the rule gate at
-    * stage 0 — tail ⇒ quality-fail, head/middle pass to dedup — so
-    * exact dedup / guarded fuzzy dedup / decontamination all run on
-    * the TRAINED gate's survivor set ([[funnelStage4Core]] with the
-    * gate frame; the ungated builders and their plans are untouched —
-    * the stage-5 lesson). NOTE the naive composition (Gopher AND
+    * the purity contract), gate the corpus pass on the SHARED
+    * [[clsCutoffs]] ([[clsGated]] — exactly the tail pl21 reports),
+    * then run [[funnelStages]] with that gate REPLACING the rule gate
+    * — tail ⇒ stage 0, head/middle pass to dedup — so exact dedup /
+    * guarded fuzzy dedup / decontamination all run on the TRAINED
+    * gate's survivor set. NOTE the naive composition (Gopher AND
     * not-tail) was probed first and is VACUOUS on this corpus — the
     * tail tertile sits entirely inside the Gopher fails at every
     * scale, so it would drop zero extra documents; the replacement
@@ -2704,32 +2638,22 @@ object Pipeline extends QueryGroup {
     * REGISTERED query stays a pure function of (session, dir) — the
     * oracle contract — so it trains in-query like pl20/pl21.
     *
-    * Scale shape: the pl20 training contract (one cached feature pass,
-    * dimension-bounded driver state), one broadcast-join scoring pass,
-    * a ≤2-rows-per-language broadcast cutoff table, and TWO funnel
-    * stagings off ONE cached enriched pass (labels + gated); the gate
-    * frame is corpus/3 doc_ids entering as one anti-join — every join
-    * equi or broadcast, nothing corpus-sized moves twice. */
+    * Scale shape: the pl20 training contract (one cached corpus pass,
+    * dimension-bounded driver state), one scoring + cutoff aggregate
+    * pass, and TWO funnel stagings off the ONE cached pass (the rule
+    * teacher for labels, then the gated selection) — the gate is a
+    * projection of that pass, so nothing corpus-sized is joined to
+    * apply it. */
   private val q23 = QueryDef(
     "pl23_gated_funnel",
     (s, dir) => {
       // ONE cached corpus pass feeds the label funnel, the gated
-      // funnel, AND the feature frame (the pl20 clsEnriched note —
-      // this query previously ran the corpus tokenize/enrich twice)
-      val enriched = clsEnriched(s, dir).cache()
-      val feats = enriched
-        .select("doc_id", "lang", "kept", "is_eval", "buckets")
-      // the label funnel (the pl20/pl21 teacher) — consumed once, by
+      // funnel, AND the features
+      val enriched = corpusPass(s, dir).cache()
+      // the rule funnel (the pl20/pl21 teacher) — consumed once, by
       // clsTrained's label projection
-      val staged4 = funnelStage4Core(s, enriched, None)
-      val w = clsTrained(s, feats, staged4)
-      // cutoff pass + bucket join both read the scored frame
-      val scored = clsScoreAll(feats, w).cache()
-      // tail doc_ids: consumed three times (gated q anti-join, the
-      // stage-0 arm's left join, the n_gate_drop report)
-      val tail = clsBucketAssign(scored).filter(col("bucket") === 3)
-        .select("doc_id").cache()
-      gatedFunnelReport(s, enriched, tail)
+      val w = clsTrained(s, enriched, funnelStages(s, enriched, RuleGate))
+      gatedFunnelReport(s, clsGated(enriched, w))
     },
     Some {
       s"""
@@ -2740,33 +2664,15 @@ object Pipeline extends QueryGroup {
       gtail AS MATERIALIZED (
         SELECT s.doc_id FROM scored s JOIN cuts c ON s.lang = c.lang
         WHERE s.p < c.c2),
-      ${funnelChainSql("g",
-        "SELECT * FROM train WHERE doc_id NOT IN " +
-          "(SELECT doc_id FROM gtail)",
-        "WHEN t.doc_id IN (SELECT doc_id FROM gtail) THEN 0")},
+      ${funnelChainSql("g", "doc_id NOT IN (SELECT doc_id FROM gtail)")},
       rescued AS (
         SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_rescued
-        FROM train
-        WHERE kept != 1
-          AND doc_id NOT IN (SELECT doc_id FROM gtail)
-        GROUP BY lang),
-      agg AS (
-        SELECT lang, COUNT(*) AS n_raw,
-               CAST(SUM(CASE WHEN stage >= 1 THEN 1 ELSE 0 END) AS BIGINT)
-                 AS n_quality,
-               CAST(SUM(CASE WHEN stage >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-                 AS n_unique,
-               CAST(SUM(CASE WHEN stage >= 3 THEN 1 ELSE 0 END) AS BIGINT)
-                 AS n_fuzzy,
-               CAST(SUM(CASE WHEN stage >= 4 THEN 1 ELSE 0 END) AS BIGINT)
-                 AS n_clean
-        FROM gstaged4 GROUP BY lang)
+        FROM ggated WHERE kept != 1 AND gate GROUP BY lang),
+      ${attritionSql("gstaged4")}
       SELECT lang, n_raw, n_quality,
              CAST(COALESCE(n_rescued, 0) AS BIGINT) AS n_rescued,
-             n_unique, n_fuzzy, n_clean,
-             CAST((2 * n_clean * 1000000 + n_raw) // (2 * n_raw) AS DOUBLE)
-               / 1000000.0 AS retention
-      FROM agg LEFT JOIN rescued USING (lang)
+             n_unique, n_fuzzy, n_clean, retention
+      FROM report LEFT JOIN rescued USING (lang)
       ORDER BY lang"""
     })
 

@@ -1,6 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.IntegralDivide
+import org.apache.spark.sql.functions.{abs, lit, when}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** One verifiable operator: a Spark implementation plus (when the
   * semantics are SQL-expressible) an equivalent DuckDB oracle query.
@@ -45,6 +48,32 @@ final case class QueryDef(
 object IterSizing {
   def iterParts(s: SparkSession): Int =
     math.max(4, s.conf.get("spark.sql.shuffle.partitions", "200").toInt / 8)
+}
+
+/** The cross-engine 6-dp mean of an exact scale-6 numerator over a
+  * count — one Spark column and its DuckDB mirror. A double division
+  * followed by each engine's own ROUND splits the engines on true .5
+  * ties in the 7th digit (-180.971115 / 78 = -2.3201425 exactly: Spark
+  * rounds the nearest double, -2.3201424999999998, to -2.320142;
+  * DuckDB's multiply-then-round gives -2.320143). Instead the exact
+  * rational is rounded half away from zero in integer micro-units,
+  * (2|S| + n) div 2n with S the numerator times 10^6, and converted by
+  * ONE IEEE division by 1e6 — bit-identical in both engines. */
+object ExactMean {
+  def apply(num: Column, n: Column): Column = {
+    val sm = (num * 1000000).cast("long")
+    val m = ColumnBridge.column(IntegralDivide(
+      ColumnBridge.expression(abs(sm) * 2 + n),
+      ColumnBridge.expression(n * 2)))
+    when(sm < 0, -m).otherwise(m).cast("double") / lit(1000000.0)
+  }
+
+  /** DuckDB mirror of [[apply]]. */
+  def sql(num: String, n: String): String =
+    s"""CAST(CASE WHEN ($num) < 0
+                 THEN -((2 * CAST(-($num) * 1000000 AS BIGINT) + ($n)) // (2 * ($n)))
+                 ELSE (2 * CAST(($num) * 1000000 AS BIGINT) + ($n)) // (2 * ($n)) END
+               AS DOUBLE) / 1000000.0"""
 }
 
 trait QueryGroup {

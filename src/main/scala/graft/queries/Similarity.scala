@@ -619,9 +619,9 @@ object Similarity extends QueryGroup {
       // seed -> one-Lloyd-iteration -> assign pipeline the IVF index
       // trains with, but emitting the clustering itself — per-cluster
       // size and mean member-to-centroid cosine (cohesion). Per-member
-      // cosines are rounded to 6 dp and summed as exact DECIMAL so the
-      // cluster mean is partition-order-independent and bit-equal across
-      // engines (repo convention for double aggregates).
+      // cosines are rounded to 6 dp and summed as exact DECIMAL, and the
+      // cluster mean is the shared ExactMean of that sum, so it is
+      // partition-order-independent and bit-equal across engines.
       val e = Tables.embeddings(s, dir)
       val cent = lloydCentroids(e, 1)
       val best = e.crossJoin(broadcast(cent))
@@ -632,7 +632,7 @@ object Similarity extends QueryGroup {
           round(-col("t.o"), 6).cast("decimal(10,6)").as("mcos"))
       best.groupBy("cid")
         .agg(count(lit(1)).as("n_members"),
-          round(sum(col("mcos")).cast("double") / count(lit(1)), 6).as("mean_cos"))
+          ExactMean(sum(col("mcos")), count(lit(1))).as("mean_cos"))
         .orderBy("cid")
     },
     Some(s"""
@@ -645,7 +645,7 @@ object Similarity extends QueryGroup {
                  AS DECIMAL(10,6)) AS mcos
         FROM e CROSS JOIN cent GROUP BY e.vec_id)
       SELECT cid, COUNT(*) AS n_members,
-             ROUND(CAST(SUM(mcos) AS DOUBLE) / COUNT(*), 6) AS mean_cos
+             ${ExactMean.sql("SUM(mcos)", "COUNT(*)")} AS mean_cos
       FROM best
       GROUP BY cid
       ORDER BY cid"""))

@@ -250,8 +250,10 @@ object TextAnalysis extends QueryGroup {
     * document scores the average log10-probability of its character
     * trigrams under its language's trigram distribution, and documents
     * below their language's 5th percentile are flagged. Per-trigram
-    * log-probs are 6dp-rounded then DECIMAL-summed, so the per-doc mean
-    * is partition-order-independent and bit-equal across engines.
+    * log-probs are 6dp-rounded then DECIMAL-summed, and the per-doc mean
+    * is the shared [[ExactMean]] of that exact sum, so it is
+    * partition-order-independent and bit-equal across engines (a
+    * double division + ROUND split the engines on an exact .5 tie).
     *
     * Scale shape: per-doc trigram counts come from the native one-pass
     * [[graft.plans.CharTrigramCountsExpr]] (`map<trigram, count>` per
@@ -305,8 +307,7 @@ object TextAnalysis extends QueryGroup {
       val scored = docTri.join(broadcast(logp), Seq("lang", "tri"))
         .groupBy("doc_id", "lang")
         .agg(sum(col("n")).as("n_trigrams"),
-          round(sum(col("logp") * col("n")).cast("double") / sum(col("n")), 6)
-            .as("avg_logp"))
+          ExactMean(sum(col("logp") * col("n")), sum(col("n"))).as("avg_logp"))
       val p05 = scored.groupBy("lang")
         .agg(round(percentile(col("avg_logp"), lit(0.05)), 6).as("p05"))
       scored.join(broadcast(p05), "lang")
@@ -314,7 +315,7 @@ object TextAnalysis extends QueryGroup {
           (col("avg_logp") < col("p05")).cast("int").as("outlier"))
         .orderBy("doc_id")
     },
-    Some("""
+    Some(s"""
       WITH tri AS (
         SELECT doc_id, lang, substr(lower(text), i, 3) AS tri
         FROM documents, LATERAL (SELECT unnest(range(1, len(text) - 1)) AS i)
@@ -327,7 +328,7 @@ object TextAnalysis extends QueryGroup {
         FROM model JOIN totals ON model.lang = totals.lang),
       scored AS (
         SELECT doc_id, tri.lang, COUNT(*) AS n_trigrams,
-               ROUND(CAST(SUM(logp) AS DOUBLE) / COUNT(*), 6) AS avg_logp
+               ${ExactMean.sql("SUM(logp)", "COUNT(*)")} AS avg_logp
         FROM tri JOIN logp ON tri.lang = logp.lang AND tri.tri = logp.tri
         GROUP BY doc_id, tri.lang),
       p05 AS (

@@ -113,6 +113,27 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
+  test("ExactMean rounds the exact mean half away from zero: ties, zero, n = 1, negatives") {
+    import spark.implicits._
+    // (scale-6 numerator, count): the t8 seed-23 tie, its positive
+    // mirror, zero, a single row, and a negative non-tie
+    val rows = Seq(("-180.971115", 78L), ("180.971115", 78L), ("0", 5L),
+      ("3.141593", 1L), ("-1", 3L))
+    val got = rows.toDF("num", "n").repartition(2)
+      .select(col("num").cast("decimal(38,6)").as("num"), col("n"))
+      .select(col("num"), col("n"),
+        graft.queries.ExactMean(col("num"), col("n")).as("m"))
+    val byNum = got.collect().map(r => r.getDecimal(0) -> r).toMap
+    rows.foreach { case (num, n) =>
+      val d = new java.math.BigDecimal(num).setScale(6)
+      val want = d.divide(java.math.BigDecimal.valueOf(n), 6,
+        java.math.RoundingMode.HALF_UP).doubleValue
+      assert(byNum(d).getDouble(2) == want, s"$num / $n")
+    }
+    assert(byNum(new java.math.BigDecimal("-180.971115")).getDouble(2) == -2.320143)
+    assertInterpretedMatchesCodegen(got)
+  }
+
   test("SQL functions: a wrong argument count or a column dimension is a usage error") {
     Tables.embeddings(spark, Sf).limit(1).createOrReplaceTempView("emb_gate")
     // the message anywhere on the cause chain: Spark may wrap it

@@ -471,6 +471,28 @@ class PipelineSpec extends SparkSpec {
       "the trained gate rescued no rule-fails — deployment delta vacuous")
   }
 
+  test("funnel staging under degenerate gates: all-pass and all-fail stage every train doc exactly once") {
+    import org.apache.spark.sql.functions._
+    val pass = graft.queries.Pipeline.corpusPass(spark, Sf).drop("buckets").cache()
+    val trainIds = pass.filter(!col("is_eval")).select("doc_id").collect()
+      .map(_.getLong(0)).sorted.toSeq
+    def stages(gate: org.apache.spark.sql.Column): Seq[(Long, Int)] =
+      graft.queries.Pipeline.funnelStages(spark, pass, gate).collect()
+        .map(r => (r.getLong(0), r.getInt(2))).toSeq
+    val allPass = stages(lit(true))
+    // all-fail: the exact, fuzzy and decontamination stages run on an
+    // empty survivor set
+    val allFail = stages(lit(false))
+    Seq(allPass, allFail).foreach { st =>
+      assert(st.map(_._1).sorted == trainIds,
+        "every train doc must be staged exactly once")
+    }
+    assert(!allPass.exists(_._2 == 0), "all-pass gate: stage 0 must be empty")
+    assert(allPass.exists(_._2 == 4), "all-pass gate: no clean survivor")
+    assert(allFail.forall(_._2 == 0), "all-fail gate: every doc at stage 0")
+    pass.unpersist(false)
+  }
+
   test("pl22 PII scrub: every injected class is detected exactly, nothing else fires, multi-class docs compose") {
     val rows = SparkEntry.queries("pl22_pii_scrub")(spark, Sf).collect()
     assert(rows.nonEmpty)
