@@ -1,10 +1,11 @@
 #!/usr/bin/env python3
 """Isolated per-query timing sweep -> BENCH_ISOLATED.json.
 
-Each query runs in its OWN fresh JVM (graft.TimeOne), so the numbers
-carry no cross-query cache/GC pollution — the adjudication-grade
-measurement the judge previously had to reproduce by hand when a
-driver-tail number looked like a regression (see PLANS.md "isolated
+Each query runs in its OWN fresh JVM (a graft.Bench run with
+SPARK_GRAFT_ONLY=<query>: one untimed warm run, then the min of reps
+under Bench's checksum action), so the numbers carry no cross-query
+cache/GC pollution — the adjudication-grade measurement for a suite
+number that looks like a regression (see PLANS.md "isolated
 timings"). Run after `sbt compile`:
 
     python3 scripts/bench_isolated.py [sfDir] [reps]
@@ -15,10 +16,14 @@ queries), deduplicated — the final QUERIES list diffs cleanly round
 over round.
 """
 import json
+import os
 import re
 import subprocess
 import sys
+import tempfile
 from datetime import datetime, timezone
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 TOP15 = [
     "v3_knn_ivf", "t8_charlm_outliers", "v4_pq_knn", "pl7_contamination",
@@ -129,7 +134,7 @@ def auto_movers():
         # survived the truncation by regex (the verdicts diff the same way).
         # Query names all contain "_"; requiring it keeps scalar fields
         # that also survive the tail ("reps":5, "sf":0.1) from being
-        # mistaken for movers and sent to TimeOne as bogus query names.
+        # mistaken for movers and sent to Bench as bogus query names.
         with open(p) as f:
             d = json.load(f)
         m = re.search(r"sf([0-9.]+)", str(d.get("sf", "")))
@@ -193,20 +198,21 @@ NEW_R19 = ["pl23_gated_funnel", "m6_media_decontam",
            "m7_frame_decontam", "m8_media_dedup_groups",
            "m9_media_funnel"]
 
-QUERIES = list(dict.fromkeys(TOP15 + MOVERS_R9 + NEW_R9 + MOVERS_R10 +
-                             MOVERS_R11 + NEW_R12 + NEW_R13 + NEW_R14 +
-                             NEW_R15 + NEW_R17 + NEW_R18 + NEW_R19 +
-                             auto_movers()))
 
-# --all (round 19): sweep the ENTIRE registered-query set instead of
-# the curated top-15+movers list, enumerated from the committed
-# BENCH_HEAD's query map — the r18 verdict's "isolated baseline for
-# every query" contract, closed mechanically so future rounds diff
-# any row without a hand-measured reproduction.
-if "--all" in sys.argv:
-    sys.argv.remove("--all")
-    with open("BENCH_HEAD.json") as f:
-        QUERIES = sorted(json.load(f)["queries"])
+
+def queries(sweep_all):
+    # --all (round 19): sweep the ENTIRE registered-query set instead of
+    # the curated top-15+movers list, enumerated from the committed
+    # BENCH_HEAD's query map — the r18 verdict's "isolated baseline for
+    # every query" contract, closed mechanically so future rounds diff
+    # any row without a hand-measured reproduction.
+    if sweep_all:
+        with open("BENCH_HEAD.json") as f:
+            return sorted(json.load(f)["queries"])
+    return list(dict.fromkeys(TOP15 + MOVERS_R9 + NEW_R9 + MOVERS_R10 +
+                              MOVERS_R11 + NEW_R12 + NEW_R13 + NEW_R14 +
+                              NEW_R15 + NEW_R17 + NEW_R18 + NEW_R19 +
+                              auto_movers()))
 
 ADD_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke",
@@ -219,27 +225,42 @@ ADD_OPENS = [
 ]
 
 
-def main(sf_dir, reps):
-    cp = "target/scala-2.13/classes:/opt/spark/jars/*"
+def time_one(q, sf_dir, reps):
+    """Min-of-`reps` seconds of query `q` at `sf_dir` in a fresh JVM:
+    graft.Bench restricted to `q`, read from the `queries` map of its
+    one JSON line. Runs in a temporary directory, so the scratch
+    bench_out.json (and any spark-warehouse) stays out of the checkout;
+    a subset run never writes the tracked BENCH_HEAD.json."""
+    cp = f"{ROOT}/target/scala-2.13/classes:/opt/spark/jars/*"
     flags = [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
+    cmd = (["java", "-cp", cp, "-Xmx8g",
+            "-Dspark.ui.enabled=false",
+            "-Dspark.sql.session.timeZone=UTC"]
+           + flags + ["graft.Bench"])
+    env = dict(os.environ, SPARK_GRAFT_ONLY=q, SPARK_GRAFT_SF_DIR=sf_dir,
+               SPARK_GRAFT_REPS=str(reps))
+    with tempfile.TemporaryDirectory() as cwd:
+        r = subprocess.run(cmd, capture_output=True, text=True, timeout=600,
+                           env=env, cwd=cwd)
+    lines = [ln for ln in r.stdout.splitlines() if ln.startswith('{"metric"')]
+    t = json.loads(lines[-1])["queries"].get(q) if lines else None
+    if not isinstance(t, (int, float)):
+        print(f"!! {q} @ {sf_dir}: no time from graft.Bench (got {t!r})",
+              file=sys.stderr)
+        print(r.stdout[-2000:], r.stderr[-2000:], file=sys.stderr)
+        sys.exit(1)
+    return t
+
+
+def main(sf_dir, reps, qs):
     out = {}
-    for q in QUERIES:
-        cmd = (["java", "-cp", cp, "-Xmx8g",
-                "-Dspark.ui.enabled=false",
-                "-Dspark.sql.session.timeZone=UTC"]
-               + flags + ["graft.TimeOne", q, sf_dir, str(reps)])
-        r = subprocess.run(cmd, capture_output=True, text=True, timeout=600)
-        times = [float(m) for m in
-                 re.findall(r"== rep \d+: ([0-9.]+) s", r.stdout)]
-        if len(times) != reps:
-            print(f"!! {q}: expected {reps} reps, got {times}", file=sys.stderr)
-            print(r.stdout[-2000:], r.stderr[-2000:], file=sys.stderr)
-            sys.exit(1)
-        out[q] = {"min": min(times), "median": sorted(times)[len(times) // 2],
-                  "reps": times}
-        print(f"{q}: min={min(times):.3f}s reps={['%.3f' % t for t in times]}")
+    for q in qs:
+        t = time_one(q, sf_dir, reps)
+        out[q] = {"min": t}
+        print(f"{q}: min={t:.3f}s")
     doc = {"bench": "isolated", "sf_dir": sf_dir, "reps_per_query": reps,
            "isolation": "one fresh JVM + SparkSession per query",
+           "protocol": "graft.Bench subset: one untimed warm run, min of reps",
            "generated_at": datetime.now(timezone.utc)
                .strftime("%Y-%m-%dT%H:%M:%SZ"),
            "queries": out}
@@ -249,5 +270,8 @@ def main(sf_dir, reps):
 
 
 if __name__ == "__main__":
+    sweep_all = "--all" in sys.argv
+    if sweep_all:
+        sys.argv.remove("--all")
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    main(sf, int(sys.argv[2]) if len(sys.argv) > 2 else 3)
+    main(sf, int(sys.argv[2]) if len(sys.argv) > 2 else 3, queries(sweep_all))

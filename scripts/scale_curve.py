@@ -5,8 +5,9 @@ The repo's standing claim is that every registered plan is at-most-linear
 in the data (blocked pair generation, broadcast-bounded joins, top-k
 before global windows). This sweep MEASURES that claim instead of
 asserting it: each (query, sf) pair runs in its own fresh JVM
-(graft.TimeOne, min of reps — the same adjudication-grade isolation as
-BENCH_ISOLATED), and for each query we fit
+(bench_isolated.time_one: a graft.Bench subset run, min of reps — the
+same adjudication-grade isolation as BENCH_ISOLATED), and for each
+query we fit
 
     t(sf) = overhead + slope * sf        (least squares over 3 points)
 
@@ -29,10 +30,10 @@ can run in bounded chunks; the final run assembles SCALING.json.
 """
 import os
 import json
-import re
-import subprocess
 import sys
 from datetime import datetime, timezone
+
+from bench_isolated import time_one
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01",
        "/root/testdata/sf0.1"]
@@ -84,34 +85,6 @@ QUERIES = [
     # groups (m3 x d6 CC), and the media funnel (m3 x m8 x m6 composed)
     "m7_frame_decontam", "m8_media_dedup_groups", "m9_media_funnel",
 ]
-
-ADD_OPENS = [
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-]
-
-
-def time_one(q, sf_dir, reps):
-    cp = "target/scala-2.13/classes:/opt/spark/jars/*"
-    flags = [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
-    cmd = (["java", "-cp", cp, "-Xmx8g",
-            "-Dspark.ui.enabled=false",
-            "-Dspark.sql.session.timeZone=UTC"]
-           + flags + ["graft.TimeOne", q, sf_dir, str(reps)])
-    r = subprocess.run(cmd, capture_output=True, text=True, timeout=600)
-    times = [float(m) for m in re.findall(r"== rep \d+: ([0-9.]+) s", r.stdout)]
-    if len(times) != reps:
-        print(f"!! {q} @ {sf_dir}: expected {reps} reps, got {times}",
-              file=sys.stderr)
-        print(r.stdout[-2000:], r.stderr[-2000:], file=sys.stderr)
-        sys.exit(1)
-    return min(times)
-
 
 def fit(mins):
     # least-squares t = a + b*sf over the 3 (sf, min) points

@@ -1,8 +1,6 @@
 package graft
 
 import graft.eval.EmbeddingSla
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 
 /** Embedding-backend SLA bench (the reference's `mnemo bench
   * embeddings --slo-ms <N>`): measures every configured backend's
@@ -17,13 +15,7 @@ object BenchEmbeddings {
     val sfDir = if (args.length > 0) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val sloMs = if (args.length > 1) args(1).toDouble else 250.0
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     val latencyTexts = LongMemFixture.records.map(_.query).take(10)
 

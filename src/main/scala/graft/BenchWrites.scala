@@ -1,11 +1,10 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
-
-import graft.api.{Mnemo, MnemoStore}
+import graft.Harness.{num, time}
+import graft.api.MnemoStore
 import graft.api.Mnemo.{RecallRequest, RememberRequest}
 
 /** Write-path throughput bench mirroring the reference's criterion
@@ -48,25 +47,11 @@ object BenchWrites {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shared with Bench: the tracked-artifact gate below compares
-    // against the same constant, so a default change can never let a
-    // dev run silently clobber BENCH_WRITES.json
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS",
-      Bench.DefaultReps.toString).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val reps = Harness.repCount
+    val spark = Harness.session()
 
     val batch = 1000
     val batches = 5
-
-    def time[A](body: => A): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
 
     // one throwaway pass to pay JIT/codegen before any measurement
     {
@@ -78,7 +63,7 @@ object BenchWrites {
 
     // -- remember_throughput: fresh store, `batches` sequential appends
     //    (each pays the tail-hash join against the growing store)
-    val rememberSecs = (1 to reps).map { r =>
+    val rememberSecs = Harness.reps(reps) { r =>
       val st = new MnemoStore(spark, freshDir(s"rem$r"))
       time((0 until batches).foreach(b =>
         st.remember((0 until batch).map(i => req("bench-agent", b * batch + i)))))
@@ -92,7 +77,7 @@ object BenchWrites {
     //    projection costs on top of plain remember (it rides the same
     //    single append job, so the expected overhead is regex time
     //    only, not an extra job)
-    val rememberScannedSecs = (1 to reps).map { r =>
+    val rememberScannedSecs = Harness.reps(reps) { r =>
       val st = new MnemoStore(spark, freshDir(s"remscan$r"))
       time((0 until batches).foreach(b =>
         st.rememberScanned((0 until batch).map(i => req("bench-agent", b * batch + i)))))
@@ -109,16 +94,16 @@ object BenchWrites {
       seeded.recallVisible("bench-agent",
         RecallRequest(query = "various topics", strategy = strategy, limit = 10),
         ts(batches * batch * 1000L)).collect())
-    val recallSec = (1 to reps).map(_ => recallOnce("lexical")).min
-    val hybridSec = (1 to reps).map(_ => recallOnce("hybrid")).min
+    val recallSec = Harness.reps(reps)(_ => recallOnce("lexical")).min
+    val hybridSec = Harness.reps(reps)(_ => recallOnce("hybrid")).min
 
     // -- verify_chain (engine_bench.rs:143 runs 100 rows; same pass
     //    here over the 2k-row seeded store — one window scan)
-    val verifySec = (1 to reps).map(_ =>
+    val verifySec = Harness.reps(reps)(_ =>
       time(assert(seeded.verifyChains().filter("NOT chain_valid").count() == 0L))).min
 
     // -- checkpoint_restore_latency: snapshot refs + replay join
-    val ckptSec = (1 to reps).map { r =>
+    val ckptSec = Harness.reps(reps) { r =>
       time {
         seeded.checkpoint(s"ck$r", "bench-agent", ts(batches * batch * 1000L))
         seeded.replay(s"ck$r").count()
@@ -133,7 +118,7 @@ object BenchWrites {
     //    figure, NOT the bucketing demonstration (see forget_pruned /
     //    bucket_prune_speedup below for that).
     val forgetIdsPerOp = 100
-    val forgetSecs = (1 to reps).map { r =>
+    val forgetSecs = Harness.reps(reps) { r =>
       val ids = (0 until forgetIdsPerOp).map(i => f"bench-agent-m${r * 200 + i}%06d")
       time(seeded.forget("bench-agent", ids, ts(batches * batch * 1000L + r)))
     }
@@ -154,18 +139,18 @@ object BenchWrites {
         val r = req("bench-agent", b * 50000 + i)
         if (b == 0 && i < 8) r.copy(tags = r.tags :+ "subject:few") else r
       }))
-    val forgetPrunedSec = (1 to reps).map { r =>
+    val forgetPrunedSec = Harness.reps(reps) { r =>
       val ids = (0 until 8).map(i => f"bench-agent-m${r * 100 + i}%06d")
       time(bigStore.forget("bench-agent", ids, ts(300000000L + r)))
     }.min
     // same tag every rep: the fold cost is the bucket I/O, which does
     // not depend on how many rows still match
-    val forgetSubjectSec = (1 to reps).map { r =>
+    val forgetSubjectSec = Harness.reps(reps) { r =>
       time(bigStore.forgetSubject("subject:few", ts(310000000L + r)))
     }.min
     // `bench` is on every row → the index maps it to all 32 buckets;
     // runs LAST because its first rep redacts the whole store
-    val forgetAllBucketsSec = (1 to reps).map { r =>
+    val forgetAllBucketsSec = Harness.reps(reps) { r =>
       time(bigStore.forgetSubject("bench", ts(320000000L + r)))
     }.min
 
@@ -176,54 +161,59 @@ object BenchWrites {
     //    at 100 TB a bucket is O(1 GB) with many 128-MB row groups,
     //    while a 100k-row store is one group per file unless shrunk —
     //    small groups are the scale-honest shape for a prune bench.
-    val hc = spark.sparkContext.hadoopConfiguration
-    val savedBlock = hc.get("parquet.block.size")
-    val savedPage = hc.get("parquet.page.size")
-    hc.setInt("parquet.block.size", 64 * 1024)
-    hc.setInt("parquet.page.size", 8 * 1024)
-    val maStore = new MnemoStore(spark, freshDir("multi"))
+    def withSmallRowGroups[A](body: => A): A = {
+      val hc = spark.sparkContext.hadoopConfiguration
+      val keys = Seq("parquet.block.size" -> 64 * 1024, "parquet.page.size" -> 8 * 1024)
+      val saved = keys.map { case (k, _) => k -> hc.get(k) }
+      keys.foreach { case (k, v) => hc.setInt(k, v) }
+      try body
+      finally saved.foreach { case (k, v) => if (v == null) hc.unset(k) else hc.set(k, v) }
+    }
     // ~600-byte contents (the reference's memories are prose, not
     // 80-byte stubs) so the scan is I/O-bound, not job-overhead-bound
     val filler = "lorem ipsum context detail recalled fact " * 14
-    (0 until 3).foreach(b =>
-      maStore.remember((0 until 100000).map { i =>
-        val a = s"agent-${i % 10}" // interleaved: worst case pre-sort
-        val r0 = req(a, b * 100000 + i)
-        r0.copy(id = f"$a-m${b * 100000 + i}%06d",
-          content = s"${r0.content} $filler$i")
-      }))
-    val agentRecallSec = (1 to reps).map(_ =>
-      time(maStore.recallVisible("agent-7",
-        RecallRequest(query = "various topics", strategy = "lexical", limit = 10),
-        ts(400000000L)).collect())).min
+    val (agentRecallSec, abDir) = withSmallRowGroups {
+      val maStore = new MnemoStore(spark, freshDir("multi"))
+      (0 until 3).foreach(b =>
+        maStore.remember((0 until 100000).map { i =>
+          val a = s"agent-${i % 10}" // interleaved: worst case pre-sort
+          val r0 = req(a, b * 100000 + i)
+          r0.copy(id = f"$a-m${b * 100000 + i}%06d",
+            content = s"${r0.content} $filler$i")
+        }))
+      val agentRecallSec = Harness.reps(reps)(_ =>
+        time(maStore.recallVisible("agent-7",
+          RecallRequest(query = "various topics", strategy = "lexical", limit = 10),
+          ts(400000000L)).collect())).min
 
-    // -- layout A/B: the SAME 300k rows written (a) clustered by
-    //    (agent_id, id) — the store's segment layout — vs (b)
-    //    hash-interleaved (the pre-round-10 layout, where insertion
-    //    order mixes agents through every row group). Identical file
-    //    counts and row-group sizes; the only variable is clustering.
-    //    Action: agent-scoped scan + content aggregate, i.e. the I/O
-    //    shape of every agent-scoped read (recall/verify/decay).
-    val maRows = maStore.table().localCheckpoint()
-    val abDir = freshDir("ab")
-    maRows.repartition(8)
-      .sortWithinPartitions(org.apache.spark.sql.functions.col("agent_id"),
-        org.apache.spark.sql.functions.col("id"))
-      .write.parquet(s"$abDir/sorted")
-    maRows.repartition(8)
-      .sortWithinPartitions(
-        org.apache.spark.sql.functions.xxhash64(org.apache.spark.sql.functions.col("id")))
-      .write.parquet(s"$abDir/interleaved")
-    if (savedBlock == null) hc.unset("parquet.block.size") else hc.set("parquet.block.size", savedBlock)
-    if (savedPage == null) hc.unset("parquet.page.size") else hc.set("parquet.page.size", savedPage)
-    def agentScan(sub: String): Double = {
+      // -- layout A/B: the SAME 300k rows written (a) clustered by
+      //    (agent_id, id) — the store's segment layout — vs (b)
+      //    hash-interleaved (the pre-round-10 layout, where insertion
+      //    order mixes agents through every row group). Identical file
+      //    counts and row-group sizes; the only variable is clustering.
+      //    Action: agent-scoped scan + content aggregate, i.e. the I/O
+      //    shape of every agent-scoped read (recall/verify/decay).
+      val maRows = maStore.table().localCheckpoint()
+      val abDir = freshDir("ab")
+      maRows.repartition(8)
+        .sortWithinPartitions(org.apache.spark.sql.functions.col("agent_id"),
+          org.apache.spark.sql.functions.col("id"))
+        .write.parquet(s"$abDir/sorted")
+      maRows.repartition(8)
+        .sortWithinPartitions(
+          org.apache.spark.sql.functions.xxhash64(org.apache.spark.sql.functions.col("id")))
+        .write.parquet(s"$abDir/interleaved")
+      (agentRecallSec, abDir)
+    }
+    def agentScan(dir: String, agent: String): Double = {
       import org.apache.spark.sql.functions._
-      time(spark.read.parquet(s"$abDir/$sub")
-        .filter(col("agent_id") === "agent-7")
+      time(spark.read.parquet(dir)
+        .filter(col("agent_id") === agent)
         .agg(sum(length(col("content"))), count(lit(1))).collect())
     }
-    val scanSortedSec = (1 to reps).map(_ => agentScan("sorted")).min
-    val scanInterleavedSec = (1 to reps).map(_ => agentScan("interleaved")).min
+    val scanSortedSec = Harness.reps(reps)(_ => agentScan(s"$abDir/sorted", "agent-7")).min
+    val scanInterleavedSec =
+      Harness.reps(reps)(_ => agentScan(s"$abDir/interleaved", "agent-7")).min
 
     // -- the SAME layout A/B at 1M rows / 100 agents: at 300k the
     //    fixed job overhead dominates and the prune factor reads
@@ -232,10 +222,8 @@ object BenchWrites {
     //    the dominant term — the regime a 100 TB store lives in. Rows
     //    are generated directly (same ~600-byte content shape): this
     //    is a LAYOUT property, the store write path is benched above.
-    hc.setInt("parquet.block.size", 64 * 1024)
-    hc.setInt("parquet.page.size", 8 * 1024)
     val ab1mDir = freshDir("ab1m")
-    locally {
+    withSmallRowGroups {
       import org.apache.spark.sql.functions._
       val rows1m = spark.range(1000000L).select(
         concat(lit("agent-"), col("id") % 100).as("agent_id"),
@@ -249,16 +237,10 @@ object BenchWrites {
         .sortWithinPartitions(xxhash64(col("id")))
         .write.parquet(s"$ab1mDir/interleaved")
     }
-    if (savedBlock == null) hc.unset("parquet.block.size") else hc.set("parquet.block.size", savedBlock)
-    if (savedPage == null) hc.unset("parquet.page.size") else hc.set("parquet.page.size", savedPage)
-    def agentScan1m(sub: String): Double = {
-      import org.apache.spark.sql.functions._
-      time(spark.read.parquet(s"$ab1mDir/$sub")
-        .filter(col("agent_id") === "agent-77")
-        .agg(sum(length(col("content"))), count(lit(1))).collect())
-    }
-    val scan1mSortedSec = (1 to reps).map(_ => agentScan1m("sorted")).min
-    val scan1mInterleavedSec = (1 to reps).map(_ => agentScan1m("interleaved")).min
+    val scan1mSortedSec =
+      Harness.reps(reps)(_ => agentScan(s"$ab1mDir/sorted", "agent-77")).min
+    val scan1mInterleavedSec =
+      Harness.reps(reps)(_ => agentScan(s"$ab1mDir/interleaved", "agent-77")).min
 
     // -- orientation_update_latency: distill a recall result into the
     //    per-namespace context map — upsert + evict + one atomic
@@ -268,7 +250,7 @@ object BenchWrites {
     val orientHits = seeded.recallVisible("bench-agent",
       RecallRequest(query = "various topics", strategy = "lexical", limit = 20),
       ts(batches * batch * 1000L)).localCheckpoint()
-    val orientSec = (1 to reps).map { r =>
+    val orientSec = Harness.reps(reps) { r =>
       time(seeded.orientationUpdate(orientHits, "bench-ns", 1700000000L + r))
     }.min
 
@@ -277,11 +259,11 @@ object BenchWrites {
     //    compaction (fold root appends + prior generation into g<n+1>,
     //    one manifest commit). Puts accumulate across reps so each
     //    compaction folds a realistically-grown root set.
-    val attnPutSec = (1 to reps).map { r =>
+    val attnPutSec = Harness.reps(reps) { r =>
       time(seeded.attentionStatePut("bench-agent", s"k$r",
         Array.fill(256)(r.toByte), ts(r * 1000L)))
     }.min
-    val attnCompactSec = (1 to reps).map { r =>
+    val attnCompactSec = Harness.reps(reps) { r =>
       (0 until 4).foreach(i => seeded.attentionStatePut("bench-agent",
         s"k$r-$i", Array.fill(256)(i.toByte), ts(r * 10000L + i)))
       time(seeded.attentionStateCompact())
@@ -294,22 +276,22 @@ object BenchWrites {
     //    each batch re-posts an earlier batch's text so the probe side
     //    does real work
     var lastDedupDir: String = null
-    val dedupIngestSec = (1 to reps).map { r =>
+    def corpusBatch(b: Int, text: Int => String) = {
+      import spark.implicits._
+      (0 until batch).map { i =>
+        val n = b * batch + i
+        val src = if (i % 10 == 0 && b > 0) (b - 1) * batch + i else n
+        (n.toLong, text(src))
+      }.toDF("doc_id", "text")
+    }
+    def ingestSec(idx: graft.api.DedupIndex, text: Int => String): Double =
+      time((0 until batches).foreach(b => idx.ingest(corpusBatch(b, text)).count()))
+    def shortDoc(src: Int) = s"document number $src with shared content tail"
+    val dedupIngestSec = Harness.reps(reps) { r =>
       val dir = freshDir(s"didx$r")
       lastDedupDir = dir
-      val idx = new graft.api.DedupIndex(spark, dir,
-        capacity = (batches * batch).toLong)
-      import spark.implicits._
-      time((0 until batches).foreach { b =>
-        val docs = (0 until batch).map { i =>
-          val n = b * batch + i
-          val text = if (i % 10 == 0 && b > 0)
-            s"document number ${(b - 1) * batch + i} with shared content tail"
-          else s"document number $n with shared content tail"
-          (n.toLong, text)
-        }.toDF("doc_id", "text")
-        idx.ingest(docs).count()
-      })
+      ingestSec(new graft.api.DedupIndex(spark, dir,
+        capacity = (batches * batch).toLong), shortDoc)
     }.min
     val dedupIngestRows = (batches * batch).toLong
 
@@ -323,28 +305,21 @@ object BenchWrites {
     //    each, with a shared boilerplate run so probes hit).
     val boiler = "alpha beta gamma delta epsilon zeta eta theta iota " +
       "kappa lambda mu nu xi omicron pi rho sigma tau upsilon"
-    def windowCorpusBatch(b: Int) = {
-      import spark.implicits._
-      (0 until batch).map { i =>
-        val n = b * batch + i
-        val src = if (i % 10 == 0 && b > 0) (b - 1) * batch + i else n
-        (n.toLong, s"document number $src begins here $boiler ends with marker $src")
-      }.toDF("doc_id", "text")
-    }
-    val dedupWindowsSec = (1 to reps).map { r =>
+    def windowDoc(src: Int) = s"document number $src begins here $boiler ends with marker $src"
+    val dedupWindowsSec = Harness.reps(reps) { r =>
       val idx = new graft.api.DedupIndex(spark, freshDir(s"didxw$r"),
         capacity = (batches * batch).toLong,
         windowCapacity = (batches * batch).toLong * 16)
-      time((0 until batches).foreach(b => idx.ingest(windowCorpusBatch(b)).count()))
+      ingestSec(idx, windowDoc)
     }.min
     // the SAME 30-token corpus with the window leg OFF — the honest
     // denominator for window_leg_overhead (dividing by the base
     // bench's dedupIngestSec would conflate the leg's cost with the
     // corpus-shape change from short docs to 30-token docs)
-    val dedupWindowsBaseSec = (1 to reps).map { r =>
+    val dedupWindowsBaseSec = Harness.reps(reps) { r =>
       val idx = new graft.api.DedupIndex(spark, freshDir(s"didxwb$r"),
         capacity = (batches * batch).toLong)
-      time((0 until batches).foreach(b => idx.ingest(windowCorpusBatch(b)).count()))
+      ingestSec(idx, windowDoc)
     }.min
 
     // -- dedup_index_hot_ingest: the SAME corpus/protocol as
@@ -355,20 +330,9 @@ object BenchWrites {
     //    count shortcut skips the probe on these 5000-doc stores, so
     //    this row is the only one that measures the probe itself).
     //    hot_guard_overhead = active probe vs shortcut-skipped.
-    val dedupHotSec = (1 to reps).map { r =>
-      val idx = new graft.api.DedupIndex(spark, freshDir(s"didxh$r"),
-        capacity = (batches * batch).toLong, hotBandThreshold = 1000)
-      import spark.implicits._
-      time((0 until batches).foreach { b =>
-        val docs = (0 until batch).map { i =>
-          val n = b * batch + i
-          val text = if (i % 10 == 0 && b > 0)
-            s"document number ${(b - 1) * batch + i} with shared content tail"
-          else s"document number $n with shared content tail"
-          (n.toLong, text)
-        }.toDF("doc_id", "text")
-        idx.ingest(docs).count()
-      })
+    val dedupHotSec = Harness.reps(reps) { r =>
+      ingestSec(new graft.api.DedupIndex(spark, freshDir(s"didxh$r"),
+        capacity = (batches * batch).toLong, hotBandThreshold = 1000), shortDoc)
     }.min
 
     // -- dedup_index_unguarded_ingest: the SAME corpus/protocol with
@@ -378,20 +342,9 @@ object BenchWrites {
     //    fold + the cumulative counter) separately from the probe
     //    (hot_guard_overhead above, measured ~free thanks to the
     //    counter shortcut).
-    val dedupUnguardedSec = (1 to reps).map { r =>
-      val idx = new graft.api.DedupIndex(spark, freshDir(s"didxu$r"),
-        capacity = (batches * batch).toLong, hotBandThreshold = 0)
-      import spark.implicits._
-      time((0 until batches).foreach { b =>
-        val docs = (0 until batch).map { i =>
-          val n = b * batch + i
-          val text = if (i % 10 == 0 && b > 0)
-            s"document number ${(b - 1) * batch + i} with shared content tail"
-          else s"document number $n with shared content tail"
-          (n.toLong, text)
-        }.toDF("doc_id", "text")
-        idx.ingest(docs).count()
-      })
+    val dedupUnguardedSec = Harness.reps(reps) { r =>
+      ingestSec(new graft.api.DedupIndex(spark, freshDir(s"didxu$r"),
+        capacity = (batches * batch).toLong, hotBandThreshold = 0), shortDoc)
     }.min
 
     // -- dedup_index_media_ingest: the MEDIA key family's probe-then-
@@ -401,7 +354,7 @@ object BenchWrites {
     //    re-posts an earlier record's hash so the band probe does real
     //    work; guarded (default threshold — the counter shortcut skips
     //    the hot probe at this store size, like the text row).
-    val dedupMediaSec = (1 to reps).map { r =>
+    val dedupMediaSec = Harness.reps(reps) { r =>
       val idx = new graft.api.DedupIndex(spark, freshDir(s"didxm$r"),
         capacity = (batches * batch).toLong)
       import spark.implicits._
@@ -444,7 +397,7 @@ object BenchWrites {
     //    what a full production ingest costs per row vs the bare
     //    remember above. Sequential batches, so each pays the profile
     //    aggregate and the index probe against grown state.
-    val pipelineSec = (1 to reps).map { r =>
+    val pipelineSec = Harness.reps(reps) { r =>
       val st = new MnemoStore(spark, freshDir(s"pipe$r"))
       val idx = new graft.api.DedupIndex(spark, freshDir(s"pipeidx$r"),
         capacity = (batches * batch).toLong)
@@ -459,7 +412,7 @@ object BenchWrites {
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val agents = 4
-    val concSec = (1 to reps).map { r =>
+    val concSec = Harness.reps(reps) { r =>
       val stores = (0 until agents).map(a => new MnemoStore(spark, freshDir(s"c$r$a")))
       time(Await.result(
         Future.sequence(stores.zipWithIndex.map { case (st, a) => Future {
@@ -478,7 +431,7 @@ object BenchWrites {
     //    per commit (generation listing + stage + link + retention
     //    sweep) — pointer_commit_overhead attributes it vs the atomic
     //    rename, so the object-store claim carries a measured price.
-    val pointerSec = (1 to reps).map { r =>
+    val pointerSec = Harness.reps(reps) { r =>
       spark.conf.set("graft.manifest.protocol", "pointer")
       try {
         val st = new MnemoStore(spark, freshDir(s"ptr$r"))
@@ -487,10 +440,6 @@ object BenchWrites {
       } finally spark.conf.unset("graft.manifest.protocol")
     }.min
 
-    // Locale.ROOT explicitly: the f-interpolator is locale-sensitive
-    // and a comma-decimal default locale would emit invalid JSON
-    def num(fmt: String, d: Double): String =
-      String.format(java.util.Locale.ROOT, fmt, Double.box(d))
     def op(sec: Double, rows: Long): String =
       s"""{"sec":${num("%.4f", sec)},"rows_per_sec":${num("%.1f", rows / sec)}}"""
     def lat(sec: Double): String = s"""{"sec":${num("%.4f", sec)}}"""
@@ -568,16 +517,7 @@ object BenchWrites {
     // number that survives a scale-up.
     val line =
       s"""{"metric":"writes_total","value":${num("%.4f", total)},"value_r7_ops":${num("%.4f", totalR7Ops)},"unit":"sec","ops":$ops,"reps":$reps,"batch":$batch,"warmup":true,"store_layout":"v3-bucketed-32-agentsorted"}"""
-    println(line)
-    // Bench.scala's two-artifact pattern: the scratch file persists
-    // EVERY run (a piped-away stdout must not lose a probe), the
-    // tracked artifact only a default-reps run (a dev probe must not
-    // silently clobber the headline figure)
-    try {
-      Files.writeString(Paths.get("bench_writes_out.json"), line + "\n")
-      if (reps == Bench.DefaultReps)
-        Files.writeString(Paths.get("BENCH_WRITES.json"), line + "\n")
-    } catch { case _: Throwable => () }
+    Harness.writeArtifact(line, "bench_writes_out.json", "BENCH_WRITES.json", reps)
     spark.stop()
   }
 }

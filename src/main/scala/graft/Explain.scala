@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for a set of queries — the
   * plan-audit tool used to confirm pushdown/broadcast/codegen choices
   * (run: `sbt "runMain graft.Explain s6_filter_topk j2_broadcast_join_agg"`). */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>
       println(s"\n=== $n ===")

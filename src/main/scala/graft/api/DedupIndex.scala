@@ -198,8 +198,9 @@ final class DedupIndex(val spark: SparkSession, val path: String,
     * regimes (the probe_phash.py numbers vs the d12 fixtures), so one
     * family's calibration must never rule the other's. Same AUTO
     * evidence-floor discipline ([[DedupIndex.MinAutoEvidenceKeys]]),
-    * same defer-with-persisted-counts contract. */
-  /** The media family's "creation" is its FIRST media fold (a text
+    * same defer-with-persisted-counts contract.
+    *
+    * The media family's "creation" is its FIRST media fold (a text
     * store may live long before media ever arrives), so every first
     * media fold persists an `mhot` decision — a positive threshold,
     * the auto marker, or `0` for opt-out — and re-opens route with it

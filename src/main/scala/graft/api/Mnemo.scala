@@ -1349,10 +1349,6 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     }
   }
 
-  /** VERIFY: recompute every link of every (agent, thread) chain; rows
-    * with broken linkage localize the tamper (hash.rs:41-98 → one
-    * window pass, W4). Cross-batch seams are checked via the stored
-    * prev_hash, which the builder seeded from the previous batch tail. */
   /** Operator-facing health view of this store and its maintained
     * satellites — see [[Mnemo.StoreHealth]]. Driver-side manifest
     * reads and listings only; launches no Spark job, so it is safe to
@@ -1386,6 +1382,10 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     }
   }
 
+  /** VERIFY: recompute every link of every (agent, thread) chain; rows
+    * with broken linkage localize the tamper (hash.rs:41-98 → one
+    * window pass, W4). Cross-batch seams are checked via the stored
+    * prev_hash, which the builder seeded from the previous batch tail. */
   def verifyChains(): DataFrame = verifyChainsOver(table())
 
   /** Agent-scoped verify: the chain window partitions by (agent,

@@ -2,6 +2,7 @@ package graft.eval
 
 import java.nio.file.{Files, Paths}
 
+import graft.Harness.jsonString
 import graft.LongMemFixture
 
 /** Dumps the retrieval-quality fixture's (id, content, query) texts as
@@ -14,17 +15,8 @@ import graft.LongMemFixture
 object DumpFixtureTexts {
   def main(args: Array[String]): Unit = {
     val out = if (args.length > 0) args(0) else "fixtures/longmem_texts.json"
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val rows = LongMemFixture.records.map { r =>
-      s"""{"id":"${esc(r.id)}","content":"${esc(r.content)}","query":"${esc(r.query)}"}"""
+      s"""{"id":${jsonString(r.id)},"content":${jsonString(r.content)},"query":${jsonString(r.query)}}"""
     }
     Files.createDirectories(Paths.get(out).toAbsolutePath.getParent)
     Files.writeString(Paths.get(out), rows.mkString("[\n", ",\n", "\n]\n"))

@@ -1,7 +1,6 @@
 package graft.eval
 
-import graft.LongMemFixture
-import org.apache.spark.sql.SparkSession
+import graft.{Harness, LongMemFixture}
 
 import scala.util.hashing.MurmurHash3
 
@@ -44,11 +43,7 @@ object MakeVectorFixture {
 
   def main(args: Array[String]): Unit = {
     val out = if (args.length > 0) args(0) else "fixtures/longmem_vectors.parquet"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session()
     import spark.implicits._
     LongMemFixture.records
       .map(r => (r.id, trigramVector(r.content), trigramVector(r.query)))

@@ -46,24 +46,23 @@ object BpeOps {
     * overhead). At a production merge count (30k+ for a real
     * vocabulary) that is HOURS of pure cadence no matter how small the
     * corpus: the driver loop, not the data, is the bound. The
-    * production claw-back is [[learnBpeLocal]]: the vocabulary is
+    * production claw-back is [[fitBpeLocal]]: the vocabulary is
     * BOUNDED by the language (the same argument that makes the d6 CC
     * loop's collect legitimate), so after the one corpus-sized
     * word-frequency pass the collected (word, freq) table fits the
     * driver and the remaining 30k iterations are pure in-memory work.
-    * MEASURED (BENCH_AB, round-robin at sf0.1 local[32]): distributed
+    * MEASURED (BENCH_AB.json, round-robin at sf0.1 local[32]): distributed
     * loop 5.91 s min / 7.06 median vs collect-then-fit 5.24/5.44 —
     * the shared corpus+funnel pass dominates both, and the delta is
     * the loop itself, ~0.07-0.16 s PER MERGE of pure cadence on an
     * idle local box (a real cluster's scheduling latency is higher):
     * at 30k merges, 35 minutes to 1.4 hours of overhead that the
-    * local fit replaces with in-memory milliseconds. The registered
-    * query DEFAULTS to the distributed loop because it is the
-    * oracle-checkable per-iteration cost model and exercises the
-    * map-side pair-count shape a sharded fit would reuse — and since
-    * round 16 the production form is conf-reachable inside pl18/pl19
-    * (`graft.bpe.strategy=local`, via [[fitBpeLocal]]); PipelineSpec
-    * pins that both strategies produce identical query output. */
+    * local fit replaces with in-memory milliseconds. pl18/pl19 run
+    * the local fit by default and fall back to the distributed loop
+    * only past the vocabulary size gate (`graft.bpe.localVocabLimit`;
+    * `0` forces the loop, which keeps the map-side pair-count shape a
+    * sharded fit would reuse); PipelineSpec pins that both paths
+    * produce identical query output. */
   val NMerges = 10
 
   /** Driver-local BPE fit over a COLLECTED (word, freq) vocabulary —
@@ -77,18 +76,13 @@ object BpeOps {
     * greedy left-to-right merge fold as [[applyMerge]]; PipelineSpec
     * pins equality against the registered pl18 output on the real
     * survivor vocabulary. Stops early when the pair space is exhausted
-    * (the loop's `live = false` semantics). */
-  def learnBpeLocal(vocab: Seq[(String, Long)], nMerges: Int = NMerges)
-      : Seq[(Int, String, String, Long)] =
-    fitBpeLocal(vocab, nMerges)._2
-
-  /** The full driver-local fit: [[learnBpeLocal]]'s loop, ALSO
-    * returning the final per-word (word, freq, syms) state — the
-    * encode table pl19 consumes. One return value per input word, in
-    * input order; the state falls out of the fit for free (each merge
-    * is applied to learn the next one), so the
-    * `graft.bpe.strategy=local` path never re-applies the merge table.
-    */
+    * (the loop's `live = false` semantics).
+    *
+    * Returns the final per-word (word, freq, syms) state — the encode
+    * table pl19 consumes, one entry per input word in input order —
+    * and the merges. The state falls out of the fit for free (each
+    * merge is applied to learn the next one), so the local path never
+    * re-applies the merge table. */
   def fitBpeLocal(vocab: Seq[(String, Long)], nMerges: Int = NMerges)
       : (Seq[(String, Long, Seq[String])], Seq[(Int, String, String, Long)]) = {
     // symbolize by CODE POINT, not UTF-16 unit: Spark's substr (and

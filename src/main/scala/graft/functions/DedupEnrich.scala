@@ -414,12 +414,13 @@ object DedupEnrich {
     * the convergence count is the one driver-side action (the d6
     * loop-control discipline). `parts` sizes the iteration frames
     * (callers pass [[graft.queries.IterSizing.iterParts]]). */
-  def minLabelComponents(pairs: DataFrame, parts: Int): DataFrame = {
+  def minLabelComponents(pairs: DataFrame, parts: Int,
+      maxRounds: Int = 50): DataFrame = {
     require(pairs.columns.length >= 2 &&
       pairs.columns(0) == "a" && pairs.columns(1) == "b",
       s"minLabelComponents requires the first two columns to be named " +
         s"(a, b) — got (${pairs.columns.take(2).mkString(", ")})")
-    // SIZE-GATED fast path (the learnBpeLocal discipline applied to
+    // SIZE-GATED fast path (the fitBpeLocal discipline applied to
     // the CC loop): each distributed iteration is a full Spark job
     // round (joins + aggregate + convergence count + checkpoint), pure
     // cadence on the small graphs a verified near-dup pass usually
@@ -502,11 +503,10 @@ object DedupEnrich {
       // rounds (50 covers diameter 2^50), where the pre-r16 linear loop
       // needed one round PER unit of diameter and exited silently split
       // past the cap — the r15 verdict's at-scale edge, now loud below.
-      // Conf-able ONLY so the spec can PIN the loud-failure contract
+      // A parameter ONLY so the spec can PIN the loud-failure contract
       // (an artificially small cap on a long chain must throw, never
-      // return split components); production has no reason to touch it
-      val maxIters = confInt(s, "graft.cc.maxRounds", 50)
-      while (changed > 0 && iter < maxIters) {
+      // return split components); production callers keep the default
+      while (changed > 0 && iter < maxRounds) {
         val viaNeighbors = edges
           .join(labels.withColumnRenamed("node", "a"), "a")
           .groupBy(col("b").as("node"))
@@ -539,12 +539,12 @@ object DedupEnrich {
       }
       if (changed > 0)
         throw new IllegalStateException(
-          s"minLabelComponents did not converge within $maxIters rounds " +
+          s"minLabelComponents did not converge within $maxRounds rounds " +
             s"($changed labels still changing) — refusing to return split " +
             "components (they would silently over-retain near-dups); at " +
             "the default cap the pointer-doubled loop covers diameter " +
             "2^50, so this indicates a bug, a non-Long id pathology, or " +
-            "an artificially low graft.cc.maxRounds")
+            "an artificially low maxRounds")
       converged = true
       labels
     } finally {

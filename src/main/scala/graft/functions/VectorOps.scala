@@ -79,11 +79,6 @@ object VectorOps {
       sqrt(aggregate(terms, lit(0.0), (acc, t) => acc + t) / size(x)))
   }
 
-  /** Deterministic random-hyperplane bucket id for LSH-style ANN
-    * pre-partitioning: sign bits of dot products against `nPlanes`
-    * pseudo-random unit-free hyperplanes derived from a seed. The planes
-    * are generated per-dimension with a splitmix-style integer hash, so
-    * the bucketing is reproducible with zero data movement. */
   /** The splitmix64 finalizer (public-domain constants) — THE one
     * implementation; [[planeCoef]] and [[MinHash]] both derive from it
     * so the mix constants can never desynchronize. */
@@ -105,6 +100,11 @@ object VectorOps {
     z.toDouble / Long.MaxValue.toDouble
   }
 
+  /** Deterministic random-hyperplane bucket id for LSH-style ANN
+    * pre-partitioning: sign bits of dot products against `nPlanes`
+    * pseudo-random unit-free hyperplanes derived from a seed. The planes
+    * are generated per-dimension with a splitmix-style integer hash, so
+    * the bucketing is reproducible with zero data movement. */
   def hyperplaneBucket(vec: Column, dim: Int, nPlanes: Int, seed: Long = 42L): Column = {
     // native codegen'd loop (graft.plans.HyperplaneBucketExpr): the
     // coefficient table rides along as ONE object reference instead of

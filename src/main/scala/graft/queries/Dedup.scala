@@ -949,15 +949,6 @@ object Dedup extends QueryGroup {
       FROM sig s LEFT JOIN partners ON s.id = partners.id
       ORDER BY vec_id"""))
 
-  /** d14's occurrence→removal core over a (caller-cached) `(doc_id,
-    * toks)` frame: the surviving 1-based `(doc_id, t, tok)` rows after
-    * removing every NON-CANONICAL duplicated-window span. Factored so
-    * the composition spec (SubstringRewriteSpec) can run Lee et al.'s
-    * published PIPELINE ORDER — exact-substring removal BEFORE fuzzy
-    * dedup — with the exact operator the registered query verifies:
-    * rewrite first, then shingle/MinHash the survivors, and
-    * boilerplate-driven false near-dup pairs disappear while the
-    * removal has already consumed true substring duplication. */
   /** The NON-CANONICAL duplicated-window start positions per doc —
     * the shared detection half of the d14 rewrite: all window
     * occurrences (cached — the canonical aggregate and the marked
@@ -981,6 +972,15 @@ object Dedup extends QueryGroup {
       .select(col("doc_id"), col("pos"))
   }
 
+  /** d14's occurrence→removal core over a (caller-cached) `(doc_id,
+    * toks)` frame: the surviving 1-based `(doc_id, t, tok)` rows after
+    * removing every NON-CANONICAL duplicated-window span. Factored so
+    * the composition spec (SubstringRewriteSpec) can run Lee et al.'s
+    * published PIPELINE ORDER — exact-substring removal BEFORE fuzzy
+    * dedup — with the exact operator the registered query verifies:
+    * rewrite first, then shingle/MinHash the survivors, and
+    * boilerplate-driven false near-dup pairs disappear while the
+    * removal has already consumed true substring duplication. */
   private[graft] def substringKeptTokens(base: DataFrame): DataFrame = {
     val W = DedupEnrich.WindowW
     val marked = substringMarked(base)

@@ -100,36 +100,6 @@ object Multimodal extends QueryGroup {
     * bar-independent (the d11 argument). */
   private[graft] val PhashHamMax = 12
 
-  /** m3 — perceptual-hash near-dup detection over the multimodal
-    * column: the media-corpus counterpart of d12's guarded text dedup
-    * (real multimodal curation dedups on perceptual hashes — pHash/
-    * aHash, public knowledge — because exact byte hashes miss
-    * re-encodes). The hash is [[MediaPipeline.FeatureExtractor
-    * .aHashBands]] (64-bit aHash over the stub-decoded stream, four
-    * 16-bit bands = Hamming-space LSH blocking); candidate generation
-    * and saturation ride the SHARED [[DedupEnrich
-    * .guardedCandidatePairs]] / [[DedupEnrich.saturationRollup]] guard
-    * core — one guard implementation across the shingle-band, embedding
-    * -bucket, and now MEDIA key families — and verification is the
-    * exact 64-bit Hamming distance over the four bands (integer xor +
-    * popcount in both engines; no float anywhere in the operator).
-    *
-    * Scale shape: payloads never leave the partition-local hash pass
-    * (only 4x16-bit bands shuffle); the per-key counts aggregate
-    * resolves the hot set BEFORE any pair join exists in the plan
-    * (PlanSpec pins the semi/anti structure), so a degenerate hash
-    * bucket — near-constant payloads, the media analogue of templated
-    * text — flags instead of exploding O(h²). */
-  /** The m3 guard composition over a `(media_id, b0..b3)` hash frame —
-    * factored so DedupSurfacesSpec drives the SAME builder the
-    * registered query runs (the guardedBatchRollup convention):
-    * band-key explode → SHARED guard core → Hamming verify → SHARED
-    * saturation rollup. */
-  /** The ONE band-key encoding of the m3 guard (band index striped
-    * into the high bits, the 16 hash bits low) — the threshold
-    * derivation and the guard must key identically, so there is
-    * exactly one construction (review finding: a drifted copy would
-    * derive H on a different key family than the guard filters). */
   /** The band-striped key ARRAY over `b0..b3` columns — the single
     * expression behind [[phashKeys]] (batch + maintained index) and
     * the streaming media twin, so no surface can key differently. */
@@ -137,6 +107,11 @@ object Multimodal extends QueryGroup {
     array((0 to 3).map(b =>
       lit(b * 65536L) + col(s"b$b").cast("long")): _*)
 
+  /** The ONE band-key encoding of the m3 guard (band index striped
+    * into the high bits, the 16 hash bits low) — the threshold
+    * derivation and the guard must key identically, so there is
+    * exactly one construction (review finding: a drifted copy would
+    * derive H on a different key family than the guard filters). */
   private[graft] def phashKeys(hashes: DataFrame): DataFrame =
     hashes.select(col("media_id").as("id"),
       explode(phashKeyArray).as("key"))
@@ -176,6 +151,11 @@ object Multimodal extends QueryGroup {
     (sat, ver)
   }
 
+  /** The m3 guard composition over a `(media_id, b0..b3)` hash frame —
+    * factored so DedupSurfacesSpec drives the SAME builder the
+    * registered query runs (the guardedBatchRollup convention):
+    * band-key explode → SHARED guard core → Hamming verify → SHARED
+    * saturation rollup. */
   private[graft] def phashRollup(hashes: DataFrame, hotThreshold: Long)
       : DataFrame = {
     import graft.functions.DedupEnrich
@@ -224,6 +204,26 @@ object Multimodal extends QueryGroup {
                MAX(CASE WHEN band = 3 THEN bv END) AS b3
              FROM bands GROUP BY 1)"""
 
+  /** m3 — perceptual-hash near-dup detection over the multimodal
+    * column: the media-corpus counterpart of d12's guarded text dedup
+    * (real multimodal curation dedups on perceptual hashes — pHash/
+    * aHash, public knowledge — because exact byte hashes miss
+    * re-encodes). The hash is [[MediaPipeline.FeatureExtractor
+    * .aHashBands]] (64-bit aHash over the stub-decoded stream, four
+    * 16-bit bands = Hamming-space LSH blocking); candidate generation
+    * and saturation ride the SHARED [[DedupEnrich
+    * .guardedCandidatePairs]] / [[DedupEnrich.saturationRollup]] guard
+    * core — one guard implementation across the shingle-band, embedding
+    * -bucket, and now MEDIA key families — and verification is the
+    * exact 64-bit Hamming distance over the four bands (integer xor +
+    * popcount in both engines; no float anywhere in the operator).
+    *
+    * Scale shape: payloads never leave the partition-local hash pass
+    * (only 4x16-bit bands shuffle); the per-key counts aggregate
+    * resolves the hot set BEFORE any pair join exists in the plan
+    * (PlanSpec pins the semi/anti structure), so a degenerate hash
+    * bucket — near-constant payloads, the media analogue of templated
+    * text — flags instead of exploding O(h²). */
   private val q3 = QueryDef(
     "m3_phash_neardup",
     (s, dir) => {
@@ -398,28 +398,6 @@ object Multimodal extends QueryGroup {
     DedupEnrich.saturationRollup(satm, dup, "media_id", "frame_saturated")
   }
 
-  /** m5 — FRAME-level near-dup detection, composing m4 x m3 (the r17
-    * verdict's item 2): video dedup's real unit is the frame — a
-    * re-encoded or trimmed container shares most sampled frames with
-    * its source, so published video-corpus dedup keys on per-frame
-    * perceptual hashes and flags CONTAINERS by frame-overlap fraction.
-    * Frames come from the m4 sampling plan as temporal byte-slices
-    * ([[MediaPipeline.frameHashes]] — stream-locality-preserving stub
-    * for decoded pixels), hashed with the m3 aHash family; per-frame
-    * band keys ride the SHARED [[graft.functions.DedupEnrich
-    * .guardedCandidatePairs]] guard core; verification is the exact
-    * 64-bit frame Hamming (cross-container only); and pair evidence
-    * aggregates to container level by the exact-integer overlap bar
-    * ([[FrameOverlapNum]]). Output is the m3 rollup shape at container
-    * granularity: (media_id, frame_saturated, n_dups, partners).
-    *
-    * Scale shape: payloads never leave the partition-local frame-hash
-    * pass (only <= 8 x (id, 4x16-bit) rows per container shuffle);
-    * the guard resolves hot frame-keys BEFORE any pair join exists;
-    * the overlap aggregate runs on verified pairs only (probe-bounded:
-    * 4458 rows at sf0.1); the container rollup is the shared
-    * over-approximating saturation contract — a container with any
-    * guarded frame flags instead of silently missing evidence. */
   /** The ONE DuckDB mirror of the m4→aHash frame-hash pass (the
     * byte-slice frame plan, per-frame 64-bit aHash as four 16-bit
     * bands) — shared verbatim by the q5 and q7 oracles (the
@@ -483,6 +461,28 @@ object Multimodal extends QueryGroup {
                MAX(CASE WHEN band = 3 THEN bv END) AS b3
              FROM bands GROUP BY 1, 2, 3)"""
 
+  /** m5 — FRAME-level near-dup detection, composing m4 x m3 (the r17
+    * verdict's item 2): video dedup's real unit is the frame — a
+    * re-encoded or trimmed container shares most sampled frames with
+    * its source, so published video-corpus dedup keys on per-frame
+    * perceptual hashes and flags CONTAINERS by frame-overlap fraction.
+    * Frames come from the m4 sampling plan as temporal byte-slices
+    * ([[MediaPipeline.frameHashes]] — stream-locality-preserving stub
+    * for decoded pixels), hashed with the m3 aHash family; per-frame
+    * band keys ride the SHARED [[graft.functions.DedupEnrich
+    * .guardedCandidatePairs]] guard core; verification is the exact
+    * 64-bit frame Hamming (cross-container only); and pair evidence
+    * aggregates to container level by the exact-integer overlap bar
+    * ([[FrameOverlapNum]]). Output is the m3 rollup shape at container
+    * granularity: (media_id, frame_saturated, n_dups, partners).
+    *
+    * Scale shape: payloads never leave the partition-local frame-hash
+    * pass (only <= 8 x (id, 4x16-bit) rows per container shuffle);
+    * the guard resolves hot frame-keys BEFORE any pair join exists;
+    * the overlap aggregate runs on verified pairs only (probe-bounded:
+    * 4458 rows at sf0.1); the container rollup is the shared
+    * over-approximating saturation contract — a container with any
+    * guarded frame flags instead of silently missing evidence. */
   private val q5 = QueryDef(
     "m5_frame_neardup",
     (s, dir) => {

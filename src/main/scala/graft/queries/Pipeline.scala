@@ -1542,22 +1542,16 @@ object Pipeline extends QueryGroup {
     * space and the vocabulary keeps its last state — the DuckDB level
     * chain's LEFT-join pass-through mirrors this.
     *
-    * `graft.bpe.strategy=distributed|local` (the joinback/cc
-    * conf-encoding precedent): `local` collects the language-bounded
-    * (word, freq) vocabulary ONCE and runs the whole loop driver-side
-    * via [[graft.functions.BpeOps.fitBpeLocal]] — the measured
-    * production form (BENCH_AB: the distributed loop costs ~0.07-0.16 s
-    * of pure job cadence PER MERGE, hours at a 30k production
-    * vocabulary; the local fit replaces that with in-memory
-    * milliseconds after the identical one corpus pass). Output is
-    * merge-for-merge and word-for-word IDENTICAL (PipelineSpec pins
-    * pl18/pl19 equality under both settings); since round 19 `local`
-    * IS the default — it is the measured production form on both axes
-    * (BENCH_AB's per-merge job-cadence cost, re-measured this round:
-    * pl18 3.8 s → 1.65 s warm at sf0.1), the size gate below degrades
-    * it safely to the distributed loop on corpora that violate the
-    * language-bounded-vocabulary assumption, and the oracle checks the
-    * OUTPUT, which is equality-pinned across both engines' strategies.
+    * The production form collects the language-bounded (word, freq)
+    * vocabulary ONCE and runs the whole loop driver-side via
+    * [[graft.functions.BpeOps.fitBpeLocal]]: the distributed loop costs
+    * ~0.07-0.16 s of pure job cadence PER MERGE (hours at a 30k
+    * production vocabulary; pl18 measured 3.8 s → 1.65 s warm at sf0.1
+    * when the local fit became the default), the local fit replaces
+    * that with in-memory milliseconds after the identical one corpus
+    * pass. Output is merge-for-merge and word-for-word IDENTICAL
+    * (PipelineSpec pins pl18/pl19 equality of both paths), and the
+    * oracle checks the OUTPUT.
     *
     * SIZE-GATED like the CC fast path: "language-bounded" is an
     * assumption crawl corpora can violate (ids, hashes, URLs,
@@ -1565,52 +1559,30 @@ object Pipeline extends QueryGroup {
     * local path probes with a bounded `limit(L+1)` collect
     * (`graft.bpe.localVocabLimit`, default 5M words — a few hundred
     * MB of driver heap) and FALLS BACK to the distributed loop, with
-    * a warning, when the vocabulary exceeds it — an explicit `local`
-    * request must degrade to the safe engine choice, never OOM the
-    * driver. */
+    * a warning, when the vocabulary exceeds it — never OOM the driver.
+    * A non-positive limit disables the local path (the equality specs
+    * force the distributed loop with `0`). */
   private def learnBpe(s: SparkSession, words: DataFrame)
       : (DataFrame, Seq[(Int, String, String, Long)]) = {
     import graft.functions.BpeOps
-    // enum conf validated up front: a near-miss like 'LOCAL' or
-    // 'locall' silently running the distributed loop would cost hours
-    // of job cadence at a production vocabulary with nothing logged —
-    // unknown values throw, matching Spark's own enum-conf discipline
-    // (review finding)
-    val strategy = s.conf.get("graft.bpe.strategy", "local").trim
-    require(strategy == "distributed" || strategy == "local",
-      s"graft.bpe.strategy must be 'distributed' or 'local' — got " +
-        s"'$strategy'")
-    if (strategy == "local") {
-      // confInt clamps the upper end (the +1 sentinel probe must not
-      // overflow); the > 0 gate below covers the lower end — a
-      // non-positive limit disables the local path and degrades to
-      // the distributed loop with a warning, never a negative-limit
-      // AnalysisException (the CC fast path's localLimit discipline)
-      val limit = graft.functions.DedupEnrich.confInt(
-        s, "graft.bpe.localVocabLimit", 5000000)
-      if (limit > 0) {
-        val head = words.select(col("word"), col("freq"))
-          .limit(limit + 1).collect()
-        if (head.length <= limit) {
-          val local = head.map(r => (r.getString(0), r.getLong(1))).toSeq
-          val (state, merges) = BpeOps.fitBpeLocal(local)
-          import s.implicits._
-          return (state.toDF("word", "freq", "syms"), merges)
-        }
+    // confInt clamps the upper end (the +1 sentinel probe must not
+    // overflow); the > 0 gate covers the lower end — a non-positive
+    // limit skips the local path, never a negative-limit
+    // AnalysisException (the CC fast path's localLimit discipline)
+    val limit = graft.functions.DedupEnrich.confInt(
+      s, "graft.bpe.localVocabLimit", 5000000)
+    if (limit > 0) {
+      val head = words.select(col("word"), col("freq"))
+        .limit(limit + 1).collect()
+      if (head.length <= limit) {
+        val local = head.map(r => (r.getString(0), r.getLong(1))).toSeq
+        val (state, merges) = BpeOps.fitBpeLocal(local)
+        import s.implicits._
+        return (state.toDF("word", "freq", "syms"), merges)
       }
-      // branch the message on the actual cause (ADVICE r16): with a
-      // non-positive limit the vocabulary was never measured, so
-      // leading with "vocabulary exceeds -5 words" misdescribes why
-      // the local path was skipped
-      val why =
-        if (limit <= 0)
-          s"local path disabled (non-positive graft.bpe.localVocabLimit=" +
-            s"$limit)"
-        else
-          s"vocabulary exceeds graft.bpe.localVocabLimit=$limit words"
       org.slf4j.LoggerFactory.getLogger(getClass)
-        .warn(s"graft.bpe.strategy=local: $why - falling back to the " +
-          "distributed merge loop")
+        .warn(s"BPE vocabulary exceeds graft.bpe.localVocabLimit=$limit " +
+          "words - falling back to the distributed merge loop")
     }
     val np = IterSizing.iterParts(s)
     var vocab = words
@@ -1642,9 +1614,8 @@ object Pipeline extends QueryGroup {
 
   /** The survivor word-frequency table — the ONE corpus-sized pass of
     * the BPE family (everything downstream is vocabulary-sized).
-    * `private[graft]`: BenchAB's collect-then-fit adjudication and the
-    * PipelineSpec local-vs-distributed equality pin consume the same
-    * vocabulary the registered query trains on. */
+    * `private[graft]`: the PipelineSpec local-vs-distributed equality
+    * pin consumes the same vocabulary the registered query trains on. */
   private[graft] def survivorWords(s: SparkSession, dir: String): DataFrame = {
     val surv = funnelStaged4(s, dir).filter(col("stage") === 4)
       .select("doc_id")
@@ -1729,7 +1700,7 @@ object Pipeline extends QueryGroup {
       // the build cannot unpersist its OWN cache (the last consumer —
       // the returned frame's final aggregate — runs after the build
       // returns), and the eager-localCheckpoint alternative measured
-      // no better (one TimeOne pairing read it ~2.2 s slower warm,
+      // no better (one isolated-JVM pairing read it ~2.2 s slower warm,
       // 9.6-10.4 vs 7.4-8.4; a later Bench pairing read parity —
       // within ambient, so cache keeps its columnar-pruning edge).
       // CacheManager cannot dedupe wl across
@@ -1930,7 +1901,7 @@ object Pipeline extends QueryGroup {
 
   /** The trained weight table collected into a driver-side DENSE ARRAY
     * indexed by bucket id — dimension-bounded ([[ClsDim]] slots, the
-    * streaming-gate / learnBpeLocal driver-state convention): the
+    * streaming-gate / fitBpeLocal driver-state convention): the
     * array embeds into the scoring expression
     * ([[graft.plans.WeightedBucketSumExpr]]), so every scoring
     * consumer becomes a pure map-side projection with no join and no
@@ -2172,7 +2143,7 @@ object Pipeline extends QueryGroup {
     * of full-batch logistic regression under ADAGRAD (see [[ClsLr]])
     * run as MAP-SIDE GRADIENT AGGREGATES with a driver-held
     * ~[[ClsDim]]-row weight+accumulator table re-broadcast per epoch
-    * (the learnBpeLocal driver-state discipline: state is
+    * (the fitBpeLocal driver-state discipline: state is
     * DIMENSION-bounded, never corpus-bounded). The reference's own
     * quality scoring is a
     * rule-based heuristic (`check_for_anomaly`'s additive indicator

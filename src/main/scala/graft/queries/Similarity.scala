@@ -61,7 +61,7 @@ object Similarity extends QueryGroup {
     * measure 16/21, and the third round now HELPS — 18/21 — because
     * Lloyd refines well-separated starting cells instead of fighting
     * collapsed ones. QueriesSpec pins top-1 agreement ≥ 3/4.
-    * Round-9 knob sweep (IvfAgree, sf0.1): NProbe 16→18/21,
+    * Round-9 knob sweep (top-1 agreement vs v1, sf0.1): NProbe 16→18/21,
     * 24→19/21, 32→20/21 — the residual misses are probe-bounded, not
     * codebook failures, and widening the probe toward half the corpus
     * is just expensive brute force, so 16 stays. A FOURTH Lloyd round

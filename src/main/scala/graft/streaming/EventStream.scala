@@ -116,6 +116,12 @@ object EventStream {
   // held docs per band: (doc_id, event-time ms), newest first
   case class BandState(docs: List[(Long, Long)])
 
+  /** Watermark delay BOTH near-dup twins declare — one constant, not
+    * two literals: the delay interacts with the shared core's
+    * event-time GC and horizon eviction, so the text and media
+    * surfaces must tolerate late data identically (review finding). */
+  val NearDupWatermarkDelay = "2 hours"
+
   /** Streaming FUZZY dedup candidates — the stateful twin of the batch
     * d10 probe: the MinHash band-key index lives as streaming state
     * (key = band key, value = the docs recently seen in that band),
@@ -165,12 +171,6 @@ object EventStream {
     * never hide a duplicate (see [[NearDupCandidate]]); the
     * maintained [[graft.api.DedupIndex]] applies the same guard to
     * its persistent band state. */
-  /** Watermark delay BOTH near-dup twins declare — one constant, not
-    * two literals: the delay interacts with the shared core's
-    * event-time GC and horizon eviction, so the text and media
-    * surfaces must tolerate late data identically (review finding). */
-  val NearDupWatermarkDelay = "2 hours"
-
   def streamingNearDupCandidates(docs: DataFrame,
       horizonMs: Long = 6L * 3600 * 1000,
       maxBandDocs: Int = 1000): Dataset[NearDupCandidate] = {

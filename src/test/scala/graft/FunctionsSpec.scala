@@ -434,17 +434,16 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("minLabelComponents: non-convergence is LOUD — an exhausted round cap throws, never returns split components") {
-    // the (a) leg of the r15 verdict's done-criterion: the cap is
-    // conf-able solely so this spec can exhaust it — a 40-diameter
+    // the (a) leg of the r15 verdict's done-criterion: the cap is a
+    // parameter solely so this spec can exhaust it — a 40-diameter
     // chain cannot converge in 2 rounds, and the contract is an
     // IllegalStateException, not a silently split labeling
     import graft.functions.DedupEnrich
     import spark.implicits._
     val chain = (0L until 40L).map(i => (i, i + 1)).toDF("a", "b")
-    withConf("graft.cc.localEdgeLimit" -> "0",
-      "graft.cc.maxRounds" -> "2") {
+    withConf("graft.cc.localEdgeLimit" -> "0") {
       val e = intercept[IllegalStateException] {
-        DedupEnrich.minLabelComponents(chain, 4)
+        DedupEnrich.minLabelComponents(chain, 4, maxRounds = 2)
       }
       assert(e.getMessage.contains("did not converge"), e.getMessage)
     }
@@ -479,11 +478,10 @@ class FunctionsSpec extends SparkSpec {
     // the failure path cleans up COMPLETELY: a throw returns no frame,
     // so nothing may stay persisted — edges and the in-flight
     // checkpoint release in the finally
-    withConf("graft.cc.localEdgeLimit" -> "0",
-      "graft.cc.maxRounds" -> "2") {
+    withConf("graft.cc.localEdgeLimit" -> "0") {
       val before = sc.getPersistentRDDs.keySet
       intercept[IllegalStateException] {
-        DedupEnrich.minLabelComponents(chain, 4)
+        DedupEnrich.minLabelComponents(chain, 4, maxRounds = 2)
       }
       val leaked = sc.getPersistentRDDs.keySet -- before
       assert(leaked.isEmpty,
@@ -560,7 +558,7 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
-  test("BPE: learnBpeLocal symbolizes by CODE POINT, matching charSyms on supplementary-plane chars") {
+  test("BPE: fitBpeLocal symbolizes by CODE POINT, matching charSyms") {
     import graft.functions.BpeOps
     import spark.implicits._
     // U+1D11E (musical G clef) is two UTF-16 units but ONE character
@@ -575,7 +573,7 @@ class FunctionsSpec extends SparkSpec {
       s"charSyms must split by code point: $sparkSyms")
     // the local fit's first merge operates on the same three symbols:
     // pairs are (a, clef) and (clef, b), tie broken by lhs ASC
-    val merges = BpeOps.learnBpeLocal(Seq(word -> 1L), 1)
+    val (_, merges) = BpeOps.fitBpeLocal(Seq(word -> 1L), 1)
     assert(merges.head._2 == "a" && merges.head._3 == clef,
       s"local symbolization diverged from charSyms: ${merges.head}")
   }

@@ -31,14 +31,18 @@ class PipelineSpec extends SparkSpec {
     // the BpeOps.NMerges cadence contract: after the one corpus pass,
     // a fit over the collected (word, freq) vocabulary must be
     // merge-for-merge identical to the distributed loop — counts,
-    // symbols, ranks, tie-breaks
+    // symbols, ranks, tie-breaks. localVocabLimit=0 forces pl18 onto
+    // the distributed loop, so the two sides run different engines.
     import graft.functions.BpeOps
-    val dist = SparkEntry.queries("pl18_bpe_merges")(spark, Sf).collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .toSeq
+    var dist = Seq.empty[(Int, String, String, Long)]
+    withConf("graft.bpe.localVocabLimit" -> "0") {
+      dist = SparkEntry.queries("pl18_bpe_merges")(spark, Sf).collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
+        .toSeq
+    }
     val vocab = graft.queries.Pipeline.survivorWords(spark, Sf)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val local = BpeOps.learnBpeLocal(vocab)
+    val (_, local) = BpeOps.fitBpeLocal(vocab)
     assert(local == dist,
       s"local fit diverged from the distributed loop:\n local=$local\n dist=$dist")
   }
@@ -648,36 +652,26 @@ class PipelineSpec extends SparkSpec {
       s"cold docs must ride through untouched: ${auto("aa")} vs ${fixture("aa")}")
   }
 
-  test("graft.bpe.strategy=local produces IDENTICAL pl18/pl19 output to the distributed loop") {
-    // the conf-encoded production form (the joinback/cc precedent):
-    // collect-then-fit replaces the per-merge job cadence; the output
-    // contract is exact equality, merge table and encode alike
-    val d18 = SparkEntry.queries("pl18_bpe_merges")(spark, Sf).collect().toSeq
-    val d19 = SparkEntry.queries("pl19_bpe_encode")(spark, Sf).collect().toSeq
-    withConf("graft.bpe.strategy" -> "local") {
-      val l18 = SparkEntry.queries("pl18_bpe_merges")(spark, Sf).collect().toSeq
+  test("pl18/pl19: the local fit and the distributed loop give IDENTICAL output") {
+    // the production form: collect-then-fit replaces the per-merge job
+    // cadence; the output contract is exact equality, merge table and
+    // encode alike. localVocabLimit=0 forces the distributed loop.
+    val l18 = SparkEntry.queries("pl18_bpe_merges")(spark, Sf).collect().toSeq
+    val l19 = SparkEntry.queries("pl19_bpe_encode")(spark, Sf).collect().toSeq
+    withConf("graft.bpe.localVocabLimit" -> "0") {
+      val d18 = SparkEntry.queries("pl18_bpe_merges")(spark, Sf).collect().toSeq
       assert(l18 == d18,
-        s"pl18 diverged under the local strategy:\n local=$l18\n dist=$d18")
-      val l19 = SparkEntry.queries("pl19_bpe_encode")(spark, Sf).collect().toSeq
+        s"pl18 diverged between the local fit and the distributed loop:\n local=$l18\n dist=$d18")
+      val d19 = SparkEntry.queries("pl19_bpe_encode")(spark, Sf).collect().toSeq
       assert(l19 == d19,
-        s"pl19 diverged under the local strategy:\n local=$l19\n dist=$d19")
+        s"pl19 diverged between the local fit and the distributed loop:\n local=$l19\n dist=$d19")
     }
-    // an ENUM conf near-miss ('LOCAL', 'locall') must throw, not
-    // silently run the distributed loop — hours of job cadence at a
-    // production vocabulary with nothing logged (review finding)
-    withConf("graft.bpe.strategy" -> "LOCAL") {
-      val e = intercept[IllegalArgumentException] {
-        SparkEntry.queries("pl18_bpe_merges")(spark, Sf).collect()
-      }
-      assert(e.getMessage.contains("graft.bpe.strategy"), e.getMessage)
-    }
-    // a non-positive size-gate limit DISABLES the local path and
-    // degrades to the distributed loop — never a negative-limit
-    // AnalysisException (review finding); output stays identical
-    withConf("graft.bpe.strategy" -> "local",
-      "graft.bpe.localVocabLimit" -> "-5") {
+    // a NEGATIVE size-gate limit also disables the local path — never
+    // a negative-limit AnalysisException (review finding); output
+    // stays identical
+    withConf("graft.bpe.localVocabLimit" -> "-5") {
       val n18 = SparkEntry.queries("pl18_bpe_merges")(spark, Sf).collect().toSeq
-      assert(n18 == d18,
+      assert(n18 == l18,
         s"a disabled local gate must degrade to the distributed loop: $n18")
     }
   }
