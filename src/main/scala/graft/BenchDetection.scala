@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import graft.Harness.num
 import graft.eval.Detection
 
@@ -56,9 +54,7 @@ object BenchDetection {
         """this engine: walk catches payload forgery (content-hash recompute), """ +
         """length registration catches tail truncation (w7 mechanism), """ +
         """registered recursive digest catches tail hash-forges (w9 mechanism)"}"""
-    println(line)
-    try Files.writeString(Paths.get("DETECTION.json"), line + "\n")
-    catch { case _: Throwable => () }
+    Harness.writeArtifact(line, "DETECTION.json")
     spark.stop()
   }
 }

@@ -41,7 +41,7 @@ object BenchEmbeddings {
       s"""{"backend":"${r.name}","ndcg_at_10":${f(r.ndcgAt10)},"recall_at_10":${f(r.recallAt10)},""" +
         s""""p50_ms":${f(r.p50Ms)},"p95_ms":${f(r.p95Ms)},"batch_docs_per_sec":${f(r.batchDocsPerSec)}}""")
       .mkString("[", ",", "]")
-    println(
+    Harness.writeArtifact(
       s"""{"bench":"embeddings","slo_ms":$sloMs,"backends":$rows,""" +
         s""""recommended":${rec.chosen.map("\"" + _ + "\"").getOrElse("null")},""" +
         s""""best_quality":"${rec.bestQuality}","ndcg_gap":${f(rec.ndcgGap)}}""")

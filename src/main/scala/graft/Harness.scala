@@ -1,5 +1,7 @@
 package graft
 
+import java.io.IOException
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import java.util.Locale
 
@@ -92,12 +94,21 @@ object Harness {
     * full set at [[DefaultReps]]. A subset or a non-default rep count
     * is a dev probe, and nothing in its line would mark it partial. */
   def writeArtifact(line: String, scratch: String, tracked: String,
-      reps: Int, subset: Boolean = false): Unit = {
-    println(line)
-    try {
-      Files.writeString(Paths.get(scratch), line + "\n")
-      if (!subset && reps == DefaultReps)
-        Files.writeString(Paths.get(tracked), line + "\n")
-    } catch { case _: Throwable => () }
+      reps: Int, subset: Boolean = false): Unit =
+    writeArtifact(line,
+      scratch +: Option.when(!subset && reps == DefaultReps)(tracked).toSeq: _*)
+
+  /** Prints a main's one JSON line as UTF-8 bytes, flushed — `println`
+    * encodes in the default charset, which under a POSIX locale prints
+    * every non-ASCII char (an em dash, a query's error message) as `?`
+    * — and writes it, UTF-8, to each of `files`. A file that cannot be
+    * written is reported on stderr; the printed line stands. */
+  def writeArtifact(line: String, files: String*): Unit = {
+    System.out.write((line + "\n").getBytes(UTF_8))
+    System.out.flush()
+    files.foreach { f =>
+      try Files.writeString(Paths.get(f), line + "\n", UTF_8)
+      catch { case e: IOException => System.err.println(s"could not write $f: $e") }
+    }
   }
 }

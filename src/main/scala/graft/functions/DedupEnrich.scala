@@ -21,14 +21,18 @@ import org.apache.spark.sql.functions._
   * `DedupSurfacesSpec` pins the cross-surface equality on a shared
   * corpus.
   *
-  * Evaluation discipline: shingling and minhashing use higher-order
-  * lambdas, whose bodies re-evaluate non-attribute argument
-  * expressions once PER ELEMENT ACCESS — so the token array and the
-  * fingerprint array must each be bound to a named column before the
-  * next stage consumes them (the O(n²)-per-doc trap the round-4 bench
-  * caught). The multi-stage builders here are therefore DataFrame
-  * transformers that do that binding internally; the Column-level
-  * helpers are only the lambda-free pieces that are safe unbound.
+  * Evaluation discipline: shingling, window hashing and minhashing
+  * are native `StaticInvoke` kernels ([[graft.plans]]) that read their
+  * token argument once per row. The builders still bind the token
+  * array to one named column and derive fp, sh and ws from it, so a
+  * document is tokenized once however many keys it needs.
+  *
+  * The same module owns the CANDIDATE-PAIR core every near-dup family
+  * (MinHash bands, hyperplane cells, perceptual-hash bands) forms and
+  * verifies its pairs through: [[blockingPairs]] / [[blockingJoin]]
+  * (the id-only equi-join on a blocking key), [[guardedCandidatePairs]]
+  * (hot keys cut before the join) and [[joinBack]] (the payload
+  * attached to both ends for the exact verify).
   *
   * All builders are codegen'd column expressions (no UDFs) and have
   * exact DuckDB mirrors (see the `d3`/`d8`/`d10` oracle SQL), so the
@@ -97,9 +101,8 @@ object DedupEnrich {
     * token-array column. NEVER empty: a doc shorter than K tokens
     * collapses to one whole-doc shingle (see [[TextOps.shingles]]), so
     * two distinct short docs still get distinct shingle sets — not a
-    * shared degenerate key. `toks` MUST be an attribute (the shingle
-    * lambda re-evaluates it per element otherwise) — use
-    * [[withShingleSet]] when starting from raw text. */
+    * shared degenerate key. Use [[withShingleSet]] when starting from
+    * raw text. */
   def shingleSetFromToks(toks: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(graft.plans.ShingleSetExpr(
@@ -144,9 +147,7 @@ object DedupEnrich {
     * [[graft.api.DedupIndex]] window leg, and what d14 REMOVES can
     * never disagree about what "a duplicated window" is (review
     * finding: an inline copy of the hash expression was the exact
-    * drift class the phashKeyArray extraction fixed for media keys).
-    * `toks` MUST be an attribute (W element lookups per position
-    * re-evaluate it otherwise). */
+    * drift class the phashKeyArray extraction fixed for media keys). */
   def windowOccurrencesFromToks(toks: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(graft.plans.WindowOccurrencesExpr(
@@ -196,11 +197,8 @@ object DedupEnrich {
   /** The hot-band-GUARDED batch pair rollup (the `d12_guarded_batch_
     * pairs` shape, shared with the cross-surface specs): over an
     * enriched frame carrying `doc_id`, `bands` (from [[withBandKeys]])
-    * and `sh` (from [[withShingleSet]]), resolve the hot band set
-    * (>= `hotThreshold` distinct docs) from a counts aggregate FIRST,
-    * flag every doc holding a hot band `band_saturated` via a
-    * semi-join, generate candidate pairs by self-joining the
-    * anti-joined COLD remainder only, verify with exact Jaccard >=
+    * and `sh` (from [[withShingleSet]]), run [[guardedCandidatePairs]]
+    * over the band keys, verify the cold pairs with exact Jaccard >=
     * `minJaccard`, and roll up per doc. Output: one row per doc with
     * any signal — (doc_id, band_saturated, n_dups, partners).
     *
@@ -218,41 +216,116 @@ object DedupEnrich {
     val keys = base.select(col("doc_id").as("id"),
       explode(col("bands")).as("key"))
     val (sat, pairs) = guardedCandidatePairs(keys, hotThreshold)
-    val sets = base.select(col("doc_id"), col("sh"))
-    val ver = pairs
-      .join(sets.select(col("doc_id").as("a"), col("sh").as("sha")), Seq("a"))
-      .join(sets.select(col("doc_id").as("b"), col("sh").as("shb")), Seq("b"))
-      .filter(TextOps.jaccard(col("sha"), col("shb")) >= minJaccard)
-      .select("a", "b")
+    val ver = jaccardVerified(pairs, base.select(col("doc_id"), col("sh")),
+      minJaccard).select("a", "b")
     saturationRollup(sat, ver, "doc_id", "band_saturated")
   }
 
-  /** The guard CORE, generalized over the blocking-key family: from a
-    * `(id, key)` frame (one row per id per blocking key — MinHash
-    * bands, hyperplane (table, bucket) cells, any equi-join blocking
-    * scheme), resolve the hot keys (>= `hotThreshold` distinct ids)
-    * from a counts aggregate FIRST, and return (saturated ids — every
-    * id holding a hot key, via semi-join; candidate pairs — the
-    * self-join of the anti-joined COLD remainder only). The O(h²)
+  /** The SELF blocking join of the candidate-pair core: from an
+    * `(id, key)` frame — first column the id, second the blocking key
+    * (MinHash band, hyperplane cell, perceptual-hash band); their names
+    * are the caller's, so its plan keeps its own attributes — every
+    * `(a, b)` id pair sharing a key, oriented `a < b`. Only ids cross
+    * the shuffle; payloads come back through [[joinBack]]. A caller
+    * whose ids hold several keys adds `.distinct()` (a pair sharing
+    * two keys is emitted twice); one key per id needs none. */
+  def blockingPairs(keys: DataFrame): DataFrame = {
+    val Array(id, key) = keys.columns.take(2)
+    keys.select(col(id).as("a"), col(key))
+      .join(keys.select(col(id).as("b"), col(key)), Seq(key))
+      .filter(col("a") < col("b"))
+      .select("a", "b")
+  }
+
+  /** The PROBE-vs-INDEX blocking join: two `(id, key)` frames (see
+    * [[blockingPairs]]; both sides name the key alike) → `(a, b)`, `a`
+    * the `left` id and `b` the `right` id, unoriented — the two sides
+    * are different sets. A side that should broadcast is passed
+    * `broadcast(...)`-hinted; the hint reaches the join through the
+    * id projection. */
+  def blockingJoin(left: DataFrame, right: DataFrame): DataFrame = {
+    val Array(lid, key) = left.columns.take(2)
+    left.select(col(lid).as("a"), col(key))
+      .join(right.select(col(right.columns.head).as("b"), col(key)), Seq(key))
+      .select("a", "b")
+  }
+
+  /** The guard CORE, over the self form: from an `(id, key)` frame
+    * (see [[blockingPairs]]), resolve the hot keys (>= `hotThreshold`
+    * distinct ids) from a counts aggregate FIRST, and return
+    * (saturated ids — every id holding a hot key, via semi-join, under
+    * the frame's id column name; candidate pairs — the [[blockingPairs]]
+    * of the anti-joined COLD remainder only, distinct). The O(h²)
     * explosion of a hot key is structurally unproducible: the key
     * never reaches the pair join. Callers verify the cold pairs with
-    * their own similarity (Jaccard for shingles, cosine for vectors)
-    * and roll up with [[saturationRollup]]. */
+    * their own similarity through [[joinBack]] (Jaccard for shingles,
+    * cosine for vectors, Hamming for media) and roll up with
+    * [[saturationRollup]]. */
   def guardedCandidatePairs(keys: DataFrame, hotThreshold: Long)
       : (DataFrame, DataFrame) = {
-    val hot = keys.groupBy("key")
-      .agg(countDistinct(col("id")).as("cnt"))
-      .filter(col("cnt") >= hotThreshold)
-      .select("key")
-    val sat = keys.join(hot, Seq("key"), "left_semi")
-      .select("id").distinct()
-    val cold = keys.join(hot, Seq("key"), "left_anti")
-    val pairs = cold.select(col("id").as("a"), col("key"))
-      .join(cold.select(col("id").as("b"), col("key")), Seq("key"))
-      .filter(col("a") < col("b"))
-      .select("a", "b").distinct()
-    (sat, pairs)
+    val hot = hotKeys(keys, hotThreshold)
+    (saturated(keys, hot), blockingPairs(cold(keys, hot)).distinct())
   }
+
+  /** The guard over the probe-vs-index form: hot keys are counted on
+    * the `index` side; `sat` is the `probe` ids holding a hot key;
+    * pairs are the [[blockingJoin]] of the cold probe rows to the cold
+    * index rows, distinct — `(a, b)` = (probe id, index id). */
+  def guardedCandidatePairs(probe: DataFrame, index: DataFrame,
+      hotThreshold: Long): (DataFrame, DataFrame) = {
+    val hot = hotKeys(index, hotThreshold)
+    (saturated(probe, hot),
+      blockingJoin(cold(probe, hot), cold(index, hot)).distinct())
+  }
+
+  /** Per-key distinct-id occupancy `(key, cnt)` of an `(id, key)`
+    * frame — the one aggregate both the guard's hot set and
+    * [[deriveHotThreshold]] read. */
+  private def occupancy(keys: DataFrame): DataFrame = {
+    val Array(id, key) = keys.columns.take(2)
+    keys.groupBy(key).agg(countDistinct(col(id)).as("cnt"))
+  }
+
+  private def hotKeys(keys: DataFrame, hotThreshold: Long): DataFrame =
+    occupancy(keys).filter(col("cnt") >= hotThreshold)
+      .select(keys.columns(1))
+
+  private def saturated(keys: DataFrame, hot: DataFrame): DataFrame =
+    keys.join(hot, Seq(keys.columns(1)), "left_semi")
+      .select(keys.columns.head).distinct()
+
+  // re-selected in the frame's own order: a USING join puts the key first
+  private def cold(keys: DataFrame, hot: DataFrame): DataFrame =
+    keys.join(hot, Seq(keys.columns(1)), "left_anti")
+      .select(keys.columns.toSeq.map(col): _*)
+
+  /** THE join-back of the candidate-pair core: attaches the payload
+    * columns of `left` to end `a` and of `right` to end `b` of a pair
+    * frame. A payload is `(id, c...)` (id first); each `c` arrives
+    * as `c` + the end's name (`sh` → `sha`/`shb`, `v` → `va`/`vb`,
+    * `b0` → `b0a`/`b0b`). */
+  def joinBack(pairs: DataFrame, left: DataFrame, right: DataFrame)
+      : DataFrame =
+    pairs.join(pairEnd(left, "a"), Seq("a"))
+      .join(pairEnd(right, "b"), Seq("b"))
+
+  /** [[joinBack]] with one payload frame for both ends. */
+  def joinBack(pairs: DataFrame, payload: DataFrame): DataFrame =
+    joinBack(pairs, payload, payload)
+
+  /** One end `e` of [[joinBack]]: payload `(id, c...)` → `(e, c+e...)`. */
+  def pairEnd(payload: DataFrame, e: String): DataFrame =
+    payload.select(col(payload.columns.head).as(e)
+      +: payload.columns.tail.toSeq.map(c => col(c).as(c + e)): _*)
+
+  /** The shingle-set verify of the text family: `(a, b, …)` pairs with
+    * the `(id, sh)` `sets` joined back and exact Jaccard `jac` >=
+    * `minJaccard`. */
+  def jaccardVerified(pairs: DataFrame, sets: DataFrame,
+      minJaccard: Double): DataFrame =
+    joinBack(pairs, sets)
+      .withColumn("jac", TextOps.jaccard(col("sha"), col("shb")))
+      .filter(col("jac") >= minJaccard)
 
   /** PRODUCTION derivation of a guard's hot threshold from the
     * key-occupancy distribution — the formula the fixture constants
@@ -293,10 +366,7 @@ object DedupEnrich {
     * planted hot band's docs and no cold ones. */
   def deriveHotThreshold(keys: DataFrame, floor: Long = 2,
       quantile: Double = 0.5, slack: Double = 4.0): Long =
-    deriveHotThresholdFromCounts(
-      keys.groupBy("key")
-        .agg(countDistinct(col("id")).cast("double").as("cnt")),
-      floor, quantile, slack)
+    deriveHotThresholdFromCounts(occupancy(keys), floor, quantile, slack)
 
   /** [[deriveHotThreshold]] over an ALREADY-AGGREGATED per-key
     * occupancy frame (one `cnt` row per key) — for callers that
@@ -336,10 +406,11 @@ object DedupEnrich {
     s.conf.get("graft.dedup.hotThreshold", "fixture").trim match {
       case "fixture" => fixture
       case "auto" => deriveHotThreshold(keys)
-      case v => scala.util.Try(v.toLong).getOrElse(
+      // below 2 every key is hot: every id flags, every pair is cut
+      case v => v.toLongOption.filter(_ >= 2).getOrElse(
         throw new IllegalArgumentException(
           s"graft.dedup.hotThreshold must be 'fixture', 'auto', or an " +
-            s"integer — got '$v'"))
+            s"integer >= 2 — got '$v'"))
     }
 
   /** Defensive integer-conf parse for ENGINE-CHOICE knobs (size gates,
@@ -582,9 +653,8 @@ object DedupEnrich {
   }
 
   /** Append the MinHash band-key array (`array<string>`, one md5 key
-    * per band) derived from the shingle-set column `shCol`, binding
-    * the per-shingle fingerprints and the signature to named columns
-    * between stages (see the evaluation-discipline note above).
+    * per band) derived from the shingle-set column `shCol` in one
+    * native kernel (fingerprints and signature never become columns).
     *
     * Null-signature guard: if the shingle set were ever empty or null
     * (not producible through [[shingleSetFromToks]], but reachable if

@@ -236,6 +236,10 @@ object MediaPipeline {
     s"frame-uid packing requires MaxFrames ($MaxFrames) <= " +
       s"FrameUidStride ($FrameUidStride)")
 
+  /** THE frame uid column of a [[FrameHash]] frame (the packing above). */
+  def frameUid: org.apache.spark.sql.Column =
+    col("media_id") * lit(FrameUidStride) + col("frame_idx")
+
   /** The FRAME-hash pass — m5's per-frame unit, composing the m4 frame
     * plan with the m3 aHash family: frame i of a container is its i-th
     * TEMPORAL SLICE of the (stub-)decoded stream (byte j belongs to

@@ -88,6 +88,21 @@ object Dedup extends QueryGroup {
       QUALIFY group_size > 1
       ORDER BY doc_id"""))
 
+  /** The d2/d6 verified pairs: blocked on the two smallest shingle
+    * md5s (one key per doc, so no `distinct`), exact Jaccard >= 0.4 —
+    * `(b, a, sha, shb, jac)` from [[DedupEnrich.jaccardVerified]]. */
+  private def blockedJaccardPairs(s: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame = {
+    val base = DedupEnrich.withShingleSet(
+      Tables.documents(s, dir).select(col("doc_id"), col("text")), "text")
+      .withColumn("bk",
+        concat_ws("", slice(array_sort(transform(col("sh"), x => md5(x))), 1, 2)))
+      .cache()
+    DedupEnrich.jaccardVerified(
+      DedupEnrich.blockingPairs(base.select(col("doc_id"), col("bk"))),
+      base.select(col("doc_id"), col("sh")), 0.4)
+  }
+
   private val q2 = QueryDef(
     "d2_ngram_jaccard",
     (s, dir) => {
@@ -104,22 +119,7 @@ object Dedup extends QueryGroup {
       // SELF-JOIN is the unguarded recall model: on a templated corpus
       // a hot block key goes O(h²) in pair COUNT — run the guarded
       // d12_guarded_batch_pairs form at corpus scale
-      val base = DedupEnrich.withShingleSet(
-        Tables.documents(s, dir).select(col("doc_id"), col("text")), "text")
-        .withColumn("bk",
-          concat_ws("", slice(array_sort(transform(col("sh"), x => md5(x))), 1, 2)))
-        .cache()
-      val ids = base.select(col("doc_id"), col("bk"))
-      val pairs = ids.select(col("doc_id").as("a"), col("bk"))
-        .join(ids.select(col("doc_id").as("b"), col("bk")), Seq("bk"))
-        .filter(col("a") < col("b"))
-        .select("a", "b")
-      val sets = base.select(col("doc_id"), col("sh"))
-      pairs
-        .join(sets.select(col("doc_id").as("a"), col("sh").as("sha")), Seq("a"))
-        .join(sets.select(col("doc_id").as("b"), col("sh").as("shb")), Seq("b"))
-        .withColumn("jac", TextOps.jaccard(col("sha"), col("shb")))
-        .filter(col("jac") >= 0.4)
+      blockedJaccardPairs(s, dir)
         .select(col("a"), col("b"), round(col("jac"), 6).as("jaccard"))
         .orderBy("a", "b")
     },
@@ -156,16 +156,9 @@ object Dedup extends QueryGroup {
         "sh")
         .cache()
       val exploded = base.select(col("doc_id"), explode(col("bands")).as("bk"))
-      val pairs = exploded.select(col("doc_id").as("a"), col("bk"))
-        .join(exploded.select(col("doc_id").as("b"), col("bk")), Seq("bk"))
-        .filter(col("a") < col("b"))
-        .select("a", "b").distinct()
-      val sets = base.select(col("doc_id"), col("sh"))
-      pairs
-        .join(sets.select(col("doc_id").as("a"), col("sh").as("sha")), Seq("a"))
-        .join(sets.select(col("doc_id").as("b"), col("sh").as("shb")), Seq("b"))
-        .withColumn("jac", TextOps.jaccard(col("sha"), col("shb")))
-        .filter(col("jac") >= 0.3)
+      DedupEnrich.jaccardVerified(
+        DedupEnrich.blockingPairs(exploded).distinct(),
+        base.select(col("doc_id"), col("sh")), 0.3)
         .select(col("a"), col("b"), round(col("jac"), 6).as("jaccard"))
         .orderBy("a", "b")
     },
@@ -241,7 +234,7 @@ object Dedup extends QueryGroup {
   // the rule is BEHAVIOR via graft.lsh.planes=auto, see lshPlanesFor).
   // Pair generation carries ONLY ids — vectors are joined back for the
   // exact cosine verify afterwards, so the blocking shuffle moves
-  // (id, tbl, bkt) triples, never embeddings. Occupancy tuning is an
+  // (id, key) rows, never embeddings. Occupancy tuning is an
   // EXPECTATION, not a bound: a near-duplicate embedding cluster (the
   // templated-corpus class) lands in one (tbl, bkt) and pairs O(h²) —
   // d13_guarded_embedding_pairs is the registered GUARDED form
@@ -274,30 +267,45 @@ object Dedup extends QueryGroup {
     * the default stays at the oracle-pinned fixture behavior. */
   private[graft] def lshPlanesFor(s: org.apache.spark.sql.SparkSession,
       n: => Long): Int =
-    s.conf.get("graft.lsh.planes", "fixture") match {
+    s.conf.get("graft.lsh.planes", "fixture").trim match {
       case "fixture" => LshPlanes
       case "auto" =>
         val derived = math.ceil(math.log(math.max(2L, n).toDouble)
           / math.log(2.0)).toInt + 1
         math.min(30, math.max(LshPlanes, derived))
-      case v => v.toInt
+      // a bucket id is a 64-bit sign word: 64 planes or more overflow it
+      case v => v.toIntOption.filter(p => p >= 1 && p <= 63).getOrElse(
+        throw new IllegalArgumentException(
+          s"graft.lsh.planes must be 'fixture', 'auto', or an integer " +
+            s"in 1..63 — got '$v'"))
     }
 
+  /** The ONE `(id, key)` hyperplane key frame of d5, a3 and d13: key =
+    * `tbl:bkt`. A null bucket (null embedding) is dropped BEFORE key
+    * construction: concat_ws would silently skip the null and collapse
+    * such rows onto the bare table id — a valid-looking shared key the
+    * DuckDB mirror's `(tbl, bkt)` equi-join would never produce. */
   private def lshKeys(e: DataFrame): DataFrame = {
     val planes = lshPlanesFor(e.sparkSession, e.count())
     e.select(col("vec_id"),
       posexplode(array((0 until LshTables).map(t =>
         VectorOps.hyperplaneBucket(col("embedding"), 64, planes, LshSeed + t)): _*))
         .as(Seq("tbl", "bkt")))
+      .filter(col("bkt").isNotNull)
+      .select(col("vec_id").as("id"),
+        concat_ws(":", col("tbl"), col("bkt")).as("key"))
   }
 
-  private def lshCandidatePairs(e: DataFrame): DataFrame = {
-    val keys = lshKeys(e)
-    keys.select(col("vec_id").as("a"), col("tbl"), col("bkt"))
-      .join(keys.select(col("vec_id").as("b"), col("tbl"), col("bkt")), Seq("tbl", "bkt"))
-      .filter(col("a") < col("b"))
-      .select("a", "b").distinct()
-  }
+  /** The exact-cosine verify payload: `(vec_id, v)`. */
+  private def vectors(e: DataFrame): DataFrame =
+    e.select(col("vec_id"), col("embedding").as("v"))
+
+  /** d5/a3's cosine >= 0.3 verified LSH pairs `(b, a, va, vb, cos)`. */
+  private def cosineVerifiedPairs(e: DataFrame): DataFrame =
+    DedupEnrich.joinBack(DedupEnrich.blockingPairs(lshKeys(e)).distinct(),
+      vectors(e))
+      .withColumn("cos", VectorOps.cosineFast(col("va"), col("vb")))
+      .filter(col("cos") >= 0.3)
 
   // DuckDB mirror: identical plane coefficients (driver-side literals),
   // identical left-to-right accumulation → bit-identical bucket ids.
@@ -319,13 +327,7 @@ object Dedup extends QueryGroup {
       // candidate pairs from banded hyperplane LSH (the real ANN
       // partition — bucket count grows with the planes knob, unlike a
       // fixed label domain), exact double-precision cosine verify inside
-      val e = Tables.embeddings(s, dir)
-      val vecs = e.select(col("vec_id"), col("embedding"))
-      lshCandidatePairs(e)
-        .join(vecs.select(col("vec_id").as("a"), col("embedding").as("va")), Seq("a"))
-        .join(vecs.select(col("vec_id").as("b"), col("embedding").as("vb")), Seq("b"))
-        .withColumn("cos", VectorOps.cosineFast(col("va"), col("vb")))
-        .filter(col("cos") >= 0.3)
+      cosineVerifiedPairs(Tables.embeddings(s, dir))
         .select(col("a"), col("b"), round(col("cos"), 6).as("cosine"))
         .orderBy("a", "b")
     },
@@ -348,12 +350,7 @@ object Dedup extends QueryGroup {
       // (higher id = later UUIDv7) and EvidenceWeighted (composite score,
       // here the vectors' norm-weighted label affinity stand-in: the
       // member whose id appears in MORE near-dup pairs wins, tie → newest)
-      val e = Tables.embeddings(s, dir)
-      val vecs = e.select(col("vec_id"), col("embedding"))
-      val pairs = lshCandidatePairs(e)
-        .join(vecs.select(col("vec_id").as("a"), col("embedding").as("va")), Seq("a"))
-        .join(vecs.select(col("vec_id").as("b"), col("embedding").as("vb")), Seq("b"))
-        .filter(VectorOps.cosineFast(col("va"), col("vb")) >= 0.3)
+      val pairs = cosineVerifiedPairs(Tables.embeddings(s, dir))
         .select("a", "b").cache()
       val degree = pairs.select(col("a").as("m")).unionAll(pairs.select(col("b").as("m")))
         .groupBy("m").agg(count(lit(1)).as("deg"))
@@ -397,22 +394,7 @@ object Dedup extends QueryGroup {
       // At 100 TB the pair graph is orders of magnitude smaller than the
       // corpus (only near-dups appear), so the CC loop runs on a tiny
       // edge list; each iteration is one join + one aggregate.
-      val base = DedupEnrich.withShingleSet(
-        Tables.documents(s, dir).select(col("doc_id"), col("text")), "text")
-        .withColumn("bk",
-          concat_ws("", slice(array_sort(transform(col("sh"), x => md5(x))), 1, 2)))
-        .cache()
-      val ids = base.select(col("doc_id"), col("bk"))
-      val cand = ids.select(col("doc_id").as("a"), col("bk"))
-        .join(ids.select(col("doc_id").as("b"), col("bk")), Seq("bk"))
-        .filter(col("a") < col("b"))
-        .select("a", "b")
-      val sets = base.select(col("doc_id"), col("sh"))
-      val pairs = cand
-        .join(sets.select(col("doc_id").as("a"), col("sh").as("sha")), Seq("a"))
-        .join(sets.select(col("doc_id").as("b"), col("sh").as("shb")), Seq("b"))
-        .filter(TextOps.jaccard(col("sha"), col("shb")) >= 0.4)
-        .select("a", "b")
+      val pairs = blockedJaccardPairs(s, dir).select("a", "b")
       // undirected edge list + min-label propagation to fixpoint —
       // the SHARED CC builder (the pl16 fuzzy stage composes the same)
       val labels =
@@ -629,19 +611,14 @@ object Dedup extends QueryGroup {
           "text"),
         "sh")
         .cache()
+      // (a, b) = (history doc, batch doc), as in the oracle's
+      // `bands h JOIN bands p`
       val exploded = base.select(col("doc_id"), explode(col("bands")).as("bk"))
-      val histIdx = exploded.filter(col("doc_id") % 5 =!= 4)
-        .select(col("doc_id").as("a"), col("bk"))
-      val probe = exploded.filter(col("doc_id") % 5 === 4)
-        .select(col("doc_id").as("b"), col("bk"))
-      val pairs = histIdx.join(probe, Seq("bk"))
-        .select("a", "b").distinct()
-      val sets = base.select(col("doc_id"), col("sh"))
-      pairs
-        .join(sets.select(col("doc_id").as("a"), col("sh").as("sha")), Seq("a"))
-        .join(sets.select(col("doc_id").as("b"), col("sh").as("shb")), Seq("b"))
-        .withColumn("jac", TextOps.jaccard(col("sha"), col("shb")))
-        .filter(col("jac") >= 0.3)
+      val pairs = DedupEnrich.blockingJoin(
+        exploded.filter(col("doc_id") % 5 =!= 4),
+        exploded.filter(col("doc_id") % 5 === 4)).distinct()
+      DedupEnrich.jaccardVerified(pairs,
+        base.select(col("doc_id"), col("sh")), 0.3)
         .select(col("a"), col("b"), round(col("jac"), 6).as("jaccard"))
         .orderBy("a", "b")
     },
@@ -701,30 +678,22 @@ object Dedup extends QueryGroup {
           "text"),
         "sh")
         .cache()
+      // probe = the batch docs, index = the history; cands are
+      // (a, b) = (batch doc, history doc)
       val exploded = base.select(col("doc_id"), explode(col("bands")).as("bk"))
-      val hist = exploded.filter(col("doc_id") % 5 =!= 4)
-        .select(col("doc_id").as("a"), col("bk"))
-      val probe = exploded.filter(col("doc_id") % 5 === 4)
-        .select(col("doc_id").as("b"), col("bk"))
-      val hot = hist.groupBy("bk")
-        .agg(countDistinct(col("a")).as("cnt"))
-        .filter(col("cnt") >= 2)
-        .select("bk")
-      val satDocs = probe.join(hot, Seq("bk"), "left_semi")
-        .select("b").distinct().withColumn("sat", lit(1))
-      val cands = probe.join(hot, Seq("bk"), "left_anti")
-        .join(hist, Seq("bk"))
-        .select("b", "a").distinct()
-      val candAgg = cands.groupBy("b").agg(
+      val (sat, cands) = DedupEnrich.guardedCandidatePairs(
+        exploded.filter(col("doc_id") % 5 === 4),
+        exploded.filter(col("doc_id") % 5 =!= 4), 2)
+      val candAgg = cands.groupBy(col("a").as("doc_id")).agg(
         count(lit(1)).as("n_candidates"),
         concat_ws(",",
-          transform(array_sort(collect_set(col("a"))),
+          transform(array_sort(collect_set(col("b"))),
             x => x.cast("string"))).as("candidates"))
       base.filter(col("doc_id") % 5 === 4)
-        .select(col("doc_id").as("b"))
-        .join(satDocs, Seq("b"), "left")
-        .join(candAgg, Seq("b"), "left")
-        .select(col("b").as("doc_id"),
+        .select(col("doc_id"))
+        .join(sat.withColumn("sat", lit(1)), Seq("doc_id"), "left")
+        .join(candAgg, Seq("doc_id"), "left")
+        .select(col("doc_id"),
           coalesce(col("sat"), lit(0)).as("band_saturated"),
           coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
           coalesce(col("candidates"), lit("")).as("candidates"))
@@ -895,22 +864,11 @@ object Dedup extends QueryGroup {
       // the keys frame feeds the hot counts, the semi-join, and both
       // sides of the cold self-join — CACHED so the 4-table hyperplane
       // bucketing runs once, not once per consumer (the d12 base-cache
-      // discipline). A null bucket (null embedding) is dropped BEFORE
-      // key construction: concat_ws would silently skip the null and
-      // collapse such rows onto the bare table id — a valid-looking
-      // shared key the DuckDB mirror (and d5's equi-join) would never
-      // produce.
-      val keys = lshKeys(e)
-        .filter(col("bkt").isNotNull)
-        .select(col("vec_id").as("id"),
-          concat_ws(":", col("tbl"), col("bkt")).as("key"))
-        .cache()
+      // discipline)
+      val keys = lshKeys(e).cache()
       val (sat, pairs) = DedupEnrich.guardedCandidatePairs(keys,
         DedupEnrich.hotThresholdFor(s, EmbHotBucket, keys))
-      val vecs = e.select(col("vec_id"), col("embedding"))
-      val ver = pairs
-        .join(vecs.select(col("vec_id").as("a"), col("embedding").as("va")), Seq("a"))
-        .join(vecs.select(col("vec_id").as("b"), col("embedding").as("vb")), Seq("b"))
+      val ver = DedupEnrich.joinBack(pairs, vectors(e))
         .filter(VectorOps.cosineFast(col("va"), col("vb")) >= 0.3)
         .select("a", "b")
       DedupEnrich.saturationRollup(sat, ver, "vec_id", "bucket_saturated")

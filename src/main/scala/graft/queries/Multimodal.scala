@@ -100,12 +100,21 @@ object Multimodal extends QueryGroup {
     * bar-independent (the d11 argument). */
   private[graft] val PhashHamMax = 12
 
-  /** The band-striped key ARRAY over `b0..b3` columns — the single
-    * expression behind [[phashKeys]] (batch + maintained index) and
-    * the streaming media twin, so no surface can key differently. */
-  private[graft] def phashKeyArray: org.apache.spark.sql.Column =
+  /** The band-striped key ARRAY over the `<src>0..<src>3` band
+    * columns (`b` of a media hash, `f` of a frame hash) — the single
+    * expression behind [[phashKeys]] (batch + maintained index),
+    * [[frameKeys]] and the streaming media twin, so no surface can key
+    * differently. */
+  private[graft] def phashKeyArray(src: String): org.apache.spark.sql.Column =
     array((0 to 3).map(b =>
-      lit(b * 65536L) + col(s"b$b").cast("long")): _*)
+      lit(b * 65536L) + col(s"$src$b").cast("long")): _*)
+
+  /** THE `(id, b0..b3)` verify payload of the media family: `id` and
+    * the four 16-bit bands of a media hash (`src` = `b`) or a frame
+    * hash (`f`), for [[graft.functions.DedupEnrich.joinBack]]. */
+  private[graft] def bandPayload(df: DataFrame, id: org.apache.spark.sql.Column,
+      src: String): DataFrame =
+    df.select(id +: (0 to 3).map(i => col(s"$src$i").as(s"b$i")): _*)
 
   /** The ONE band-key encoding of the m3 guard (band index striped
     * into the high bits, the 16 hash bits low) — the threshold
@@ -114,18 +123,17 @@ object Multimodal extends QueryGroup {
     * derive H on a different key family than the guard filters). */
   private[graft] def phashKeys(hashes: DataFrame): DataFrame =
     hashes.select(col("media_id").as("id"),
-      explode(phashKeyArray).as("key"))
+      explode(phashKeyArray("b")).as("key"))
 
   /** The ONE 64-bit band-wise Hamming-within test (sum of per-band
     * xor popcounts <= bar) every media verify runs — the m3/m5/m6
     * batch verifies and the streaming decontam screen — so no surface
     * can verify with drifted arithmetic (the phashKeyArray
-    * discipline). Operands are the four 16-bit band columns named
-    * `<px>0..<px>3` vs `<py>0..<py>3`. */
-  private[graft] def hammingWithin(px: String, py: String,
-      bar: Int): org.apache.spark.sql.Column =
+    * discipline). Operands are the [[bandPayload]] bands of the two
+    * joined-back ends, `b0a..b3a` vs `b0b..b3b`. */
+  private[graft] def hammingWithin(bar: Int): org.apache.spark.sql.Column =
     (0 to 3).map(i =>
-      bit_count(col(s"$px$i").bitwiseXOR(col(s"$py$i"))))
+      bit_count(col(s"b${i}a").bitwiseXOR(col(s"b${i}b"))))
       .reduce(_ + _) <= bar
 
   /** The ONE guarded verified-pair core over a `(media_id, b0..b3)`
@@ -139,14 +147,9 @@ object Multimodal extends QueryGroup {
     import graft.functions.DedupEnrich
     val (sat, pairs) =
       DedupEnrich.guardedCandidatePairs(phashKeys(hashes), hotThreshold)
-    def side(as: String, px: String) = hashes.select(
-      col("media_id").as(as), col("b0").as(s"${px}0"),
-      col("b1").as(s"${px}1"), col("b2").as(s"${px}2"),
-      col("b3").as(s"${px}3"))
-    val ver = pairs
-      .join(side("a", "x"), Seq("a"))
-      .join(side("b", "y"), Seq("b"))
-      .filter(hammingWithin("x", "y", PhashHamMax))
+    val ver = DedupEnrich.joinBack(pairs,
+        bandPayload(hashes, col("media_id"), "b"))
+      .filter(hammingWithin(PhashHamMax))
       .select("a", "b")
     (sat, ver)
   }
@@ -350,10 +353,8 @@ object Multimodal extends QueryGroup {
     * `>> 3`), key = band striped into the high bits, 16 hash bits
     * low. */
   private def frameKeys(fh: DataFrame): DataFrame =
-    fh.select((col("media_id") * lit(MediaPipeline.FrameUidStride)
-        + col("frame_idx")).as("id"),
-      explode(array((0 to 3).map(b =>
-        lit(b * 65536L) + col(s"f$b").cast("long")): _*)).as("key"))
+    fh.select(MediaPipeline.frameUid.as("id"),
+      explode(phashKeyArray("f")).as("key"))
 
   /** The m5 composition over a frame-hash frame — factored so
     * DedupSurfacesSpec drives the SAME builder the registered query
@@ -366,18 +367,12 @@ object Multimodal extends QueryGroup {
     import graft.functions.DedupEnrich
     val (sat, pairs) =
       DedupEnrich.guardedCandidatePairs(frameKeys(fh), hotThreshold)
-    def side(as: String, px: String) = fh.select(
-      (col("media_id") * lit(MediaPipeline.FrameUidStride)
-        + col("frame_idx")).as(as),
-      col("f0").as(s"${px}0"), col("f1").as(s"${px}1"),
-      col("f2").as(s"${px}2"), col("f3").as(s"${px}3"))
     // verified CROSS-container frame pairs; uid packing makes
     // media(a) < media(b) whenever the containers differ (a < b)
-    val ver = pairs
-      .filter(shiftright(col("a"), 3) =!= shiftright(col("b"), 3))
-      .join(side("a", "x"), Seq("a"))
-      .join(side("b", "y"), Seq("b"))
-      .filter(hammingWithin("x", "y", FrameHamMax))
+    val ver = DedupEnrich.joinBack(
+        pairs.filter(shiftright(col("a"), 3) =!= shiftright(col("b"), 3)),
+        bandPayload(fh, MediaPipeline.frameUid.as("frame_uid"), "f"))
+      .filter(hammingWithin(FrameHamMax))
       .select(col("a"), col("b"),
         shiftright(col("a"), 3).as("ma"), shiftright(col("b"), 3).as("mb"))
     // pair evidence → container level: m_a/m_b = DISTINCT matched
@@ -557,19 +552,13 @@ object Multimodal extends QueryGroup {
     * distinct flagged training ids. */
   private[graft] def mediaDecontamFlags(train: DataFrame,
       bench: DataFrame): DataFrame = {
-    val cand = phashKeys(train).select(col("id").as("t"), col("key"))
-      .join(broadcast(phashKeys(bench)
-        .select(col("id").as("e"), col("key"))), Seq("key"))
-      .select("t", "e").distinct()
-    def side(df: DataFrame, idc: String, px: String) = df.select(
-      col("media_id").as(idc), col("b0").as(s"${px}0"),
-      col("b1").as(s"${px}1"), col("b2").as(s"${px}2"),
-      col("b3").as(s"${px}3"))
-    cand
-      .join(side(train, "t", "x"), Seq("t"))
-      .join(side(bench, "e", "y"), Seq("e"))
-      .filter(hammingWithin("x", "y", DecontamHamMax))
-      .select(col("t").as("media_id")).distinct()
+    import graft.functions.DedupEnrich
+    val cand = DedupEnrich.blockingJoin(phashKeys(train),
+      broadcast(phashKeys(bench))).distinct()
+    DedupEnrich.joinBack(cand, bandPayload(train, col("media_id"), "b"),
+        bandPayload(bench, col("media_id"), "b"))
+      .filter(hammingWithin(DecontamHamMax))
+      .select(col("a").as("media_id")).distinct()
   }
 
   /** m6 — MEDIA decontamination, the pl14 twin for the multimodal
@@ -703,22 +692,15 @@ object Multimodal extends QueryGroup {
     * (the mediaDecontamFlags convention). */
   private[graft] def frameDecontamFlags(trainFrames: DataFrame,
       bench: DataFrame): DataFrame = {
-    val cand = frameKeys(trainFrames).select(col("id").as("t"), col("key"))
-      .join(broadcast(phashKeys(bench)
-        .select(col("id").as("e"), col("key"))), Seq("key"))
-      .select("t", "e").distinct()
-    val tside = trainFrames.select(
-      (col("media_id") * lit(MediaPipeline.FrameUidStride)
-        + col("frame_idx")).as("t"),
-      col("f0").as("x0"), col("f1").as("x1"),
-      col("f2").as("x2"), col("f3").as("x3"))
-    val eside = bench.select(col("media_id").as("e"),
-      col("b0").as("y0"), col("b1").as("y1"),
-      col("b2").as("y2"), col("b3").as("y3"))
-    cand.join(tside, Seq("t")).join(eside, Seq("e"))
-      .filter(hammingWithin("x", "y", FrameDecontamHamMax))
-      .select(shiftright(col("t"), 3).as("media_id"),
-        col("t").as("frame_uid"))
+    import graft.functions.DedupEnrich
+    val cand = DedupEnrich.blockingJoin(frameKeys(trainFrames),
+      broadcast(phashKeys(bench))).distinct()
+    DedupEnrich.joinBack(cand,
+        bandPayload(trainFrames, MediaPipeline.frameUid.as("frame_uid"), "f"),
+        bandPayload(bench, col("media_id"), "b"))
+      .filter(hammingWithin(FrameDecontamHamMax))
+      .select(shiftright(col("a"), 3).as("media_id"),
+        col("a").as("frame_uid"))
       .distinct()
   }
 
@@ -759,9 +741,7 @@ object Multimodal extends QueryGroup {
       val fh = MediaPipeline.frameHashes(
         MediaPipeline.syntheticMedia(s, dir)).toDF().cache()
       val train = fh.filter(col("media_id") % 7 =!= 0)
-      def asBench(df: DataFrame) = df.select(col("media_id"),
-        col("f0").as("b0"), col("f1").as("b1"),
-        col("f2").as("b2"), col("f3").as("b3"))
+      def asBench(df: DataFrame) = bandPayload(df, col("media_id"), "f")
       val bench = asBench(fh.filter(col("media_id") % 7 === 0 &&
           col("media_id") % 3 === 0))
         .unionAll(asBench(fh.filter(col("media_id") % 7 =!= 0 &&

@@ -1375,10 +1375,8 @@ object Pipeline extends QueryGroup {
     // derivation's extra reduction re-reads no corpus data)
     val (fsat, fpairs) = DedupEnrich.guardedCandidatePairs(fkeys,
       DedupEnrich.hotThresholdFor(s, FunnelHotBands, fkeys))
-    val fver = fpairs
-      .join(banded.select(col("doc_id").as("a"), col("sh").as("sha")), Seq("a"))
-      .join(banded.select(col("doc_id").as("b"), col("sh").as("shb")), Seq("b"))
-      .filter(TextOps.jaccard(col("sha"), col("shb")) >= FunnelMinJaccard)
+    val fver = DedupEnrich.jaccardVerified(fpairs,
+      banded.select(col("doc_id"), col("sh")), FunnelMinJaccard)
       .select("a", "b")
     val fcomp = DedupEnrich.minLabelComponents(fver, IterSizing.iterParts(s))
     val fdrop = fsat.select(col("id").as("doc_id"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.VectorOps
+import graft.functions.{DedupEnrich, VectorOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -730,7 +730,6 @@ object Similarity extends QueryGroup {
         .select(col("vec_id"), col("t.cid").as("cid"),
           round(-col("t.o"), 6).cast("decimal(10,6)").as("mcos"))
         .cache()
-      val vecs = e.select(col("vec_id"), col("embedding"))
       val cands = members
         .select(col("cid"), col("vec_id").as("a"), col("mcos").as("ma"))
         .join(members.select(col("cid"), col("vec_id").as("b"), col("mcos").as("mb")),
@@ -739,9 +738,8 @@ object Similarity extends QueryGroup {
           (col("mb") < col("ma") ||
             (col("mb") === col("ma") && col("b") < col("a"))))
         .select("a", "b")
-      val removed = cands
-        .join(vecs.select(col("vec_id").as("a"), col("embedding").as("va")), Seq("a"))
-        .join(vecs.select(col("vec_id").as("b"), col("embedding").as("vb")), Seq("b"))
+      val removed = DedupEnrich.joinBack(cands,
+          e.select(col("vec_id"), col("embedding").as("v")))
         .filter(VectorOps.cosineFast(col("va"), col("vb")) >= 0.3)
         .select(col("a").as("vec_id")).distinct()
         .withColumn("rm", lit(1))

@@ -214,7 +214,7 @@ object EventStream {
     import hashes.sparkSession.implicits._
     val banded = hashes.withWatermark("ts", NearDupWatermarkDelay)
       .select(col("media_id").as("doc_id"), col("ts"),
-        explode(graft.queries.Multimodal.phashKeyArray).as("key"))
+        explode(graft.queries.Multimodal.phashKeyArray("b")).as("key"))
       .select(col("key").cast("string").as("bk"), col("doc_id"), col("ts"))
       .as[BandRow]
     streamingBandCandidates(banded, horizonMs, maxBandDocs)
@@ -247,21 +247,20 @@ object EventStream {
     * exists"). */
   def streamingMediaDecontam(hashes: DataFrame,
       benchHashes: DataFrame): DataFrame = {
-    val bkeys = graft.queries.Multimodal.phashKeys(benchHashes)
-      .select(col("id").as("eval_id"), col("key"))
-    val bside = benchHashes.select(col("media_id").as("eval_id"),
-      col("b0").as("y0"), col("b1").as("y1"),
-      col("b2").as("y2"), col("b3").as("y3"))
+    import graft.queries.Multimodal.{bandPayload, hammingWithin,
+      phashKeyArray, phashKeys, DecontamHamMax}
+    // a stream row is end `a` of the media verify, a benchmark item
+    // end `b` (the joinBack naming hammingWithin reads)
+    val bkeys = phashKeys(benchHashes).select(col("id").as("b"), col("key"))
+    val bside = graft.functions.DedupEnrich.pairEnd(
+      bandPayload(benchHashes, col("media_id"), "b"), "b")
     hashes
-      .select(col("media_id"), col("ts"),
-        col("b0").as("x0"), col("b1").as("x1"),
-        col("b2").as("x2"), col("b3").as("x3"),
-        explode(graft.queries.Multimodal.phashKeyArray).as("key"))
+      .withColumn("key", explode(phashKeyArray("b")))
+      .withColumnsRenamed((0 to 3).map(i => s"b$i" -> s"b${i}a").toMap)
       .join(broadcast(bkeys), Seq("key"))
-      .join(broadcast(bside), Seq("eval_id"))
-      .filter(graft.queries.Multimodal.hammingWithin("x", "y",
-        graft.queries.Multimodal.DecontamHamMax))
-      .select(col("media_id"), col("ts"), col("eval_id"))
+      .join(broadcast(bside), Seq("b"))
+      .filter(hammingWithin(DecontamHamMax))
+      .select(col("media_id"), col("ts"), col("b").as("eval_id"))
   }
 
   /** Streaming TEXT decontamination — pl14's eval-overlap screen at

@@ -537,7 +537,7 @@ class FunctionsSpec extends SparkSpec {
     // the threshold changes guard VERDICTS — unlike the engine-choice
     // confs (localEdgeLimit/maxRounds, identical output under any
     // value), a typo here must surface, not quietly run H=fixture
-    for (bad <- Seq("Auto", "10_000", "3.5")) {
+    for (bad <- Seq("Auto", "10_000", "3.5", "0", "1", "-5")) {
       withConf("graft.dedup.hotThreshold" -> bad) {
         val e = intercept[IllegalArgumentException] {
           DedupEnrich.hotThresholdFor(spark, 3L, keys)
@@ -555,6 +555,24 @@ class FunctionsSpec extends SparkSpec {
     withConf("graft.dedup.hotThreshold" -> "auto") {
       // two docs on one key: median occupancy 2 -> max(2, ceil(4*2)) = 8
       assert(DedupEnrich.hotThresholdFor(spark, 3L, keys) == 8L)
+    }
+  }
+
+  test("lshPlanesFor: a non-integer or out-of-range graft.lsh.planes fails naming the conf") {
+    for (bad <- Seq("abc", "0", "64", "-3", "8.5")) {
+      withConf("graft.lsh.planes" -> bad) {
+        val e = intercept[IllegalArgumentException] {
+          graft.queries.Dedup.lshPlanesFor(spark, 100L)
+        }
+        assert(e.getMessage.contains("graft.lsh.planes") &&
+          e.getMessage.contains(bad), e.getMessage)
+      }
+    }
+    withConf("graft.lsh.planes" -> "63") {
+      assert(graft.queries.Dedup.lshPlanesFor(spark, 100L) == 63)
+    }
+    withConf("graft.lsh.planes" -> "1") {
+      assert(graft.queries.Dedup.lshPlanesFor(spark, 100L) == 1)
     }
   }
 

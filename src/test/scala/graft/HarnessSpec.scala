@@ -26,6 +26,19 @@ class HarnessSpec extends AnyFunSuite {
       "\"a\\\"b\\\\c\\n\\r\\t\\u0001é\"")
   }
 
+  test("writeArtifact prints the line as UTF-8 bytes whatever the stream's charset") {
+    val bytes = new java.io.ByteArrayOutputStream()
+    val saved = System.out
+    // an ASCII stream: println would encode the em dash as '?'
+    System.setOut(new java.io.PrintStream(bytes, true, "US-ASCII"))
+    try Harness.writeArtifact("""{"note":"a — b"}""")
+    finally System.setOut(saved)
+    val out = bytes.toByteArray.toSeq
+    assert(out.containsSlice(Seq(0xE2, 0x80, 0x94).map(_.toByte)),
+      s"no UTF-8 em dash in ${out.map(b => f"$b%02X").mkString(" ")}")
+    assert(new String(bytes.toByteArray, "UTF-8") == "{\"note\":\"a — b\"}\n")
+  }
+
   test("reps runs every rep in order, keeps every sample and reports the min") {
     val seen = Seq.newBuilder[Int]
     val s = Harness.reps(3) { i => seen += i; Seq(2.0, 0.5, 1.0)(i - 1) }

@@ -32,6 +32,26 @@ class SourceHygieneSpec extends AnyFunSuite {
       s"doc blocks followed by another doc block: ${dangling.mkString(", ")}")
   }
 
+  test("candidate pairs are oriented and joined back only in DedupEnrich; the frame uid is packed in one place") {
+    val core = Paths.get("src/main/scala/graft/functions/DedupEnrich.scala")
+    assert(sources.exists(_._1 == core), s"$core not found")
+    val offenders = for {
+      (p, lines) <- sources if p != core
+      (l, i) <- lines.zipWithIndex
+      if l.contains("col(\"a\") < col(\"b\")") || l.contains("def side(")
+    } yield s"$p:${i + 1}"
+    assert(offenders.isEmpty,
+      s"pair orientation / join-back outside DedupEnrich: ${offenders.mkString(", ")}")
+    val packing = """\*\s*(lit\()?(MediaPipeline\.)?FrameUidStride""".r
+    val packs = for {
+      (p, lines) <- sources
+      (l, i) <- lines.zipWithIndex
+      if !Seq("*", "/*", "//").exists(l.trim.startsWith)
+      if packing.findFirstIn(l).nonEmpty
+    } yield s"$p:${i + 1}"
+    assert(packs.size == 1, s"FrameUidStride multiplied in: ${packs.mkString(", ")}")
+  }
+
   test("only graft.Harness sets a session master") {
     val core = Paths.get("src/main/scala/graft/Harness.scala")
     assert(sources.exists(_._1 == core), s"$core not found")
