@@ -15,16 +15,13 @@ import graft.functions.DedupEnrich
   *
   * State = append-only generation dirs `g<N>/{bloom,bands}`:
   *  - `bloom`: the set Bloom slots (k = 4 md5-derived positions per
-  *    historical d1 fingerprint). Encoding is VERSION-GATED by the
-  *    manifest: v2 (the default for new stores) packs the bit array
-  *    as (`word_idx` long, `bits` long) rows — 64 slots per row, the
-  *    production shape: ~1 bit per slot instead of the ~64 bits a
-  *    position row costs, merged by word-wise OR on compaction, probed
-  *    by an equi-join on word_idx + a bit test. v1 (stores created
-  *    before the packing) keeps (`pos` long) distinct-position rows —
-  *    a re-opened v1 store routes v1 FOREVER (its probe and fold stay
-  *    position-rows; re-encoding is a rebuild, same policy as Bloom
-  *    re-sizing). The d8 QUERY keeps the position-set formulation
+  *    historical d1 fingerprint), packed as (`word_idx` long, `bits`
+  *    long) rows — 64 slots per row: ~1 bit per slot instead of the
+  *    ~64 bits a position row costs, merged by word-wise OR on
+  *    compaction, probed by an equi-join on word_idx + a bit test. This
+  *    is format version 2, the only one this build reads (the manifest
+  *    check is [[ManifestIO.readVersioned]]). The d8 QUERY keeps the
+  *    position-set formulation
   *    deliberately — it is the oracle-checkable model of this state,
   *    cross-engine deterministic, and DedupSurfacesSpec pins that the
   *    v2 words decode to exactly the model's position set;
@@ -93,7 +90,8 @@ final class DedupIndex(val spark: SparkSession, val path: String,
   // through every helper — it cannot change mid-call (single writer),
   // and re-loading the properties file per derived value would put a
   // dozen driver file reads on the streaming hot path
-  private def manifest: Option[Map[String, String]] = ManifestIO.read(path)
+  private def manifest: Option[Map[String, String]] =
+    ManifestIO.readVersioned(path, DedupIndex.Version)
 
   /** Slot count: the manifest's persisted value for an existing store,
     * the capacity-derived default only at creation. */
@@ -151,9 +149,7 @@ final class DedupIndex(val spark: SparkSession, val path: String,
     * caller constant; key-less folds persist the `hot=auto` marker
     * and keep waiting — see the resolution note in `ingestInternal`;
     * until evidence arrives this accessor reports None, which is
-    * truthful: no threshold exists yet). Stores created before the
-    * guard carry no counts state and stay unguarded for life (same
-    * policy as v1 Bloom encoding: retrofitting means a rebuild).
+    * truthful: no threshold exists yet).
     *
     * Trigger semantics are LIFETIME counts — a band that was ever
     * boilerplate stays flagged, because this store's contract is the
@@ -246,12 +242,6 @@ final class DedupIndex(val spark: SparkSession, val path: String,
     man.flatMap(_.get("msegs")).toSeq
       .flatMap(_.split(",")).filter(_.nonEmpty)
 
-  /** Bloom state encoding: the manifest's persisted version for an
-    * existing store (a v1 store keeps position-rows for life), v2
-    * packed words for new stores. */
-  private def versionOf(man: Option[Map[String, String]]): Int =
-    man.flatMap(_.get("version")).map(_.toInt).getOrElse(2)
-
   /** The SHARED enrichment path ([[DedupEnrich]]) — the same builders
     * the d8/d10 batch queries and the streaming candidate generator
     * use, so index keys, query keys, and stream keys can never drift
@@ -302,13 +292,11 @@ final class DedupIndex(val spark: SparkSession, val path: String,
     }
   }
 
-  private def bloomState(segs: Seq[String], ver: Int,
+  private def bloomState(segs: Seq[String],
       hconf: org.apache.hadoop.conf.Configuration): DataFrame =
-    readSub(segs, "bloom", hconf,
-      Some(if (ver == 1) "pos BIGINT" else "word_idx BIGINT, bits BIGINT"))
+    readSub(segs, "bloom", hconf, Some("word_idx BIGINT, bits BIGINT"))
       .getOrElse(
-        if (ver == 1) spark.range(0).select(col("id").as("pos"))
-        else spark.range(0).select(col("id").as("word_idx"), col("id").as("bits")))
+        spark.range(0).select(col("id").as("word_idx"), col("id").as("bits")))
 
   /** Distinct position rows → packed (word_idx, bits) words: 64 slots
     * per long, word-wise OR. The bit index is `pos & 63`, the word
@@ -328,7 +316,7 @@ final class DedupIndex(val spark: SparkSession, val path: String,
         col("id").as("prior_id")))
 
   /** Window-hash Bloom state (packed words; only read on
-    * window-enabled stores, which are v2 by construction). */
+    * window-enabled stores). */
   private def wbloomState(segs: Seq[String],
       hconf: org.apache.hadoop.conf.Configuration): DataFrame =
     readSub(segs, "wbloom", hconf, Some("word_idx BIGINT, bits BIGINT"))
@@ -375,7 +363,8 @@ final class DedupIndex(val spark: SparkSession, val path: String,
     man match {
       case Some(m) => m -- Seq("gen", "msegs", "mhot", "mn")
       case None =>
-        Map("version" -> "2", "m" -> slotsOf(None).toString, "n" -> "0")
+        Map("version" -> DedupIndex.Version.toString,
+          "m" -> slotsOf(None).toString, "n" -> "0")
           .++(windowSlotsOf(None)
             .map(mw => Map("mw" -> mw.toString, "nw" -> "0"))
             .getOrElse(Map.empty))
@@ -440,10 +429,12 @@ final class DedupIndex(val spark: SparkSession, val path: String,
           cumulative.select(col("cnt").cast("double").as("cnt"))))
       } finally cumulative.unpersist(false)
     }, creationFallback = true)
-    val mnPrev: Option[Long] = man.flatMap(_.get("mn")).map(_.toLong)
+    // media records ever folded: written by every media fold, so
+    // absent exactly until the first one
+    val mnPrev = if (msegs0.isEmpty) 0L else man.get("mn").toLong
     // the n-counter shortcut, media edition: no key's lifetime count
     // can exceed the media records ever folded
-    val probeHot = mhotOpt.exists(hot => mnPrev.forall(_ >= hot))
+    val probeHot = mhotOpt.exists(mnPrev >= _)
     val hotKeys: Option[DataFrame] =
       if (!probeHot) None
       else mhotOpt.map { hot =>
@@ -498,12 +489,9 @@ final class DedupIndex(val spark: SparkSession, val path: String,
     mcntOut.foreach(_.write.mode(SaveMode.Overwrite)
       .parquet(s"$path/$newSeg/mcnt"))
     val msegs = if (overBudget) Seq(newSeg) else msegs0 :+ newSeg
-    val mnNew: Option[Long] =
-      (if (msegs0.isEmpty && mnPrev.isEmpty) Some(0L) else mnPrev)
-        .map(_ + result.count())
     ManifestIO.write(path, textEntriesFor(man)
-      ++ Map("gen" -> gen.toString, "msegs" -> msegs.mkString(","))
-      ++ mnNew.map(n => Map("mn" -> n.toString)).getOrElse(Map.empty)
+      ++ Map("gen" -> gen.toString, "msegs" -> msegs.mkString(","),
+        "mn" -> (mnPrev + result.count()).toString)
       ++ mhotOpt.map(h => Map("mhot" -> h.toString)).getOrElse(
         if (mhotPending(man)) Map("mhot" -> DedupIndex.AutoMarker)
         // opt-out persists as mhot=0: a re-open must route opted-out
@@ -577,33 +565,26 @@ final class DedupIndex(val spark: SparkSession, val path: String,
       case _ => ()
     }
     val m = slotsOf(man)
-    val ver = versionOf(man)
     val mwOpt = windowSlotsOf(man)
     val segs0 = liveSegsOf(man)
     val hconf = spark.sessionState.newHadoopConf()
-    val bloomSt = bloomState(segs0, ver, hconf)
+    val bloomSt = bloomState(segs0, hconf)
     val bandSt = bandState(segs0, hconf)
     val gen = man.flatMap(_.get("gen")).map(_.toLong).getOrElse(0L) + 1
     val enriched = enrich(batch, m, mwOpt.isDefined).cache()
 
     // probe: Bloom membership = every one of the doc's distinct
-    // positions present in the state. v2 probes the packed words: an
-    // equi-join on word_idx plus a per-position bit test (distinct on
-    // (doc_id, pos) first — overlapping segments can carry the same
-    // word, and a position must count once however many words attest
-    // it); v1 keeps the position-row semi-join.
-    val posExploded = enriched
+    // positions present in the state — an equi-join on word_idx plus a
+    // per-position bit test (distinct on (doc_id, pos) first —
+    // overlapping segments can carry the same word, and a position must
+    // count once however many words attest it)
+    val posMatches = enriched
       .select(col("doc_id"), explode(col("positions")).as("pos"))
-    val posMatches =
-      (if (ver == 1)
-        posExploded.join(bloomSt, Seq("pos"), "left_semi")
-      else
-        posExploded
-          .withColumn("word_idx", shiftright(col("pos"), 6))
-          .join(bloomSt, Seq("word_idx"))
-          .filter(expr("(shiftright(bits, cast((pos & 63) as int)) & 1) = 1"))
-          .select("doc_id", "pos").distinct())
-        .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
+      .withColumn("word_idx", shiftright(col("pos"), 6))
+      .join(bloomSt, Seq("word_idx"))
+      .filter(expr("(shiftright(bits, cast((pos & 63) as int)) & 1) = 1"))
+      .select("doc_id", "pos").distinct()
+      .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
     // hot-band guard: resolve the batch's SATURATED band keys before
     // the band equi-join ever runs — the counts state is joined against
     // the (bounded, broadcast) batch key set and aggregated to per-key
@@ -618,8 +599,7 @@ final class DedupIndex(val spark: SparkSession, val path: String,
     // NO band can be hot and the probe legs are skipped entirely —
     // the guard is free until the store is big enough to need it
     // (BENCH_WRITES showed the unconditional probe costing ~1.4x on
-    // small stores). A guarded manifest missing `n` (hand-built)
-    // probes unconditionally — the safe direction.
+    // small stores).
     val batchBands = enriched
       .select(col("doc_id"), explode(col("bands")).as("bk"))
     // threshold resolution through the ONE shared resolver (review
@@ -659,8 +639,9 @@ final class DedupIndex(val spark: SparkSession, val path: String,
           cumulative.select(col("cnt").cast("double").as("cnt"))))
       } finally cumulative.unpersist(false)
     })
-    val nPrev: Option[Long] = man.flatMap(_.get("n")).map(_.toLong)
-    val probeHot = hotOpt.exists(hot => nPrev.forall(_ >= hot))
+    // docs ever folded: written by every commit since creation
+    val nPrev = man.fold(0L)(_("n").toLong)
+    val probeHot = hotOpt.exists(nPrev >= _)
     val hotKeys: Option[DataFrame] =
       if (!probeHot) None
       else hotOpt.map { hot =>
@@ -712,21 +693,20 @@ final class DedupIndex(val spark: SparkSession, val path: String,
     // the BOUND is emitted (still reads high, never low) with no state
     // scan at all — the exact O(state words) bit_count aggregate
     // (word-wise OR first: overlapping segments may attest the same
-    // word) runs only once the store could plausibly be filling, or on
-    // a hand-built manifest that never carried the counter. Keeps the
-    // per-micro-batch streaming cost O(batch) on healthy stores
+    // word) runs only once the store could plausibly be filling. Keeps
+    // the per-micro-batch streaming cost O(batch) on healthy stores
     // instead of O(windowCapacity/64) always.
-    val nwPrev: Option[Long] =
-      if (man.isEmpty) Some(0L) else man.flatMap(_.get("nw")).map(_.toLong)
+    // window hashes ever folded: written by every commit of a
+    // window-enabled store, so read only on one
+    lazy val nwPrev = man.fold(0L)(_("nw").toLong)
     val wbloomFill: Option[Double] = mwOpt.map { mw =>
-      val bound = nwPrev.map(nw => DedupEnrich.BloomK * nw.toDouble / mw)
-      bound match {
-        case Some(b) if b < DedupIndex.FillExactBound => b
-        case _ =>
-          val r = wbloomSt.get
-            .groupBy("word_idx").agg(expr("bit_or(bits)").as("bits"))
-            .agg(sum(expr("bit_count(bits)"))).collect()(0)
-          if (r.isNullAt(0)) 0.0 else r.getLong(0).toDouble / mw
+      val bound = DedupEnrich.BloomK * nwPrev.toDouble / mw
+      if (bound < DedupIndex.FillExactBound) bound
+      else {
+        val r = wbloomSt.get
+          .groupBy("word_idx").agg(expr("bit_or(bits)").as("bits"))
+          .agg(sum(expr("bit_count(bits)"))).collect()(0)
+        if (r.isNullAt(0)) 0.0 else r.getLong(0).toDouble / mw
       }
     }
     val joined0 = enriched
@@ -767,19 +747,14 @@ final class DedupIndex(val spark: SparkSession, val path: String,
     val newSeg = s"g$gen"
     val overBudget = segs0.length + 1 > Mnemo.MaxSegments
     val batchPos = enriched.select(explode(col("positions")).as("pos"))
+    // the batch's words; on compaction every segment's words OR-merge
+    // with them (bit_or is the set union)
+    val words = packWords(batchPos)
     val bloomOut =
-      if (ver == 1) {
-        if (overBudget) bloomSt.unionByName(batchPos).distinct()
-        else batchPos.distinct()
-      } else {
-        // packed: the batch's words; on compaction every segment's
-        // words OR-merge with them (bit_or is the set union)
-        val words = packWords(batchPos)
-        if (overBudget)
-          bloomSt.unionByName(words)
-            .groupBy("word_idx").agg(expr("bit_or(bits)").as("bits"))
-        else words
-      }
+      if (overBudget)
+        bloomSt.unionByName(words)
+          .groupBy("word_idx").agg(expr("bit_or(bits)").as("bits"))
+      else words
     val bandOut =
       if (overBudget)
         bandSt.unionByName(
@@ -829,25 +804,18 @@ final class DedupIndex(val spark: SparkSession, val path: String,
     batchId.foreach(_ => result.write.mode(SaveMode.Overwrite)
       .parquet(s"$path/$newSeg/verdict"))
     val segs = if (overBudget) Seq(newSeg) else segs0 :+ newSeg
-    // cumulative doc counter: exact when the store has carried it since
-    // creation (every store this code creates); a hand-built manifest
-    // without it never grows one — the hot-guard shortcut then probes
-    // unconditionally rather than trust a counter that missed history
-    val nNew: Option[Long] =
-      (if (man.isEmpty) Some(0L) else nPrev).map(_ + result.count())
-    // cumulative window-hash counter (same discipline as `n`): one
-    // O(batch) aggregate over the cached frame, upper-bounds the window
-    // Bloom's set bits at k·nw for the lazy fill disclosure above
-    val nwNew: Option[Long] = mwOpt.flatMap { _ =>
-      nwPrev.map { nw =>
-        val r = enriched.agg(sum(size(col("ws")))).collect()(0)
-        nw + (if (r.isNullAt(0)) 0L else r.getLong(0))
-      }
+    // cumulative window-hash counter (same discipline as the doc
+    // counter `n`): one O(batch) aggregate over the cached frame,
+    // upper-bounds the window Bloom's set bits at k·nw for the lazy
+    // fill disclosure above
+    val nwNew: Option[Long] = mwOpt.map { _ =>
+      val r = enriched.agg(sum(size(col("ws")))).collect()(0)
+      nwPrev + (if (r.isNullAt(0)) 0L else r.getLong(0))
     }
     ManifestIO.write(path, Map(
-      "version" -> ver.toString, "m" -> m.toString,
-      "gen" -> gen.toString, "segs" -> segs.mkString(","))
-      ++ nNew.map(n => Map("n" -> n.toString)).getOrElse(Map.empty)
+      "version" -> DedupIndex.Version.toString, "m" -> m.toString,
+      "gen" -> gen.toString, "segs" -> segs.mkString(","),
+      "n" -> (nPrev + result.count()).toString)
       ++ nwNew.map(v => Map("nw" -> v.toString)).getOrElse(Map.empty)
       ++ mwOpt.map(mw => Map("mw" -> mw.toString)).getOrElse(Map.empty)
       // a still-pending AUTO threshold persists as the literal marker,
@@ -883,7 +851,6 @@ final class DedupIndex(val spark: SparkSession, val path: String,
     * sizing with zero fill. */
   def describe(): DedupIndex.Health = {
     val man = manifest
-    val ver = versionOf(man)
     val m = slotsOf(man)
     val mwOpt = windowSlotsOf(man)
     val hotOpt = hotOf(man)
@@ -895,10 +862,7 @@ final class DedupIndex(val spark: SparkSession, val path: String,
       if (r.isNullAt(0)) 0.0 else r.getLong(0).toDouble / slots
     }
     val bloomFill =
-      if (segs.isEmpty) 0.0
-      else if (ver == 1)
-        bloomState(segs, ver, hconf).distinct().count().toDouble / m
-      else packedFill(bloomState(segs, ver, hconf), m)
+      if (segs.isEmpty) 0.0 else packedFill(bloomState(segs, hconf), m)
     val windowFill = mwOpt.map { mw =>
       if (segs.isEmpty) 0.0 else packedFill(wbloomState(segs, hconf), mw)
     }
@@ -948,7 +912,7 @@ final class DedupIndex(val spark: SparkSession, val path: String,
       case None => (None, None)
     }
     DedupIndex.Health(
-      version = ver,
+      version = DedupIndex.Version,
       generation = man.flatMap(_.get("gen")).map(_.toLong).getOrElse(0L),
       segments = segs.length,
       bloomSlots = m,
@@ -969,6 +933,10 @@ final class DedupIndex(val spark: SparkSession, val path: String,
 }
 
 object DedupIndex {
+
+  /** The one on-disk format this build reads and writes: packed Bloom
+    * words, persisted as the manifest's `version`. */
+  private[graft] val Version: Int = 2
 
   /** Default hot-band saturation threshold: the largest per-band
     * candidate set the probe will enumerate before flagging instead.

@@ -76,9 +76,13 @@ import org.apache.spark.sql.SparkSession
   * publishes fully-written bytes atomically), which is how the
   * protocol is driven end to end in tests without an object store. A
   * store that has ever committed a pointer generation stays on the
-  * pointer protocol (layout presence is the gate, like the Bloom
-  * encoding version), and a leftover rename-protocol manifest is
-  * removed by the first pointer commit after it is shadowed.
+  * pointer protocol (layout presence is the gate). A store is on ONE
+  * protocol for life: forcing the pointer protocol onto a store that
+  * carries a rename-protocol manifest fails instead of migrating it.
+  *
+  * Every versioned store parses its manifest through
+  * [[readVersioned]]: each store reads and writes exactly one on-disk
+  * format, and a manifest of any other version fails loudly.
   *
   * Any OTHER scheme is refused at commit time unless the pointer
   * protocol is forced: atomicity of publish visibility is the
@@ -110,33 +114,8 @@ object ManifestIO {
     * scheme; object-store PUTs and the staged link/rename publishes
     * cannot tear — cuts the sentinel off. Readers resolve the newest
     * generation that carries it and never surface the sentinel key
-    * itself. Generations written before the sentinel existed carry no
-    * marker; they are accepted only when NO generation in the store
-    * validates (pre-sentinel stores keep today's resolve-max behavior,
-    * while a store that has ever committed with a sentinel falls back
-    * past a torn head to its newest intact generation).
-    *
-    * Documented edges of this rule (reviewed deliberately, not
-    * oversights):
-    *  - MIGRATION CONTRACT: a sentinel-less head on a sentinel-era
-    *    store reads as TORN. A pre-sentinel binary must therefore not
-    *    write to a store a sentinel-era binary has committed to — by
-    *    content the two cases are indistinguishable, the store is
-    *    single-writer, and the reader resolves the ambiguity in favor
-    *    of torn-write protection (a rolled-back writer is an operator
-    *    error; a torn head is the designed failure).
-    *  - RESIDUAL WINDOW: on an all-legacy store (no sentinel
-    *    anywhere) a torn FIRST sentinel-era commit is accepted as the
-    *    head — nothing distinguishes it from a legacy commit. The
-    *    window is one commit wide, exists only on forced unknown
-    *    schemes (staged publishes and object-store PUTs cannot
-    *    tear), and closes permanently at the first intact sentinel
-    *    commit.
-    *  - LEGACY READ COST: a store whose head lacks the sentinel walks
-    *    older generations looking for one — bounded by [[PointerKeep]]
-    *    small property files per read, paid only until a sentinel-era
-    *    commit heals the store (the walk is a lazy iterator;
-    *    sentinel-era heads stop at ONE load). */
+    * itself; a store where no generation carries it has never
+    * committed. */
   private[graft] val CommittedKey = "graft.manifest.committed"
 
   /** Bounded re-list retries for the pointer read(): between a
@@ -185,13 +164,6 @@ object ManifestIO {
       case st if st.isFile => st.getPath.getName
     }.collect { case PointerName(n) => n.toLong }.sorted
 
-  def exists(storePath: String): Boolean = {
-    val p = manifestPath(storePath)
-    val fs = fsOf(p)
-    val pdir = new Path(storePath, PointerDir)
-    pointerGens(fs, pdir).nonEmpty || fs.exists(p)
-  }
-
   private def loadProps(fs: FileSystem, p: Path): Map[String, String] = {
     val props = new java.util.Properties()
     val in = fs.open(p)
@@ -202,7 +174,8 @@ object ManifestIO {
   }
 
   /** Read the committed key→value map (None if never committed). A
-    * pointer-layout store shadows any leftover rename-layout file.
+    * store with pointer generations resolves through them alone; the
+    * rename-protocol file is read only when there are none.
     *
     * Pointer resolution walks the committed generations NEWEST-FIRST
     * and returns the first one carrying the [[CommittedKey]] sentinel.
@@ -210,73 +183,50 @@ object ManifestIO {
     * head truncated mid-`\\uXXXX` escape raises IllegalArgumentException,
     * not FileNotFound, so a bare FNF-only handler would surface the
     * torn-write crash the sentinel exists to absorb) is treated
-    * exactly like a sentinel-less one: torn, skipped, never the
-    * legacy fallback. If no generation validates, the newest PARSEABLE
-    * one is accepted as-is (pre-sentinel store). Skipping a head in
-    * favor of an older sentinel-bearing generation logs a WARNING: on
-    * a mixed-binary deployment (a pre-sentinel writer rolled back onto
-    * a sentinel-era store) the skip is silent stale reads, and the log
-    * line is the only signal that distinguishes it from normal
-    * operation. A FileNotFound while opening a LISTED generation means
-    * the listing went stale under a live writer's retention sweep
-    * (>= [[PointerKeep]] commits landed since the list) — the whole
+    * exactly like a sentinel-less one: torn, skipped. If no generation
+    * validates, the store reads as never committed. Skipping a head in
+    * favor of an older intact generation logs a WARNING. A
+    * FileNotFound while opening a LISTED generation means the listing
+    * went stale under a live writer's retention sweep (>=
+    * [[PointerKeep]] commits landed since the list) — the whole
     * resolution re-lists and retries, bounded by
     * [[ReadRelistAttempts]]. */
   def read(storePath: String): Option[Map[String, String]] = {
-    val conf = hconf
     val pdir = new Path(storePath, PointerDir)
-    val fs = pdir.getFileSystem(conf)
+    val fs = pdir.getFileSystem(hconf)
+    // an intact generation's properties; None for a torn one (no
+    // sentinel, or unparseable: Properties.load raises
+    // IllegalArgumentException on a malformed \uXXXX escape — the
+    // truncation-mid-escape class). Everything else propagates:
+    // FileNotFound escalates to the re-list retry below, and a
+    // TRANSIENT stream error (connection reset, checksum failure) must
+    // surface as the error it is — swallowing it as "torn" would turn
+    // an infra blip into a silent stale read
+    def intact(n: Long): Option[Map[String, String]] =
+      try Some(loadProps(fs, new Path(pdir, pointerName(n))))
+        .filter(_.contains(CommittedKey))
+      catch { case _: IllegalArgumentException => None }
     def resolve(attempt: Int): Option[Map[String, String]] = {
       val gens = pointerGens(fs, pdir)
-      if (gens.isEmpty) None
-      else try {
-        // lazy walk: a sentinel-era head stops at ONE load
-        val it = gens.reverse.iterator
-        var newestRaw: Option[Map[String, String]] = None
-        var validated: Option[Map[String, String]] = None
-        var skippedPastHead = false
-        while (validated.isEmpty && it.hasNext) {
-          val n = it.next()
-          val m =
-            try Some(loadProps(fs, new Path(pdir, pointerName(n))))
-            catch {
-              // unparseable generation = torn (Properties.load raises
-              // IllegalArgumentException on a malformed \uXXXX escape —
-              // the truncation-mid-escape class): skip it like a
-              // sentinel-less one, and never use it as the fallback.
-              // Everything else propagates: FileNotFound escalates to
-              // the re-list retry below, and a TRANSIENT stream error
-              // (connection reset, checksum failure) must surface as
-              // the error it is — swallowing it as "torn" would turn
-              // an infra blip into a silent stale read
-              case _: IllegalArgumentException => None
-            }
-          m match {
-            case Some(mm) =>
-              if (newestRaw.isEmpty) newestRaw = Some(mm)
-              if (mm.contains(CommittedKey)) validated = Some(mm)
-              else skippedPastHead = true
-            case None => skippedPastHead = true
-          }
+      if (gens.isEmpty) {
+        val p = manifestPath(storePath)
+        if (fs.exists(p)) Some(loadProps(fs, p)) else None
+      } else try {
+        // lazy walk: an intact head stops at ONE load
+        val found = gens.reverse.iterator.zipWithIndex
+          .flatMap { case (n, i) => intact(n).map(_ -> i) }.nextOption()
+        found match {
+          case Some((m, skipped)) =>
+            if (skipped > 0)
+              Log.warn("maintained store at {}: {} newest pointer " +
+                "generation(s) carry no committed sentinel (torn write) — " +
+                "resolving the newest intact generation", storePath, skipped)
+            Some(m - CommittedKey)
+          case None =>
+            Log.warn("maintained store at {}: no pointer generation is " +
+              "intact — the store reads as never committed", storePath)
+            None
         }
-        if (validated.isDefined && skippedPastHead)
-          Log.warn(
-            "maintained store at {}: newest pointer generation(s) have " +
-              "no committed sentinel (torn write, or a pre-sentinel " +
-              "binary committed to a sentinel-era store) — resolving " +
-              "the newest VALIDATED generation instead; if a rolled-back " +
-              "writer is live, its commits are being read as stale",
-            storePath)
-        if (validated.isEmpty && newestRaw.isEmpty)
-          // every listed generation failed to parse: the resolve
-          // returns None and the caller falls through to the legacy
-          // rename-layout file — surface that a pointer layout EXISTS
-          // but yielded nothing, or the fallback reads as normal
-          Log.warn(
-            "maintained store at {}: pointer generations exist but " +
-              "none parsed — falling back to the legacy manifest " +
-              "file if present (pre-pointer state)", storePath)
-        validated.map(_ - CommittedKey).orElse(newestRaw)
       } catch {
         case e: java.io.FileNotFoundException =>
           if (attempt < ReadRelistAttempts) resolve(attempt + 1)
@@ -287,11 +237,30 @@ object ManifestIO {
               "can list-and-open)", e)
       }
     }
-    resolve(0).orElse {
-      val p = manifestPath(storePath)
-      if (fs.exists(p)) Some(loadProps(fs, p)) else None
-    }
+    resolve(0)
   }
+
+  /** [[read]] for a versioned store: the committed manifest, after
+    * checking that its `version` is the one format this build reads.
+    * The ONE format check of every versioned store — a manifest of any
+    * other version (or none) fails through [[unreadable]]. */
+  def readVersioned(storePath: String,
+      version: Int): Option[Map[String, String]] =
+    read(storePath).map { m =>
+      val found = m.getOrElse("version", "none")
+      if (found != version.toString) unreadable(storePath, found, version)
+      m
+    }
+
+  /** Fail on a store whose on-disk format this build does not read,
+    * naming the store path, the format found and the version this
+    * build reads. No migration exists: the store must be rebuilt. */
+  private[api] def unreadable(storePath: String, found: String,
+      version: Int): Nothing =
+    throw new IllegalStateException(
+      s"maintained store at $storePath: found on-disk format version " +
+        s"$found, but this build reads only version $version (there is " +
+        "no migration; rebuild the store with this build)")
 
   /** Commit a full manifest state through the store's protocol (see
     * the object doc): rename-with-overwrite on atomic-rename schemes,
@@ -373,6 +342,11 @@ object ManifestIO {
       conf: Configuration, scheme: String): Unit = {
     val pdir = new Path(storePath, PointerDir)
     val fs0 = pdir.getFileSystem(conf)
+    if (fs0.exists(manifestPath(storePath)))
+      throw new IllegalStateException(
+        s"maintained store at $storePath: the pointer protocol cannot " +
+          s"commit to a store that carries a rename-protocol $FileName " +
+          "(a store stays on one protocol; there is no migration)")
     val fs: FileSystem =
       if (scheme == "file") FileSystem.getLocal(conf).getRaw else fs0
     fs.mkdirs(pdir)
@@ -387,11 +361,6 @@ object ManifestIO {
     if (fs.exists(pdir)) fs.listStatus(pdir).toSeq
       .filter(st => st.isFile && st.getPath.getName.contains(".tmp"))
       .foreach(st => fs.delete(st.getPath, false))
-    // complete a rename->pointer migration: the old mutable manifest is
-    // shadowed by every read from now on; removing it is cleanup, and a
-    // crash before this delete changes nothing
-    val legacy = manifestPath(storePath)
-    if (fs.exists(legacy)) fs.delete(legacy, false)
   }
 
   /** The pointer protocol's put-if-absent publish of ONE generation —
@@ -514,21 +483,6 @@ object ManifestIO {
   def pathExists(path: String): Boolean = {
     val p = new Path(path)
     fsOf(p).exists(p)
-  }
-
-  def isDirectory(path: String): Boolean = {
-    val p = new Path(path)
-    val fs = fsOf(p)
-    fs.exists(p) && fs.getFileStatus(p).isDirectory
-  }
-
-  /** Plain rename (no overwrite; dst must not exist) — the staged-dir
-    * promote used by migrations. Fails loudly if the FS refuses. */
-  def movePath(src: String, dst: String): Unit = {
-    val s = new Path(src)
-    val fs = fsOf(s)
-    if (!fs.rename(s, new Path(dst)))
-      throw new java.io.IOException(s"rename $src -> $dst refused")
   }
 
   def deleteRecursively(path: String): Unit = {

@@ -136,9 +136,7 @@ object Mnemo {
     * `near_candidate_ids` is deliberately EMPTY and must not be read
     * as "no near-dups" — the over-approximation contract is that a
     * flagged row routes to the wide exact-verify (e.g. the batch d1/
-    * d3 passes) instead of its candidate list. Verdict frames
-    * persisted by pre-guard stores replay without the column; the
-    * report then counts 0. */
+    * d3 passes) instead of its candidate list. */
   final case class IngestReport(
       appended: Long,
       quarantined: Long,
@@ -150,15 +148,11 @@ object Mnemo {
     * the live pipeline path and the replay path that re-reads the
     * persisted frame). */
   private[api] def reportOf(verdicts: DataFrame): IngestReport = {
-    val satAgg =
-      if (verdicts.columns.contains("band_saturated"))
-        sum(col("band_saturated").cast("long"))
-      else sum(lit(0L))
     val counts = verdicts.agg(
       count(lit(1)),
       sum(col("quarantined").cast("long")),
       sum(col("maybe_dup").cast("long")),
-      satAgg).collect()(0)
+      sum(col("band_saturated").cast("long"))).collect()(0)
     IngestReport(
       appended = counts.getLong(0),
       quarantined = if (counts.isNullAt(1)) 0L else counts.getLong(1),
@@ -187,23 +181,20 @@ object Mnemo {
     * Spark job). `maxBucketSegments` is the compaction-pressure
     * signal (folds trigger past [[Mnemo.MaxSegments]]);
     * `rangedSegments` counts segments whose manifest carries agent
-    * min/max stats (the file-level prune coverage — a pre-range
-    * store reads everything); `tagIndexSegments` is None on a
-    * pre-index store (subject redactions fold every bucket);
+    * min/max stats (the file-level prune coverage — a segment whose
+    * rows all have a null agent_id records none and is always read);
+    * `tagIndexSegments` counts the tag→bucket index segments;
     * `pipelineBatch` is the ingestPipeline replay bookkeeping. */
   final case class StoreHealth(
       version: Int, generation: Long, numBuckets: Int,
       populatedBuckets: Int, segments: Int, maxBucketSegments: Int,
-      tagIndexSegments: Option[Int], rangedSegments: Int,
+      tagIndexSegments: Int, rangedSegments: Int,
       pipelineBatch: Option[Long],
       auxStores: Map[String, Boolean])
 
-  /** [[Mnemo.describeOrientation]]'s report — manifest facts only.
-    * `legacyLayout` marks a pre-manifest (v1 hive-partitioned) store;
-    * its namespaces are counted from the partition directories. */
+  /** [[Mnemo.describeOrientation]]'s report — manifest facts only. */
   final case class OrientationHealth(
-      version: Int, namespaces: Int, maxGeneration: Long,
-      legacyLayout: Boolean)
+      version: Int, namespaces: Int, maxGeneration: Long)
 
   /** [[Mnemo.describeAttention]]'s report. `dataFiles` counts the
     * files in the live data directory — the number compaction folds
@@ -308,8 +299,8 @@ object Mnemo {
   * appends cost O(new rows), id-addressed point ops cost O(touched
   * buckets), and at no crash point is committed data unreachable.
   * Single writer per store path (the reference's embedded-engine
-  * discipline). Pre-v3 flat stores read as-is and migrate on their
-  * first mutation. */
+  * discipline). A store in any other layout fails to open
+  * ([[ManifestIO.readVersioned]]). */
 final class MnemoStore(val spark: SparkSession, val path: String,
     newStoreBuckets: Int = Mnemo.NumBuckets) {
 
@@ -341,12 +332,10 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     * store was CREATED with (every routing decision uses this, never
     * the compile-time default — see [[Mnemo.NumBuckets]]), the
     * committed segment dirs (relative to the store root) per bucket,
-    * and the tag→bucket inverted-index segments (`Some` iff the index
-    * has covered every commit since creation — stores written by
-    * pre-index builds carry `None` until their first full fold
-    * backfills it, see [[commitWrite]]/[[forgetSubject]]). */
+    * and the tag→bucket inverted-index segments (the index covers
+    * every commit since creation, see [[commitWrite]]). */
   private case class StoreManifest(gen: Long, numBuckets: Int,
-      buckets: Map[Int, Seq[String]], tagIdx: Option[Seq[String]],
+      buckets: Map[Int, Seq[String]], tagIdx: Seq[String],
       ranges: Map[String, SegStats] = Map.empty,
       // streaming-ingest bookkeeping, carried forward verbatim by
       // every commit: `batch` = last ingestPipeline batchId,
@@ -365,8 +354,8 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     * single-agent range, so every OTHER agent's scoped read skips the
     * file without opening its footer. Same over-approximation
     * discipline as the tag index: a segment with NO recorded stats
-    * (pre-range store) is always read; stats can only prune, never
-    * hide. */
+    * (every agent_id in it null) is always read; stats can only
+    * prune, never hide. */
   private case class SegStats(minAgent: String, maxAgent: String,
       hasPublic: Boolean)
 
@@ -380,17 +369,15 @@ final class MnemoStore(val spark: SparkSession, val path: String,
       a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) <= 0
 
+  /** The committed manifest (layout v3). The retired pre-manifest
+    * layout — flat parquet files at the store root — fails. */
   private def readStoreManifest(): Option[StoreManifest] =
-    ManifestIO.read(path).map { m =>
-      // manifests written before the buckets= key existed all came from
-      // builds whose compiled constant was 32 — that default is exact,
-      // not a guess
-      StoreManifest(m.getOrElse("gen", "0").toLong,
-        m.getOrElse("buckets", "32").toInt,
+    ManifestIO.readVersioned(path, 3) match {
+      case Some(m) => Some(StoreManifest(m("gen").toLong, m("buckets").toInt,
         m.collect { case (k, v) if k.startsWith("bucket.") =>
           k.stripPrefix("bucket.").toInt ->
             v.split(",").filter(_.nonEmpty).toSeq },
-        m.get("tagidx").map(_.split(",").filter(_.nonEmpty).toSeq),
+        m("tagidx").split(",").filter(_.nonEmpty).toSeq,
         m.collect { case (k, mn) if k.startsWith("rangemin.") =>
           val seg = k.stripPrefix("rangemin.")
           // all three keys are written together; tolerate a hand-edited
@@ -400,30 +387,13 @@ final class MnemoStore(val spark: SparkSession, val path: String,
           seg -> SegStats(mn, mx, pub == "1")
         }.toMap,
         m.collect { case (k, v) if k == "batch" || k == "pverdict" =>
-          k -> v })
+          k -> v }))
+      case None =>
+        if (ManifestIO.listChildren(path).exists { case (nm, isDir) =>
+            !isDir && nm.endsWith(".parquet") })
+          ManifestIO.unreadable(path, "0 (flat parquet files at the store root)", 3)
+        None
     }
-
-  /** Legacy (pre-v3) flat parquet dir: files at the store root, no
-    * manifest. */
-  private def legacyExists: Boolean =
-    ManifestIO.listChildren(path).nonEmpty
-
-  private def exists: Boolean = {
-    recover()
-    ManifestIO.exists(path) || legacyExists
-  }
-
-  /** Crash recovery for the RETIRED pre-v3 whole-store rewrite: if the
-    * live dir is missing but a complete scratch copy exists (a crash of
-    * the old delete-then-rename protocol), promote the scratch. The v3
-    * layout never deletes live data before its manifest commit, so this
-    * only ever fires on stores last written by the old code. */
-  private def recover(): Unit = {
-    if (!ManifestIO.pathExists(path) &&
-        ManifestIO.pathExists(path + ".tmp") &&
-        ManifestIO.pathExists(path + ".tmp/_SUCCESS"))
-      ManifestIO.movePath(path + ".tmp", path)
-  }
 
   /** Committed content of the given buckets — only their segment dirs
     * are opened (path-level pruning, the readProfiles shape). */
@@ -457,8 +427,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     * the batch's agent set — at scale a per-batch profile must scan
     * the WRITING agents' data, never the whole store. */
   private def agentScopedTableMulti(agentIds: Seq[String],
-      keepPublic: Boolean): DataFrame = {
-    recover()
+      keepPublic: Boolean): DataFrame =
     readStoreManifest() match {
       case Some(m) =>
         val dirs = m.buckets.values.flatten.toSeq.filter { rel =>
@@ -473,56 +442,25 @@ final class MnemoStore(val spark: SparkSession, val path: String,
         if (dirs.isEmpty) emptyTable()
         else spark.read.schema(Mnemo.StoreSchema)
           .parquet(dirs.map(rel => s"$path/$rel"): _*)
-      case _ => table()
+      case None => emptyTable()
     }
-  }
 
   /** Current table including tombstones. A never-written store returns
     * an EMPTY frame carrying the full enriched schema (see
     * [[Mnemo.StoreSchema]]) so conditional mutations
     * (forget/touch/ampExpire) and reads resolve their columns instead
-    * of failing analysis on a schemaless frame. Pre-v3 flat stores read
-    * as-is and are migrated by their first mutation. */
-  def table(): DataFrame = {
-    recover()
-    readStoreManifest() match {
-      case Some(m) => readBuckets(m, m.buckets.keySet)
-      case None if legacyExists =>
-        // a crashed migration may have left staged (never-published)
-        // nested dirs beside the flat files, and reading the mixed root
-        // would fail partition discovery. Reads must NOT delete them —
-        // the single-writer contract covers writers, and a concurrent
-        // writer may be staging those very dirs mid-migration right
-        // now. List the flat root FILES explicitly and read only them;
-        // the write path ([[migrateIfLegacy]]) is what sweeps crashed
-        // stages before re-migrating.
-        val flatFiles = legacyRootFiles()
-        if (flatFiles.isEmpty) emptyTable()
-        else spark.read.schema(Mnemo.StoreSchema).parquet(flatFiles: _*)
-      case None => emptyTable()
-    }
-  }
-
-  /** The legacy flat layout's data files: parquet at the store root. */
-  private def legacyRootFiles(): Seq[String] =
-    ManifestIO.listChildren(path).collect {
-      case (name, false) if name.endsWith(".parquet") => s"$path/$name"
-    }
+    * of failing analysis on a schemaless frame. */
+  def table(): DataFrame =
+    readStoreManifest().fold(emptyTable())(m => readBuckets(m, m.buckets.keySet))
 
   /** Committed rows restricted to the buckets the given ids hash into
     * — the point-read shape every id-addressed mutation already uses,
-    * exposed to the read path (the grant leg of [[recallVisible]]).
-    * Legacy flat stores have no routing; they read whole (and migrate
-    * to the routed layout on their first mutation). */
-  private def tableForIds(ids: Seq[String]): DataFrame = {
-    recover()
-    readStoreManifest() match {
-      case Some(m) =>
-        val ks = bucketsOf(ids, m.numBuckets).intersect(m.buckets.keySet)
-        if (ks.isEmpty) emptyTable() else readBuckets(m, ks)
-      case _ => table()
+    * exposed to the read path (the grant leg of [[recallVisible]]). */
+  private def tableForIds(ids: Seq[String]): DataFrame =
+    readStoreManifest().fold(emptyTable()) { m =>
+      val ks = bucketsOf(ids, m.numBuckets).intersect(m.buckets.keySet)
+      if (ks.isEmpty) emptyTable() else readBuckets(m, ks)
     }
-  }
 
   /** Buckets a set of ids hashes into, computed by evaluating the SAME
     * Catalyst expression the writer routes with ([[Mnemo.bucketOf]] is
@@ -540,85 +478,21 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     }.toSet
   }
 
-  /** Manifest to mutate against, migrating a legacy flat store first:
-    * the flat dir is re-bucketed under the Spark-hidden staging dir
-    * `_mig` (hidden names never confuse a concurrent flat read), then
-    * atomically renamed to `g1` immediately before the manifest commit.
-    * Any crash before the manifest write leaves the flat files
-    * authoritative and the staged dirs unpublished — the next MUTATION
-    * sweeps them ([[sweepUnpublished]]) and re-migrates (reads only
-    * ignore them — they never delete, see [[table]]); after the
-    * manifest write, readers go through the manifest and the absorbed
-    * root files are swept (idempotently re-swept by later commits if
-    * that sweep itself crashes). No crash point makes committed data
-    * unreachable. */
-  private def migrateIfLegacy(): StoreManifest = {
-    recover()
+  /** Manifest to mutate against. A never-committed store starts from
+    * an empty one with a complete (empty) tag index; with no manifest
+    * no subdirectory was ever published, so whatever a crashed first
+    * commit left behind is swept before the first write. */
+  private def manifestForWrite(): StoreManifest =
     readStoreManifest().getOrElse {
-      sweepUnpublished()
-      // a brand-new store starts with a complete (empty) tag index; a
-      // legacy root holding no data files (only _SUCCESS markers) has
-      // nothing to migrate and gets the same empty manifest
-      val flatFiles = legacyRootFiles()
-      if (flatFiles.isEmpty) // no legacy data files ⇒ nothing to migrate
-        StoreManifest(0L, newStoreBuckets, Map.empty, Some(Nil))
-      else {
-        val n = newStoreBuckets
-        // explicit file list, same as [[table]] — never a root-dir read
-        // that could trip over unswept non-hidden leftovers
-        val flat = spark.read.parquet(flatFiles: _*)
-        flat.withColumn("bucket", Mnemo.bucketOf(col("id"), n))
-          // same (agent_id, id) clustering as commitWrite's writeSeg,
-          // so a migrated store is agent-prunable from generation 1
-          .sortWithinPartitions(col("bucket"), col("agent_id"), col("id"))
-          .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-          .parquet(s"$path/_mig/r")
-        val stagedBuckets = presentBuckets("_mig", "r")
-        // tag index for the migrated store, so subject redactions prune
-        // from day one — built by reading BACK the staged segment just
-        // written (its `bucket` partition column IS the pair; no second
-        // scan of the flat files, no re-hash — the commitWrite
-        // pattern). Skipped when the flat store held zero rows: the
-        // staged dir then has no parquet footers and a schemaless
-        // read-back would fail inference. Unpublished until the
-        // manifest commit below; a crash leaves it swept like the
-        // staged data dirs.
-        if (stagedBuckets.nonEmpty)
-          spark.read.parquet(s"$path/_mig/r")
-            .select(explode(col("tags")).as("tag"),
-              col("bucket").cast("int").as("bucket"))
-            .distinct()
-            .write.mode(SaveMode.Overwrite).parquet(s"$path/t1")
-        val buckets = stagedBuckets
-          .map(k => k -> Seq(s"g1/r/bucket=$k")).toMap
-        ManifestIO.movePath(s"$path/_mig", s"$path/g1")
-        val m = StoreManifest(1L, n, buckets,
-          Some(if (stagedBuckets.nonEmpty && hasParquetFiles("t1"))
-            Seq("t1") else Nil))
-        writeStoreManifest(m)
-        sweepLegacyFiles()
-        m
-      }
+      ManifestIO.gc(path, Set.empty)
+      StoreManifest(0L, newStoreBuckets, Map.empty, Nil)
     }
-  }
-
-  /** Delete staged/never-published nested dirs (`_mig`, `g*`, tag-index
-    * `t*`) left by a migration that crashed before its manifest commit.
-    * Only ever called when NO manifest exists — with no manifest, no
-    * nested dir was ever published, so the flat root files are
-    * authoritative. */
-  private def sweepUnpublished(): Unit =
-    ManifestIO.listChildren(path)
-      .collect { case (nm, true) if nm == "_mig" || nm.matches("[gt]\\d+") => nm }
-      .foreach(nm => ManifestIO.deleteRecursively(s"$path/$nm"))
 
   private def writeStoreManifest(m: StoreManifest): Unit =
     ManifestIO.write(path,
       Map("version" -> "3", "gen" -> m.gen.toString,
-        "buckets" -> m.numBuckets.toString) ++
-        // key PRESENT (even empty) = index complete since creation;
-        // absent = pre-index store, subject ops fold every bucket
-        m.tagIdx.map(segs => "tagidx" -> segs.mkString(",")).toMap ++
+        "buckets" -> m.numBuckets.toString,
+        "tagidx" -> m.tagIdx.mkString(",")) ++
         m.buckets.map { case (k, v) => s"bucket.$k" -> v.mkString(",") } ++
         m.ranges.flatMap { case (seg, st) => Seq(
           s"rangemin.$seg" -> st.minAgent,
@@ -633,13 +507,6 @@ final class MnemoStore(val spark: SparkSession, val path: String,
       .collect { case (nm, _) if nm.startsWith("bucket=") =>
         nm.stripPrefix("bucket=").toInt }
       .toSet
-
-  /** Root-level parquet files absorbed by a legacy migration — delete
-    * whatever the manifest does not govern. Idempotent. */
-  private def sweepLegacyFiles(): Unit =
-    ManifestIO.listChildren(path)
-      .collect { case (nm, false) if !nm.startsWith(ManifestIO.FileName) => nm }
-      .foreach(nm => ManifestIO.deleteFile(s"$path/$nm"))
 
   /** ONE atomic store commit — the only way the store advances.
     * `replaced` carries the FULL replacement content of exactly
@@ -658,9 +525,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     * index job entirely, keeping point ops at their current cost). The
     * index is a safe over-approximation: pairs are never removed, so a
     * stale pair costs one extra folded bucket, never a missed
-    * redaction. A full fold (`replaceBuckets` covers every live bucket)
-    * on a pre-index store rebuilds the index from what it just read —
-    * the backfill path. */
+    * redaction. */
   private def commitWrite(m: StoreManifest, replaceBuckets: Set[Int],
       replaced: Option[DataFrame], appended: Option[DataFrame],
       replacedAddsTags: Boolean = false,
@@ -702,33 +567,25 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     // re-evaluating the caller's plans (which would re-run the chain
     // window/joins): the data is already on disk, tiny, and its
     // `bucket` partition column IS the pair's bucket — no re-hash
-    val fullFold = m.tagIdx.isEmpty && replaced.isDefined &&
-      m.buckets.keySet.subsetOf(replaceBuckets)
     val srcSubs: Seq[String] =
-      if (fullFold)
-        (if (rset.nonEmpty) Seq("r") else Nil) ++
-          (if (aset.nonEmpty) Seq("a") else Nil)
-      else if (m.tagIdx.isDefined)
-        (if (aset.nonEmpty) Seq("a") else Nil) ++
-          (if (replacedAddsTags && rset.nonEmpty) Seq("r") else Nil)
-      else Nil
+      (if (aset.nonEmpty) Seq("a") else Nil) ++
+        (if (replacedAddsTags && rset.nonEmpty) Seq("r") else Nil)
     val fresh: Seq[DataFrame] = srcSubs.map(sub =>
       spark.read.parquet(s"$path/g$gen/$sub")
         .select(explode(col("tags")).as("tag"),
           col("bucket").cast("int").as("bucket")))
     // fold the whole index back into one segment when the incremental
     // segments are over budget (same LSM bound as the data buckets)
-    val compacting = m.tagIdx.exists(segs =>
-      segs.length + (if (fresh.nonEmpty) 1 else 0) > Mnemo.MaxSegments)
-    val tagIdx: Option[Seq[String]] =
+    val compacting =
+      m.tagIdx.length + (if (fresh.nonEmpty) 1 else 0) > Mnemo.MaxSegments
+    val tagIdx: Seq[String] =
       if (fresh.isEmpty && !compacting) m.tagIdx
       else {
-        val base = if (compacting) Seq(readTagIdx(m.tagIdx.get)) else Nil
+        val base = if (compacting) Seq(readTagIdx(m.tagIdx)) else Nil
         (base ++ fresh).reduce(_ unionByName _).distinct()
           .write.mode(SaveMode.Overwrite).parquet(s"$path/t$gen")
         val seg = if (hasParquetFiles(s"t$gen")) Seq(s"t$gen") else Nil
-        if (fullFold || compacting) Some(seg)
-        else Some(m.tagIdx.getOrElse(Nil) ++ seg)
+        if (compacting) seg else m.tagIdx ++ seg
       }
 
     // ---- per-segment agent-range stats ----
@@ -754,9 +611,8 @@ final class MnemoStore(val spark: SparkSession, val path: String,
                 .cast("int")).as("pub"))
             .collect().flatMap { r =>
               // an all-null agent_id bucket has no usable range: record
-              // NO stat (the segment is always read — the same
-              // over-approximation discipline as a pre-range store)
-              // rather than crash on getString
+              // NO stat (the segment is always read) rather than crash
+              // on getString
               if (r.isNullAt(1) || r.isNullAt(2)) None
               else Some(s"g$gen/$sub/bucket=${r.get(0)}" ->
                 SegStats(r.getString(1), r.getString(2), r.getInt(3) == 1))
@@ -797,10 +653,9 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     // ride along until the next pipeline batch moves the pointer —
     // bounded waste, never a dangling verdict)
     val liveTops = buckets.values.flatten.map(_.takeWhile(_ != '/')).toSet ++
-      tagIdx.getOrElse(Nil).map(_.takeWhile(_ != '/')) ++
+      tagIdx.map(_.takeWhile(_ != '/')) ++
       extra.get("pverdict").map(_.takeWhile(_ != '/'))
     ManifestIO.gc(path, liveTops)
-    sweepLegacyFiles()
   }
 
   /** Committed (tag, bucket) index content. Only ever called with
@@ -818,29 +673,23 @@ final class MnemoStore(val spark: SparkSession, val path: String,
       nm.startsWith("part-") && nm.contains(".parquet") }
 
   /** Buckets that ever held a row carrying `tag`, per the inverted
-    * index — `None` when the store predates the index (fold every
-    * bucket; that full fold backfills the index for next time). */
-  private def tagBuckets(m: StoreManifest, tag: String): Option[Set[Int]] =
-    m.tagIdx.map { segs =>
-      if (segs.isEmpty) Set.empty[Int]
-      else readTagIdx(segs).filter(col("tag") === tag)
-        .select("bucket").distinct().collect().map(_.getInt(0)).toSet
-    }
+    * index. */
+  private def tagBuckets(m: StoreManifest, tag: String): Set[Int] =
+    if (m.tagIdx.isEmpty) Set.empty
+    else readTagIdx(m.tagIdx).filter(col("tag") === tag)
+      .select("bucket").distinct().collect().map(_.getInt(0)).toSet
 
   /** Bucket-pruned conditional rewrite: fold the touched buckets'
     * segments, apply `f`, replace only those buckets. `touched` is
     * computed AGAINST the live manifest (so id→bucket routing always
-    * uses the persisted bucket count, never the compiled default);
-    * `_ => None` means every bucket (the pre-index [[forgetSubject]]
-    * fallback). `addsTags` declares that `f` may ADD tags to rows
-    * (consolidate's state flip) so the commit indexes the replaced
-    * frame; rewrites that never add tags keep the index job off their
-    * path. */
-  private def mutateBuckets(touched: StoreManifest => Option[Set[Int]],
+    * uses the persisted bucket count, never the compiled default).
+    * `addsTags` declares that `f` may ADD tags to rows (consolidate's
+    * state flip) so the commit indexes the replaced frame; rewrites
+    * that never add tags keep the index job off their path. */
+  private def mutateBuckets(touched: StoreManifest => Set[Int],
       addsTags: Boolean = false)(f: DataFrame => DataFrame): Unit = {
-    val m = migrateIfLegacy()
-    val ks = touched(m).map(_.intersect(m.buckets.keySet))
-      .getOrElse(m.buckets.keySet)
+    val m = manifestForWrite()
+    val ks = touched(m).intersect(m.buckets.keySet)
     if (ks.isEmpty) return // no targeted bucket holds data: nothing to do
     commitWrite(m, ks, Some(f(readBuckets(m, ks))), None,
       replacedAddsTags = addsTags)
@@ -855,7 +704,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
         case (k, segs) if segs.length > Mnemo.MaxSegments => k
       }.toSet)
       .getOrElse(Set.empty)
-    if (over.nonEmpty) mutateBuckets(_ => Some(over))(identity)
+    if (over.nonEmpty) mutateBuckets(_ => over)(identity)
   }
 
   /** REMEMBER a batch: enrich → chain per (agent, thread) continuing
@@ -1049,7 +898,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
         // hit a hot band carries empty near_candidate_ids, and hiding
         // the flag would let a consumer read that as "no near-dups" —
         // the one misreading the index's over-approximation contract
-        // forbids. Unguarded/pre-guard indexes have no column → 0.
+        // forbids. Opted-out (unguarded) indexes have no column → 0.
         val satCol =
           if (joined.columns.contains("band_saturated"))
             coalesce(col("band_saturated"), lit(0))
@@ -1099,7 +948,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     * guarded and unguarded calls throws in [[ingestPipeline]] instead
     * of silently opening that window. */
   def clearPipelineBookkeeping(): Unit = {
-    val m = migrateIfLegacy()
+    val m = manifestForWrite()
     if (m.extra.contains("batch"))
       commitWrite(m, Set.empty, None, None, clearBookkeeping = true)
   }
@@ -1121,7 +970,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
   private def appendEnriched(reqs: DataFrame,
       bookkeeping: Option[(Long, DataFrame)] = None,
       clearBookkeeping: Boolean = false): Unit = {
-    val m = migrateIfLegacy()
+    val m = manifestForWrite()
     commitWrite(m, Set.empty, None, Some(enrichChain(reqs)),
       bookkeeping = bookkeeping, clearBookkeeping = clearBookkeeping)
     compactOverflow()
@@ -1178,7 +1027,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     * as-of recall and audits keep working (T1/S4). Rewrites only the
     * buckets the ids hash into. */
   def forget(agentId: String, ids: Seq[String], at: Timestamp): Unit =
-    mutateBuckets(m => Some(bucketsOf(ids, m.numBuckets)))(_.withColumn("deleted_at",
+    mutateBuckets(m => bucketsOf(ids, m.numBuckets))(_.withColumn("deleted_at",
       when(col("agent_id") === agentId && col("id").isin(ids.map(lit): _*) &&
         col("deleted_at").isNull, lit(at)).otherwise(col("deleted_at"))))
 
@@ -1188,7 +1037,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     * accumulated touch-set MERGE of SURVEY S7). */
   def touch(ids: Seq[String]): Unit = {
     val hit = col("id").isin(ids.map(lit): _*)
-    mutateBuckets(m => Some(bucketsOf(ids, m.numBuckets)))(_.withColumn("access_count",
+    mutateBuckets(m => bucketsOf(ids, m.numBuckets))(_.withColumn("access_count",
       when(hit, col("access_count") + 1).otherwise(col("access_count"))))
   }
 
@@ -1201,9 +1050,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     val hit = array_contains(col("tags"), subjectTag) && !col("redacted")
     // tag-addressed, not id-addressed — but the tag→bucket inverted
     // index (maintained by every commit, [[commitWrite]]) prunes the
-    // fold to the buckets that ever held the tag. A store predating
-    // the index folds every bucket ONCE; that full fold rebuilds the
-    // index in the same commit, so the next redaction prunes.
+    // fold to the buckets that ever held the tag
     mutateBuckets(m => tagBuckets(m, subjectTag))(_
       .withColumn("content", when(hit, "[REDACTED]").otherwise(col("content")))
       .withColumn("deleted_at", when(hit && col("deleted_at").isNull, lit(at))
@@ -1262,7 +1109,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
       def memberBuckets(n: Int): Set[Int] = members
         .select(Mnemo.bucketOf(col("mid"), n).as("b")).distinct()
         .collect().map(_.getInt(0)).toSet
-      mutateBuckets(m => Some(memberBuckets(m.numBuckets)),
+      mutateBuckets(m => memberBuckets(m.numBuckets),
         addsTags = true)(_ // the flip ADDS ConsolidatedTag → index it
         .join(broadcast(members), col("id") === col("mid"), "left")
         .withColumn("tags",
@@ -1352,10 +1199,8 @@ final class MnemoStore(val spark: SparkSession, val path: String,
   /** Operator-facing health view of this store and its maintained
     * satellites — see [[Mnemo.StoreHealth]]. Driver-side manifest
     * reads and listings only; launches no Spark job, so it is safe to
-    * poll from monitoring. A legacy (pre-v3) flat store reports
-    * version 0 with no bucket structure. */
+    * poll from monitoring. */
   def describe(): Mnemo.StoreHealth = {
-    recover()
     val aux = Map(
       "acl" -> aclExists, "checkpoints" -> ckptExists,
       "delegations" -> delegExists, "orientation" -> orientExists,
@@ -1368,16 +1213,15 @@ final class MnemoStore(val spark: SparkSession, val path: String,
           populatedBuckets = m.buckets.size,
           segments = segs.map(_.length).sum,
           maxBucketSegments = if (segs.isEmpty) 0 else segs.map(_.length).max,
-          tagIndexSegments = m.tagIdx.map(_.length),
+          tagIndexSegments = m.tagIdx.length,
           rangedSegments = m.ranges.size,
           pipelineBatch = m.extra.get("batch").map(_.toLong),
           auxStores = aux)
       case None =>
         Mnemo.StoreHealth(
-          version = if (legacyExists) 0 else 3,
-          generation = 0L, numBuckets = newStoreBuckets,
+          version = 3, generation = 0L, numBuckets = newStoreBuckets,
           populatedBuckets = 0, segments = 0, maxBucketSegments = 0,
-          tagIndexSegments = None, rangedSegments = 0,
+          tagIndexSegments = 0, rangedSegments = 0,
           pipelineBatch = None, auxStores = aux)
     }
   }
@@ -1524,7 +1368,11 @@ final class MnemoStore(val spark: SparkSession, val path: String,
 
   def checkpoints(): DataFrame =
     if (ckptExists) spark.read.parquet(ckptPath)
-    else spark.emptyDataFrame
+    else {
+      import spark.implicits._
+      Seq.empty[(Seq[String], String, String, Timestamp)]
+        .toDF("memory_refs", "name", "agent_id", "created_at")
+    }
 
   /** BRANCH: fork a new named ref from an existing checkpoint
     * (branch.rs:48-117) — the branch starts with the source's exact
@@ -1633,13 +1481,16 @@ final class MnemoStore(val spark: SparkSession, val path: String,
   private def attnExists: Boolean =
     ManifestIO.listChildren(attnPath).nonEmpty
 
+  /** The committed attention manifest (layout v1), written by the
+    * first [[attentionStateCompact]]. */
+  private def attnManifest: Option[Map[String, String]] =
+    ManifestIO.readVersioned(attnPath, 1)
+
   /** Committed data directory: manifest-backed after the first
-    * [[attentionStateCompact]]; the store root itself for fresh and
-    * legacy (pre-manifest) stores. */
-  private def attnDataDir: String = ManifestIO.read(attnPath) match {
-    case Some(m) if m.contains("data") => attnPath + "/" + m("data")
-    case _ => attnPath
-  }
+    * [[attentionStateCompact]]; before it, the store root itself,
+    * where puts append. */
+  private def attnDataDir: String =
+    attnManifest.fold(attnPath)(m => attnPath + "/" + m("data"))
 
   /** PUT an opaque state blob under (agent, key) — append-only; GET
     * resolves latest-per-key (W2), so history is retained. */
@@ -1666,9 +1517,8 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     * History is preserved; only the file count changes. */
   def attentionStateCompact(): Unit = {
     if (!attnExists) return
-    val manifest = ManifestIO.read(attnPath).getOrElse(Map.empty)
-    val gen = manifest.get("data")
-      .map(d => d.stripPrefix("g").toLong + 1).getOrElse(1L)
+    val gen = attnManifest
+      .map(m => m("data").stripPrefix("g").toLong + 1).getOrElse(1L)
     val dir = s"g$gen"
     val snapshot = spark.read.parquet(attnDataDir)
     // cluster the compacted generation by (agent_id, key, updated_at):
@@ -1680,11 +1530,10 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     snapshot.coalesce(1)
       .sortWithinPartitions(col("agent_id"), col("key"), col("updated_at"))
       .write.mode(SaveMode.Overwrite).parquet(s"$attnPath/$dir")
-    val committed = manifest ++ Map("version" -> "1", "data" -> dir)
-    ManifestIO.write(attnPath, committed)
+    ManifestIO.write(attnPath, Map("version" -> "1", "data" -> dir))
     ManifestIO.gc(attnPath, Set(dir))
-    // first compaction of a legacy root-file layout: sweep the absorbed
-    // root-level parquet files (readers already go through the manifest)
+    // first compaction: sweep the root-level put files it absorbed
+    // (readers already go through the manifest)
     ManifestIO.listChildren(attnPath)
       .collect { case (nm, false) if !nm.startsWith(ManifestIO.FileName) => nm }
       .foreach(nm => ManifestIO.deleteFile(s"$attnPath/$nm"))
@@ -1693,15 +1542,12 @@ final class MnemoStore(val spark: SparkSession, val path: String,
   /** Driver-side health view of the attention-KV satellite — manifest
     * read + one listing, no Spark job (the [[describe]] discipline,
     * satellite parity). */
-  def describeAttention(): Mnemo.AttentionHealth = {
-    val man = ManifestIO.read(attnPath)
+  def describeAttention(): Mnemo.AttentionHealth =
     Mnemo.AttentionHealth(
-      version = man.flatMap(_.get("version")).map(_.toInt)
-        .getOrElse(if (attnExists) 0 else 1),
+      version = 1,
       committedGeneration =
-        man.flatMap(_.get("data")).map(_.stripPrefix("g").toLong),
+        attnManifest.map(_("data").stripPrefix("g").toLong),
       dataFiles = ManifestIO.countDataFiles(attnDataDir))
-  }
 
   def attentionStateGet(agentId: String, key: String): Option[Array[Byte]] = {
     if (!attnExists) return None
@@ -1733,21 +1579,29 @@ final class MnemoStore(val spark: SparkSession, val path: String,
       .toDF("namespace", "key", "freq", "last_seen", "value", "tokens")
   }
 
-  /** Committed orientation state. Layout v2: per-namespace generation
-    * directories published by an atomic [[ManifestIO]] commit
-    * (`ns.<enc> -> <dir>` entries). Pre-manifest stores (the v1
-    * hive-partitioned layout) read as before and are migrated wholesale
-    * by the next [[orientationUpdate]]. */
-  def orientationState(): DataFrame =
-    ManifestIO.read(orientPath) match {
-      case Some(m) =>
-        val dirs = m.collect { case (k, v) if k.startsWith("ns.") =>
-          s"$orientPath/$v" }.toSeq
-        if (dirs.isEmpty) emptyOrientFrame
-        else spark.read.parquet(dirs: _*)
-      case None if orientExists => spark.read.parquet(orientPath)
-      case None => emptyOrientFrame
+  /** The committed orientation manifest. Layout v2: per-namespace
+    * generation directories published by an atomic [[ManifestIO]]
+    * commit (`ns.<enc> -> <dir>` entries). The retired v1 layout —
+    * hive `namespace=` partition dirs, no manifest — fails. */
+  private def orientManifest(): Option[Map[String, String]] =
+    ManifestIO.readVersioned(orientPath, 2).orElse {
+      if (ManifestIO.listChildren(orientPath).exists { case (nm, isDir) =>
+          isDir && nm.startsWith("namespace=") })
+        ManifestIO.unreadable(orientPath,
+          "1 (namespace= partition dirs, no manifest)", 2)
+      None
     }
+
+  /** Live namespace directories, relative to the orientation root. */
+  private def orientDirs(m: Map[String, String]): Seq[String] =
+    m.collect { case (k, v) if k.startsWith("ns.") => v }.toSeq
+
+  /** Committed orientation state; empty until the first commit. */
+  def orientationState(): DataFrame = {
+    val dirs = orientManifest().toSeq.flatMap(orientDirs)
+    if (dirs.isEmpty) emptyOrientFrame
+    else spark.read.parquet(dirs.map(d => s"$orientPath/$d"): _*)
+  }
 
   /** Distill a recall result into the namespace's context map: upsert
     * (freq bump + last_seen refresh) then evict to the token budget —
@@ -1770,66 +1624,36 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     val nsState = orientationState().filter(col("namespace") === namespace)
     val kept = OrientationCache.evict(
       OrientationCache.upsert(nsState, batch, nowUnix), budget, nowUnix)
-    val manifest = ManifestIO.read(orientPath).getOrElse(Map.empty)
-    // one-time migration of a v1 hive-partitioned store: snapshot every
-    // OTHER namespace into its own g1 directory, published in the same
-    // single manifest commit below
-    val migrated: Map[String, String] =
-      if (manifest.isEmpty && orientExists) {
-        val others = spark.read.parquet(orientPath)
-          .filter(col("namespace") =!= namespace)
-        others.select("namespace").distinct().collect().map(_.getString(0))
-          .map { ns =>
-            val dir = s"${encNs(ns)}-g1"
-            others.filter(col("namespace") === ns)
-              .write.mode(SaveMode.Overwrite).parquet(s"$orientPath/$dir")
-            s"ns.${encNs(ns)}" -> dir
-          }.toMap
-      } else Map.empty
+    val manifest = orientManifest().getOrElse(Map.empty)
     val key = s"ns.${encNs(namespace)}"
     val gen = manifest.get(key)
       .map(d => d.substring(d.lastIndexOf("-g") + 2).toLong + 1).getOrElse(1L)
     val dir = s"${encNs(namespace)}-g$gen"
     kept.write.mode(SaveMode.Overwrite).parquet(s"$orientPath/$dir")
-    val committed = manifest ++ migrated +
-      (key -> dir) + ("version" -> "2")
+    val committed = manifest + (key -> dir) + ("version" -> "2")
     ManifestIO.write(orientPath, committed)
-    ManifestIO.gc(orientPath,
-      committed.collect { case (k, v) if k.startsWith("ns.") => v }.toSet)
+    ManifestIO.gc(orientPath, orientDirs(committed).toSet)
   }
 
   /** Driver-side health view of the orientation cache satellite —
-    * manifest read (+ one listing on a legacy layout), no Spark job.
-    * Generation parsing is TOLERANT here: a hand-edited or foreign
+    * manifest read (plus one listing when none is committed), no Spark
+    * job. Generation parsing is TOLERANT here: a hand-edited or foreign
     * `ns.*` value without the `-g<N>` suffix reports generation 0 for
     * that entry instead of throwing from a health probe (the WRITE
     * path keeps the strict parse — mis-numbering a generation there
     * would corrupt the store, so it must fail loudly). */
   def describeOrientation(): Mnemo.OrientationHealth = {
     val genOf = """.*-g(\d+)$""".r
-    ManifestIO.read(orientPath) match {
-      case Some(m) =>
-        val dirs = m.collect { case (k, v) if k.startsWith("ns.") => v }.toSeq
-        Mnemo.OrientationHealth(
-          version = m.get("version").map(_.toInt).getOrElse(2),
-          namespaces = dirs.size,
-          maxGeneration =
-            if (dirs.isEmpty) 0L
-            else dirs.map {
-              case genOf(n) => n.toLong
-              case _ => 0L
-            }.max,
-          legacyLayout = false)
-      case None =>
-        // pre-manifest hive-partitioned layout: namespace= partition
-        // dirs ARE the namespaces; a never-written store is just empty
-        val nsDirs = ManifestIO.listChildren(orientPath)
-          .collect { case (nm, true) if nm.startsWith("namespace=") => nm }
-        Mnemo.OrientationHealth(
-          version = if (orientExists) 1 else 2,
-          namespaces = nsDirs.size, maxGeneration = 0L,
-          legacyLayout = orientExists)
-    }
+    val dirs = orientManifest().toSeq.flatMap(orientDirs)
+    Mnemo.OrientationHealth(
+      version = 2,
+      namespaces = dirs.size,
+      maxGeneration =
+        if (dirs.isEmpty) 0L
+        else dirs.map {
+          case genOf(n) => n.toLong
+          case _ => 0L
+        }.max)
   }
 
   /** Rendered map for one namespace, key-ascending (the reference's
@@ -1903,7 +1727,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
         s"got ${consolidated.memoryType}")
     val chained = enrichChain(reqFrame(Seq(consolidated.copy(
       tags = consolidated.tags ++ sourceIds.map(i => s"merged:$i")))))
-    val m = migrateIfLegacy()
+    val m = manifestForWrite()
     val ks = bucketsOf(sourceIds, m.numBuckets).intersect(m.buckets.keySet)
     val tombstoned = readBuckets(m, ks).withColumn("deleted_at",
       when(col("agent_id") === consolidated.agentId &&
@@ -1918,7 +1742,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     * TTL sweep (T4/S12 semantics) and the recall predicate's expiry leg
     * take it from there. */
   def ampExpire(agentId: String, ids: Seq[String], expiresAt: Timestamp): Unit =
-    mutateBuckets(m => Some(bucketsOf(ids, m.numBuckets)))(_.withColumn("expires_at",
+    mutateBuckets(m => bucketsOf(ids, m.numBuckets))(_.withColumn("expires_at",
       when(col("agent_id") === agentId && col("id").isin(ids.map(lit): _*),
         lit(expiresAt)).otherwise(col("expires_at"))))
 }

@@ -250,17 +250,25 @@ object MemFail {
   // Fault injection helpers (storage-level tampering)
   // -------------------------------------------------------------------
 
-  /** Storage-level tamper: rewrite one row's content in place, keeping
-    * its stored hashes — simulates bit-rot / a lost update between the
-    * write and the read path. The store stage's content/hash
-    * verification must catch it. */
+  /** Storage-level tamper: rewrite one row's content inside the
+    * committed segment that holds it, behind the manifest's back,
+    * keeping its stored hashes — simulates bit-rot / a lost update
+    * between the write and the read path. The store stage's
+    * content/hash verification must catch it. */
   def corruptContent(store: MnemoStore, id: String): Unit = {
-    val updated = store.table().withColumn("content",
-      when(col("id") === id, concat(col("content"), lit(" [CORRUPTED]")))
-        .otherwise(col("content")))
-    val tmp = store.path + ".tmp"
-    updated.write.mode(SaveMode.Overwrite).parquet(tmp)
-    store.spark.read.parquet(tmp).write.mode(SaveMode.Overwrite).parquet(store.path)
+    import org.apache.hadoop.fs.Path
+    val file = store.table().filter(col("id") === id)
+      .select(input_file_name()).head().getString(0)
+    val seg = new Path(file).getParent
+    val tmp = new Path(seg.getParent, "_" + seg.getName)
+    store.spark.read.schema(graft.api.Mnemo.StoreSchema).parquet(seg.toString)
+      .withColumn("content",
+        when(col("id") === id, concat(col("content"), lit(" [CORRUPTED]")))
+          .otherwise(col("content")))
+      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    val fs = seg.getFileSystem(store.spark.sessionState.newHadoopConf())
+    fs.delete(seg, true)
+    fs.rename(tmp, seg)
   }
 
   // -------------------------------------------------------------------

@@ -106,15 +106,11 @@ object SyncLoop {
       epoch: String = "", gen: Long = 0L)
 
   def readManifest(storePath: String): Option[Manifest] =
-    graft.api.ManifestIO.read(storePath).map { m =>
+    graft.api.ManifestIO.readVersioned(storePath, 1).map { m =>
       Manifest(m("batch_id").toLong, m("watermark").toLong,
         m.collect { case (k, v) if k.startsWith("part.") =>
           k.stripPrefix("part.").toInt -> v },
-        m.getOrElse("epoch", ""),
-        // pre-gen manifests named dirs data/b<id>; the g-prefixed names
-        // the counter produces can never collide with those, so 0 is a
-        // safe starting point for upgraded stores
-        m.getOrElse("gen", "0").toLong)
+        m("epoch"), m("gen").toLong)
     }
 
   private def writeManifest(storePath: String, m: Manifest): Unit =

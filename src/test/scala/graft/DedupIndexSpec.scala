@@ -204,38 +204,6 @@ class DedupIndexSpec extends SparkSpec {
       "the manifest of an unwindowed store must never grow an mw key")
   }
 
-  test("a v1 (position-row) store re-opens, routes v1 forever, and still detects its history") {
-    import spark.implicits._
-    val dir = freshDir()
-    // hand-build a v1-era store: position rows + a v1 manifest, the
-    // exact on-disk shape the pre-packing code committed
-    val m = 16000L
-    val hist = docs(1L -> base)
-    val enriched = graft.functions.DedupEnrich.withBandKeys(
-      graft.functions.DedupEnrich.withFpAndShingles(hist, "text"), "sh")
-    enriched.select(explode(
-        graft.functions.DedupEnrich.bloomPositions(col("fp"), lit(m))).as("pos"))
-      .distinct()
-      .write.parquet(s"$dir/g1/bloom")
-    enriched.select(explode(col("bands")).as("bk"), col("doc_id").as("prior_id"))
-      .write.parquet(s"$dir/g1/bands")
-    ManifestIO.write(dir, Map(
-      "version" -> "1", "m" -> m.toString, "gen" -> "1", "segs" -> "g1"))
-
-    val reopened = new DedupIndex(spark, dir, capacity = 1000)
-    val v = verdicts(reopened.ingest(docs(2L -> base)))
-    assert(v.head._2 == 1 && v.head._3 == List(1L),
-      s"v1 store must keep detecting its pre-packing history: $v")
-    val man = ManifestIO.read(dir).get
-    assert(man("version") == "1",
-      "a v1 store must stay v1 — mixed-encoding segments would mis-probe")
-    // the new generation must also be position rows, readable as such
-    val newSeg = man("segs").split(",").last
-    val cols = spark.read.parquet(s"$dir/$newSeg/bloom").columns.toSeq
-    assert(cols == Seq("pos"),
-      s"v1 fold must write position rows, got columns $cols")
-  }
-
   test("a replayed micro-batch returns the ORIGINAL verdicts and folds nothing (at-least-once -> exactly-once)") {
     val dir = freshDir()
     val idx = new DedupIndex(spark, dir, capacity = 1000)

@@ -282,6 +282,22 @@ class MnemoApiSpec extends SparkSpec {
     assert(store.mergeCheckpoints("feature", "main2") == Seq("m1", "m2", "m3"))
   }
 
+  test("a store with no checkpoint yet reads typed empty checkpoints: replay, merge and branch resolve") {
+    val store = freshStore()
+    seed(store)
+    val ck = store.checkpoints()
+    assert(ck.columns.toSeq == Seq("memory_refs", "name", "agent_id", "created_at"))
+    assert(ck.count() == 0)
+    assert(store.replay("x").count() == 0)
+    assert(store.mergeCheckpoints("a", "b").isEmpty)
+    store.branch("n", "x", "alice", ts("2024-01-05 10:00:00"))
+    // forking a missing checkpoint forks nothing, and the store stays
+    // readable and writable
+    assert(store.checkpoints().count() == 0)
+    store.checkpoint("ck", "alice", ts("2024-01-05 11:00:00"))
+    assert(store.replay("ck").count() > 0)
+  }
+
   test("forget_subject redacts content and tombstones but chains still verify (GDPR Redact)") {
     val store = freshStore()
     store.remember(Seq(
@@ -704,7 +720,7 @@ class MnemoApiSpec extends SparkSpec {
       h1.maxBucketSegments >= 1 &&
       h1.maxBucketSegments <= Mnemo.MaxSegments,
       s"bucket structure: $h1")
-    assert(h1.tagIndexSegments.isDefined, "current stores carry a tag index")
+    assert(h1.tagIndexSegments >= 1, "tagged rows land in the tag index")
     assert(h1.rangedSegments == h1.segments,
       s"every committed segment records its agent range: $h1")
     assert(h1.auxStores("acl") && h1.auxStores("checkpoints") &&
@@ -721,7 +737,7 @@ class MnemoApiSpec extends SparkSpec {
     val store = freshStore()
     // never-written satellites: structural defaults
     val o0 = store.describeOrientation()
-    assert(o0.namespaces == 0 && !o0.legacyLayout && o0.maxGeneration == 0L)
+    assert(o0.namespaces == 0 && o0.maxGeneration == 0L)
     val a0 = store.describeAttention()
     assert(a0.committedGeneration.isEmpty && a0.dataFiles == 0)
 
@@ -733,16 +749,16 @@ class MnemoApiSpec extends SparkSpec {
     store.orientationUpdate(hits("beta"), "ns-b", 2000L)
     store.orientationUpdate(hits("gamma"), "ns-a", 3000L)
     val o1 = store.describeOrientation()
-    assert(o1.version == 2 && o1.namespaces == 2 && o1.maxGeneration == 2L &&
-      !o1.legacyLayout, s"orientation health: $o1")
+    assert(o1.version == 2 && o1.namespaces == 2 && o1.maxGeneration == 2L,
+      s"orientation health: $o1")
 
     // attention: appends raise dataFiles; compaction folds to one and
     // commits a generation
     (1 to 3).foreach(i => store.attentionStatePut("alice", s"k$i",
       Array[Byte](1, 2), ts("2024-01-05 10:00:00")))
     val a1 = store.describeAttention()
-    assert(a1.dataFiles >= 3 && a1.committedGeneration.isEmpty,
-      s"attention pre-compaction: $a1")
+    assert(a1.version == 1 && a1.dataFiles >= 3 &&
+      a1.committedGeneration.isEmpty, s"attention pre-compaction: $a1")
     store.attentionStateCompact()
     val a2 = store.describeAttention()
     assert(a2.version == 1 && a2.committedGeneration.contains(1L),

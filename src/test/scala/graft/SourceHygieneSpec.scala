@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-level invariants of `src/main` that the compiler does not
-  * check: a scaladoc that attaches to the definition it describes, and
-  * one place that decides how the mains build their session. */
+  * check: a scaladoc that attaches to the definition it describes, one
+  * place that decides how the mains build their session, and one
+  * on-disk format per store (no legacy read or migration code). */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private val sources: Seq[(Path, IndexedSeq[String])] = {
@@ -50,6 +51,19 @@ class SourceHygieneSpec extends AnyFunSuite {
       if packing.findFirstIn(l).nonEmpty
     } yield s"$p:${i + 1}"
     assert(packs.size == 1, s"FrameUidStride multiplied in: ${packs.mkString(", ")}")
+  }
+
+  test("no store carries a legacy-format reader or a migration") {
+    val defName = """\bdef\s+([A-Za-z_]\w*)""".r
+    val offenders = for {
+      (p, lines) <- sources
+      (l, i) <- lines.zipWithIndex
+      if defName.findAllMatchIn(l).map(_.group(1).toLowerCase)
+        .exists(n => n.contains("legacy") || n.contains("migrat")) ||
+        l.contains("movePath(")
+    } yield s"$p:${i + 1}"
+    assert(offenders.isEmpty,
+      s"each store reads one on-disk format and fails on any other: ${offenders.mkString(", ")}")
   }
 
   test("only graft.Harness sets a session master") {

@@ -5,15 +5,14 @@ import java.sql.Timestamp
 
 import graft.api.{ManifestIO, Mnemo}
 import graft.api.Mnemo.RememberRequest
-import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
-/** Backward compatibility of the maintained stores (SURVEY §5 row 4;
-  * the reference pins a v0.3.4 db file in tests/migration_roundtrip.rs):
-  * a store written in the PREVIOUS on-disk layout must re-open under
-  * the current code, and the first write must migrate it to the
-  * manifest-committed layout without losing rows. Also pins the
-  * manifest version stamps and the crash-orphan sweep. */
+/** On-disk compatibility of the maintained stores: a store re-opens
+  * under a different compiled default (bucket count), the manifest
+  * commit protocols (rename and pointer) keep their crash guarantees,
+  * and crash orphans stay invisible until the next commit sweeps
+  * them. StoreFormatSpec pins that a store in any other on-disk format
+  * fails loudly. */
 class StoreCompatSpec extends SparkSpec {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
@@ -30,53 +29,6 @@ class StoreCompatSpec extends SparkSpec {
         createdAt = ts("2024-01-01 10:00:00")),
       RememberRequest("m2", "alice", "t1", "delta epsilon zeta tokens here",
         createdAt = ts("2024-01-02 10:00:00"))))
-
-  /** Write an orientation store in the v1 layout exactly as the old
-    * writer did: hive-partitioned by namespace, no manifest. */
-  private def writeLegacyOrientation(root: String): Unit = {
-    import spark.implicits._
-    Seq(
-      ("alice", "alpha", 3L, 1706745600L, "alpha", 2L),
-      ("alice", "beta", 1L, 1706745600L, "beta", 2L),
-      ("bob", "gamma", 5L, 1706745600L, "gamma", 2L))
-      .toDF("namespace", "key", "freq", "last_seen", "value", "tokens")
-      .write.mode(SaveMode.Overwrite).partitionBy("namespace").parquet(root)
-  }
-
-  test("legacy hive-partitioned orientation store re-opens, and the first update migrates it") {
-    val store = freshStore()
-    seed(store)
-    val root = store.path + "_orientation"
-    writeLegacyOrientation(root)
-
-    // re-open: the legacy layout reads through the current code path
-    assert(ManifestIO.read(root).isEmpty)
-    val legacy = store.orientationState()
-    assert(legacy.count() == 3)
-    assert(store.orientationRender("bob").select("freq").collect().head.getLong(0) == 5L)
-
-    // first update against one namespace migrates EVERY namespace into
-    // generation dirs behind one manifest commit
-    val hits = store.recall(
-      Mnemo.RecallRequest(strategy = "exact", agentId = Some("alice"), limit = 10),
-      ts("2024-02-01 00:00:00"))
-    store.orientationUpdate(hits, "alice", 1706832000L)
-
-    val manifest = ManifestIO.read(root).getOrElse(fail("manifest missing after migration"))
-    assert(manifest("version") == "2")
-    assert(manifest.contains("ns.alice") && manifest.contains("ns.bob"))
-    // bob's rows survived the migration byte-for-byte in content
-    val bob = store.orientationRender("bob").collect()
-    assert(bob.length == 1 && bob.head.getAs[Long]("freq") == 5L)
-    // alice's map merged the legacy rows with the new batch: alpha's
-    // legacy freq 3 must have been bumped, not reset
-    val alice = store.orientationRender("alice")
-      .select("key", "freq").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(alice("alpha") > 3L, s"legacy freq lost in migration: $alice")
-    // the legacy hive dirs are swept after the commit
-    assert(!Files.exists(Paths.get(root, "namespace=alice")))
-    assert(!Files.exists(Paths.get(root, "namespace=bob")))
-  }
 
   test("orphan generation dir (crash before manifest commit) is invisible and swept") {
     val store = freshStore()
@@ -102,6 +54,30 @@ class StoreCompatSpec extends SparkSpec {
     // the next committed update sweeps it
     store.orientationUpdate(hits, "alice", 1706832000L)
     assert(!Files.exists(Paths.get(root, "alice-g999")))
+  }
+
+  test("orientation: a crash in the FIRST update (orphan generation, no manifest) reads empty and the next update sweeps it") {
+    val store = freshStore()
+    seed(store)
+    val root = store.path + "_orientation"
+    // the crash shape of a first orientationUpdate: its generation dir
+    // was written, the manifest commit never happened
+    import spark.implicits._
+    Seq(("alice", "junk", 99L, 0L, "junk", 1L))
+      .toDF("namespace", "key", "freq", "last_seen", "value", "tokens")
+      .write.parquet(s"$root/alice-g1")
+    assert(ManifestIO.read(root).isEmpty)
+    assert(store.orientationState().count() == 0)
+    val h = store.describeOrientation()
+    assert(h.version == 2 && h.namespaces == 0, s"orientation health: $h")
+    val hits = store.recall(
+      Mnemo.RecallRequest(strategy = "exact", agentId = Some("alice"), limit = 10),
+      ts("2024-02-01 00:00:00"))
+    store.orientationUpdate(hits, "bob", 1706745600L)
+    assert(!Files.exists(Paths.get(root, "alice-g1")),
+      "the first committed update must sweep the crashed update's orphan")
+    assert(store.orientationRender("alice").count() == 0)
+    assert(store.orientationRender("bob").count() > 0)
   }
 
   test("legacy root-file attention store re-opens; compaction migrates it and preserves history") {
@@ -153,33 +129,6 @@ class StoreCompatSpec extends SparkSpec {
       .map(p => base.relativize(p).toString -> Files.size(p))
       .toMap
     finally walk.close()
-  }
-
-  test("legacy flat memories store re-opens; first mutation migrates to bucketed manifest layout") {
-    // produce an enriched store the CURRENT way, then flatten it to the
-    // pre-v3 layout (parquet files at the root, no manifest)
-    val donor = freshStore()
-    seed(donor)
-    val legacyDir = Files.createTempDirectory("compat-legacy").toFile
-    legacyDir.delete()
-    val legacy = legacyDir.getAbsolutePath
-    donor.table().write.parquet(legacy)
-    assert(ManifestIO.read(legacy).isEmpty)
-
-    val store = Mnemo.open(spark, legacy)
-    // reads work against the flat layout as-is
-    assert(store.table().count() == 2)
-    // first mutation migrates: manifest v3, rows intact, root files swept
-    store.forget("alice", Seq("m1"), ts("2024-03-01 00:00:00"))
-    val m = ManifestIO.read(legacy).getOrElse(fail("manifest missing after migration"))
-    assert(m("version") == "3")
-    assert(store.table().count() == 2)
-    assert(store.table().filter("id = 'm1' AND deleted_at IS NOT NULL").count() == 1)
-    assert(Files.list(Paths.get(legacy)).iterator().asScala
-      .filter(Files.isRegularFile(_))
-      .forall(_.getFileName.toString.startsWith(ManifestIO.FileName)))
-    // chains still verify end-to-end across the migration
-    assert(store.verifyChains().filter("NOT chain_valid").count() == 0)
   }
 
   test("point op rewrites only the buckets its ids hash into; untouched bucket files are byte-identical") {
@@ -264,6 +213,28 @@ class StoreCompatSpec extends SparkSpec {
     assert(store.table().count() == rows)
   }
 
+  test("memories: an orphan generation before the FIRST commit is invisible, reports v3, and the first commit sweeps it") {
+    val store = freshStore()
+    // the crash shape of a first remember: its append segment was
+    // written, the manifest commit never happened
+    import spark.implicits._
+    Seq(("junk", "x", "t1")).toDF("id", "content", "thread_id")
+      .write.parquet(s"${store.path}/g1/a/bucket=0")
+    val orphanFiles = Files.list(Paths.get(store.path, "g1", "a", "bucket=0"))
+      .iterator().asScala.map(_.getFileName.toString).toList
+    assert(ManifestIO.read(store.path).isEmpty)
+    assert(store.table().count() == 0)
+    val h = store.describe()
+    assert(h.version == 3 && h.generation == 0L && h.segments == 0,
+      s"a never-committed store is a current-format store: $h")
+    seed(store)
+    assert(store.table().count() == 2)
+    assert(store.table().filter("id = 'junk'").count() == 0)
+    orphanFiles.foreach(f => assert(
+      !Files.exists(Paths.get(store.path, "g1", "a", "bucket=0", f)),
+      s"orphan file $f survived the first commit"))
+  }
+
   test("store keeps its creation-time bucket count: point ops route correctly under a different compiled default") {
     // a store created with buckets=8 (simulating an old build, or a
     // cluster-scale deployment that raised the constant) must stay
@@ -299,38 +270,6 @@ class StoreCompatSpec extends SparkSpec {
       .foreach(f => assert(before(f) == after(f), s"file $f changed size"))
   }
 
-  test("crashed legacy migration (staged dirs, no manifest) self-heals: flat files stay authoritative") {
-    val donor = freshStore()
-    seed(donor)
-    val legacyDir = Files.createTempDirectory("compat-crash").toFile
-    legacyDir.delete()
-    val legacy = legacyDir.getAbsolutePath
-    donor.table().write.parquet(legacy)
-
-    // crash window A: staging dir written, rename never happened
-    import spark.implicits._
-    Seq(("junk", "x")).toDF("id", "content").write.parquet(s"$legacy/_mig/r/bucket=0")
-    // crash window B: rename happened, manifest write never did
-    Seq(("junk2", "y")).toDF("id", "content").write.parquet(s"$legacy/g1/r/bucket=0")
-    assert(ManifestIO.read(legacy).isEmpty)
-
-    val store = Mnemo.open(spark, legacy)
-    // reads serve the flat files and IGNORE the unpublished dirs — but
-    // never delete them (a concurrent writer could be staging them
-    // mid-migration; only the write path sweeps)
-    assert(store.table().count() == 2)
-    assert(store.table().filter("id IN ('junk','junk2')").count() == 0)
-    assert(Files.exists(Paths.get(legacy, "_mig")),
-      "a read must not delete staged dirs")
-    // the next mutation sweeps the crashed stage and re-migrates
-    store.forget("alice", Seq("m1"), ts("2024-03-01 00:00:00"))
-    assert(!Files.exists(Paths.get(legacy, "_mig")))
-    assert(ManifestIO.read(legacy).get("version") == "3")
-    assert(store.table().count() == 2)
-    assert(store.table().filter("id = 'm1' AND deleted_at IS NOT NULL").count() == 1)
-    assert(store.verifyChains().filter("NOT chain_valid").count() == 0)
-  }
-
   test("manifest write is an atomic replace: a reader mid-commit sees old or new, never partial") {
     val dir = Files.createTempDirectory("manifest-io").toString
     ManifestIO.write(dir, Map("version" -> "1", "data" -> "g1"))
@@ -339,30 +278,6 @@ class StoreCompatSpec extends SparkSpec {
     assert(ManifestIO.read(dir).get("data") == "g2")
     // the scratch file never survives a commit
     assert(!Files.exists(Paths.get(dir, ManifestIO.FileName + ".tmp")))
-  }
-
-  test("zero-row legacy flat store migrates without schema-inference crash and stays writable") {
-    // a legacy store whose parquet files hold 0 rows (e.g. everything
-    // hard-deleted pre-v3) — the staged migration segment then has no
-    // part files, and the tag-index read-back must not be attempted
-    val donor = freshStore()
-    val legacyDir = Files.createTempDirectory("compat-empty").toFile
-    legacyDir.delete()
-    val legacy = legacyDir.getAbsolutePath
-    donor.table().write.parquet(legacy) // empty frame, schema-bearing files
-    val store = Mnemo.open(spark, legacy)
-    assert(store.table().count() == 0)
-    // first mutation must not throw; the store then accepts writes
-    store.forget("alice", Seq("nothing"), ts("2024-03-01 00:00:00"))
-    seed(store)
-    assert(store.table().count() == 2)
-    val m = ManifestIO.read(legacy).getOrElse(fail("manifest missing"))
-    assert(m("version") == "3" && m.contains("tagidx"))
-    // and the index works on the fresh content
-    store.remember(Seq(RememberRequest("s1", "alice", "t1", "secret",
-      tags = Seq("subject:z"), createdAt = ts("2024-01-03 10:00:00"))))
-    store.forgetSubject("subject:z", ts("2024-03-02 00:00:00"))
-    assert(store.table().filter("redacted").count() == 1)
   }
 
   // ---- tag→bucket inverted index (forgetSubject's prune) ----
@@ -619,21 +534,6 @@ class StoreCompatSpec extends SparkSpec {
     assert(ManifestIO.read(dir).exists(_("k") == "healed"))
   }
 
-  test("pointer protocol: a rename-layout store migrates on its first forced pointer commit") {
-    val dir = Files.createTempDirectory("compat-pmig").toFile.getAbsolutePath
-    ManifestIO.write(dir, Map("version" -> "3", "k" -> "old"))
-    assert(new java.io.File(dir, ManifestIO.FileName).exists())
-    withConf("graft.manifest.protocol" -> "pointer") {
-      ManifestIO.write(dir, Map("version" -> "3", "k" -> "new"))
-    }
-    assert(ManifestIO.read(dir).exists(_("k") == "new"))
-    assert(!new java.io.File(dir, ManifestIO.FileName).exists(),
-      "the shadowed mutable manifest must be cleaned up by the migration commit")
-    // and the store is sticky-pointer from here on
-    ManifestIO.write(dir, Map("version" -> "3", "k" -> "newer"))
-    assert(ManifestIO.read(dir).exists(_("k") == "newer"))
-  }
-
   test("forgetSubject prunes to the tag's buckets via the inverted index") {
     val store = freshStore()
     val tagged = Seq("id-000", "id-037")
@@ -662,35 +562,6 @@ class StoreCompatSpec extends SparkSpec {
       .foreach(f => assert(before(f) == after(f), s"file $f changed size"))
     // chains still verify (redact keeps hashes)
     assert(store.verifyChains().filter("NOT chain_valid").count() == 0)
-  }
-
-  test("pre-index store folds every bucket ONCE, backfills the index, then prunes") {
-    val store = freshStore()
-    store.remember((0 until 64).map(i =>
-      RememberRequest(f"id-$i%03d", "alice", "t1", s"content number $i",
-        tags = if (i == 0) Seq("subject:a")
-               else if (i == 1) Seq("subject:b") else Nil,
-        createdAt = ts("2024-01-01 10:00:00"))))
-    // simulate a store written by a pre-index build: strip the tagidx
-    // key (and its segments' liveness is irrelevant — no key = unknown)
-    val m0 = ManifestIO.read(store.path).get
-    ManifestIO.write(store.path, m0 - "tagidx")
-    assert(!ManifestIO.read(store.path).get.contains("tagidx"))
-
-    // first subject redaction: cannot prune, folds everything — and the
-    // full fold rebuilds the index in the same commit
-    store.forgetSubject("subject:a", ts("2024-02-01 00:00:00"))
-    assert(store.table().filter("redacted").count() == 1)
-    val m1 = ManifestIO.read(store.path).get
-    assert(m1.contains("tagidx"), "full fold must backfill the tag index")
-
-    // second redaction prunes: only subject:b's bucket is rewritten
-    store.forgetSubject("subject:b", ts("2024-02-02 00:00:00"))
-    val m2 = ManifestIO.read(store.path).get
-    val touched = touchedBuckets(m1, m2)
-    assert(touched == routeOf(Seq("id-001")).map(b => s"bucket.$b"),
-      s"post-backfill redaction must be bucket-pruned, got $touched")
-    assert(store.table().filter("redacted").count() == 2)
   }
 
   test("tags added by a bucket rewrite (consolidation flip) enter the index") {

@@ -1,0 +1,155 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import java.sql.Timestamp
+
+import graft.api.{DedupIndex, ManifestIO, Mnemo}
+import graft.api.Mnemo.RememberRequest
+import graft.streaming.SyncLoop
+
+/** One on-disk format per store: every versioned store (memories v3,
+  * orientation v2, attention v1, dedup index v2, sync loop v1) reads
+  * exactly the format its writer produces, and a store in any other
+  * format — an older manifest `version`, or a pre-manifest root
+  * layout — fails loudly, naming the store path, the format found and
+  * the version this build reads. */
+class StoreFormatSpec extends SparkSpec {
+
+  private def ts(s: String): Timestamp = Timestamp.valueOf(s)
+
+  private def freshDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix).toFile
+    d.delete()
+    d.getAbsolutePath
+  }
+
+  private def seeded(): graft.api.MnemoStore = {
+    val store = Mnemo.open(spark, freshDir("format-store"))
+    store.remember(Seq(
+      RememberRequest("m1", "alice", "t1", "alpha beta gamma tokens here",
+        createdAt = ts("2024-01-01 10:00:00"))))
+    store
+  }
+
+  /** Re-stamp a committed manifest with another `version`. */
+  private def restamp(storePath: String, version: String): Unit =
+    ManifestIO.write(storePath, ManifestIO.read(storePath).get + ("version" -> version))
+
+  /** `body` must fail on the store at `storePath`, naming the path, the
+    * format found and the version this build reads. */
+  private def refuses(storePath: String, found: String, reads: Int)(
+      body: => Any): Unit = {
+    val e = intercept[IllegalStateException](body)
+    val msg = e.getMessage
+    assert(msg.contains(storePath), s"message must name the store path: $msg")
+    assert(msg.contains(s"version $found"), s"message must name the version found: $msg")
+    assert(msg.contains(s"only version $reads"), s"message must name the version read: $msg")
+  }
+
+  test("each versioned store refuses a manifest of an older version, naming the path and the version found") {
+    import spark.implicits._
+    // memories v3
+    val store = seeded()
+    restamp(store.path, "2")
+    refuses(store.path, "2", 3)(store.table())
+    refuses(store.path, "2", 3)(store.describe())
+    refuses(store.path, "2", 3)(store.remember(Seq(RememberRequest("m2", "alice",
+      "t1", "more", createdAt = ts("2024-01-02 10:00:00")))))
+
+    // orientation v2
+    val s2 = seeded()
+    val hits = Seq(("h1", "alpha content words here")).toDF("id", "content")
+    s2.orientationUpdate(hits, "ns-a", 1000L)
+    val orient = s2.path + "_orientation"
+    restamp(orient, "1")
+    refuses(orient, "1", 2)(s2.orientationState())
+    refuses(orient, "1", 2)(s2.describeOrientation())
+    refuses(orient, "1", 2)(s2.orientationUpdate(hits, "ns-a", 2000L))
+
+    // attention v1
+    s2.attentionStatePut("alice", "k", Array[Byte](1), ts("2024-01-05 10:00:00"))
+    s2.attentionStateCompact()
+    val attn = s2.path + "_attention"
+    restamp(attn, "0")
+    refuses(attn, "0", 1)(s2.attentionStateGet("alice", "k"))
+    refuses(attn, "0", 1)(s2.describeAttention())
+    refuses(attn, "0", 1)(s2.attentionStateCompact())
+
+    // dedup index v2
+    val idxPath = freshDir("format-idx")
+    val idx = new DedupIndex(spark, idxPath, capacity = 100)
+    idx.ingest(Seq(1L -> "some document text here").toDF("doc_id", "text")).collect()
+    restamp(idxPath, "1")
+    refuses(idxPath, "1", 2)(idx.describe())
+    refuses(idxPath, "1", 2)(
+      idx.ingest(Seq(2L -> "some document text here").toDF("doc_id", "text")))
+
+    // sync loop v1
+    val sync = freshDir("format-sync")
+    SyncLoop.applyBatch(Seq((1L, 1000L, 1.5)).toDF("user_id", "ts", "value"), sync, 0L)
+    restamp(sync, "0")
+    refuses(sync, "0", 1)(SyncLoop.readManifest(sync))
+    refuses(sync, "0", 1)(SyncLoop.readProfiles(spark, sync))
+  }
+
+  test("pre-manifest root layouts fail: flat parquet memories and namespace= orientation") {
+    import spark.implicits._
+    // memories: parquet files directly at the store root, no manifest
+    val flat = freshDir("format-flat")
+    seeded().table().write.parquet(flat)
+    val store = Mnemo.open(spark, flat)
+    refuses(flat, "0", 3)(store.table())
+    refuses(flat, "0", 3)(store.describe())
+    refuses(flat, "0", 3)(store.forget("alice", Seq("m1"), ts("2024-03-01 00:00:00")))
+    assert(ManifestIO.read(flat).isEmpty, "a refused store must not be written")
+
+    // orientation: hive namespace= partition dirs, no manifest
+    val s2 = seeded()
+    val orient = s2.path + "_orientation"
+    Seq(("alice", "alpha", 3L, 1706745600L, "alpha", 2L))
+      .toDF("namespace", "key", "freq", "last_seen", "value", "tokens")
+      .write.partitionBy("namespace").parquet(orient)
+    refuses(orient, "1", 2)(s2.orientationState())
+    refuses(orient, "1", 2)(s2.describeOrientation())
+    refuses(orient, "1", 2)(s2.orientationUpdate(
+      Seq(("h1", "alpha")).toDF("id", "content"), "alice", 1000L))
+    assert(ManifestIO.read(orient).isEmpty, "a refused store must not be written")
+  }
+
+  test("a pointer store whose only generation lacks the sentinel reads as never committed") {
+    withConf("graft.manifest.protocol" -> "pointer") {
+      val store = seeded()
+      val pdir = Paths.get(store.path, ManifestIO.PointerDir)
+      val gens = Files.list(pdir).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.endsWith(".properties"))
+      assert(gens.length == 1, s"one commit, one generation: ${gens.toList}")
+      // tear the only generation: cut the sentinel line off
+      val text = new String(Files.readAllBytes(gens.head), "ISO-8859-1")
+      val at = text.indexOf(ManifestIO.CommittedKey)
+      assert(at > 0)
+      Files.write(gens.head, text.substring(0, at).getBytes("ISO-8859-1"))
+      assert(ManifestIO.read(store.path).isEmpty)
+      assert(store.table().count() == 0)
+      assert(store.describe().generation == 0L)
+      // the next commit starts the store over and sweeps the torn
+      // commit's data dirs
+      store.remember(Seq(RememberRequest("m2", "alice", "t1", "fresh start",
+        createdAt = ts("2024-01-02 10:00:00"))))
+      assert(store.table().select("id").collect().map(_.getString(0)).toSeq == Seq("m2"))
+    }
+  }
+
+  test("forcing the pointer protocol onto a rename-protocol store fails instead of migrating it") {
+    val dir = freshDir("format-proto")
+    ManifestIO.write(dir, Map("version" -> "3", "k" -> "old"))
+    val e = intercept[IllegalStateException] {
+      withConf("graft.manifest.protocol" -> "pointer") {
+        ManifestIO.write(dir, Map("version" -> "3", "k" -> "new"))
+      }
+    }
+    assert(e.getMessage.contains(dir) && e.getMessage.contains(ManifestIO.FileName),
+      s"the refusal must name the store and its manifest: ${e.getMessage}")
+    assert(ManifestIO.read(dir).exists(_("k") == "old"))
+    assert(!Files.exists(Paths.get(dir, ManifestIO.PointerDir, "manifest-00000000000000000001.properties")))
+  }
+}

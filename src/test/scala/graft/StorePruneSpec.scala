@@ -114,24 +114,14 @@ class StorePruneSpec extends SparkSpec {
   }
 
   test("a granted row with a NULL scope stays visible through the grant leg") {
-    // a store written by an external/older writer may carry null
-    // scopes (the public API always sets one); the grant leg's
-    // complement filters must be null-safe — a bare !isin would null
-    // the row away, while the old OR-plan kept it. Planted via the
-    // legacy flat layout, the one surface that accepts foreign parquet.
-    val nullScoped = spark.createDataFrame(
-      java.util.Arrays.asList(
-        org.apache.spark.sql.Row("agent-9", "t0", "null-scope-row",
-          "externally written content", "episodic", null, 0.5f,
-          Seq.empty[String], ts(1L), null, false,
-          Seq.fill(64)(0.0f), "h", null, false, 0L, null, "h")),
-      Mnemo.StoreSchema)
-    val legacyDir = freshDir()
-    nullScoped.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(legacyDir)
-    val legacy = Mnemo.open(spark, legacyDir)
-    legacy.share(Seq("null-scope-row"), "agent-reader", ts(2L))
-    val visible = legacy.recallVisible("agent-reader",
+    // a caller may pass a null scope; the grant leg's complement
+    // filters must be null-safe — a bare !isin would null the row
+    // away, while the old OR-plan kept it
+    val store = Mnemo.open(spark, freshDir())
+    store.remember(Seq(RememberRequest("null-scope-row", "agent-9", "t0",
+      "externally written content", scope = null, createdAt = ts(1L))))
+    store.share(Seq("null-scope-row"), "agent-reader", ts(2L))
+    val visible = store.recallVisible("agent-reader",
       graft.api.Mnemo.RecallRequest(query = "", strategy = "exact", limit = 100),
       ts(999999999L))
     assert(visible.filter(col("id") === "null-scope-row").count() == 1,
