@@ -380,9 +380,10 @@ object BenchWrites {
     val dedupStateBytes = {
       import java.nio.file.{Files, Paths}
       import scala.jdk.CollectionConverters._
-      import graft.api.ManifestIO
+      import graft.api.{DedupIndex, ManifestIO}
       val root = Paths.get(lastDedupDir)
-      val segs = ManifestIO.read(lastDedupDir).get("segs").split(",").toSeq
+      val segs = ManifestIO.readVersioned(lastDedupDir, DedupIndex.Version)
+        .get("segs").split(",").toSeq
       segs.map { s =>
         val d = root.resolve(s).resolve("bloom")
         val ls = Files.list(d)

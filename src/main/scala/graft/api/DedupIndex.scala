@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.DedupEnrich
@@ -10,7 +10,7 @@ import graft.functions.DedupEnrich
   * Bloom positions and band keys inside every query, the accumulated
   * state persists as a maintained parquet store and each `ingest`
   * batch probes it, then folds itself in — one crash-atomic manifest
-  * commit per batch, the same [[ManifestIO]] protocol as the memory
+  * commit per batch through the [[StoreCommit]] core, like the memory
   * store, the profile sync loop, and the orientation cache.
   *
   * State = append-only generation dirs `g<N>/{bloom,bands}`:
@@ -20,7 +20,7 @@ import graft.functions.DedupEnrich
   *    ~64 bits a position row costs, merged by word-wise OR on
   *    compaction, probed by an equi-join on word_idx + a bit test. This
   *    is format version 2, the only one this build reads (the manifest
-  *    check is [[ManifestIO.readVersioned]]). The d8 QUERY keeps the
+  *    check is [[StoreCommit.read]]). The d8 QUERY keeps the
   *    position-set formulation
   *    deliberately — it is the oracle-checkable model of this state,
   *    cross-engine deterministic, and DedupSurfacesSpec pins that the
@@ -91,7 +91,7 @@ final class DedupIndex(val spark: SparkSession, val path: String,
   // and re-loading the properties file per derived value would put a
   // dozen driver file reads on the streaming hot path
   private def manifest: Option[Map[String, String]] =
-    ManifestIO.readVersioned(path, DedupIndex.Version)
+    StoreCommit.read(path, DedupIndex.Version)
 
   /** Slot count: the manifest's persisted value for an existing store,
     * the capacity-derived default only at creation. */
@@ -363,8 +363,7 @@ final class DedupIndex(val spark: SparkSession, val path: String,
     man match {
       case Some(m) => m -- Seq("gen", "msegs", "mhot", "mn")
       case None =>
-        Map("version" -> DedupIndex.Version.toString,
-          "m" -> slotsOf(None).toString, "n" -> "0")
+        Map("m" -> slotsOf(None).toString, "n" -> "0")
           .++(windowSlotsOf(None)
             .map(mw => Map("mw" -> mw.toString, "nw" -> "0"))
             .getOrElse(Map.empty))
@@ -403,9 +402,9 @@ final class DedupIndex(val spark: SparkSession, val path: String,
     * counts persisted while pending — the text family's exact
     * discipline, calibrated on the media key distribution. */
   def ingestMedia(batch: DataFrame): DataFrame = {
-    val man = manifest
+    val c = StoreCommit.open(path, DedupIndex.Version)
+    val man = c.committed
     val hconf = spark.sessionState.newHadoopConf()
-    val gen = man.flatMap(_.get("gen")).map(_.toLong).getOrElse(0L) + 1
     val msegs0 = liveMediaSegsOf(man)
     // the ONE key encoding (Multimodal.phashKeys — the same striped
     // keys the m3 batch guard blocks on), stringified into the shared
@@ -470,6 +469,7 @@ final class DedupIndex(val spark: SparkSession, val path: String,
       .orderBy("media_id")
       .localCheckpoint()
     // fold: one new generation dir on the MEDIA segment list
+    val gen = c.next()
     val newSeg = s"g$gen"
     val overBudget = msegs0.length + 1 > Mnemo.MaxSegments
     val mbandOut =
@@ -485,21 +485,20 @@ final class DedupIndex(val spark: SparkSession, val path: String,
         else freshCounts
       }
       else None
-    mbandOut.write.mode(SaveMode.Overwrite).parquet(s"$path/$newSeg/mbands")
-    mcntOut.foreach(_.write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/$newSeg/mcnt"))
+    c.write(newSeg, "mbands", mbandOut)
+    mcntOut.foreach(c.write(newSeg, "mcnt", _))
     val msegs = if (overBudget) Seq(newSeg) else msegs0 :+ newSeg
-    ManifestIO.write(path, textEntriesFor(man)
+    // live set = BOTH families' segments (a media fold must never
+    // sweep text generations, nor vice versa)
+    c.publish(textEntriesFor(man)
       ++ Map("gen" -> gen.toString, "msegs" -> msegs.mkString(","),
         "mn" -> (mnPrev + result.count()).toString)
       ++ mhotOpt.map(h => Map("mhot" -> h.toString)).getOrElse(
         if (mhotPending(man)) Map("mhot" -> DedupIndex.AutoMarker)
         // opt-out persists as mhot=0: a re-open must route opted-out
         // for life, never resurrect the guard (review finding)
-        else Map("mhot" -> "0")))
-    // live set = BOTH families' segments (a media fold must never
-    // sweep text generations, nor vice versa)
-    ManifestIO.gc(path, (liveSegsOf(man) ++ msegs).toSet)
+        else Map("mhot" -> "0")),
+      liveSegsOf(man) ++ msegs)
     keys.unpersist()
     result
   }
@@ -542,7 +541,8 @@ final class DedupIndex(val spark: SparkSession, val path: String,
 
   private def ingestInternal(batch: DataFrame,
       batchId: Option[Long]): DataFrame = {
-    val man = manifest
+    val c = StoreCommit.open(path, DedupIndex.Version)
+    val man = c.committed
     val lastBatch = man.flatMap(_.get("batch")).map(_.toLong)
     (batchId, lastBatch) match {
       case (Some(id), Some(lb)) if id == lb =>
@@ -570,7 +570,7 @@ final class DedupIndex(val spark: SparkSession, val path: String,
     val hconf = spark.sessionState.newHadoopConf()
     val bloomSt = bloomState(segs0, hconf)
     val bandSt = bandState(segs0, hconf)
-    val gen = man.flatMap(_.get("gen")).map(_.toLong).getOrElse(0L) + 1
+    val gen = c.next()
     val enriched = enrich(batch, m, mwOpt.isDefined).cache()
 
     // probe: Bloom membership = every one of the doc's distinct
@@ -792,17 +792,14 @@ final class DedupIndex(val spark: SparkSession, val path: String,
           .groupBy("word_idx").agg(expr("bit_or(bits)").as("bits"))
       else words
     }
-    bloomOut.write.mode(SaveMode.Overwrite).parquet(s"$path/$newSeg/bloom")
-    bandOut.write.mode(SaveMode.Overwrite).parquet(s"$path/$newSeg/bands")
-    bcntOut.foreach(_.write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/$newSeg/bcnt"))
-    wbloomOut.foreach(_.write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/$newSeg/wbloom"))
+    c.write(newSeg, "bloom", bloomOut)
+    c.write(newSeg, "bands", bandOut)
+    bcntOut.foreach(c.write(newSeg, "bcnt", _))
+    wbloomOut.foreach(c.write(newSeg, "wbloom", _))
     // replay bookkeeping: the verdict frame persists INSIDE the new
-    // generation dir, published by the same manifest rename — so "which
-    // batch committed" and "what it was told" are one atomic fact
-    batchId.foreach(_ => result.write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/$newSeg/verdict"))
+    // generation dir, published by the same manifest commit — so
+    // "which batch committed" and "what it was told" are one atomic fact
+    batchId.foreach(_ => c.write(newSeg, "verdict", result))
     val segs = if (overBudget) Seq(newSeg) else segs0 :+ newSeg
     // cumulative window-hash counter (same discipline as the doc
     // counter `n`): one O(batch) aggregate over the cached frame,
@@ -812,8 +809,10 @@ final class DedupIndex(val spark: SparkSession, val path: String,
       val r = enriched.agg(sum(size(col("ws")))).collect()(0)
       nwPrev + (if (r.isNullAt(0)) 0L else r.getLong(0))
     }
-    ManifestIO.write(path, Map(
-      "version" -> DedupIndex.Version.toString, "m" -> m.toString,
+    // the publish sweeps superseded generations and any crashed
+    // writer's orphans — BOTH families' live segments are off-limits
+    c.publish(Map(
+      "m" -> m.toString,
       "gen" -> gen.toString, "segs" -> segs.mkString(","),
       "n" -> (nPrev + result.count()).toString)
       ++ nwNew.map(v => Map("nw" -> v.toString)).getOrElse(Map.empty)
@@ -831,10 +830,8 @@ final class DedupIndex(val spark: SparkSession, val path: String,
       // the media family's state rides every text commit verbatim
       // (shared manifest, disjoint segment lists — see ingestMedia)
       ++ man.map(_.view.filterKeys(Set("msegs", "mhot", "mn")).toMap)
-        .getOrElse(Map.empty))
-    // sweep superseded generations and any crashed writer's orphans —
-    // BOTH families' live segments are off-limits
-    ManifestIO.gc(path, segs.toSet ++ liveMediaSegsOf(man))
+        .getOrElse(Map.empty),
+      segs ++ liveMediaSegsOf(man))
     enriched.unpersist()
     result
   }
@@ -913,7 +910,7 @@ final class DedupIndex(val spark: SparkSession, val path: String,
     }
     DedupIndex.Health(
       version = DedupIndex.Version,
-      generation = man.flatMap(_.get("gen")).map(_.toLong).getOrElse(0L),
+      generation = StoreCommit.generation(man),
       segments = segs.length,
       bloomSlots = m,
       bloomFill = bloomFill,

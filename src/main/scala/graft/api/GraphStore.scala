@@ -2,8 +2,9 @@ package graft.api
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Bitemporal knowledge-graph edge store (reference: mnemo-graph —
   * model.rs:55-70 `valid_at`, store/duckdb.rs:101-111 `close_edge`,
@@ -13,6 +14,12 @@ import org.apache.spark.sql.functions._
   * SUPERSESSION WRITE: it stamps valid_to on the currently-open row
   * and is idempotent — re-closing never moves the timestamp (the
   * reference updates only rows `WHERE valid_to IS NULL`).
+  *
+  * Store layout: the [[SegmentTable]] append form of the
+  * [[StoreCommit]] core — each insert publishes one segment
+  * generation `g<N>`, each close folds the table into one; a crash
+  * leaves the previous generation committed. A root in the old
+  * flat-parquet layout fails to open.
   *
   * Spark-first: closes are one conditional column rewrite over the
   * edge table (no row-by-row probes); as-of reads are pure predicates,
@@ -25,39 +32,32 @@ import org.apache.spark.sql.functions._
   */
 final class GraphStore(val spark: SparkSession, val path: String) {
 
-  private def exists: Boolean =
-    ManifestIO.listChildren(path).nonEmpty
+  private val table = new SegmentTable(spark, path, StructType.fromDDL(
+    "id STRING, src STRING, dst STRING, relation STRING, " +
+      "valid_from TIMESTAMP, valid_to TIMESTAMP, confidence DOUBLE, " +
+      "recorded_at TIMESTAMP"))
 
-  def edges(): DataFrame =
-    if (exists) spark.read.parquet(path)
-    else {
-      import spark.implicits._
-      Seq.empty[(String, String, String, String, Timestamp, Option[Timestamp], Double, Timestamp)]
-        .toDF("id", "src", "dst", "relation", "valid_from", "valid_to",
-          "confidence", "recorded_at")
-    }
+  def edges(): DataFrame = table.read()
 
   def insertEdge(id: String, src: String, dst: String, relation: String,
       validFrom: Timestamp, validTo: Option[Timestamp], confidence: Double,
       recordedAt: Timestamp): Unit = {
     import spark.implicits._
-    Seq((id, src, dst, relation, validFrom, validTo, confidence, recordedAt))
-      .toDF("id", "src", "dst", "relation", "valid_from", "valid_to",
-        "confidence", "recorded_at")
-      .write.mode(SaveMode.Append).parquet(path)
+    table.append(
+      Seq((id, src, dst, relation, validFrom, validTo, confidence, recordedAt))
+        .toDF("id", "src", "dst", "relation", "valid_from", "valid_to",
+          "confidence", "recorded_at"))
   }
 
   /** close_edge: stamp valid_to on the OPEN row of `edgeId` only —
     * closing an already-closed edge is a no-op (idempotent), exactly
-    * the reference's `WHERE id = ? AND valid_to IS NULL` update. */
-  def closeEdge(edgeId: String, closedAt: Timestamp): Unit = {
-    val updated = edges().withColumn("valid_to",
+    * the reference's `WHERE id = ? AND valid_to IS NULL` update. The
+    * rewrite folds every segment into one new generation; the live
+    * files are never touched before the manifest moves. */
+  def closeEdge(edgeId: String, closedAt: Timestamp): Unit =
+    table.rewrite(_.withColumn("valid_to",
       when(col("id") === edgeId && col("valid_to").isNull, lit(closedAt))
-        .otherwise(col("valid_to")))
-    val tmp = path + ".tmp"
-    updated.write.mode(SaveMode.Overwrite).parquet(tmp)
-    spark.read.parquet(tmp).write.mode(SaveMode.Overwrite).parquet(path)
-  }
+        .otherwise(col("valid_to"))))
 
   /** Edges outgoing from `node` that are fact-valid at `asOf`
     * (valid_from <= asOf < valid_to, null = open), ordered by
@@ -73,13 +73,13 @@ final class GraphStore(val spark: SparkSession, val path: String) {
     * discipline): presence + file count are driver-side listings;
     * edge counts are ONE count aggregate over two columns. */
   def describe(): GraphStore.Health =
-    if (!exists) GraphStore.Health(exists = false, 0L, 0L, 0)
+    if (!table.committed) GraphStore.Health(exists = false, 0L, 0L, 0)
     else {
       val r = edges()
         .agg(count(lit(1)), count(when(col("valid_to").isNull, 1)))
         .collect()(0)
       GraphStore.Health(exists = true, r.getLong(0), r.getLong(1),
-        ManifestIO.countDataFiles(path))
+        table.dataFiles)
     }
 
   /** Depth-bounded reachability over edges valid at `asOf`: iterative
@@ -135,8 +135,9 @@ final class GraphStore(val spark: SparkSession, val path: String) {
 
 object GraphStore {
   /** [[GraphStore.describe]]'s report: total vs still-open (valid_to
-    * null) edges, plus the append-file count (small-files pressure —
-    * [[GraphStore.closeEdge]]'s rewrite folds them). */
+    * null) edges, plus the live data files across the committed
+    * segments (small-files pressure — [[GraphStore.closeEdge]]'s
+    * rewrite and the segment bound fold them). */
   final case class Health(
       exists: Boolean, edges: Long, openEdges: Long, dataFiles: Int)
 

@@ -4,19 +4,21 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Atomic manifest commits for maintained parquet stores.
+/** Atomic manifest commits for maintained parquet stores — the publish
+  * protocol underneath the [[StoreCommit]] core, which is its one
+  * writer.
   *
-  * A maintained store (memory store, profile sync, orientation cache,
-  * attention KV, dedup index) is a set of immutable data directories
-  * plus ONE `manifest.properties` file naming the currently-committed
-  * directory per partition/namespace. Writers produce new directories
-  * off to the side, then publish them with a single atomic rename of
-  * the manifest — a crash at any point leaves the previous manifest
-  * (and the directories it references) fully intact, and uncommitted
-  * directories are swept by [[gc]]. Readers see either the old or the
-  * new committed state, never a half-written mix. Single-writer per
-  * store, like the reference's embedded engine (storage/duckdb.rs
-  * single connection).
+  * A maintained store (memory store with its acl, checkpoint and
+  * delegation tables, profile sync, orientation cache, attention KV,
+  * dedup index, quality model, graph edges) is a set of immutable data
+  * directories plus ONE manifest naming the currently-committed
+  * directories. Writers produce new directories off to the side, then
+  * publish them with a single atomic manifest commit — a crash at any
+  * point leaves the previous manifest (and the directories it
+  * references) fully intact, and uncommitted directories are swept by
+  * [[gc]]. Readers see either the old or the new committed state,
+  * never a half-written mix. Single-writer per store, like the
+  * reference's embedded engine (storage/duckdb.rs single connection).
   *
   * Every operation resolves the Hadoop [[FileSystem]] for the path's
   * SCHEME — the same filesystem Spark's data I/O resolves — so the
@@ -80,9 +82,9 @@ import org.apache.spark.sql.SparkSession
   * protocol for life: forcing the pointer protocol onto a store that
   * carries a rename-protocol manifest fails instead of migrating it.
   *
-  * Every versioned store parses its manifest through
-  * [[readVersioned]]: each store reads and writes exactly one on-disk
-  * format, and a manifest of any other version fails loudly.
+  * Every store parses its manifest through [[readVersioned]] (by way
+  * of [[StoreCommit.read]]): each store reads and writes exactly one
+  * on-disk format, and a manifest of any other version fails loudly.
   *
   * Any OTHER scheme is refused at commit time unless the pointer
   * protocol is forced: atomicity of publish visibility is the
@@ -442,20 +444,25 @@ object ManifestIO {
     (fs, pdir, pointerGens(fs, pdir))
   }
 
-  /** Post-commit sweep: delete any immediate subdirectory of the store
-    * that is not referenced by `live` — orphans from crashed writes and
-    * superseded generations. */
+  /** Post-commit sweep: delete every child of the store that `live`
+    * does not reference — orphans from crashed writes, superseded
+    * generations, and root-level files other than the manifest's own.
+    * `live` holds paths relative to the store root; a directory that
+    * holds live paths deeper down (`data/` for `data/g3`) is swept the
+    * same way, one level in. */
   def gc(storePath: String, live: Set[String]): Unit = {
-    val root = new Path(storePath)
-    val fs = fsOf(root)
-    if (!fs.exists(root) || !fs.getFileStatus(root).isDirectory) return
-    fs.listStatus(root)
-      .filter(_.isDirectory)
-      // the pointer-protocol generation dir is never a data dir a
-      // manifest references — it IS the manifest
-      .filterNot(st => live.contains(st.getPath.getName) ||
-        st.getPath.getName == PointerDir)
-      .foreach(st => fs.delete(st.getPath, true))
+    def sweep(rel: String): Unit =
+      listChildren(s"$storePath/$rel").foreach { case (nm, isDir) =>
+        val child = rel + nm
+        // the pointer-protocol generation dir is never a data dir a
+        // manifest references — it IS the manifest
+        if (live(child) || rel.isEmpty &&
+            (nm == PointerDir || nm.startsWith(FileName))) ()
+        else if (isDir && live.exists(_.startsWith(child + "/")))
+          sweep(child + "/")
+        else deleteRecursively(s"$storePath/$child")
+      }
+    sweep("")
   }
 
   // ---- shared driver-side FS helpers (the store implementations'

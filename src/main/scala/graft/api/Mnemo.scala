@@ -8,6 +8,7 @@ import graft.functions.{HashChain, TextOps, VectorOps}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The reference's whole-operation API surface (SURVEY §2.11 — MCP tools
   * `remember` / `recall` / `forget` / `share` / `verify`, engine passes)
@@ -295,12 +296,12 @@ object Mnemo {
 /** A parquet-backed memory store with the reference's operation set.
   *
   * On-disk layout (v3): [[Mnemo.NumBuckets]] hash buckets of immutable
-  * segment directories published by atomic [[ManifestIO]] commits —
+  * segment directories published by atomic [[StoreCommit]] commits —
   * appends cost O(new rows), id-addressed point ops cost O(touched
   * buckets), and at no crash point is committed data unreachable.
   * Single writer per store path (the reference's embedded-engine
   * discipline). A store in any other layout fails to open
-  * ([[ManifestIO.readVersioned]]). */
+  * ([[StoreCommit.read]]). */
 final class MnemoStore(val spark: SparkSession, val path: String,
     newStoreBuckets: Int = Mnemo.NumBuckets) {
 
@@ -317,15 +318,15 @@ final class MnemoStore(val spark: SparkSession, val path: String,
   //                                tag-addressed redactions)
   //
   // Every mutation writes fresh segment directories and publishes them
-  // with ONE atomic manifest rename (the SyncLoop/orientation protocol,
-  // ManifestIO). Appends add an `a` segment per touched bucket (O(new
+  // with ONE atomic manifest commit (the StoreCommit core every
+  // maintained store shares). Appends add an `a` segment per touched bucket (O(new
   // rows) I/O); point ops (forget/touch/ampExpire, the consolidate tag
   // flip) fold ONLY the buckets their ids hash into and replace them
   // with an `r` segment — a forget of k ids rewrites ≤ min(k, NumBuckets)
   // buckets, not the store (the reference's per-row UPDATE shape,
   // storage/duckdb.rs:190-244, re-expressed as bucket-pruned rewrites).
   // A crash at any point leaves the previous manifest governing complete
-  // data; orphans are swept by the next commit's gc. Single writer per
+  // data; orphans are swept by the next commit. Single writer per
   // store path, like the reference's embedded engine.
 
   /** Parsed manifest: global generation counter, the bucket count the
@@ -369,11 +370,15 @@ final class MnemoStore(val spark: SparkSession, val path: String,
       a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) <= 0
 
-  /** The committed manifest (layout v3). The retired pre-manifest
-    * layout — flat parquet files at the store root — fails. */
-  private def readStoreManifest(): Option[StoreManifest] =
-    ManifestIO.readVersioned(path, 3) match {
-      case Some(m) => Some(StoreManifest(m("gen").toLong, m("buckets").toInt,
+  /** The committed manifest (layout v3) — a never-committed store
+    * reads as an empty one with a complete (empty) tag index; any other
+    * layout fails ([[StoreCommit.read]]). */
+  private def readStoreManifest(): StoreManifest =
+    parseManifest(StoreCommit.read(path, 3))
+
+  private def parseManifest(man: Option[Map[String, String]]): StoreManifest =
+    man.fold(StoreManifest(0L, newStoreBuckets, Map.empty, Nil)) { m =>
+      StoreManifest(StoreCommit.generation(Some(m)), m("buckets").toInt,
         m.collect { case (k, v) if k.startsWith("bucket.") =>
           k.stripPrefix("bucket.").toInt ->
             v.split(",").filter(_.nonEmpty).toSeq },
@@ -387,12 +392,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
           seg -> SegStats(mn, mx, pub == "1")
         }.toMap,
         m.collect { case (k, v) if k == "batch" || k == "pverdict" =>
-          k -> v }))
-      case None =>
-        if (ManifestIO.listChildren(path).exists { case (nm, isDir) =>
-            !isDir && nm.endsWith(".parquet") })
-          ManifestIO.unreadable(path, "0 (flat parquet files at the store root)", 3)
-        None
+          k -> v })
     }
 
   /** Committed content of the given buckets — only their segment dirs
@@ -427,40 +427,39 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     * the batch's agent set — at scale a per-batch profile must scan
     * the WRITING agents' data, never the whole store. */
   private def agentScopedTableMulti(agentIds: Seq[String],
-      keepPublic: Boolean): DataFrame =
-    readStoreManifest() match {
-      case Some(m) =>
-        val dirs = m.buckets.values.flatten.toSeq.filter { rel =>
-          m.ranges.get(rel) match {
-            case Some(st) =>
-              agentIds.exists(a =>
-                utf8Lte(st.minAgent, a) && utf8Lte(a, st.maxAgent)) ||
-                (keepPublic && st.hasPublic)
-            case None => true
-          }
-        }
-        if (dirs.isEmpty) emptyTable()
-        else spark.read.schema(Mnemo.StoreSchema)
-          .parquet(dirs.map(rel => s"$path/$rel"): _*)
-      case None => emptyTable()
+      keepPublic: Boolean): DataFrame = {
+    val m = readStoreManifest()
+    val dirs = m.buckets.values.flatten.toSeq.filter { rel =>
+      m.ranges.get(rel) match {
+        case Some(st) =>
+          agentIds.exists(a =>
+            utf8Lte(st.minAgent, a) && utf8Lte(a, st.maxAgent)) ||
+            (keepPublic && st.hasPublic)
+        case None => true
+      }
     }
+    if (dirs.isEmpty) emptyTable()
+    else spark.read.schema(Mnemo.StoreSchema)
+      .parquet(dirs.map(rel => s"$path/$rel"): _*)
+  }
 
   /** Current table including tombstones. A never-written store returns
     * an EMPTY frame carrying the full enriched schema (see
     * [[Mnemo.StoreSchema]]) so conditional mutations
     * (forget/touch/ampExpire) and reads resolve their columns instead
     * of failing analysis on a schemaless frame. */
-  def table(): DataFrame =
-    readStoreManifest().fold(emptyTable())(m => readBuckets(m, m.buckets.keySet))
+  def table(): DataFrame = {
+    val m = readStoreManifest()
+    readBuckets(m, m.buckets.keySet)
+  }
 
   /** Committed rows restricted to the buckets the given ids hash into
     * — the point-read shape every id-addressed mutation already uses,
     * exposed to the read path (the grant leg of [[recallVisible]]). */
-  private def tableForIds(ids: Seq[String]): DataFrame =
-    readStoreManifest().fold(emptyTable()) { m =>
-      val ks = bucketsOf(ids, m.numBuckets).intersect(m.buckets.keySet)
-      if (ks.isEmpty) emptyTable() else readBuckets(m, ks)
-    }
+  private def tableForIds(ids: Seq[String]): DataFrame = {
+    val m = readStoreManifest()
+    readBuckets(m, bucketsOf(ids, m.numBuckets))
+  }
 
   /** Buckets a set of ids hashes into, computed by evaluating the SAME
     * Catalyst expression the writer routes with ([[Mnemo.bucketOf]] is
@@ -478,27 +477,23 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     }.toSet
   }
 
-  /** Manifest to mutate against. A never-committed store starts from
-    * an empty one with a complete (empty) tag index; with no manifest
-    * no subdirectory was ever published, so whatever a crashed first
-    * commit left behind is swept before the first write. */
-  private def manifestForWrite(): StoreManifest =
-    readStoreManifest().getOrElse {
-      ManifestIO.gc(path, Set.empty)
-      StoreManifest(0L, newStoreBuckets, Map.empty, Nil)
-    }
+  /** A commit and the manifest it mutates against (whatever a crashed
+    * commit left behind is cleared or swept by the core). */
+  private def openWrite(): (StoreCommit, StoreManifest) = {
+    val c = StoreCommit.open(path, 3)
+    (c, parseManifest(c.committed))
+  }
 
-  private def writeStoreManifest(m: StoreManifest): Unit =
-    ManifestIO.write(path,
-      Map("version" -> "3", "gen" -> m.gen.toString,
-        "buckets" -> m.numBuckets.toString,
-        "tagidx" -> m.tagIdx.mkString(",")) ++
-        m.buckets.map { case (k, v) => s"bucket.$k" -> v.mkString(",") } ++
-        m.ranges.flatMap { case (seg, st) => Seq(
-          s"rangemin.$seg" -> st.minAgent,
-          s"rangemax.$seg" -> st.maxAgent,
-          s"rangepub.$seg" -> (if (st.hasPublic) "1" else "0")) } ++
-        m.extra)
+  private def manifestEntries(m: StoreManifest): Map[String, String] =
+    Map("gen" -> m.gen.toString,
+      "buckets" -> m.numBuckets.toString,
+      "tagidx" -> m.tagIdx.mkString(",")) ++
+      m.buckets.map { case (k, v) => s"bucket.$k" -> v.mkString(",") } ++
+      m.ranges.flatMap { case (seg, st) => Seq(
+        s"rangemin.$seg" -> st.minAgent,
+        s"rangemax.$seg" -> st.maxAgent,
+        s"rangepub.$seg" -> (if (st.hasPublic) "1" else "0")) } ++
+      m.extra
 
   /** Bucket subdirs a just-finished write actually produced (a local
     * listing — exact, and cheaper than a count job per bucket). */
@@ -514,8 +509,8 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     * `appended` carries new rows only, routed to their hash buckets. A
     * bucket may appear on both sides (replacement segment + append
     * segment in the same generation — what makes [[ampMerge]] atomic).
-    * Data lands in `g<gen>` first; the manifest rename publishes it;
-    * gc then drops superseded generations.
+    * Data lands in `g<gen>` first; the core's publish commits it and
+    * sweeps superseded generations.
     *
     * The commit also maintains the tag→bucket inverted index
     * ([[forgetSubject]]'s prune): appended rows always contribute their
@@ -526,12 +521,13 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     * index is a safe over-approximation: pairs are never removed, so a
     * stale pair costs one extra folded bucket, never a missed
     * redaction. */
-  private def commitWrite(m: StoreManifest, replaceBuckets: Set[Int],
+  private def commitWrite(c: StoreCommit, m: StoreManifest,
+      replaceBuckets: Set[Int],
       replaced: Option[DataFrame], appended: Option[DataFrame],
       replacedAddsTags: Boolean = false,
       bookkeeping: Option[(Long, DataFrame)] = None,
       clearBookkeeping: Boolean = false): Unit = {
-    val gen = m.gen + 1
+    val gen = c.next()
     // Rows land sorted by (agent_id, id) WITHIN each bucket file: the
     // store's dominant access key is agent_id (every reference storage
     // op filters on it, storage/duckdb.rs:262-328), but ids hash-mix
@@ -545,10 +541,10 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     // required ordering (no second sort), and file counts are
     // unchanged — untouched buckets keep byte-identical files.
     def writeSeg(df: DataFrame, sub: String): Unit =
-      df.withColumn("bucket", Mnemo.bucketOf(col("id"), m.numBuckets))
-        .sortWithinPartitions(col("bucket"), col("agent_id"), col("id"))
-        .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-        .parquet(s"$path/g$gen/$sub")
+      c.write(s"g$gen", sub,
+        df.withColumn("bucket", Mnemo.bucketOf(col("id"), m.numBuckets))
+          .sortWithinPartitions(col("bucket"), col("agent_id"), col("id")),
+        "bucket")
     replaced.foreach(writeSeg(_, "r"))
     appended.foreach(writeSeg(_, "a"))
     val rset = if (replaced.isDefined) presentBuckets(s"g$gen", "r") else Set.empty[Int]
@@ -582,8 +578,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
       if (fresh.isEmpty && !compacting) m.tagIdx
       else {
         val base = if (compacting) Seq(readTagIdx(m.tagIdx)) else Nil
-        (base ++ fresh).reduce(_ unionByName _).distinct()
-          .write.mode(SaveMode.Overwrite).parquet(s"$path/t$gen")
+        c.write(s"t$gen", "", (base ++ fresh).reduce(_ unionByName _).distinct())
         val seg = if (hasParquetFiles(s"t$gen")) Seq(s"t$gen") else Nil
         if (compacting) seg else m.tagIdx ++ seg
       }
@@ -632,7 +627,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     // do not change)
     val extra = bookkeeping match {
       case Some((bid, verdicts)) =>
-        verdicts.write.mode(SaveMode.Overwrite).parquet(s"$path/g$gen/v")
+        c.write(s"g$gen", "v", verdicts)
         Map("batch" -> bid.toString, "pverdict" -> s"g$gen/v")
       // only clearPipelineBookkeeping() sets clearBookkeeping — an
       // EXPLICIT new-epoch declaration drops the keys (an unguarded
@@ -646,16 +641,14 @@ final class MnemoStore(val spark: SparkSession, val path: String,
       case None => m.extra
     }
 
-    writeStoreManifest(StoreManifest(gen, m.numBuckets, buckets, tagIdx,
-      ranges, extra))
-    // the generation holding the live pverdict stays un-gc'd even if
+    // the generation holding the live pverdict stays unswept even if
     // all its bucket segments are superseded (a few stale segment dirs
     // ride along until the next pipeline batch moves the pointer —
     // bounded waste, never a dangling verdict)
-    val liveTops = buckets.values.flatten.map(_.takeWhile(_ != '/')).toSet ++
-      tagIdx.map(_.takeWhile(_ != '/')) ++
-      extra.get("pverdict").map(_.takeWhile(_ != '/'))
-    ManifestIO.gc(path, liveTops)
+    c.publish(manifestEntries(StoreManifest(gen, m.numBuckets, buckets,
+      tagIdx, ranges, extra)),
+      (buckets.values.flatten ++ tagIdx ++ extra.get("pverdict"))
+        .map(_.takeWhile(_ != '/')))
   }
 
   /** Committed (tag, bucket) index content. Only ever called with
@@ -688,10 +681,10 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     * that never add tags keep the index job off their path. */
   private def mutateBuckets(touched: StoreManifest => Set[Int],
       addsTags: Boolean = false)(f: DataFrame => DataFrame): Unit = {
-    val m = manifestForWrite()
+    val (c, m) = openWrite()
     val ks = touched(m).intersect(m.buckets.keySet)
     if (ks.isEmpty) return // no targeted bucket holds data: nothing to do
-    commitWrite(m, ks, Some(f(readBuckets(m, ks))), None,
+    commitWrite(c, m, ks, Some(f(readBuckets(m, ks))), None,
       replacedAddsTags = addsTags)
   }
 
@@ -699,11 +692,9 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     * append segments back into one replacement segment. Called after
     * every append; a no-op job-wise unless a bucket is over budget. */
   private def compactOverflow(): Unit = {
-    val over = readStoreManifest()
-      .map(_.buckets.collect {
-        case (k, segs) if segs.length > Mnemo.MaxSegments => k
-      }.toSet)
-      .getOrElse(Set.empty)
+    val over = readStoreManifest().buckets.collect {
+      case (k, segs) if segs.length > Mnemo.MaxSegments => k
+    }.toSet
     if (over.nonEmpty) mutateBuckets(_ => over)(identity)
   }
 
@@ -799,7 +790,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     // (returns its persisted verdicts without re-folding) while the
     // store, which never committed, appends normally — per-store
     // bookkeeping makes the two-store handoff exactly-once end to end.
-    val manExtra = readStoreManifest().map(_.extra).getOrElse(Map.empty)
+    val manExtra = readStoreManifest().extra
     val lastBatch = manExtra.get("batch").map(_.toLong)
     (batchId, lastBatch) match {
       case (Some(bid), Some(lb)) if bid == lb =>
@@ -948,9 +939,9 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     * guarded and unguarded calls throws in [[ingestPipeline]] instead
     * of silently opening that window. */
   def clearPipelineBookkeeping(): Unit = {
-    val m = manifestForWrite()
+    val (c, m) = openWrite()
     if (m.extra.contains("batch"))
-      commitWrite(m, Set.empty, None, None, clearBookkeeping = true)
+      commitWrite(c, m, Set.empty, None, None, clearBookkeeping = true)
   }
 
   private def reqFrame(batch: Seq[RememberRequest]): DataFrame = {
@@ -970,8 +961,8 @@ final class MnemoStore(val spark: SparkSession, val path: String,
   private def appendEnriched(reqs: DataFrame,
       bookkeeping: Option[(Long, DataFrame)] = None,
       clearBookkeeping: Boolean = false): Unit = {
-    val m = manifestForWrite()
-    commitWrite(m, Set.empty, None, Some(enrichChain(reqs)),
+    val (c, m) = openWrite()
+    commitWrite(c, m, Set.empty, None, Some(enrichChain(reqs)),
       bookkeeping = bookkeeping, clearBookkeeping = clearBookkeeping)
     compactOverflow()
   }
@@ -1202,28 +1193,20 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     * poll from monitoring. */
   def describe(): Mnemo.StoreHealth = {
     val aux = Map(
-      "acl" -> aclExists, "checkpoints" -> ckptExists,
-      "delegations" -> delegExists, "orientation" -> orientExists,
+      "acl" -> aclTable.committed, "checkpoints" -> ckptTable.committed,
+      "delegations" -> delegTable.committed, "orientation" -> orientExists,
       "attention" -> attnExists)
-    readStoreManifest() match {
-      case Some(m) =>
-        val segs = m.buckets.values
-        Mnemo.StoreHealth(
-          version = 3, generation = m.gen, numBuckets = m.numBuckets,
-          populatedBuckets = m.buckets.size,
-          segments = segs.map(_.length).sum,
-          maxBucketSegments = if (segs.isEmpty) 0 else segs.map(_.length).max,
-          tagIndexSegments = m.tagIdx.length,
-          rangedSegments = m.ranges.size,
-          pipelineBatch = m.extra.get("batch").map(_.toLong),
-          auxStores = aux)
-      case None =>
-        Mnemo.StoreHealth(
-          version = 3, generation = 0L, numBuckets = newStoreBuckets,
-          populatedBuckets = 0, segments = 0, maxBucketSegments = 0,
-          tagIndexSegments = 0, rangedSegments = 0,
-          pipelineBatch = None, auxStores = aux)
-    }
+    val m = readStoreManifest()
+    val segs = m.buckets.values.map(_.length)
+    Mnemo.StoreHealth(
+      version = 3, generation = m.gen, numBuckets = m.numBuckets,
+      populatedBuckets = m.buckets.size,
+      segments = segs.sum,
+      maxBucketSegments = (0 +: segs.toSeq).max,
+      tagIndexSegments = m.tagIdx.length,
+      rangedSegments = m.ranges.size,
+      pipelineBatch = m.extra.get("batch").map(_.toLong),
+      auxStores = aux)
   }
 
   /** VERIFY: recompute every link of every (agent, thread) chain; rows
@@ -1269,28 +1252,25 @@ final class MnemoStore(val spark: SparkSession, val path: String,
 
   // ---- ACL sharing (S13/J2: share.rs:43-137, check_permission) ----
 
-  private def aclPath = path + "_acls"
+  // the acl, checkpoint and delegation tables sit next to the store
+  // (`<path>_acls`, `_ckpts`, `_delegations`), each a SegmentTable: one
+  // published generation per write, typed empty until the first
+  private def satellite(suffix: String, ddl: String): SegmentTable =
+    new SegmentTable(spark, path + suffix, StructType.fromDDL(ddl))
 
-  private def aclExists: Boolean =
-    ManifestIO.listChildren(aclPath).nonEmpty
+  private lazy val aclTable = satellite("_acls",
+    "memory_id STRING, principal_id STRING, granted_at TIMESTAMP")
 
   /** SHARE: grant `toAgent` read access to specific memories. The grant
     * table is a small broadcast dimension, exactly the reference's acls
     * table. */
   def share(memoryIds: Seq[String], toAgent: String, grantedAt: Timestamp): Unit = {
     import spark.implicits._
-    memoryIds.map(id => (id, toAgent, grantedAt))
-      .toDF("memory_id", "principal_id", "granted_at")
-      .write.mode(SaveMode.Append).parquet(aclPath)
+    aclTable.append(memoryIds.map(id => (id, toAgent, grantedAt))
+      .toDF("memory_id", "principal_id", "granted_at"))
   }
 
-  def acls(): DataFrame =
-    if (aclExists) spark.read.parquet(aclPath)
-    else {
-      import spark.implicits._
-      Seq.empty[(String, String, Timestamp)]
-        .toDF("memory_id", "principal_id", "granted_at")
-    }
+  def acls(): DataFrame = aclTable.read()
 
   /** RECALL with the full visibility closure (S8): own records ∪
     * public/global scope ∪ ACL grants — the grant leg is a broadcast
@@ -1348,10 +1328,9 @@ final class MnemoStore(val spark: SparkSession, val path: String,
 
   // ---- checkpoints / branch / merge (§2.8, checkpoint.rs, merge.rs) ----
 
-  private def ckptPath = path + "_ckpts"
-
-  private def ckptExists: Boolean =
-    ManifestIO.listChildren(ckptPath).nonEmpty
+  private lazy val ckptTable = satellite("_ckpts",
+    "memory_refs ARRAY<STRING>, name STRING, agent_id STRING, " +
+      "created_at TIMESTAMP")
 
   /** CHECKPOINT: snapshot the ids of an agent's live memories as a ref
     * array (one row). */
@@ -1363,16 +1342,10 @@ final class MnemoStore(val spark: SparkSession, val path: String,
       .withColumn("name", lit(name))
       .withColumn("agent_id", lit(agentId))
       .withColumn("created_at", lit(at))
-    refs.write.mode(SaveMode.Append).parquet(ckptPath)
+    ckptTable.append(refs)
   }
 
-  def checkpoints(): DataFrame =
-    if (ckptExists) spark.read.parquet(ckptPath)
-    else {
-      import spark.implicits._
-      Seq.empty[(Seq[String], String, String, Timestamp)]
-        .toDF("memory_refs", "name", "agent_id", "created_at")
-    }
+  def checkpoints(): DataFrame = ckptTable.read()
 
   /** BRANCH: fork a new named ref from an existing checkpoint
     * (branch.rs:48-117) — the branch starts with the source's exact
@@ -1385,7 +1358,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
       .withColumn("name", lit(newName))
       .withColumn("agent_id", lit(asAgent))
       .withColumn("created_at", lit(at))
-    src.write.mode(SaveMode.Append).parquet(ckptPath)
+    ckptTable.append(src)
   }
 
   /** MERGE two checkpoints: FullMerge = union-distinct of ref arrays
@@ -1423,28 +1396,20 @@ final class MnemoStore(val spark: SparkSession, val path: String,
   // ---- delegation (S13: delegate tool + check_permission chain,
   //      storage/duckdb.rs:338-426,754-830) ----
 
-  private def delegPath = path + "_delegations"
-
-  private def delegExists: Boolean =
-    ManifestIO.listChildren(delegPath).nonEmpty
+  private lazy val delegTable = satellite("_delegations",
+    "from_agent STRING, to_agent STRING, granted_at TIMESTAMP, " +
+      "expires_at TIMESTAMP")
 
   /** DELEGATE: `fromAgent` lets `toAgent` read what it can read, until
     * `expiresAt`. */
   def delegate(fromAgent: String, toAgent: String, grantedAt: Timestamp,
       expiresAt: Timestamp): Unit = {
     import spark.implicits._
-    Seq((fromAgent, toAgent, grantedAt, expiresAt))
-      .toDF("from_agent", "to_agent", "granted_at", "expires_at")
-      .write.mode(SaveMode.Append).parquet(delegPath)
+    delegTable.append(Seq((fromAgent, toAgent, grantedAt, expiresAt))
+      .toDF("from_agent", "to_agent", "granted_at", "expires_at"))
   }
 
-  def delegations(): DataFrame =
-    if (delegExists) spark.read.parquet(delegPath)
-    else {
-      import spark.implicits._
-      Seq.empty[(String, String, Timestamp, Timestamp)]
-        .toDF("from_agent", "to_agent", "granted_at", "expires_at")
-    }
+  def delegations(): DataFrame = delegTable.read()
 
   /** Permission closure at time `now`: memory ids readable by `agentId`
     * via owner → public scope → direct ACL → 1/2-hop unexpired
@@ -1482,9 +1447,10 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     ManifestIO.listChildren(attnPath).nonEmpty
 
   /** The committed attention manifest (layout v1), written by the
-    * first [[attentionStateCompact]]. */
+    * first [[attentionStateCompact]]; before it, puts land as parquet
+    * files at the root, the store's own uncommitted layout. */
   private def attnManifest: Option[Map[String, String]] =
-    ManifestIO.readVersioned(attnPath, 1)
+    StoreCommit.read(attnPath, 1, rootFiles = true)
 
   /** Committed data directory: manifest-backed after the first
     * [[attentionStateCompact]]; before it, the store root itself,
@@ -1511,32 +1477,25 @@ final class MnemoStore(val spark: SparkSession, val path: String,
   }
 
   /** Compact the accumulated append files into one fresh generation
-    * directory, committed with an atomic manifest rename (the same
-    * protocol as the maintained sync/orientation stores) — a crash
-    * mid-compaction leaves the previous generation fully readable.
-    * History is preserved; only the file count changes. */
+    * directory, committed through the [[StoreCommit]] core (the same
+    * one as the maintained sync/orientation stores) — a crash
+    * mid-compaction leaves the previous generation fully readable, and
+    * the publish sweeps the root-level put files the first compaction
+    * absorbed. History is preserved; only the file count changes. */
   def attentionStateCompact(): Unit = {
     if (!attnExists) return
-    val gen = attnManifest
-      .map(m => m("data").stripPrefix("g").toLong + 1).getOrElse(1L)
-    val dir = s"g$gen"
-    val snapshot = spark.read.parquet(attnDataDir)
+    val c = StoreCommit.open(attnPath, 1, rootFiles = true)
+    val dir = s"g${c.next("data")}"
+    val src = c.committed.fold(attnPath)(m => attnPath + "/" + m("data"))
     // cluster the compacted generation by (agent_id, key, updated_at):
     // un-compacted append files are one (agent, key) each (tight file
     // stats for free), but a compacted generation mixes every agent —
     // the sort keeps [[attentionStateGet]]'s pushed (agent, key) filter
     // row-group-prunable, same discipline as the memory store's
     // bucket segments
-    snapshot.coalesce(1)
-      .sortWithinPartitions(col("agent_id"), col("key"), col("updated_at"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$attnPath/$dir")
-    ManifestIO.write(attnPath, Map("version" -> "1", "data" -> dir))
-    ManifestIO.gc(attnPath, Set(dir))
-    // first compaction: sweep the root-level put files it absorbed
-    // (readers already go through the manifest)
-    ManifestIO.listChildren(attnPath)
-      .collect { case (nm, false) if !nm.startsWith(ManifestIO.FileName) => nm }
-      .foreach(nm => ManifestIO.deleteFile(s"$attnPath/$nm"))
+    c.write(dir, "", spark.read.parquet(src).coalesce(1)
+      .sortWithinPartitions(col("agent_id"), col("key"), col("updated_at")))
+    c.publish(Map("data" -> dir), Seq(dir))
   }
 
   /** Driver-side health view of the attention-KV satellite — manifest
@@ -1546,7 +1505,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     Mnemo.AttentionHealth(
       version = 1,
       committedGeneration =
-        attnManifest.map(_("data").stripPrefix("g").toLong),
+        attnManifest.map(m => StoreCommit.generation(Some(m), "data")),
       dataFiles = ManifestIO.countDataFiles(attnDataDir))
 
   def attentionStateGet(agentId: String, key: String): Option[Array[Byte]] = {
@@ -1584,7 +1543,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     * commit (`ns.<enc> -> <dir>` entries). The retired v1 layout —
     * hive `namespace=` partition dirs, no manifest — fails. */
   private def orientManifest(): Option[Map[String, String]] =
-    ManifestIO.readVersioned(orientPath, 2).orElse {
+    StoreCommit.read(orientPath, 2).orElse {
       if (ManifestIO.listChildren(orientPath).exists { case (nm, isDir) =>
           isDir && nm.startsWith("namespace=") })
         ManifestIO.unreadable(orientPath,
@@ -1611,9 +1570,9 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     * Row-level MERGE with a CRASH-ATOMIC commit: the merged namespace
     * is written to a fresh generation directory (so the write never
     * touches the files its own plan is reading — no scratch-dir
-    * two-phase), then published by one atomic manifest rename, the
-    * same protocol as the sync-loop store (graft.streaming.SyncLoop).
-    * A crash at any point leaves the previous generation committed and
+    * two-phase), then published through the [[StoreCommit]] core, the
+    * same one as the sync-loop store (graft.streaming.SyncLoop). A
+    * crash at any point leaves the previous generation committed and
     * at worst an orphan directory, which the post-commit sweep
     * removes. Write amplification stays O(one namespace): other
     * namespaces' directories are never opened. (The reference upserts
@@ -1624,36 +1583,25 @@ final class MnemoStore(val spark: SparkSession, val path: String,
     val nsState = orientationState().filter(col("namespace") === namespace)
     val kept = OrientationCache.evict(
       OrientationCache.upsert(nsState, batch, nowUnix), budget, nowUnix)
-    val manifest = orientManifest().getOrElse(Map.empty)
+    val c = StoreCommit.open(orientPath, 2)
     val key = s"ns.${encNs(namespace)}"
-    val gen = manifest.get(key)
-      .map(d => d.substring(d.lastIndexOf("-g") + 2).toLong + 1).getOrElse(1L)
-    val dir = s"${encNs(namespace)}-g$gen"
-    kept.write.mode(SaveMode.Overwrite).parquet(s"$orientPath/$dir")
-    val committed = manifest + (key -> dir) + ("version" -> "2")
-    ManifestIO.write(orientPath, committed)
-    ManifestIO.gc(orientPath, orientDirs(committed).toSet)
+    val dir = s"${encNs(namespace)}-g${c.next(key)}"
+    c.write(dir, "", kept)
+    val committed = c.committed.getOrElse(Map.empty) + (key -> dir)
+    c.publish(committed, orientDirs(committed))
   }
 
   /** Driver-side health view of the orientation cache satellite —
     * manifest read (plus one listing when none is committed), no Spark
-    * job. Generation parsing is TOLERANT here: a hand-edited or foreign
-    * `ns.*` value without the `-g<N>` suffix reports generation 0 for
-    * that entry instead of throwing from a health probe (the WRITE
-    * path keeps the strict parse — mis-numbering a generation there
-    * would corrupt the store, so it must fail loudly). */
+    * job. A hand-edited `ns.*` value without a `g<N>` suffix reports
+    * generation 0 ([[StoreCommit.generation]]). */
   def describeOrientation(): Mnemo.OrientationHealth = {
-    val genOf = """.*-g(\d+)$""".r
-    val dirs = orientManifest().toSeq.flatMap(orientDirs)
+    val man = orientManifest()
+    val keys = man.toSeq.flatMap(_.keys.filter(_.startsWith("ns.")))
     Mnemo.OrientationHealth(
       version = 2,
-      namespaces = dirs.size,
-      maxGeneration =
-        if (dirs.isEmpty) 0L
-        else dirs.map {
-          case genOf(n) => n.toLong
-          case _ => 0L
-        }.max)
+      namespaces = keys.size,
+      maxGeneration = (0L +: keys.map(StoreCommit.generation(man, _))).max)
   }
 
   /** Rendered map for one namespace, key-ascending (the reference's
@@ -1727,13 +1675,13 @@ final class MnemoStore(val spark: SparkSession, val path: String,
         s"got ${consolidated.memoryType}")
     val chained = enrichChain(reqFrame(Seq(consolidated.copy(
       tags = consolidated.tags ++ sourceIds.map(i => s"merged:$i")))))
-    val m = manifestForWrite()
+    val (c, m) = openWrite()
     val ks = bucketsOf(sourceIds, m.numBuckets).intersect(m.buckets.keySet)
     val tombstoned = readBuckets(m, ks).withColumn("deleted_at",
       when(col("agent_id") === consolidated.agentId &&
         col("id").isin(sourceIds.map(lit): _*) && col("deleted_at").isNull,
         lit(at)).otherwise(col("deleted_at")))
-    commitWrite(m, ks, Some(tombstoned), Some(chained))
+    commitWrite(c, m, ks, Some(tombstoned), Some(chained))
     compactOverflow()
   }
 

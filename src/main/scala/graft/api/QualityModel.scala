@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.Pipeline
@@ -14,16 +14,17 @@ import graft.queries.Pipeline
   * persists the [[graft.queries.Pipeline.ClsDim]]-row weight table,
   * and every scoring pass thereafter is one broadcast join.
   *
-  * Store layout = the [[ManifestIO]] maintained-store discipline
-  * (same protocol as the memory store, the dedup index, the
-  * orientation cache): immutable generation dirs `g<N>/weights`
-  * (parquet, (bucket BIGINT, w DECIMAL(20,9))), published by one
-  * atomic manifest commit carrying `gen=`, `segs=`, `dim=`, and
-  * `trained_on=` (provenance: the corpus dir the weights were fit
-  * on). A crash between the parquet write and the manifest publish
-  * leaves the previous model live; orphan dirs are swept by the next
-  * commit's gc. Re-fitting commits a new generation and supersedes —
-  * readers see old or new weights, never a mix.
+  * Store layout = the [[StoreCommit]] maintained-store discipline
+  * (same core as the memory store, the dedup index, the orientation
+  * cache): immutable generation dirs `g<N>/weights` (parquet, (bucket
+  * BIGINT, w DECIMAL(20,9))), published by one atomic manifest commit
+  * carrying `version=1`, `gen=`, `segs=`, `dim=`, and `trained_on=`
+  * (provenance: the corpus dir the weights were fit on). A model of
+  * any other `version` fails to read. A crash between the parquet
+  * write and the manifest publish leaves the previous model live;
+  * orphan dirs are swept by the next commit. Re-fitting commits a new
+  * generation and supersedes — readers see old or new weights, never
+  * a mix.
   *
   * Training, featurization, and scoring are the SHARED pl20/pl21
   * builders ([[graft.queries.Pipeline.corpusPass]] /
@@ -40,31 +41,31 @@ object QualityModel {
   /** Fit the classifier on `sfDir`'s corpus and commit the weight
     * table as a new generation. Returns the committed generation. */
   def fit(spark: SparkSession, sfDir: String, storePath: String): Long = {
-    val man = ManifestIO.read(storePath)
-    val gen = man.flatMap(_.get("gen")).map(_.toLong).getOrElse(0L) + 1
+    val c = StoreCommit.open(storePath, Version)
+    val gen = c.next()
     val seg = s"g$gen"
     // no cache on the corpus pass here: unlike the registered queries
     // (which score with it AFTER training), fit consumes its features
     // exactly once — in the training pair frame (review finding)
-    val w = Pipeline.clsTrained(spark,
+    c.write(seg, "weights", Pipeline.clsTrained(spark,
       Pipeline.corpusPass(spark, sfDir),
-      Pipeline.funnelStaged4(spark, sfDir))
-    w.write.mode(SaveMode.Overwrite).parquet(s"$storePath/$seg/weights")
-    ManifestIO.write(storePath, Map(
+      Pipeline.funnelStaged4(spark, sfDir)))
+    c.publish(Map(
       "gen" -> gen.toString,
       "segs" -> seg,
       "dim" -> Pipeline.ClsDim.toString,
-      "trained_on" -> sfDir))
-    // sweep superseded generations and any crashed writer's orphans
-    ManifestIO.gc(storePath, Set(seg))
+      "trained_on" -> sfDir), Seq(seg))
     gen
   }
+
+  /** The one on-disk format this build reads and writes. */
+  private val Version = 1
 
   /** The committed weight table (bucket, w) — throws on a store that
     * never committed (scoring against no model must be loud, not an
     * all-zero margin). */
   def weights(spark: SparkSession, storePath: String): DataFrame = {
-    val man = ManifestIO.read(storePath).getOrElse(
+    val man = StoreCommit.read(storePath, Version).getOrElse(
       throw new IllegalStateException(
         s"quality model at $storePath: no committed generation — fit() first"))
     val seg = man.getOrElse("segs",
@@ -145,9 +146,9 @@ object QualityModel {
   case class Health(generation: Long, dim: Int, trainedOn: Option[String])
 
   def describe(spark: SparkSession, storePath: String): Health = {
-    val man = ManifestIO.read(storePath)
+    val man = StoreCommit.read(storePath, Version)
     Health(
-      generation = man.flatMap(_.get("gen")).map(_.toLong).getOrElse(0L),
+      generation = StoreCommit.generation(man),
       dim = man.flatMap(_.get("dim")).map(_.toInt).getOrElse(0),
       trainedOn = man.flatMap(_.get("trained_on")))
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.api.StoreCommit
+
 /** T5 write side — the sync engine's incremental MERGE loop
   * (reference: sync/engine.rs:24-161): each micro-batch of the event
   * feed is merged into a persisted per-user profile store, and a
@@ -28,14 +30,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Each batch writes its touched partitions under a fresh
   * `data/g<gen>/part=<k>/` directory (gen = the manifest's own commit
   * counter, which unlike the batch id never restarts) and then commits
-  * by atomically
-  * renaming a manifest that maps every partition to its current
-  * directory, together with the batch id and watermark:
+  * through the [[graft.api.StoreCommit]] core one manifest (`version=1`)
+  * that maps every partition to its current directory, together with
+  * the batch id and watermark; the commit sweeps `data/` directories
+  * no partition references any more:
   *
-  *  - crash BEFORE the rename: the old manifest still governs — the
+  *  - crash BEFORE the publish: the old manifest still governs — the
   *    half-written batch directory is invisible and the replayed batch
   *    recomputes it (overwriting the orphan);
-  *  - replay AFTER the rename: the manifest's batch id says the batch
+  *  - replay AFTER the publish: the manifest's batch id says the batch
   *    was applied, so the sink skips it — no double count (the
   *    store+watermark advance is one atomic commit, closing the
   *    crash-between-two-writes window of the previous design).
@@ -106,22 +109,25 @@ object SyncLoop {
       epoch: String = "", gen: Long = 0L)
 
   def readManifest(storePath: String): Option[Manifest] =
-    graft.api.ManifestIO.readVersioned(storePath, 1).map { m =>
-      Manifest(m("batch_id").toLong, m("watermark").toLong,
-        m.collect { case (k, v) if k.startsWith("part.") =>
-          k.stripPrefix("part.").toInt -> v },
-        m("epoch"), m("gen").toLong)
-    }
+    StoreCommit.read(storePath, Version).map(parseManifest)
 
-  private def writeManifest(storePath: String, m: Manifest): Unit =
-    graft.api.ManifestIO.write(storePath,
-      Map(
-        "version" -> "1",
-        "batch_id" -> m.batchId.toString,
-        "watermark" -> m.watermark.toString,
-        "epoch" -> m.epoch,
-        "gen" -> m.gen.toString) ++
-        m.parts.map { case (k, v) => s"part.$k" -> v })
+  private val Version = 1
+
+  private def parseManifest(m: Map[String, String]): Manifest =
+    Manifest(m("batch_id").toLong, m("watermark").toLong,
+      m.collect { case (k, v) if k.startsWith("part.") =>
+        k.stripPrefix("part.").toInt -> v },
+      m("epoch"), StoreCommit.generation(Some(m)))
+
+  /** Publish `m` through the commit core, which sweeps every `data/`
+    * directory `m` no longer references. */
+  private def publish(c: StoreCommit, m: Manifest): Unit =
+    c.publish(Map(
+      "batch_id" -> m.batchId.toString,
+      "watermark" -> m.watermark.toString,
+      "epoch" -> m.epoch,
+      "gen" -> m.gen.toString) ++
+      m.parts.map { case (k, v) => s"part.$k" -> v }, m.parts.values)
 
   /** Committed watermark (manifest-backed; -1 with no commits yet). */
   def readWatermark(storePath: String): Option[Long] =
@@ -159,7 +165,7 @@ object SyncLoop {
   /** Apply one micro-batch to the store — idempotent on `batchId`.
     * Reads only the touched partitions, writes only the touched
     * partitions, commits store + watermark + batch id in one atomic
-    * manifest rename. Safe to call again with the same id (no-op). */
+    * manifest commit. Safe to call again with the same id (no-op). */
   def applyBatch(batch: DataFrame, storePath: String, batchId: Long,
       epoch: String = ""): Unit =
     applyCore(batch, storePath, batchId, epoch, partOf(col("user_id")),
@@ -177,7 +183,8 @@ object SyncLoop {
       epoch: String, part: org.apache.spark.sql.Column,
       readState: Option[Set[Int]] => DataFrame,
       mergeFn: (DataFrame, DataFrame) => DataFrame): Unit = {
-    val prev = readManifest(storePath)
+    val c = StoreCommit.open(storePath, Version)
+    val prev = c.committed.map(parseManifest)
     // replayed batch of the SAME query incarnation: already committed
     if (prev.exists(m => m.epoch == epoch && m.batchId >= batchId)) return
     val fresh = prev.map(m => batch.filter(col("ts") > m.watermark)).getOrElse(batch)
@@ -186,7 +193,7 @@ object SyncLoop {
       .agg(max(col("ts")).as("mx")).collect()
     if (stats.isEmpty) {
       // nothing fresh: still commit the batch id so a replay is a no-op
-      writeManifest(storePath, prev.map(_.copy(batchId = batchId, epoch = epoch))
+      publish(c, prev.map(_.copy(batchId = batchId, epoch = epoch))
         .getOrElse(Manifest(batchId, Long.MinValue, Map.empty, epoch)))
       return
     }
@@ -198,23 +205,14 @@ object SyncLoop {
     // batch ids restart at 0 under a fresh checkpoint, and reusing a
     // dir name overwrite-truncates partitions the manifest still
     // references from the previous incarnation. A crash before the
-    // manifest rename replays the same gen and overwrites the orphan.
-    val gen = prev.map(_.gen).getOrElse(0L) + 1
+    // manifest commit replays the same gen and clears the orphan.
+    val gen = c.next()
     val rel = s"data/g$gen"
-    merged.write.mode("overwrite").partitionBy("part")
-      .parquet(s"$storePath/$rel")
+    c.write(rel, "", merged, "part")
     val oldParts = prev.map(_.parts).getOrElse(Map.empty)
-    val newParts = oldParts ++ touched.map(_ -> rel)
-    writeManifest(storePath, Manifest(batchId,
+    publish(c, Manifest(batchId,
       math.max(prev.map(_.watermark).getOrElse(Long.MinValue), highWater),
-      newParts, epoch, gen))
-    // prune batch directories no longer referenced by the manifest
-    // (single-writer store, like the reference's embedded DB)
-    val live = newParts.values.toSet
-    graft.api.ManifestIO.listChildren(s"$storePath/data")
-      .collect { case (nm, _) if !live.contains(s"data/$nm") => nm }
-      .foreach(nm =>
-        graft.api.ManifestIO.deleteRecursively(s"$storePath/data/$nm"))
+      oldParts ++ touched.map(_ -> rel), epoch, gen))
   }
 
   /** Attach the foreachBatch MERGE loop to a streaming event frame.

@@ -1,9 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
-import graft.api.GraphStore
+import scala.jdk.CollectionConverters._
+
+import graft.api.{GraphStore, ManifestIO, Mnemo}
 
 class GraphStoreSpec extends SparkSpec {
 
@@ -76,5 +78,37 @@ class GraphStoreSpec extends SparkSpec {
     // after the close: the b->c hop is gone, so c and d are unreachable
     val after = reach(3, "2026-03-01 00:00:00")
     assert(after == Map("a" -> 0, "b" -> 1))
+  }
+
+  test("closeEdge publishes a new generation: no <path>.tmp copy is left, and a fresh open reads the closed row") {
+    val g = freshStore()
+    val t0 = ts("2026-01-01 00:00:00")
+    g.insertEdge("e1", "a", "b", "rel", t0, None, 1.0, t0)
+    g.insertEdge("e2", "b", "c", "rel", t0, None, 1.0, t0)
+    g.closeEdge("e1", ts("2026-04-01 00:00:00"))
+    assert(!Files.exists(Paths.get(g.path + ".tmp")),
+      "closeEdge must not leave a copy of the edge table next to the store")
+    val reopened = GraphStore.open(spark, g.path).edges().collect()
+      .map(r => r.getAs[String]("id") -> Option(r.getAs[Timestamp]("valid_to"))).toMap
+    assert(reopened == Map("e1" -> Some(ts("2026-04-01 00:00:00")), "e2" -> None))
+  }
+
+  test("inserts past Mnemo.MaxSegments fold into one segment; describe counts live files only") {
+    val g = freshStore()
+    val t0 = ts("2026-01-01 00:00:00")
+    (1 to Mnemo.MaxSegments + 1).foreach(i =>
+      g.insertEdge(s"e$i", "a", s"n$i", "rel", t0, None, 1.0, t0))
+    val segs = ManifestIO.read(g.path).get("segs").split(",").toSeq
+    assert(segs == Seq(s"g${Mnemo.MaxSegments + 1}"),
+      s"the over-budget insert must fold every segment into one: $segs")
+    assert(g.edges().count() == Mnemo.MaxSegments + 1)
+    val onDisk = {
+      val w = Files.walk(Paths.get(g.path))
+      try w.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+      finally w.close()
+    }
+    val h = g.describe()
+    assert(h.exists && h.edges == Mnemo.MaxSegments + 1 && h.dataFiles >= 1 &&
+      h.dataFiles == onDisk, s"graph health after the fold: $h, $onDisk on disk")
   }
 }

@@ -851,4 +851,22 @@ class MnemoApiSpec extends SparkSpec {
       assert(store.verifyChains("frank").filter(!col("chain_valid")).count() == 0)
     } finally q.stop()
   }
+
+  test("describe().auxStores: false when fresh or orphan-only, true once share, checkpoint and delegate commit") {
+    import spark.implicits._
+    val store = freshStore()
+    seed(store)
+    assert(store.describe().auxStores.values.forall(_ == false))
+    // a crashed first share leaves an unpublished generation only
+    Seq(("m1", "bob", ts("2024-01-05 10:00:00")))
+      .toDF("memory_id", "principal_id", "granted_at")
+      .write.parquet(store.path + "_acls/g1")
+    assert(!store.describe().auxStores("acl"), "an orphan is not a committed table")
+    store.share(Seq("m2"), "bob", ts("2024-01-05 10:00:00"))
+    store.checkpoint("ck", "alice", ts("2024-01-05 11:00:00"))
+    val aux = store.describe().auxStores
+    assert(aux("acl") && aux("checkpoints") && !aux("delegations"), s"aux: $aux")
+    store.delegate("alice", "bob", ts("2024-01-05 12:00:00"), ts("2024-02-01 00:00:00"))
+    assert(store.describe().auxStores("delegations"))
+  }
 }

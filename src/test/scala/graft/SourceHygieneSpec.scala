@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-level invariants of `src/main` that the compiler does not
   * check: a scaladoc that attaches to the definition it describes, one
-  * place that decides how the mains build their session, and one
-  * on-disk format per store (no legacy read or migration code). */
+  * place that decides how the mains build their session, one on-disk
+  * format per store (no legacy read or migration code), and one commit
+  * core every store writes through. */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private val sources: Seq[(Path, IndexedSeq[String])] = {
@@ -75,5 +76,42 @@ class SourceHygieneSpec extends AnyFunSuite {
     } yield s"$p:${i + 1}"
     assert(offenders.isEmpty,
       s"mains must build their session with Harness.session: ${offenders.mkString(", ")}")
+  }
+
+  test("every store commits through StoreCommit: one publish site, one sweep, no in-place store writes") {
+    val core = Paths.get("src/main/scala/graft/api/StoreCommit.scala")
+    val protocol = Paths.get("src/main/scala/graft/api/ManifestIO.scala")
+    assert(sources.exists(_._1 == core), s"$core not found")
+    val manifestCalls = Seq("ManifestIO.write(", "ManifestIO.gc(", "ManifestIO.read(")
+    val outside = for {
+      (p, lines) <- sources if p != core && p != protocol
+      (l, i) <- lines.zipWithIndex if manifestCalls.exists(l.contains)
+    } yield s"$p:${i + 1}"
+    assert(outside.isEmpty,
+      s"manifest reads and commits outside the core: ${outside.mkString(", ")}")
+    val coreLines = sources.find(_._1 == core).get._2
+    assert(coreLines.count(_.contains("ManifestIO.write(")) == 1 &&
+      coreLines.count(_.contains("ManifestIO.gc(")) == 1,
+      "the core publishes and sweeps at exactly one call site each")
+
+    // the deal ledger keeps its flat append (its spec tampers with the
+    // flat ledger path); the attention put is the one other append
+    val storeDirs = Seq("graft/api", "graft/streaming")
+      .map(d => Paths.get("src/main/scala", d))
+    val ledger = Paths.get("src/main/scala/graft/api/DealLedger.scala")
+    val mnemo = Paths.get("src/main/scala/graft/api/Mnemo.scala")
+    val writes = for {
+      (p, lines) <- sources
+      if storeDirs.exists(p.startsWith) && p != core && p != ledger
+      (l, i) <- lines.zipWithIndex
+      w <- Seq("SaveMode.Append", "SaveMode.Overwrite", ".mode(\"overwrite\"")
+      if l.contains(w)
+    } yield (p, w, s"$p:${i + 1}")
+    val (attentionPut, inPlace) =
+      writes.partition { case (p, w, _) => p == mnemo && w == "SaveMode.Append" }
+    assert(attentionPut.size == 1,
+      s"exactly one attention-put append: ${attentionPut.map(_._3).mkString(", ")}")
+    assert(inPlace.isEmpty,
+      s"store writes outside the core: ${inPlace.map(_._3).mkString(", ")}")
   }
 }

@@ -587,6 +587,52 @@ class StoreCompatSpec extends SparkSpec {
     assert(idx.filter(col("tag") === Mnemo.ConsolidationTag).count() >= 1)
   }
 
+  test("acl, checkpoint, delegation and graph tables: a crashed first commit's orphan g1 reads typed empty and the next write sweeps it") {
+    import spark.implicits._
+    val store = freshStore()
+    seed(store)
+    val graph = graft.api.GraphStore.open(spark, store.path + "_graph")
+    val t0 = ts("2024-01-05 10:00:00")
+    // (table root, junk orphan rows, read, expected columns, write)
+    val tables: Seq[(String, org.apache.spark.sql.DataFrame,
+        () => org.apache.spark.sql.DataFrame, Seq[String], () => Unit)] = Seq(
+      (store.path + "_acls",
+        Seq(("junk", "junk", t0)).toDF("memory_id", "principal_id", "granted_at"),
+        () => store.acls(), Seq("memory_id", "principal_id", "granted_at"),
+        () => store.share(Seq("m1"), "bob", t0)),
+      (store.path + "_ckpts",
+        Seq((Seq("junk"), "junk", "junk", t0))
+          .toDF("memory_refs", "name", "agent_id", "created_at"),
+        () => store.checkpoints(), Seq("memory_refs", "name", "agent_id", "created_at"),
+        () => store.checkpoint("ck", "alice", t0)),
+      (store.path + "_delegations",
+        Seq(("junk", "junk", t0, t0))
+          .toDF("from_agent", "to_agent", "granted_at", "expires_at"),
+        () => store.delegations(), Seq("from_agent", "to_agent", "granted_at", "expires_at"),
+        () => store.delegate("alice", "bob", t0, ts("2024-02-01 00:00:00"))),
+      (graph.path,
+        Seq(("junk", "a", "b", "rel", t0, Option.empty[Timestamp], 1.0, t0))
+          .toDF("id", "src", "dst", "relation", "valid_from", "valid_to",
+            "confidence", "recorded_at"),
+        () => graph.edges(), Seq("id", "src", "dst", "relation", "valid_from",
+          "valid_to", "confidence", "recorded_at"),
+        () => graph.insertEdge("e1", "a", "b", "rel", t0, None, 1.0, t0)))
+    tables.foreach { case (root, junk, read, cols, write) =>
+      junk.write.parquet(s"$root/g1")
+      val orphanFiles = Files.list(Paths.get(root, "g1")).iterator().asScala
+        .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toList
+      assert(orphanFiles.nonEmpty)
+      assert(ManifestIO.read(root).isEmpty)
+      val empty = read()
+      assert(empty.columns.toSeq == cols && empty.count() == 0,
+        s"$root: an orphan-only table must read typed empty")
+      write()
+      assert(read().count() == 1, s"$root: exactly the committed row")
+      orphanFiles.foreach(f => assert(!Files.exists(Paths.get(root, "g1", f)),
+        s"$root: orphan file $f survived the first commit"))
+    }
+  }
+
   private implicit class IterOps[A](it: java.util.Iterator[A]) {
     def asScala: Iterator[A] = scala.jdk.CollectionConverters.IteratorHasAsScala(it).asScala
   }

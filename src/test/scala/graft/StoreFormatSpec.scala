@@ -3,16 +3,17 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
-import graft.api.{DedupIndex, ManifestIO, Mnemo}
+import graft.api.{DedupIndex, GraphStore, ManifestIO, Mnemo, QualityModel}
 import graft.api.Mnemo.RememberRequest
 import graft.streaming.SyncLoop
 
 /** One on-disk format per store: every versioned store (memories v3,
-  * orientation v2, attention v1, dedup index v2, sync loop v1) reads
-  * exactly the format its writer produces, and a store in any other
-  * format — an older manifest `version`, or a pre-manifest root
-  * layout — fails loudly, naming the store path, the format found and
-  * the version this build reads. */
+  * orientation v2, attention v1, dedup index v2, sync loop v1, quality
+  * model v1, the acl and graph-edge segment tables v1) reads exactly
+  * the format its writer produces, and a store in any other format —
+  * another manifest `version`, or a pre-manifest root layout — fails
+  * loudly, naming the store path, the format found and the version
+  * this build reads. */
 class StoreFormatSpec extends SparkSpec {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
@@ -151,5 +152,39 @@ class StoreFormatSpec extends SparkSpec {
       s"the refusal must name the store and its manifest: ${e.getMessage}")
     assert(ManifestIO.read(dir).exists(_("k") == "old"))
     assert(!Files.exists(Paths.get(dir, ManifestIO.PointerDir, "manifest-00000000000000000001.properties")))
+  }
+
+  test("the quality model commits version 1 and refuses a model of another version") {
+    val dir = freshDir("format-qm")
+    QualityModel.fit(spark, Sf, dir)
+    assert(ManifestIO.read(dir).exists(_.get("version").contains("1")))
+    restamp(dir, "2")
+    refuses(dir, "2", 1)(QualityModel.weights(spark, dir))
+    refuses(dir, "2", 1)(QualityModel.describe(spark, dir))
+    refuses(dir, "2", 1)(QualityModel.fit(spark, Sf, dir))
+  }
+
+  test("flat-parquet acl and graph roots (the in-place layout) fail, naming the path and the version") {
+    import spark.implicits._
+    val store = seeded()
+    val acl = store.path + "_acls"
+    Seq(("m1", "bob", ts("2024-01-05 10:00:00")))
+      .toDF("memory_id", "principal_id", "granted_at").write.parquet(acl)
+    refuses(acl, "0", 1)(store.acls())
+    refuses(acl, "0", 1)(store.share(Seq("m1"), "carol", ts("2024-01-06 10:00:00")))
+    refuses(acl, "0", 1)(store.describe())
+    assert(ManifestIO.read(acl).isEmpty, "a refused store must not be written")
+
+    val graph = freshDir("format-graph")
+    val t0 = ts("2026-01-01 00:00:00")
+    Seq(("e1", "a", "b", "rel", t0, Option.empty[Timestamp], 1.0, t0))
+      .toDF("id", "src", "dst", "relation", "valid_from", "valid_to",
+        "confidence", "recorded_at").write.parquet(graph)
+    val g = GraphStore.open(spark, graph)
+    refuses(graph, "0", 1)(g.edges())
+    refuses(graph, "0", 1)(g.describe())
+    refuses(graph, "0", 1)(g.insertEdge("e2", "b", "c", "rel", t0, None, 1.0, t0))
+    refuses(graph, "0", 1)(g.closeEdge("e1", t0))
+    assert(ManifestIO.read(graph).isEmpty, "a refused store must not be written")
   }
 }
