@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Count Scala source files, raw lines and code lines under a directory.
+"""Count Scala source files, raw lines and code lines in files or directories.
 
 A code line is a line with at least one character outside comments:
 blank lines and lines holding only `//` or (nested) `/* */` comments do
@@ -7,6 +7,10 @@ not count; lines inside string literals, triple-quoted SQL included, do.
 
     python3 scripts/code_lines.py src/main
     # prints: <files> <raw lines> <code lines>
+    python3 scripts/code_lines.py src/main/scala/graft/api/ManifestIO.scala src/test
+    # prints one such line per path, followed by the path, then a total line
+
+A path that does not exist is an error (exit status 1).
 """
 import os
 import sys
@@ -68,16 +72,33 @@ def code_lines(src):
     return count + has_code
 
 
-def main(root):
+def count(path):
+    """(files, raw lines, code lines) of one .scala file or a directory tree."""
+    if os.path.isfile(path):
+        paths = [path] if path.endswith('.scala') else []
+    else:
+        paths = [os.path.join(d, name) for d, _, names in os.walk(path)
+                 for name in names if name.endswith('.scala')]
     files = raw = code = 0
-    for d, _, names in os.walk(root):
-        for name in names:
-            if name.endswith('.scala'):
-                with open(os.path.join(d, name), encoding='utf-8') as f:
-                    src = f.read()
-                files, raw, code = files + 1, raw + src.count('\n'), code + code_lines(src)
-    print(files, raw, code)
+    for f in paths:
+        with open(f, encoding='utf-8') as fh:
+            src = fh.read()
+        files, raw, code = files + 1, raw + src.count('\n'), code + code_lines(src)
+    return files, raw, code
+
+
+def main(paths):
+    missing = [p for p in paths if not os.path.exists(p)]
+    if missing:
+        sys.exit(f"code_lines.py: no such file or directory: {', '.join(missing)}")
+    counts = [count(p) for p in paths]
+    if len(paths) == 1:
+        print(*counts[0])
+        return
+    for p, c in zip(paths, counts):
+        print(*c, p)
+    print(*(sum(c[i] for c in counts) for i in range(3)), 'total')
 
 
 if __name__ == '__main__':
-    main(sys.argv[1] if len(sys.argv) > 1 else 'src/main')
+    main(sys.argv[1:] or ['src/main'])

@@ -423,24 +423,6 @@ object BenchWrites {
     }.min
     val concRows = agents * 2 * batch
 
-    // -- pointer_remember_throughput: remember_throughput's EXACT
-    //    workload with the manifest protocol forced to the write-once
-    //    generation-pointer path (the object-store commit shape,
-    //    driven locally through the staged-write + link(2) put-if-
-    //    absent primitive). Both legs pay identical Spark append jobs;
-    //    the delta is the pointer protocol's extra driver-side work
-    //    per commit (generation listing + stage + link + retention
-    //    sweep) — pointer_commit_overhead attributes it vs the atomic
-    //    rename, so the object-store claim carries a measured price.
-    val pointerSec = Harness.reps(reps) { r =>
-      spark.conf.set("graft.manifest.protocol", "pointer")
-      try {
-        val st = new MnemoStore(spark, freshDir(s"ptr$r"))
-        time((0 until batches).foreach(b =>
-          st.remember((0 until batch).map(i => req("bench-agent", b * batch + i)))))
-      } finally spark.conf.unset("graft.manifest.protocol")
-    }.min
-
     def op(sec: Double, rows: Long): String =
       s"""{"sec":${num("%.4f", sec)},"rows_per_sec":${num("%.1f", rows / sec)}}"""
     def lat(sec: Double): String = s"""{"sec":${num("%.4f", sec)}}"""
@@ -490,16 +472,13 @@ object BenchWrites {
       "ingest_pipeline_throughput" -> op(pipelineSec, rememberRows),
       "pipeline_vs_remember" ->
         s"""{"x":${num("%.2f", pipelineSec / rememberSec)}}""",
-      "concurrent_agents_throughput" -> op(concSec, concRows),
-      "pointer_remember_throughput" -> op(pointerSec, rememberRows),
-      "pointer_commit_overhead" ->
-        s"""{"x":${num("%.2f", pointerSec / rememberSec)}}"""
+      "concurrent_agents_throughput" -> op(concSec, concRows)
     ).map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
     val total = rememberSec + rememberScannedSec + forgetSec + forgetPrunedSec +
       forgetSubjectSec + forgetAllBucketsSec + ckptSec + verifySec + recallSec +
       hybridSec + orientSec + attnPutSec + attnCompactSec + concSec +
       dedupIngestSec + dedupHotSec + dedupUnguardedSec + dedupWindowsSec +
-      dedupWindowsBaseSec + pipelineSec + pointerSec +
+      dedupWindowsBaseSec + pipelineSec +
       agentRecallSec + scanSortedSec + scanInterleavedSec +
       scan1mSortedSec + scan1mInterleavedSec
     // the op set grew in rounds 8-9 (100k-store prune rows, the

@@ -39,7 +39,7 @@ import graft.functions.DedupEnrich
   * The manifest (`segs=g1,g2,…`, `m=<slots>`, `gen=`, `version=`,
   * plus `batch=`/`verdict_seg=` replay bookkeeping when driven through
   * the batchId overload) publishes which dirs are live; a crash
-  * between data write and manifest rename leaves the prior state
+  * between data write and manifest publish leaves the prior state
   * intact and the next commit sweeps the orphan.
   *
   * The Bloom slot count `m` is fixed at CREATION from the declared
@@ -742,7 +742,7 @@ final class DedupIndex(val spark: SparkSession, val path: String,
       .localCheckpoint()
 
     // fold the batch into the state: one new generation dir, published
-    // by one manifest rename; compact everything into that dir when
+    // by one manifest commit; compact everything into that dir when
     // the segment count is over budget
     val newSeg = s"g$gen"
     val overBudget = segs0.length + 1 > Mnemo.MaxSegments

@@ -1,7 +1,7 @@
 package graft.api
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Atomic manifest commits for maintained parquet stores — the publish
@@ -22,35 +22,19 @@ import org.apache.spark.sql.SparkSession
   *
   * Every operation resolves the Hadoop [[FileSystem]] for the path's
   * SCHEME — the same filesystem Spark's data I/O resolves — so the
-  * protocol is truthful wherever the store lives. TWO publish
-  * protocols, picked per scheme (and sticky per store):
-  *
-  * RENAME protocol (`file`, `hdfs`, `viewfs` — schemes with a verified
-  * atomic rename-with-overwrite): one mutable `manifest.properties`,
-  * replaced by an atomic rename of a fully-written scratch file:
-  *  - `file` (and scheme-less local paths): `java.nio.Files.move`
-  *    with ATOMIC_MOVE — the POSIX rename(2) primitive. Hadoop's own
-  *    local FileContext rename-with-overwrite is delete-then-rename
-  *    (AbstractFileSystem.renameInternal), which would open a
-  *    no-manifest crash window, so the local scheme keeps the real
-  *    atomic primitive;
-  *  - `hdfs`/`viewfs`: `FileContext.rename(..., Options.Rename
-  *    .OVERWRITE)` — atomic in the NameNode (HDFS overrides
-  *    renameInternal with the native atomic rename).
-  *
-  * POINTER protocol (object stores — `s3`/`s3a`/`s3n`/`gs`/`wasb`/
-  * `wasbs`/`abfs`/`abfss`/`oss` — where rename is copy+delete and the
-  * rename protocol would be fiction): RENAME-FREE, write-once
-  * generation files `_manifests/manifest-<N-zero-padded>.properties`;
-  * a commit is ONE put-if-absent of generation max+1, a reader
-  * resolves the largest committed N. Crash-window reasoning:
-  *  - crash BEFORE the publish: on an object store an incomplete PUT
-  *    never becomes a visible object (S3 PUT visibility is
-  *    all-or-nothing, and S3 is strongly consistent for read-after-put
-  *    and list-after-put), so readers still resolve the previous
-  *    generation; data dirs staged for the dead commit are orphans the
-  *    next commit's [[gc]] sweeps — exactly the rename protocol's
-  *    guarantee;
+  * protocol is truthful wherever the store lives. ONE publish protocol
+  * on every scheme: write-once generation files
+  * `_manifests/manifest-<N-zero-padded>.properties`; a commit is ONE
+  * put-if-absent of generation max+1, a reader resolves the largest
+  * committed N (see [[publishPointer]] for the primitive per scheme:
+  * link(2) on `file`, rename without overwrite on `hdfs`/`viewfs`, a
+  * conditional create on object stores). Crash-window reasoning:
+  *  - crash BEFORE the publish: the staged bytes (or, on an object
+  *    store, an incomplete PUT — S3 PUT visibility is all-or-nothing,
+  *    and S3 is strongly consistent for read-after-put and
+  *    list-after-put) never become a visible generation, so readers
+  *    still resolve the previous one; data dirs staged for the
+  *    dead commit are orphans the next commit's [[gc]] sweeps;
   *  - crash AFTER the publish: the commit simply happened;
   *  - zombie writer (an old driver resuming after a replacement took
   *    over — the store contract is single-writer): its publish targets
@@ -65,39 +49,32 @@ import org.apache.spark.sql.SparkSession
   *  Old generation files beyond the newest [[PointerKeep]] are swept
   *  after each commit (readers resolve max, so dropping older ones can
   *  never change what any reader sees). Every generation carries a
-  *  torn-write sentinel as its last line ([[CommittedKey]]): on a
-  *  forced unknown scheme whose create-then-write is NOT all-or-nothing,
-  *  a crash mid-write leaves a truncated head generation, and readers
-  *  skip it (no sentinel) back to the newest intact commit instead of
-  *  silently loading a partial manifest.
+  *  torn-write sentinel as its last line ([[CommittedKey]]), and
+  *  readers skip a head without it back to the newest intact commit
+  *  instead of silently loading a partial manifest.
   *
-  * The pointer protocol can be FORCED on any scheme with the
-  * `graft.manifest.protocol=pointer` (Hadoop/session) conf — on
-  * atomic-rename schemes the put-if-absent primitive is then a staged
-  * write + link/rename-without-overwrite (fails on an existing target,
-  * publishes fully-written bytes atomically), which is how the
-  * protocol is driven end to end in tests without an object store. A
-  * store that has ever committed a pointer generation stays on the
-  * pointer protocol (layout presence is the gate). A store is on ONE
-  * protocol for life: forcing the pointer protocol onto a store that
-  * carries a rename-protocol manifest fails instead of migrating it.
+  * A root that holds no generation but a `manifest.properties` — the
+  * mutable manifest this build no longer writes — is refused on read
+  * (and so before any commit, which reads first), never taken for a
+  * never-committed store whose first commit would sweep its data.
   *
   * Every store parses its manifest through [[readVersioned]] (by way
   * of [[StoreCommit.read]]): each store reads and writes exactly one
   * on-disk format, and a manifest of any other version fails loudly.
   *
-  * Any OTHER scheme is refused at commit time unless the pointer
-  * protocol is forced: atomicity of publish visibility is the
-  * correctness keystone, and an unverified scheme's semantics are an
-  * assumption, not a fact.
+  * Any OTHER scheme is refused at commit time: atomicity of publish
+  * visibility is the correctness keystone, and an unverified scheme's
+  * semantics are an assumption, not a fact.
   */
 object ManifestIO {
 
   private val Log = org.slf4j.LoggerFactory.getLogger(getClass)
 
+  /** The mutable manifest of the rename protocol this build no longer
+    * writes: a root that holds it and no generation is refused. */
   val FileName = "manifest.properties"
 
-  /** Write-once generation-file directory of the pointer protocol. */
+  /** Directory of the write-once manifest generation files. */
   val PointerDir = "_manifests"
 
   /** Pointer generations retained after a commit (readers resolve the
@@ -108,22 +85,22 @@ object ManifestIO {
 
   private def pointerName(n: Long): String = f"manifest-$n%020d.properties"
 
-  /** Torn-write sentinel of the pointer protocol: every publish appends
-    * this property as the PHYSICALLY LAST line of the generation file
-    * (after `Properties.store`, whose own key order is hash-driven), so
-    * any byte-truncation of the file — possible only on schemes where
-    * create-then-write is not all-or-nothing, i.e. a FORCED unknown
-    * scheme; object-store PUTs and the staged link/rename publishes
-    * cannot tear — cuts the sentinel off. Readers resolve the newest
-    * generation that carries it and never surface the sentinel key
-    * itself; a store where no generation carries it has never
-    * committed. */
+  /** Torn-write sentinel: every publish appends this property as the
+    * PHYSICALLY LAST line of the generation file (after
+    * `Properties.store`, whose own key order is hash-driven), so any
+    * byte-truncation of the file cuts the sentinel off. No accepted
+    * scheme's publish should tear (object-store PUTs and the staged
+    * link/rename publishes are all-or-nothing); the sentinel is the
+    * defence against a filesystem or connector that breaks that
+    * promise. Readers resolve the newest generation that carries it and
+    * never surface the sentinel key itself; a store where no generation
+    * carries it has never committed. */
   private[graft] val CommittedKey = "graft.manifest.committed"
 
-  /** Bounded re-list retries for the pointer read(): between a
-    * reader's listing and its open, [[PointerKeep]]-or-more commits by
-    * the live writer can sweep the listed generation — the open throws
-    * FileNotFound and the fix is a fresh listing, not an error. */
+  /** Bounded re-list retries for read(): between a reader's listing
+    * and its open, [[PointerKeep]]-or-more commits by the live writer
+    * can sweep the listed generation — the open throws FileNotFound and
+    * the fix is a fresh listing, not an error. */
   private val ReadRelistAttempts = 5
 
   /** Hadoop configuration: the active Spark session's (so `fs.*`
@@ -142,24 +119,22 @@ object ManifestIO {
 
   private def fsOf(p: Path): FileSystem = p.getFileSystem(hconf)
 
-  /** Schemes whose rename-with-overwrite is verified atomic. */
+  /** Schemes with an atomic, fail-if-exists publish of a fully staged
+    * file: link(2) locally, rename without overwrite in the NameNode. */
   private val AtomicRenameSchemes = Set("file", "hdfs", "viewfs")
 
-  /** Object-store schemes routed to the pointer protocol: visibility
-    * of a completed PUT/create is all-or-nothing, and
-    * create(overwrite=false) maps to a conditional write on current
-    * connectors (see the object doc's zombie-writer note). */
+  /** Object-store schemes: visibility of a completed PUT/create is
+    * all-or-nothing, and create(overwrite=false) maps to a conditional
+    * write on current connectors (see the object doc's zombie-writer
+    * note). */
   private val ObjectStoreSchemes =
     Set("s3", "s3a", "s3n", "gs", "wasb", "wasbs", "abfs", "abfss", "oss")
-
-  def manifestPath(storePath: String): Path =
-    new Path(storePath, FileName)
 
   private def schemeOf(p: Path, conf: Configuration): String =
     Option(p.toUri.getScheme)
       .getOrElse(FileSystem.getDefaultUri(conf).getScheme)
 
-  /** Committed pointer generations, ascending. Empty for no dir. */
+  /** Committed generations, ascending. Empty for no dir. */
   private def pointerGens(fs: FileSystem, dir: Path): Seq[Long] =
     if (!fs.exists(dir)) Nil
     else fs.listStatus(dir).toSeq.collect {
@@ -176,11 +151,11 @@ object ManifestIO {
   }
 
   /** Read the committed key→value map (None if never committed). A
-    * store with pointer generations resolves through them alone; the
-    * rename-protocol file is read only when there are none.
+    * root with no generation but a [[FileName]] fails with an
+    * IllegalStateException naming both: it is a store this build does
+    * not read, not an empty one.
     *
-    * Pointer resolution walks the committed generations NEWEST-FIRST
-    * and returns the first one carrying the [[CommittedKey]] sentinel.
+    * Resolution walks the committed generations NEWEST-FIRST and returns the first one carrying the [[CommittedKey]] sentinel.
     * A generation that cannot be PARSED (Properties.load throws — a
     * head truncated mid-`\\uXXXX` escape raises IllegalArgumentException,
     * not FileNotFound, so a bare FNF-only handler would surface the
@@ -211,8 +186,13 @@ object ManifestIO {
     def resolve(attempt: Int): Option[Map[String, String]] = {
       val gens = pointerGens(fs, pdir)
       if (gens.isEmpty) {
-        val p = manifestPath(storePath)
-        if (fs.exists(p)) Some(loadProps(fs, p)) else None
+        if (fs.exists(new Path(storePath, FileName)))
+          throw new IllegalStateException(
+            s"maintained store at $storePath: it holds a $FileName and no " +
+              s"$PointerDir generation — the rename-protocol layout this " +
+              "build does not read (there is no migration; rebuild the " +
+              "store with this build)")
+        None
       } else try {
         // lazy walk: an intact head stops at ONE load
         val found = gens.reverse.iterator.zipWithIndex
@@ -220,12 +200,12 @@ object ManifestIO {
         found match {
           case Some((m, skipped)) =>
             if (skipped > 0)
-              Log.warn("maintained store at {}: {} newest pointer " +
+              Log.warn("maintained store at {}: {} newest manifest " +
                 "generation(s) carry no committed sentinel (torn write) — " +
                 "resolving the newest intact generation", storePath, skipped)
             Some(m - CommittedKey)
           case None =>
-            Log.warn("maintained store at {}: no pointer generation is " +
+            Log.warn("maintained store at {}: no manifest generation is " +
               "intact — the store reads as never committed", storePath)
             None
         }
@@ -234,7 +214,7 @@ object ManifestIO {
           if (attempt < ReadRelistAttempts) resolve(attempt + 1)
           else throw new java.io.IOException(
             s"maintained store at $storePath: every listing of the " +
-              s"pointer manifests went stale $ReadRelistAttempts times " +
+              s"manifest generations went stale $ReadRelistAttempts times " +
               "in a row (a writer is committing faster than this reader " +
               "can list-and-open)", e)
       }
@@ -264,91 +244,27 @@ object ManifestIO {
         s"$found, but this build reads only version $version (there is " +
         "no migration; rebuild the store with this build)")
 
-  /** Commit a full manifest state through the store's protocol (see
-    * the object doc): rename-with-overwrite on atomic-rename schemes,
-    * write-once generation pointer everywhere else (object stores by
-    * default, any scheme under `graft.manifest.protocol=pointer`, and
-    * any store that already carries a pointer layout). */
+  /** Commit a full manifest state: ONE put-if-absent of generation
+    * max+1 (see [[publishPointer]]), then the retention sweep. Callers
+    * read the store first ([[StoreCommit.open]]), so a root [[read]]
+    * refuses is never written. */
   def write(storePath: String, entries: Map[String, String]): Unit = {
-    val live = manifestPath(storePath)
+    val pdir = new Path(storePath, PointerDir)
     val conf = hconf // ONE conf for the whole multi-step commit
     // gate on the URI scheme BEFORE resolving the filesystem: an
     // unknown scheme must hit the documented refusal even when the
     // scheme's FS implementation is not on the classpath
-    val scheme = schemeOf(live, conf)
-    val forcedPointer = conf.get("graft.manifest.protocol") == "pointer"
-    val usePointer =
-      if (forcedPointer || ObjectStoreSchemes.contains(scheme)) true
-      else if (AtomicRenameSchemes.contains(scheme))
-        // sticky: a store that ever committed a pointer generation
-        // stays on the pointer protocol, whoever opens it next
-        pointerGens(live.getFileSystem(conf),
-          new Path(storePath, PointerDir)).nonEmpty
-      else
-        throw new UnsupportedOperationException(
-          s"maintained store at $storePath: manifest commits need either " +
-            s"an ATOMIC rename-with-overwrite or all-or-nothing create " +
-            s"visibility, and scheme '$scheme' is verified for neither. " +
-            "Use a file:// or hdfs:// store path, an object store " +
-            "(s3a/gs/abfs/...), or — if this filesystem's create " +
-            "visibility is known atomic — force the write-once protocol " +
-            "with graft.manifest.protocol=pointer.")
-    if (usePointer) writePointer(storePath, entries, conf, scheme)
-    else writeRename(storePath, entries, conf, scheme)
-  }
-
-  /** RENAME protocol commit: scratch file + atomic overwrite-rename. */
-  private def writeRename(storePath: String, entries: Map[String, String],
-      conf: Configuration, scheme: String): Unit = {
-    val live = manifestPath(storePath)
-    val fs = live.getFileSystem(conf)
-    // local writes go through the RAW local FS: the checksummed
-    // LocalFileSystem would shadow every scratch file with a .crc
-    // sidecar the atomic move below does not carry along
-    val fsw: FileSystem =
-      if (scheme == "file") FileSystem.getLocal(conf).getRaw else fs
-    fsw.mkdirs(new Path(storePath))
-    val props = new java.util.Properties()
-    entries.foreach { case (k, v) => props.setProperty(k, v) }
-    val tmp = new Path(storePath, FileName + ".tmp")
-    val out = fsw.create(tmp, true)
-    try props.store(out, null) finally out.close()
-    if (scheme == "file") {
-      // POSIX rename(2): overwrite-atomic. qualify through the FS so a
-      // relative store path resolves exactly like the data I/O did
-      val q = fs.makeQualified(live)
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(fs.makeQualified(tmp).toUri.getPath),
-        java.nio.file.Paths.get(q.toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } else {
-      FileContext.getFileContext(fs.getUri, conf)
-        .rename(fs.makeQualified(tmp), fs.makeQualified(live),
-          Options.Rename.OVERWRITE)
-    }
-  }
-
-  /** POINTER protocol commit: ONE put-if-absent of generation max+1.
-    * The publish primitive per scheme family:
-    *  - `file`: stage fully, then link(2) (atomic, EEXIST on an
-    *    existing target — the POSIX put-if-absent), then unlink the
-    *    stage;
-    *  - `hdfs`/`viewfs`: stage fully, then rename WITHOUT overwrite
-    *    (atomic in the NameNode, false if the target exists);
-    *  - object stores / forced unknown schemes: create(overwrite =
-    *    false) and write directly — PUT visibility is all-or-nothing,
-    *    so a reader never sees a partial manifest, and the no-overwrite
-    *    create is the conditional write. */
-  private def writePointer(storePath: String, entries: Map[String, String],
-      conf: Configuration, scheme: String): Unit = {
-    val pdir = new Path(storePath, PointerDir)
+    val scheme = schemeOf(pdir, conf)
+    if (!AtomicRenameSchemes(scheme) && !ObjectStoreSchemes(scheme))
+      throw new UnsupportedOperationException(
+        s"maintained store at $storePath: manifest commits need an " +
+          s"atomic put-if-absent publish, and scheme '$scheme' is verified " +
+          "for none. Use a file:// or hdfs:// store path or an object " +
+          "store (s3a/gs/abfs/...).")
     val fs0 = pdir.getFileSystem(conf)
-    if (fs0.exists(manifestPath(storePath)))
-      throw new IllegalStateException(
-        s"maintained store at $storePath: the pointer protocol cannot " +
-          s"commit to a store that carries a rename-protocol $FileName " +
-          "(a store stays on one protocol; there is no migration)")
+    // local writes go through the RAW local FS: the checksummed
+    // LocalFileSystem would shadow every stage with a .crc sidecar the
+    // link below does not carry along
     val fs: FileSystem =
       if (scheme == "file") FileSystem.getLocal(conf).getRaw else fs0
     fs.mkdirs(pdir)
@@ -365,15 +281,24 @@ object ManifestIO {
       .foreach(st => fs.delete(st.getPath, false))
   }
 
-  /** The pointer protocol's put-if-absent publish of ONE generation —
-    * package-visible so the writer-race conflict (two writers that both
+  /** The put-if-absent publish of ONE generation, per scheme family:
+    *  - `file`: stage fully, then link(2) (atomic, EEXIST on an
+    *    existing target — the POSIX put-if-absent), then unlink the
+    *    stage;
+    *  - `hdfs`/`viewfs`: stage fully, then rename WITHOUT overwrite
+    *    (atomic in the NameNode, false if the target exists);
+    *  - object stores: create(overwrite = false) and write directly —
+    *    PUT visibility is all-or-nothing, so a reader never sees a
+    *    partial manifest, and the no-overwrite create is the
+    *    conditional write.
+    * Package-visible so the writer-race conflict (two writers that both
     * resolved `next` before either published) is directly testable. */
   private[graft] def publishPointer(storePath: String,
       entries: Map[String, String], fs0: FileSystem, fs: FileSystem,
       scheme: String, pdir: Path, next: Long): Unit = {
     val target = fs.makeQualified(new Path(pdir, pointerName(next)))
     require(!entries.contains(CommittedKey),
-      s"manifest entry key '$CommittedKey' is reserved by the pointer protocol")
+      s"manifest entry key '$CommittedKey' is reserved by the publish protocol")
     val props = new java.util.Properties()
     entries.foreach { case (k, v) => props.setProperty(k, v) }
     // serialize ONCE with the torn-write sentinel as the physically
@@ -388,7 +313,7 @@ object ManifestIO {
     }
     def conflict(cause: Throwable): Nothing =
       throw new java.io.IOException(
-        s"maintained store at $storePath: pointer manifest generation " +
+        s"maintained store at $storePath: manifest generation " +
           s"$next already exists — a second writer committed since this " +
           "writer read the store (the contract is single-writer; this " +
           "writer is stale and must re-open the store)", cause)
@@ -454,10 +379,9 @@ object ManifestIO {
     def sweep(rel: String): Unit =
       listChildren(s"$storePath/$rel").foreach { case (nm, isDir) =>
         val child = rel + nm
-        // the pointer-protocol generation dir is never a data dir a
-        // manifest references — it IS the manifest
-        if (live(child) || rel.isEmpty &&
-            (nm == PointerDir || nm.startsWith(FileName))) ()
+        // the generation dir is never a data dir a manifest references
+        // — it IS the manifest
+        if (live(child) || rel.isEmpty && nm == PointerDir) ()
         else if (isDir && live.exists(_.startsWith(child + "/")))
           sweep(child + "/")
         else deleteRecursively(s"$storePath/$child")
@@ -495,11 +419,5 @@ object ManifestIO {
   def deleteRecursively(path: String): Unit = {
     val p = new Path(path)
     fsOf(p).delete(p, true)
-  }
-
-  /** Delete one file (not recursive); no-op if missing. */
-  def deleteFile(path: String): Unit = {
-    val p = new Path(path)
-    fsOf(p).delete(p, false)
   }
 }

@@ -310,7 +310,8 @@ final class MnemoStore(val spark: SparkSession, val path: String,
   // ---- store layout v3: manifest-committed hash buckets ----
   //
   // path/
-  //   manifest.properties          version=3, gen=<n>, bucket.<k> -> segs
+  //   _manifests/                  write-once manifest generations:
+  //                                version=3, gen=<n>, bucket.<k> -> segs
   //   g<n>/r/bucket=<k>/           replacement segment (full bucket content)
   //   g<n>/a/bucket=<k>/           append segment (new rows only)
   //   t<n>/                        tag→bucket inverted-index segment

@@ -166,7 +166,8 @@ class DedupIndexPropertySpec extends SparkSpec {
           val onDisk = {
             val ls = Files.list(Paths.get(dir))
             try ls.iterator().asScala.filter(Files.isDirectory(_))
-              .map(_.getFileName.toString).toSet
+              .map(_.getFileName.toString)
+              .filter(_ != ManifestIO.PointerDir).toSet
             finally ls.close()
           }
           assert(onDisk == segs,

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-level invariants of `src/main` that the compiler does not
   * check: a scaladoc that attaches to the definition it describes, one
   * place that decides how the mains build their session, one on-disk
-  * format per store (no legacy read or migration code), and one commit
-  * core every store writes through. */
+  * format per store (no legacy read or migration code), one commit
+  * core every store writes through, and one manifest publish protocol
+  * (no overwrite-rename, no protocol switch). */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private val sources: Seq[(Path, IndexedSeq[String])] = {
@@ -113,5 +114,19 @@ class SourceHygieneSpec extends AnyFunSuite {
       s"exactly one attention-put append: ${attentionPut.map(_._3).mkString(", ")}")
     assert(inPlace.isEmpty,
       s"store writes outside the core: ${inPlace.map(_._3).mkString(", ")}")
+  }
+
+  test("one manifest protocol: no overwrite-rename publish and no protocol switch") {
+    // the deleted conf's name is spelled in parts, so it appears
+    // nowhere in the tree, this row included
+    val forks = Seq(Seq("graft", "manifest", "protocol").mkString("."),
+      "ATOMIC_MOVE", "REPLACE_EXISTING", "Options.Rename.OVERWRITE")
+    val offenders = for {
+      (p, lines) <- sources
+      (l, i) <- lines.zipWithIndex
+      f <- forks if l.contains(f)
+    } yield s"$p:${i + 1} ($f)"
+    assert(offenders.isEmpty,
+      s"every store publishes write-once generations: ${offenders.mkString(", ")}")
   }
 }

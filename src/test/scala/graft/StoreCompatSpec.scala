@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 
 /** On-disk compatibility of the maintained stores: a store re-opens
   * under a different compiled default (bucket count), the manifest
-  * commit protocols (rename and pointer) keep their crash guarantees,
+  * commit protocol (write-once generations) keeps its crash guarantees,
   * and crash orphans stay invisible until the next commit sweeps
   * them. StoreFormatSpec pins that a store in any other on-disk format
   * fails loudly. */
@@ -97,9 +97,8 @@ class StoreCompatSpec extends SparkSpec {
     assert(store.attentionStateGet("alice", "focus").map(new String(_)).contains("v2"))
     assert(spark.read.parquet(s"$root/g1").count() == 3)
     // absorbed root-level files are swept
-    assert(Files.list(Paths.get(root)).iterator().asScala
-      .filter(Files.isRegularFile(_))
-      .forall(_.getFileName.toString.startsWith(ManifestIO.FileName)))
+    assert(!Files.list(Paths.get(root)).iterator().asScala
+      .exists(Files.isRegularFile(_)))
 
     // puts continue into the committed generation; a second compaction
     // rolls to g2 and sweeps g1
@@ -276,8 +275,10 @@ class StoreCompatSpec extends SparkSpec {
     assert(ManifestIO.read(dir).contains(Map("version" -> "1", "data" -> "g1")))
     ManifestIO.write(dir, Map("version" -> "1", "data" -> "g2"))
     assert(ManifestIO.read(dir).get("data") == "g2")
-    // the scratch file never survives a commit
-    assert(!Files.exists(Paths.get(dir, ManifestIO.FileName + ".tmp")))
+    // no stage file survives a commit, and no mutable manifest is written
+    assert(!Files.list(Paths.get(dir, ManifestIO.PointerDir)).iterator().asScala
+      .exists(_.getFileName.toString.contains(".tmp")))
+    assert(!Files.exists(Paths.get(dir, ManifestIO.FileName)))
   }
 
   // ---- tag→bucket inverted index (forgetSubject's prune) ----
@@ -339,14 +340,13 @@ class StoreCompatSpec extends SparkSpec {
   }
 
   test("an UNKNOWN scheme is refused at commit time; object-store schemes route to the pointer protocol") {
-    // unknown scheme: neither atomic rename nor all-or-nothing create
-    // visibility is a verified fact there — refuse before FS resolution
+    // unknown scheme: an atomic put-if-absent publish is not a verified
+    // fact there — refuse before FS resolution
     val e = intercept[UnsupportedOperationException] {
       ManifestIO.write("weirdfs://some-host/store", Map("version" -> "3"))
     }
-    assert(e.getMessage.contains("ATOMIC rename") &&
-      e.getMessage.contains("graft.manifest.protocol"),
-      s"the refusal must explain itself and name the escape hatch: ${e.getMessage}")
+    assert(e.getMessage.contains("atomic put-if-absent"),
+      s"the refusal must explain itself: ${e.getMessage}")
     assert(e.getMessage.contains("weirdfs"), "the refusal must name the scheme")
     // an object-store scheme is no longer refused by the protocol gate:
     // it routes to the write-once pointer protocol and proceeds to FS
@@ -357,59 +357,50 @@ class StoreCompatSpec extends SparkSpec {
     }
     assert(!s3.isInstanceOf[UnsupportedOperationException],
       s"s3a must pass the protocol gate, got: $s3")
-    // the local default scheme keeps committing via rename
+    // the local default scheme commits a generation
     val ok = Files.createTempDirectory("compat-s3gate").toFile.getAbsolutePath
     ManifestIO.write(ok, Map("version" -> "3"))
     assert(ManifestIO.read(ok).exists(_("version") == "3"))
   }
 
   test("pointer protocol: full store lifecycle through write-once generation manifests on a local FS") {
-    // graft.manifest.protocol=pointer forces the object-store commit
-    // path (staged write + link-based put-if-absent locally) so the
-    // whole protocol — publish, resolve-max read, retention, gc
-    // interplay — is driven end to end without an object store
-    withConf("graft.manifest.protocol" -> "pointer") {
-      val localDir = Files.createTempDirectory("compat-pointer").toFile
-      localDir.delete()
-      val store = Mnemo.open(spark, localDir.getAbsolutePath)
-      seed(store)
-      assert(store.table().count() == 2)
-      // the layout really is the pointer one: generation files, no
-      // mutable manifest.properties
-      val pdir = new java.io.File(localDir, ManifestIO.PointerDir)
-      assert(pdir.isDirectory && pdir.list().exists(_.startsWith("manifest-")),
-        s"expected pointer generation files, found: ${Option(pdir.list()).map(_.toList)}")
-      assert(!new java.io.File(localDir, ManifestIO.FileName).exists(),
-        "pointer-layout store must not carry the mutable manifest")
-      store.forget("alice", Seq("m1"), ts("2024-01-05 10:00:00"))
-      val live = store.table().filter(col("deleted_at").isNull)
-        .select("id").collect().map(_.getString(0)).toSet
-      assert(live == Set("m2"), s"point op through the pointer protocol: $live")
-      store.checkpoint("ck1", "alice", ts("2024-01-06 10:00:00"))
-      assert(store.replay("ck1").count() >= 1)
-      // the dedup index through the same protocol
-      import spark.implicits._
-      val idx = new graft.api.DedupIndex(spark,
-        Files.createTempDirectory("compat-pidx").toFile.getAbsolutePath + "/idx",
-        capacity = 100)
-      idx.ingest(Seq(1L -> "some document text here tonight").toDF("doc_id", "text")).collect()
-      val v = idx.ingest(Seq(2L -> "some document text here tonight").toDF("doc_id", "text"))
-        .collect().head
-      assert(v.getInt(1) == 1 && v.getSeq[Long](2) == Seq(1L))
-    }
+    // the local commit path (staged write + link-based put-if-absent)
+    // drives the whole protocol — publish, resolve-max read, retention,
+    // gc interplay — end to end without an object store
+    val localDir = Files.createTempDirectory("compat-pointer").toFile
+    localDir.delete()
+    val store = Mnemo.open(spark, localDir.getAbsolutePath)
+    seed(store)
+    assert(store.table().count() == 2)
+    // the layout really is the pointer one: generation files, no
+    // mutable manifest.properties
+    val pdir = new java.io.File(localDir, ManifestIO.PointerDir)
+    assert(pdir.isDirectory && pdir.list().exists(_.startsWith("manifest-")),
+      s"expected pointer generation files, found: ${Option(pdir.list()).map(_.toList)}")
+    assert(!new java.io.File(localDir, ManifestIO.FileName).exists(),
+      "pointer-layout store must not carry the mutable manifest")
+    store.forget("alice", Seq("m1"), ts("2024-01-05 10:00:00"))
+    val live = store.table().filter(col("deleted_at").isNull)
+      .select("id").collect().map(_.getString(0)).toSet
+    assert(live == Set("m2"), s"point op through the pointer protocol: $live")
+    store.checkpoint("ck1", "alice", ts("2024-01-06 10:00:00"))
+    assert(store.replay("ck1").count() >= 1)
+    // the dedup index through the same protocol
+    import spark.implicits._
+    val idx = new graft.api.DedupIndex(spark,
+      Files.createTempDirectory("compat-pidx").toFile.getAbsolutePath + "/idx",
+      capacity = 100)
+    idx.ingest(Seq(1L -> "some document text here tonight").toDF("doc_id", "text")).collect()
+    val v = idx.ingest(Seq(2L -> "some document text here tonight").toDF("doc_id", "text"))
+      .collect().head
+    assert(v.getInt(1) == 1 && v.getSeq[Long](2) == Seq(1L))
   }
 
-  test("pointer protocol: layout is sticky, put-if-absent detects a second writer, retention keeps the tail") {
+  test("pointer protocol: put-if-absent detects a second writer, retention keeps the tail") {
     val dir = Files.createTempDirectory("compat-psticky").toFile.getAbsolutePath
-    withConf("graft.manifest.protocol" -> "pointer") {
-      ManifestIO.write(dir, Map("version" -> "3", "k" -> "1"))
-    }
-    // WITHOUT the forced conf, the store stays on the pointer protocol
-    // (layout presence gates, like the Bloom encoding version)
+    ManifestIO.write(dir, Map("version" -> "3", "k" -> "1"))
     ManifestIO.write(dir, Map("version" -> "3", "k" -> "2"))
     assert(ManifestIO.read(dir).exists(_("k") == "2"))
-    assert(!new java.io.File(dir, ManifestIO.FileName).exists(),
-      "a pointer store must not regress to the mutable manifest")
     // writer race: two writers resolve the same next generation before
     // either publishes; the second publish must hit the put-if-absent
     // conflict, not clobber the first. Driven through the primitive —
@@ -439,25 +430,23 @@ class StoreCompatSpec extends SparkSpec {
     // stage file) but BEFORE its put-if-absent publish must leave
     // readers on the previous generation, and the next commit sweeps
     // both kinds of leftovers
-    withConf("graft.manifest.protocol" -> "pointer") {
-      val store = freshStore()
-      seed(store)
-      val rows = store.table().count()
-      import spark.implicits._
-      Seq(("junk", "x", "t1")).toDF("id", "content", "thread_id")
-        .write.parquet(s"${store.path}/g999/a/bucket=0")
-      val deadStage = new java.io.File(
-        s"${store.path}/${ManifestIO.PointerDir}/manifest-99999999999999999999.properties.tmp-dead")
-      assert(deadStage.createNewFile())
-      // both leftovers invisible to readers
-      assert(store.table().count() == rows)
-      // the next commit sweeps the orphan dir (gc) and the dead stage
-      store.forget("alice", Seq("m2"), ts("2024-03-01 00:00:00"))
-      assert(!Files.exists(Paths.get(store.path, "g999")),
-        "orphan data dir must be swept under the pointer protocol")
-      assert(!deadStage.exists(), "dead writer's stage file must be swept")
-      assert(store.table().count() == rows)
-    }
+    val store = freshStore()
+    seed(store)
+    val rows = store.table().count()
+    import spark.implicits._
+    Seq(("junk", "x", "t1")).toDF("id", "content", "thread_id")
+      .write.parquet(s"${store.path}/g999/a/bucket=0")
+    val deadStage = new java.io.File(
+      s"${store.path}/${ManifestIO.PointerDir}/manifest-99999999999999999999.properties.tmp-dead")
+    assert(deadStage.createNewFile())
+    // both leftovers invisible to readers
+    assert(store.table().count() == rows)
+    // the next commit sweeps the orphan dir (gc) and the dead stage
+    store.forget("alice", Seq("m2"), ts("2024-03-01 00:00:00"))
+    assert(!Files.exists(Paths.get(store.path, "g999")),
+      "orphan data dir must be swept under the pointer protocol")
+    assert(!deadStage.exists(), "dead writer's stage file must be swept")
+    assert(store.table().count() == rows)
   }
 
   test("pointer protocol: a torn head generation (no committed sentinel) falls back to the newest intact commit") {
@@ -466,10 +455,8 @@ class StoreCompatSpec extends SparkSpec {
     // all-or-nothing leaves a truncated head that Properties.load
     // would happily parse as a PARTIAL manifest — readers must skip it
     val dir = Files.createTempDirectory("compat-ptorn").toFile.getAbsolutePath
-    withConf("graft.manifest.protocol" -> "pointer") {
-      ManifestIO.write(dir, Map("version" -> "3", "k" -> "good", "extra" -> "x"))
-      ManifestIO.write(dir, Map("version" -> "3", "k" -> "head", "extra" -> "y"))
-    }
+    ManifestIO.write(dir, Map("version" -> "3", "k" -> "good", "extra" -> "x"))
+    ManifestIO.write(dir, Map("version" -> "3", "k" -> "head", "extra" -> "y"))
     assert(ManifestIO.read(dir).exists(_("k") == "head"))
     val pdir = new java.io.File(dir, ManifestIO.PointerDir)
     val head = pdir.listFiles().filter(_.getName.endsWith(".properties"))
@@ -489,9 +476,7 @@ class StoreCompatSpec extends SparkSpec {
     assert(!m.contains(ManifestIO.CommittedKey),
       "the protocol sentinel must never surface to callers")
     // the next commit publishes max+1 and the store heals forward
-    withConf("graft.manifest.protocol" -> "pointer") {
-      ManifestIO.write(dir, Map("version" -> "3", "k" -> "healed"))
-    }
+    ManifestIO.write(dir, Map("version" -> "3", "k" -> "healed"))
     assert(ManifestIO.read(dir).exists(_("k") == "healed"))
   }
 
@@ -503,11 +488,9 @@ class StoreCompatSpec extends SparkSpec {
     // unparseable generation as torn and resolve the previous intact
     // one instead of surfacing the parser crash
     val dir = Files.createTempDirectory("compat-ptorn2").toFile.getAbsolutePath
-    withConf("graft.manifest.protocol" -> "pointer") {
-      ManifestIO.write(dir, Map("version" -> "3", "k" -> "good"))
-      // a value with a non-Latin-1 char serializes as a \uXXXX escape
-      ManifestIO.write(dir, Map("version" -> "3", "k" -> "head", "t" -> "προφίλ"))
-    }
+    ManifestIO.write(dir, Map("version" -> "3", "k" -> "good"))
+    // a value with a non-Latin-1 char serializes as a \uXXXX escape
+    ManifestIO.write(dir, Map("version" -> "3", "k" -> "head", "t" -> "προφίλ"))
     assert(ManifestIO.read(dir).exists(_("k") == "head"))
     val pdir = new java.io.File(dir, ManifestIO.PointerDir)
     val head = pdir.listFiles().filter(_.getName.endsWith(".properties"))
@@ -528,9 +511,7 @@ class StoreCompatSpec extends SparkSpec {
     assert(m("k") == "good",
       s"reader must fall back past the unparseable head: $m")
     // and the store heals forward
-    withConf("graft.manifest.protocol" -> "pointer") {
-      ManifestIO.write(dir, Map("version" -> "3", "k" -> "healed"))
-    }
+    ManifestIO.write(dir, Map("version" -> "3", "k" -> "healed"))
     assert(ManifestIO.read(dir).exists(_("k") == "healed"))
   }
 

@@ -3,7 +3,9 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
-import graft.api.{DedupIndex, GraphStore, ManifestIO, Mnemo, QualityModel}
+import scala.jdk.CollectionConverters._
+
+import graft.api.{DealLedger, DedupIndex, GraphStore, ManifestIO, Mnemo, QualityModel}
 import graft.api.Mnemo.RememberRequest
 import graft.streaming.SyncLoop
 
@@ -11,9 +13,10 @@ import graft.streaming.SyncLoop
   * orientation v2, attention v1, dedup index v2, sync loop v1, quality
   * model v1, the acl and graph-edge segment tables v1) reads exactly
   * the format its writer produces, and a store in any other format —
-  * another manifest `version`, or a pre-manifest root layout — fails
-  * loudly, naming the store path, the format found and the version
-  * this build reads. */
+  * another manifest `version`, a pre-manifest root layout, or the
+  * retired mutable `manifest.properties` — fails loudly, naming the
+  * store path and the format found, and a never-written path reads
+  * empty without creating a file. */
 class StoreFormatSpec extends SparkSpec {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
@@ -118,40 +121,100 @@ class StoreFormatSpec extends SparkSpec {
   }
 
   test("a pointer store whose only generation lacks the sentinel reads as never committed") {
-    withConf("graft.manifest.protocol" -> "pointer") {
-      val store = seeded()
-      val pdir = Paths.get(store.path, ManifestIO.PointerDir)
-      val gens = Files.list(pdir).toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .filter(_.getFileName.toString.endsWith(".properties"))
-      assert(gens.length == 1, s"one commit, one generation: ${gens.toList}")
-      // tear the only generation: cut the sentinel line off
-      val text = new String(Files.readAllBytes(gens.head), "ISO-8859-1")
-      val at = text.indexOf(ManifestIO.CommittedKey)
-      assert(at > 0)
-      Files.write(gens.head, text.substring(0, at).getBytes("ISO-8859-1"))
-      assert(ManifestIO.read(store.path).isEmpty)
-      assert(store.table().count() == 0)
-      assert(store.describe().generation == 0L)
-      // the next commit starts the store over and sweeps the torn
-      // commit's data dirs
-      store.remember(Seq(RememberRequest("m2", "alice", "t1", "fresh start",
-        createdAt = ts("2024-01-02 10:00:00"))))
-      assert(store.table().select("id").collect().map(_.getString(0)).toSeq == Seq("m2"))
-    }
+    val store = seeded()
+    val pdir = Paths.get(store.path, ManifestIO.PointerDir)
+    val gens = Files.list(pdir).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".properties"))
+    assert(gens.length == 1, s"one commit, one generation: ${gens.toList}")
+    // tear the only generation: cut the sentinel line off
+    val text = new String(Files.readAllBytes(gens.head), "ISO-8859-1")
+    val at = text.indexOf(ManifestIO.CommittedKey)
+    assert(at > 0)
+    Files.write(gens.head, text.substring(0, at).getBytes("ISO-8859-1"))
+    assert(ManifestIO.read(store.path).isEmpty)
+    assert(store.table().count() == 0)
+    assert(store.describe().generation == 0L)
+    // the next commit starts the store over and sweeps the torn
+    // commit's data dirs
+    store.remember(Seq(RememberRequest("m2", "alice", "t1", "fresh start",
+      createdAt = ts("2024-01-02 10:00:00"))))
+    assert(store.table().select("id").collect().map(_.getString(0)).toSeq == Seq("m2"))
   }
 
-  test("forcing the pointer protocol onto a rename-protocol store fails instead of migrating it") {
-    val dir = freshDir("format-proto")
-    ManifestIO.write(dir, Map("version" -> "3", "k" -> "old"))
-    val e = intercept[IllegalStateException] {
-      withConf("graft.manifest.protocol" -> "pointer") {
-        ManifestIO.write(dir, Map("version" -> "3", "k" -> "new"))
-      }
+  test("a root holding manifest.properties and no generation (the rename-protocol layout) is refused on read and before remember, untouched") {
+    import spark.implicits._
+    val dir = freshDir("format-rename")
+    Seq(("m1", "alpha")).toDF("id", "content").write.parquet(s"$dir/g1/a/bucket=0")
+    Files.write(Paths.get(dir, ManifestIO.FileName),
+      "version=3\ngen=1\nbuckets=32\nbucket.0=g1/a\n".getBytes("ISO-8859-1"))
+    def snapshot(): Map[String, Seq[Byte]] = {
+      val walk = Files.walk(Paths.get(dir))
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => Paths.get(dir).relativize(f).toString ->
+          Files.readAllBytes(f).toSeq).toMap
+      finally walk.close()
     }
-    assert(e.getMessage.contains(dir) && e.getMessage.contains(ManifestIO.FileName),
-      s"the refusal must name the store and its manifest: ${e.getMessage}")
-    assert(ManifestIO.read(dir).exists(_("k") == "old"))
-    assert(!Files.exists(Paths.get(dir, ManifestIO.PointerDir, "manifest-00000000000000000001.properties")))
+    val before = snapshot()
+    assert(before.keys.exists(_.startsWith("g1/")) && before.contains(ManifestIO.FileName))
+    def refusedRename(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains(dir) && e.getMessage.contains(ManifestIO.FileName),
+        s"the refusal must name the store and its manifest: ${e.getMessage}")
+    }
+    refusedRename(ManifestIO.read(dir))
+    val store = Mnemo.open(spark, dir)
+    refusedRename(store.table())
+    refusedRename(store.remember(Seq(RememberRequest("m2", "alice", "t1", "more",
+      createdAt = ts("2024-01-02 10:00:00")))))
+    assert(snapshot() == before, "a refused store must be left byte-identical")
+  }
+
+  test("every public read on a never-written path returns a typed empty result or names the path, and creates no file") {
+    val root = freshDir("format-never")
+    Files.createDirectories(Paths.get(root))
+    val p = s"$root/store"
+    val t0 = ts("2026-01-01 00:00:00")
+    def empty(df: org.apache.spark.sql.DataFrame, column: String): Unit =
+      assert(df.columns.contains(column) && df.count() == 0,
+        s"expected a typed empty frame with `$column`: ${df.columns.toList}")
+
+    val store = Mnemo.open(spark, p)
+    empty(store.table(), "id")
+    assert(store.describe().generation == 0L && !store.describe().auxStores.values.exists(identity))
+    empty(store.acls(), "memory_id")
+    empty(store.checkpoints(), "name")
+    empty(store.delegations(), "from_agent")
+    empty(store.replay("x"), "id")
+    empty(store.orientationState(), "key")
+    assert(store.describeOrientation().namespaces == 0)
+    assert(store.attentionStateGet("alice", "k").isEmpty)
+    assert(store.describeAttention().committedGeneration.isEmpty)
+
+    val idx = new DedupIndex(spark, s"$root/idx", capacity = 100)
+    assert(idx.describe().generation == 0L && idx.describe().segments == 0)
+
+    val graph = GraphStore.open(spark, s"$root/graph")
+    empty(graph.edges(), "id")
+    empty(graph.outgoingAt("a", t0), "dst")
+    assert(!graph.describe().exists)
+
+    val ledger = DealLedger.open(spark, s"$root/ledger")
+    empty(ledger.table(), "deal_id")
+    assert(ledger.verify().count() == 0)
+    assert(!ledger.describe().exists)
+
+    val sync = s"$root/sync"
+    assert(SyncLoop.readManifest(sync).isEmpty && SyncLoop.readWatermark(sync).isEmpty)
+    empty(SyncLoop.readProfiles(spark, sync), "user_id")
+
+    val qm = s"$root/qm"
+    val e = intercept[IllegalStateException](QualityModel.weights(spark, qm))
+    assert(e.getMessage.contains(qm), s"the failure must name the path: ${e.getMessage}")
+    assert(QualityModel.describe(spark, qm).generation == 0L)
+
+    val created = Files.list(Paths.get(root))
+    try assert(created.iterator().asScala.isEmpty, "a read must not create a file")
+    finally created.close()
   }
 
   test("the quality model commits version 1 and refuses a model of another version") {
