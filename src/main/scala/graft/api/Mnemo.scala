@@ -8,7 +8,7 @@ import graft.functions.{HashChain, TextOps, VectorOps}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** The reference's whole-operation API surface (SURVEY §2.11 — MCP tools
   * `remember` / `recall` / `forget` / `share` / `verify`, engine passes)
@@ -559,6 +559,12 @@ final class MnemoStore(val spark: SparkSession, val path: String,
       k -> (base ++ app)
     }.filter(_._2.nonEmpty).toMap
 
+    // the just-written segment of one sub, read back below: columns by
+    // StoreSchema (no schema inference job), `bucket` from the path
+    def readSeg(sub: String): DataFrame =
+      spark.read.schema(Mnemo.StoreSchema.add("bucket", IntegerType))
+        .parquet(s"$path/g$gen/$sub")
+
     // ---- tag-index maintenance ----
     // pairs are read back from the just-written segment dirs, NOT by
     // re-evaluating the caller's plans (which would re-run the chain
@@ -568,9 +574,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
       (if (aset.nonEmpty) Seq("a") else Nil) ++
         (if (replacedAddsTags && rset.nonEmpty) Seq("r") else Nil)
     val fresh: Seq[DataFrame] = srcSubs.map(sub =>
-      spark.read.parquet(s"$path/g$gen/$sub")
-        .select(explode(col("tags")).as("tag"),
-          col("bucket").cast("int").as("bucket")))
+      readSeg(sub).select(explode(col("tags")).as("tag"), col("bucket")))
     // fold the whole index back into one segment when the incremental
     // segments are over budget (same LSM bound as the data buckets)
     val compacting =
@@ -595,7 +599,7 @@ final class MnemoStore(val spark: SparkSession, val path: String,
         (if (aset.nonEmpty) Seq("a") else Nil) match {
         case Nil => Map.empty
         case subs => subs.flatMap { sub =>
-          spark.read.parquet(s"$path/g$gen/$sub")
+          readSeg(sub)
             .groupBy(col("bucket"))
             // coalesce INSIDE the aggregates: `scope.isin` of a NULL
             // scope is null, and max over an all-null bucket returns

@@ -3,6 +3,8 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Multimodal-column plumbing: image/audio/video payloads ride as opaque
   * `binary` columns with a typed metadata struct, and per-record feature
   * extraction runs as a partition-local typed transform.
@@ -148,7 +150,7 @@ object MediaPipeline {
     * reproducible. modality cycles by doc_id. */
   def syntheticMedia(spark: SparkSession, sfDir: String): Dataset[MediaRecord] = {
     import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    Tables.documents(spark, sfDir)
       .select(
         col("doc_id").as("media_id"),
         element_at(array(lit("image"), lit("audio"), lit("video")),

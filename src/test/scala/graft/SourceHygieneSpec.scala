@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * check: a scaladoc that attaches to the definition it describes, one
   * place that decides how the mains build their session, one on-disk
   * format per store (no legacy read or migration code), one commit
-  * core every store writes through, and one manifest publish protocol
-  * (no overwrite-rename, no protocol switch). */
+  * core every store writes through, one manifest publish protocol
+  * (no overwrite-rename, no protocol switch), and one table read path
+  * for the queries (`graft.Tables`). */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private val sources: Seq[(Path, IndexedSeq[String])] = {
@@ -66,6 +67,20 @@ class SourceHygieneSpec extends AnyFunSuite {
     } yield s"$p:${i + 1}"
     assert(offenders.isEmpty,
       s"each store reads one on-disk format and fails on any other: ${offenders.mkString(", ")}")
+  }
+
+  test("queries, media and column builders read tables only through graft.Tables") {
+    // a direct parquet read would skip the memoized schema and launch a
+    // schema-inference job on every build
+    val readers = Seq("graft/queries", "graft/multimodal", "graft/functions")
+      .map(d => Paths.get("src/main/scala", d))
+    assert(readers.forall(d => sources.exists(_._1.startsWith(d))), "reader dirs not found")
+    val offenders = for {
+      (p, lines) <- sources if readers.exists(p.startsWith)
+      (l, i) <- lines.zipWithIndex if l.contains(".read.parquet(")
+    } yield s"$p:${i + 1}"
+    assert(offenders.isEmpty,
+      s"table reads outside Tables.load: ${offenders.mkString(", ")}")
   }
 
   test("only graft.Harness sets a session master") {
